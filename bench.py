@@ -47,108 +47,6 @@ BENCH_BUDGET_S = float(os.environ.get("JOBX_BENCH_BUDGET_S", "530"))
 # reps complete in the first minutes.
 BENCH_HARD_S = float(os.environ.get("JOBX_BENCH_HARD_S", "560"))
 
-# Historical enrollment list (r1-r10): non-prefix queries that exercise
-# the heavy operators (big agg, 3-way join, window, streams, engine).
-# Since r11 enrollment is REGISTRY-WIDE (ADVICE r10: the prefix-based
-# auto-enroll silently never benched 87 rows — the q* relational block,
-# the stream_/pipe_/multimodal_/mr_engine_ families not hand-listed
-# here); this list is kept as the documented r1-r10 benched universe
-# and is no longer what defines the pool.
-HEADLINE = [
-    "q01_pricing_summary",
-    "q03_shipping_priority",
-    "q04_brand_revenue",
-    "q07_topk_per_group",
-    "q09_rollup",
-    "q11_distinct_agg",
-    "q15_json_extract",
-    "q16_sessionize",
-    "q20_asof_join",
-    "q22_window_frames",
-    "q24_percentile_disc",
-    "q47_cohort_retention",
-    "q49_local_supplier_volume",
-    "q50_returned_items",
-    "q58_disjunctive_join",
-    "q59_waiting_suppliers",
-    "q61_promo_share",
-    "q63_dominant_supplier",
-    "stream_tumbling_agg",
-    "stream_stateful_user_stats",
-    "stream_sink_rollup",
-    "multimodal_features",
-    "multimodal_decode",
-    "q56_salted_skew_join",
-    "q57_range_bin_join",
-    "pipe_sample_fixed_k",
-    "pipe_pii_scrub",
-    "pipe_corpus_build",
-    "pipe_stratified_k",
-    "mr_engine_event_counts",
-    "mr_engine_user_value",
-    # session-3 additions outside the auto-enrolled dedup_/ann_/text_
-    # families
-    "q65_bloom_prefilter_join",
-    "q66_binned_quantiles",
-    "pipe_sample_weighted",
-    "pipe_bpe_learn",
-    "multimodal_phash",
-    "multimodal_resize_real",
-    "stream_hll_cards",
-    "stream_cms_users",
-    "stream_scd_enrich",
-    # round-4 additions outside the auto-enrolled prefixes
-    "pipe_quality_rules",
-    "pipe_mix_temperature",
-    "q68_product_profit",
-    # round-5 additions outside the auto-enrolled prefixes
-    "pipe_ewma_user_value",
-    "pipe_tokenizer_fertility",
-    "stream_ewma_user_value",
-    # round-6 additions outside the auto-enrolled prefixes
-    # (stream_window_distinct_scaled is excluded like the other 8×
-    # replication probes — see the exclusion note in main())
-    "pipe_pack_sequences",
-    "pipe_dsir_sample",
-    "pipe_snapshot_diff",
-    "pipe_k_anonymity",
-    "pipe_l_diversity",
-    "pipe_watermark_lateness",
-    "pipe_dp_release",
-    "pipe_epochs_budget",
-    "pipe_padding_waste",
-    # round-7 additions outside the auto-enrolled prefixes
-    # (multimodal_decode_scaled is excluded like the other 8×
-    # replication probes — see the exclusion note in main())
-    "pipe_quality_funnel",
-    "pipe_t_closeness",
-    "pipe_dataset_card",
-    "pipe_shuffle_audit",
-    "pipe_skew_census",
-    # round-8 additions outside the auto-enrolled prefixes
-    # (ann_knn_refine auto-enrolls via the ann_ prefix)
-    "pipe_bpe_encode",
-    "pipe_quantile_sketch",
-    "stream_quantile_sketch",
-    # round-10 additions outside the auto-enrolled prefixes — these
-    # enroll into the rotation POOL (not BENCH_CORE); the ann_index_*
-    # family auto-enrolls via the ann_ prefix
-    "stream_index_serve",
-    "pipe_corpus_funnel",
-    "pipe_vocab_build",
-    "pipe_encode_serve",
-    # round-9 additions outside the auto-enrolled prefixes
-    # (ann_ivf_append auto-enrolls via the ann_ prefix)
-    "pipe_bpe_decode",
-    "stream_bloom_decontaminate",
-    "stream_ivf_append",
-    "pipe_unimax_mixing",
-    "stream_drift_census",
-    "pipe_curriculum_order",
-    "q69_sequence_funnel",
-    "q70_retention_cohorts",
-]
-
 BENCH_REPS = 2  # per-query timing = min over this many runs
 
 # FIXED benched core (VERDICT r9 #1b): at 158 auto-enrolled headliners

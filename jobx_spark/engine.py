@@ -191,7 +191,7 @@ FUSE_MAX_CHILDREN = 16384
 
 def _make_phase1_udf(
     step_plan: dict, workdir: str | None, emit_forensics: bool = False,
-    plans: dict | None = None, depth: int = 0, fuse_max: int | None = None,
+    plans: dict | None = None, depth: int = 0,
 ):
     """Bucket UDF: each Arrow group carries MANY invocations (the
     frontier is grouped by a hash bucket of the invocation id, not by
@@ -210,7 +210,11 @@ def _make_phase1_udf(
     task-local and the child's map→combine→reduce plus this
     invocation's fold need no exchange at all. The driver enables
     fusion per level only when the frontier holds enough invocations
-    to keep every core busy from the PARENT level (see _run_step)."""
+    to keep every core busy from the PARENT level (see _run_step).
+    The fan-out width cap is read here, when the step is planned, and
+    travels with the UDF: the Python workers that run it import this
+    module afresh and would not see a value set at planning time."""
+    fuse_max = FUSE_MAX_CHILDREN
 
     def phase1(pdf: pd.DataFrame) -> pd.DataFrame:
         # One global (inv, seq) sort + numpy boundary slicing instead of
@@ -321,7 +325,7 @@ def _phase1_one_invocation(
     step_plan: dict, workdir: str | None, inv, parent_inv,
     row_types, seqs, ks, vs,
     plans: dict | None = None, depth: int = 0, want_forensics: bool = False,
-    fuse_max: int | None = None,
+    *, fuse_max: int,
 ) -> tuple[list[tuple], list[tuple], list[tuple], set[tuple]]:
     """One invocation's mapper → routing → (leaf: combine+reduce
     in-place | fan-out: fused subtree when possible, else child rows).
@@ -405,7 +409,7 @@ def _phase1_one_invocation(
         if (
             child_plan is not None
             and depth + 1 <= _MAX_DEPTH
-            and len(pairs) <= (FUSE_MAX_CHILDREN if fuse_max is None else fuse_max)
+            and len(pairs) <= fuse_max
         ):
             # Fused subtree (guide §1.2-1/§2.4): every child is a
             # single-pair invocation whose arguments are in hand, so
@@ -756,10 +760,7 @@ class Engine:
         map_out = frontier.groupBy(
             F.pmod(F.xxhash64("inv"), F.lit(n_buckets)).alias("_bucket")
         ).applyInPandas(
-            _make_phase1_udf(
-                plan, self.workdir, want_forensics, plans, depth,
-                fuse_max=FUSE_MAX_CHILDREN,
-            ),
+            _make_phase1_udf(plan, self.workdir, want_forensics, plans, depth),
             schema=_ROWS_SCHEMA,
         ).persist()
         persisted.append(map_out)

@@ -291,139 +291,6 @@ GATE_FIRST_50 = [
     "pipe_corpus_stats", "pipe_quality_funnel", "pipe_sample_hash",
     "pipe_sample_join", "pipe_shuffle_audit",
 ]
-# superseded r12 gate kept for the diff reader:
-_GATE_R12 = [
-    # ROUND-12 GATE (VERDICT r11 #2: retire the r6 cohort — after this
-    # gate lands, no registry row is older than r7).
-    # -- 1. the only registry rows with ZERO driver attestation: the
-    #       r11 post-close persisted inverted-index trio (judge-
-    #       verified hash-exact; these rows lead per the rotation
-    #       discipline) --
-    "text_bm25_index_build", "text_bm25_index_serve",
-    "stream_bm25_index_serve",
-    # -- 2. new in round 12 (never driver-attested): the BM25 index
-    #       lifecycle completion (VERDICT r11 #4 — delta postings
-    #       segment + republished corpus scalars + the three-leg
-    #       append certificate) and the band-index flat-serve probe
-    #       (VERDICT r11 #6) --
-    "text_bm25_index_append", "text_bm25_index_compact",
-    "dedup_index_probe_scaled64",
-    # -- 3. changed-code re-attests — every query whose Spark plan
-    #       changed this round: the dedup append/compact repair gates
-    #       moved from root _SUCCESS to the terminal _APPEND_DONE
-    #       marker (ADVICE r11 #3) --
-    "dedup_index_append", "dedup_index_compact",
-    # -- 4. the full 42-row r6-banked cohort (VERDICT r11 #4 "minor"
-    #       names it; list = gate-union histogram rows at max round 6)
-    #       — oldest cohort, retired completely --
-    "ann_ivf_balance", "ann_ivf_pq_topk", "ann_ivf_topk",
-    "ann_jl_distortion", "ann_kcenter_scaled", "ann_kcenter_select",
-    "ann_lsh_topk", "ann_pca_project", "ann_pq_adc_topk",
-    "ann_pq_codes", "dedup_components", "dedup_containment",
-    "dedup_lsh_s_curve", "dedup_rate_by_source", "dedup_winnow_pairs",
-    "pipe_dp_release", "pipe_epochs_budget", "pipe_ewma_user_value",
-    "pipe_k_anonymity", "pipe_l_diversity", "pipe_pack_sequences",
-    "pipe_padding_waste", "pipe_snapshot_diff",
-    "pipe_tokenizer_fertility", "pipe_watermark_lateness",
-    "q41_percentile_cont", "q42_important_parts",
-    "q43_small_qty_revenue", "q44_top_supplier", "q46_fuzzy_name_pairs",
-    "q47_cohort_retention", "q48_funnel_steps",
-    "q49_local_supplier_volume", "q50_returned_items",
-    "q51_window_navigation", "q52_revenue_share",
-    "q53_select_scalar_subquery", "q54_session_conversion",
-    "stream_window_distinct_scaled", "text_ngram_novelty",
-    "text_winnow_fingerprints", "text_zipf_census",
-]
-# superseded r11 gate kept for the diff reader:
-_GATE_R11 = [
-    # ROUND-11 GATE (VERDICT r10 #2: retire the r5 tail — after this
-    # gate lands, no registry row is older than r6).
-    # -- 1. new in round 11 (never driver-attested): the persisted
-    #       dedup band-index family (VERDICT r10 #3) + the 64× serve
-    #       probe (VERDICT r10 #6) --
-    "dedup_index_build", "dedup_index_probe", "dedup_index_append",
-    "dedup_index_compact", "stream_dedup_index_probe",
-    "stream_dedup_index_append", "stream_index_ingest",
-    "ann_index_serve_scaled64",
-    # -- 2. changed-code re-attests — every query whose Spark plan or
-    #       oracle changed this round: the serve-family zero-norm
-    #       masks + oracle norm filters (ADVICE r10 #1), the compact
-    #       repair gate + maxRecordsPerFile pin (ADVICE r10 #3/#4),
-    #       the fused DSIR census (VERDICT r10 #4). The
-    #       cosine_from_scaled → try_divide NULL-on-zero-norm change
-    #       touches the whole ANN/kmeans stack; beyond the serve rows
-    #       here (which exercise it end to end) that family is
-    #       CI-covered by the full-registry oracle suite at sf0.001
-    #       AND this round's two 269/269 driver-recipe sweeps at
-    #       sf0.01 --
-    "ann_index_serve", "ann_filtered_topk", "stream_index_serve",
-    "ann_index_serve_scaled", "ann_index_append", "ann_index_compact",
-    "pipe_dsir_sample",
-    # -- 3. the full 35-row r5-banked tail (VERDICT r10 #2 names the
-    #       cohort; list = gate-union histogram rows at max round 5)
-    #       — oldest cohort, retired completely --
-    "q08_running_sum", "q09_rollup", "q10_cube", "q11_distinct_agg",
-    "q12_set_ops", "q13_top_orders", "q14_scalar_functions",
-    "q15_json_extract", "q16_sessionize", "q17_pivot",
-    "q18_grouping_sets", "q19_above_nation_avg", "q20_asof_join",
-    "q21_band_join", "q26_outer_join_dist", "q27_full_outer",
-    "q28_cheapest_supplier", "q30_exists_late_ship",
-    "q31_idle_rich_customers", "q32_explode_words",
-    "q34_conditional_agg", "q35_string_agg", "q36_unpivot_metrics",
-    "q37_approx_distinct_kmv", "q38_salted_skew_agg", "q39_nation_trade",
-    "q40_monthly_growth", "q68_product_profit", "stream_ewma_user_value",
-    "stream_full_outer_join", "stream_scd_enrich",
-    "stream_stateful_user_stats", "stream_tumbling_agg",
-    "text_domain_signature", "text_hll_merge",
-]
-# superseded r10 gate kept for the diff reader:
-_GATE_R10 = [
-    # ROUND-10 GATE (VERDICT r9 #3: retire the r4 tail — after this
-    # gate lands, no registry row is older than r5).
-    # -- 1. new in round 10 (never driver-attested; each late addition
-    #       displaces the tail of section 4 back to the pool) --
-    "ann_index_build", "ann_index_serve", "ann_filtered_topk",
-    "ann_index_append", "ann_index_compact", "stream_index_serve",
-    "pipe_corpus_funnel", "pipe_vocab_build", "pipe_encode_serve",
-    "ann_pq_index_build", "ann_pq_index_serve", "ann_index_serve_scaled",
-    # -- 2. changed-code re-attests — every query whose Spark plan or
-    #       oracle changed this round: q69 stage anchors materialized
-    #       + single-plan counts (VERDICT r9 #5), ann_multiprobe_lsh
-    #       zero-norm probe mask (ADVICE r9) --
-    "q69_sequence_funnel", "ann_multiprobe_lsh",
-    # -- 3. the full 25-row r4-banked tail (VERDICT r9 #3 names every
-    #       one) — oldest cohort, retired completely --
-    "mr_engine_user_value", "multimodal_phash", "multimodal_phash_pairs",
-    "multimodal_resize_real", "pipe_mix_temperature",
-    "pipe_quality_rules", "pipe_sample_weighted",
-    "q65_bloom_prefilter_join", "q67_market_basket", "stream_cms_users",
-    "stream_dedup_activity", "stream_hll_cards",
-    "stream_incremental_restart", "stream_interval_join",
-    "stream_left_outer_join", "stream_replay_dedup",
-    "stream_session_window", "stream_sliding_agg",
-    "stream_static_enrich", "stream_timeout_sessions",
-    "stream_window_distinct", "text_bm25_topk", "text_hll_distinct",
-    "text_readability", "text_trigram_lang_eval",
-    # -- 4. filler: alphabetical head of the r5-banked cohort (the
-    #       next-oldest, 46 rows) — displaced one-for-one as round-10
-    #       additions land (new outranks refill) --
-    "dedup_components_lsss", "dedup_source_overlap",
-    "dedup_split_leakage", "dedup_substring_scaled",
-    "q01_pricing_summary", "q02_filter_project", "q03_shipping_priority",
-    "q04_brand_revenue", "q05_semi_join", "q06_anti_join",
-    "q07_topk_per_group",
-]
-# ROUND-13 GATE PLAN: lead with the two rows landed after the r12
-# gate filled (the only registry rows without a driver attestation
-# after r12; both verified at sf0.001+sf0.01 under the driver recipe
-# as they landed): stream_bm25_index_append (the streaming postings
-# ingest) and text_bm25_serve_scaled64 (the term-side 64× flat-serve
-# probe). Then
-# anything new in r13, then changed plans, then the oldest cohort:
-# the 41-row r7-banked block (dedup_exact/simhash family, the
-# multimodal quintet, text_lang_id/quality/tfidf..., pipe_corpus_stats
-# et al. — compute as always by parsing CORRECTNESS_r*.json for
-# hash_match rows, max round per query).
 
 
 def all_queries() -> dict[str, QueryFn]:

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jobx_spark import index
 from jobx_spark.functions import MINHASH_P, minhash_coeffs
 from jobx_spark.lineage import cut_lineage
 from jobx_spark.operators.dedup import (
@@ -2602,34 +2603,17 @@ ORDER BY source
 # registry re-reads per step (mr/models/kv/request.py); the persisted
 # band table is the analogous "already-computed" state for dedup.
 # --------------------------------------------------------------------------
-def _dedup_index_root(sf_dir: str, family: str = "") -> str:
-    import hashlib
-    import os
-
-    from jobx_spark.lineage import checkpoint_root
-
-    key = hashlib.sha256(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    return os.path.join(checkpoint_root(), f"dedup-index{family}-{key}")
-
-
-def _dedup_index_write(spark: SparkSession, sf_dir: str) -> str:
-    # version-pointer publish (jobx_spark.artifacts): a rebuild writes
-    # v=N+1 and flips the pointer, never mutating the version a
-    # concurrent probe is pinned to — same contract as _ann_index_write
-    import os
-
-    from jobx_spark import artifacts as A
+def _banded(df: DataFrame) -> DataFrame:
     from jobx_spark.operators.dedup import banded_signature
 
-    root = _dedup_index_root(sf_dir)
-    ver, vdir = A.next_version_dir(spark, root)
-    ipath = os.path.join(vdir, "index")
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") < INCR_SPLIT_ID)
-    banded = banded_signature(
-        corpus, n_hashes=N_HASHES, bands=BANDS, shingle_n=SHINGLE_N,
-        seed=SEED,
+    return banded_signature(
+        df, n_hashes=N_HASHES, bands=BANDS, shingle_n=SHINGLE_N, seed=SEED,
     )
+
+
+def _dedup_index_write(spark: SparkSession, sf_dir: str, ipath: str) -> None:
+    docs = load_table(spark, sf_dir, "documents")
+    banded = _banded(docs.filter(F.col("doc_id") < INCR_SPLIT_ID))
     # (band, bkt) partitioning — bkt = bh mod DBKT is the bucket key
     # the probe prunes on: a probe batch touches only the buckets its
     # own band hashes fall in, so the corpus-side scan is a true
@@ -2644,44 +2628,20 @@ def _dedup_index_write(spark: SparkSession, sf_dir: str) -> str:
         .partitionBy("band", "bkt")
         .parquet(ipath)
     )
-    A.publish(spark, root, ver)
-    return ipath
 
 
-def _dedup_index_ensure(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
-    from jobx_spark import artifacts as A
-
-    vdir = A.resolve(spark, _dedup_index_root(sf_dir))
-    if vdir is not None:
-        ipath = os.path.join(vdir, "index")
-        if A.fs_exists(spark, os.path.join(ipath, "_SUCCESS")):
-            return ipath
-    return _dedup_index_write(spark, sf_dir)
+DEDUP_INDEX = index.Versioned("dedup-index", ("index",), _dedup_index_write)
 
 
 def dedup_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ipath = _dedup_index_write(spark, sf_dir)
-    idx = spark.read.parquet(ipath)
-    dom = spark.range(BANDS).select(F.col("id").cast("int").alias("band"))
-    census = idx.groupBy("band").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.coalesce(F.bit_xor("id"), F.lit(0).cast("long")).alias(
-            "xor_doc_ids"
-        ),
-        F.coalesce(F.bit_xor("bh"), F.lit(0).cast("long")).alias("xor_bh"),
-    )
-    z = lambda c: F.coalesce(F.col(c), F.lit(0)).cast("long")  # noqa: E731
-    return (
-        dom.join(census, "band", "left")
-        .select(
-            "band",
-            z("n_rows").alias("n_rows"),
-            z("xor_doc_ids").alias("xor_doc_ids"),
-            z("xor_bh").alias("xor_bh"),
-        )
-        .orderBy("band")
+    (ipath,) = DEDUP_INDEX.build(spark, sf_dir)
+    return index.census(
+        spark, {"band": BANDS}, spark.read.parquet(ipath),
+        {
+            "n_rows": index.rows(),
+            "xor_doc_ids": index.xor("id"),
+            "xor_bh": index.xor("bh"),
+        },
     )
 
 
@@ -2704,16 +2664,11 @@ ORDER BY band
 
 
 def dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jobx_spark.operators.dedup import banded_signature
-
-    ipath = _dedup_index_ensure(spark, sf_dir)
+    (ipath,) = DEDUP_INDEX.ensure(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") >= INCR_SPLIT_ID)
     bb = cut_lineage(
-        banded_signature(
-            batch, n_hashes=N_HASHES, bands=BANDS, shingle_n=SHINGLE_N,
-            seed=SEED,
-        ).select(
+        _banded(batch).select(
             F.col("id").alias("new_id"), "band", "bh",
             F.pmod(F.col("bh"), F.lit(DBKT)).alias("bkt"),
         ),
@@ -2738,72 +2693,39 @@ def dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dedup_index_append_paths(sf_dir: str) -> str:
-    import os
+def _dedup_append_base(
+    spark: SparkSession, sf_dir: str, p: dict[str, str]
+) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    return _banded(docs.filter(F.col("doc_id") < INCR_SPLIT_ID))
 
-    # the append family's layout mutates in place BY DESIGN (dynamic
-    # partition overwrite of the batch segment only — versioning it
-    # would re-copy the base on every ingest), so it stays unversioned;
-    # its existence probes still go through the portable FS helper
-    return os.path.join(_dedup_index_root(sf_dir, "-append"), "index")
+
+DEDUP_APPEND = index.Segmented(
+    "dedup-index-append", "index", "band", BANDS, ("bh",), _dedup_append_base
+)
 
 
 def dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from jobx_spark import artifacts as A
-    from jobx_spark.operators.dedup import banded_signature
-
-    ipath = _dedup_index_append_paths(sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") < INCR_SPLIT_ID)
     batch = docs.filter(F.col("doc_id") >= INCR_SPLIT_ID)
-
-    def banded(df: DataFrame) -> DataFrame:
-        return banded_signature(
-            df, n_hashes=N_HASHES, bands=BANDS, shingle_n=SHINGLE_N,
-            seed=SEED,
-        )
-
-    if not A.fs_exists(spark, os.path.join(ipath, "_SUCCESS")):
-        (
-            banded(corpus)
-            .withColumn("seg", F.lit("base"))
-            .repartition(BANDS, "band")
-            .sortWithinPartitions("band", "bh")
-            .write.mode("overwrite")
-            .partitionBy("seg", "band")
-            .parquet(ipath)
-        )
     # THE APPEND: batch-side-only banding; new files land under
     # seg=batch/band=*, base files untouched; dynamic overwrite makes
     # re-runs replace only the batch segment (double-run determinism)
-    (
-        banded(batch)
-        .withColumn("seg", F.lit("batch"))
-        .repartition(BANDS, "band")
-        .sortWithinPartitions("band", "bh")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("seg", "band")
-        .parquet(ipath)
+    p = DEDUP_APPEND.append(
+        spark, sf_dir,
+        lambda p: DEDUP_APPEND.write_segment(
+            _banded(batch), p["index"], "batch"
+        ),
     )
-    # terminal marker: Spark's root _SUCCESS lands after the FIRST
-    # (base) segment commit, so it cannot attest "both segments are on
-    # disk" — a crash between the base and batch writes leaves it
-    # present (ADVICE r11 #3). Downstream repair gates (compact) key
-    # on THIS marker, touched only after the batch segment commit.
-    A.touch(spark, os.path.join(ipath, "_APPEND_DONE"))
-    disk = spark.read.parquet(ipath)
+    disk = spark.read.parquet(p["index"])
     # attestation leg: full re-banding of the whole corpus — never run
     # in production; banding is per-doc deterministic so append must
     # equal rebuild bit for bit
-    rebuilt = banded(docs)
     return _band_append_census(
         spark,
         disk.filter(F.col("seg") == "base"),
         disk.filter(F.col("seg") == "batch"),
-        rebuilt,
+        _banded(docs),
     )
 
 
@@ -2815,48 +2737,10 @@ def _band_append_census(
 ) -> DataFrame:
     """Per-band before/after/rebuild census with the doc_id-XOR
     append≡rebuild certificate — shared by dedup_index_append and its
-    streaming twin (the text-side analogue of _ivf_append_census).
-    Base / batch / after legs are ONE conditional aggregation over the
-    tagged base∪batch union (guide §1.2-1: previously three separate
-    aggregations + joins over the same rows; the after leg over the
-    union equals the old census over `appended` because every caller
-    passed appended ≡ base ∪ batch)."""
-    tagged = base_idx.withColumn(
-        "_is_base", F.lit(True)
-    ).unionByName(batch_idx.withColumn("_is_base", F.lit(False)))
-    after = tagged.groupBy("band").agg(
-        F.count(F.when(F.col("_is_base"), 1)).cast("long").alias("n_base"),
-        F.count(F.when(~F.col("_is_base"), 1)).cast("long").alias("n_batch"),
-        F.count(F.lit(1)).cast("long").alias("n_after"),
-        F.coalesce(F.bit_xor("id"), F.lit(0).cast("long")).alias(
-            "xor_after"
-        ),
-    )
-    reb = rebuilt.groupBy("band").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rebuild"),
-        F.coalesce(F.bit_xor("id"), F.lit(0).cast("long")).alias(
-            "xor_rebuild"
-        ),
-    )
-    dom = spark.range(BANDS).select(F.col("id").cast("int").alias("band"))
-    z = lambda c: F.coalesce(F.col(c), F.lit(0)).cast("long")  # noqa: E731
-    return (
-        dom.join(after, "band", "left")
-        .join(reb, "band", "left")
-        .select(
-            "band",
-            z("n_base").alias("n_base"),
-            z("n_batch").alias("n_batch"),
-            z("n_after").alias("n_after"),
-            z("n_rebuild").alias("n_rebuild"),
-            (
-                (z("n_after") == z("n_rebuild"))
-                & (z("xor_after") == z("xor_rebuild"))
-            )
-            .cast("long")
-            .alias("append_matches_rebuild"),
-        )
-        .orderBy("band")
+    streaming twin."""
+    return index.append_census(
+        spark, "band", BANDS, index.tag(base_idx, batch_idx), rebuilt,
+        F.col("id"),
     )
 
 
@@ -2905,7 +2789,7 @@ ORDER BY band
 # with file count, not row count. Compaction rewrites base ∪ batch as
 # a new single-segment generation (never in place), clustered so each
 # band holds ONE file — the physical claim enforced in the plan
-# (maxRecordsPerFile pinned, ADVICE r10) and verified from the
+# (per-file record cap disabled) and verified from the
 # compacted layout via input_file_name. Census attests per-band
 # content identity (row count + doc_id-XOR + bh-XOR) between the two
 # on-disk generations.
@@ -2914,66 +2798,9 @@ ORDER BY band
 # bands × n_appends.
 # --------------------------------------------------------------------------
 def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from jobx_spark import artifacts as A
-
-    ipath = _dedup_index_append_paths(sf_dir)
-    if not A.fs_exists(spark, os.path.join(ipath, "_APPEND_DONE")):
-        # materialize the appended generation this job compacts — the
-        # gate is the TERMINAL marker the append touches after its
-        # batch-segment commit, not the root _SUCCESS Spark creates
-        # after the FIRST (base) segment write: a crash between the
-        # two writes would otherwise compact a base-only index
-        # (ADVICE r11 #3); the append itself is idempotent
-        dedup_index_append(spark, sf_dir)
-    gpath = os.path.join(os.path.dirname(ipath), "index-compacted")
-    old = spark.read.parquet(ipath).select("id", "band", "bh")
-    (
-        old.repartition(BANDS, "band")
-        .sortWithinPartitions("band", "bh")
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", 0)
-        .partitionBy("band")
-        .parquet(gpath)
-    )
-    new = spark.read.parquet(gpath)
-    fcount = (
-        new.withColumn("f", F.input_file_name())
-        .groupBy("band")
-        .agg(F.count_distinct("f").cast("long").alias("files_after"))
-    )
-
-    def census(df: DataFrame, n: str, xi: str, xb: str) -> DataFrame:
-        return df.groupBy("band").agg(
-            F.count(F.lit(1)).cast("long").alias(n),
-            F.coalesce(F.bit_xor("id"), F.lit(0).cast("long")).alias(xi),
-            F.coalesce(F.bit_xor("bh"), F.lit(0).cast("long")).alias(xb),
-        )
-
-    dom = spark.range(BANDS).select(F.col("id").cast("int").alias("band"))
-    z = lambda c: F.coalesce(F.col(c), F.lit(0)).cast("long")  # noqa: E731
-    return (
-        dom.join(census(old, "n_before", "xi_b", "xb_b"), "band", "left")
-        .join(
-            census(new.select("id", "band", "bh"), "n_after", "xi_a", "xb_a"),
-            "band", "left",
-        )
-        .join(fcount, "band", "left")
-        .select(
-            "band",
-            z("n_before").alias("n_before"),
-            z("n_after").alias("n_after"),
-            z("files_after").alias("files_after"),
-            (
-                (z("n_before") == z("n_after"))
-                & (z("xi_b") == z("xi_a"))
-                & (z("xb_b") == z("xb_a"))
-            )
-            .cast("long")
-            .alias("content_match"),
-        )
-        .orderBy("band")
+    return DEDUP_APPEND.compact(
+        spark, sf_dir, dedup_index_append,
+        {"xi": index.xor("id"), "xb": index.xor("bh")},
     )
 
 
@@ -3018,61 +2845,17 @@ ORDER BY band
 # dedup_index_probe's is the band-side flat-serve evidence
 # (BENCH_NOTES §r12 records the controlled 1× vs 64× pair).
 # --------------------------------------------------------------------------
-_DEDUP_REP_BASE = 10**9
-DEDUP_REP64 = 64
-
-
-def _dedup_scaled64_ensure(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    from jobx_spark import artifacts as A
-    from jobx_spark.lineage import checkpoint_root
-
-    ipath = _dedup_index_ensure(spark, sf_dir)
-    key = hashlib.sha256(
-        (sf_dir.rstrip("/") + ":scaled64").encode()
-    ).hexdigest()[:12]
-    i64 = os.path.join(checkpoint_root(), f"dedup-index-{key}", "index")
-    if A.fs_exists(spark, os.path.join(i64, "_SUCCESS")):
-        return i64
-    rep = F.explode(
-        F.array(*[F.lit(i) for i in range(DEDUP_REP64)])
-    ).alias("rep")
-    (
-        spark.read.parquet(ipath)
-        .select("id", "band", "bh", "bkt", rep)
-        .select(
-            (
-                F.col("id").cast("long")
-                + F.col("rep").cast("long") * F.lit(_DEDUP_REP_BASE)
-            ).alias("id"),
-            "band",
-            "bh",
-            (
-                F.col("bkt").cast("int")
-                + F.col("rep").cast("int") * F.lit(DBKT)
-            ).alias("bkt"),
-        )
-        .repartition(BANDS * DBKT, "band", "bkt")
-        .write.mode("overwrite")
-        .partitionBy("band", "bkt")
-        .parquet(i64)
-    )
-    return i64
-
-
 def dedup_index_probe_scaled64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jobx_spark.operators.dedup import banded_signature
-
-    i64 = _dedup_scaled64_ensure(spark, sf_dir)
+    (ipath,) = DEDUP_INDEX.ensure(spark, sf_dir)
+    i64 = index.replicate(
+        spark, sf_dir, "dedup-index", ipath, "id", "bkt", DBKT,
+        ("band", "bkt"),
+        lambda df: df.repartition(BANDS * DBKT, "band", "bkt"),
+    )
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") >= INCR_SPLIT_ID)
     bb = cut_lineage(
-        banded_signature(
-            batch, n_hashes=N_HASHES, bands=BANDS, shingle_n=SHINGLE_N,
-            seed=SEED,
-        ).select(
+        _banded(batch).select(
             F.col("id").alias("new_id"), "band", "bh",
             F.pmod(F.col("bh"), F.lit(DBKT)).alias("bkt"),
         ),

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jobx_spark import index
 from jobx_spark.functions import dsum, dsum_sql, md5_long
 from jobx_spark.operators.text import tokens
 from jobx_spark.sources import load_table
@@ -4148,10 +4149,10 @@ ORDER BY stage
 #   * pipe_vocab_build runs the learn chain once, persists the merged
 #     word table (w, sym, n) and the symbol vocabulary (s, id, cnt —
 #     ids ranked weighted-frequency-desc, symbol-asc, the
-#     pipe_bpe_encode ordering) as parquet tables under the checkpoint
-#     root, and returns the vocabulary census PLANNED OVER THE
-#     PERSISTED symbols table (id, symbol, weight, n_chars, is_merged)
-#     — the gate hash attests the artifact on disk.
+#     pipe_bpe_encode ordering) as a version-published artifact
+#     (jobx_spark.index), and returns the vocabulary census PLANNED
+#     OVER THE PERSISTED symbols table (id, symbol, weight, n_chars,
+#     is_merged) — the gate hash attests the artifact on disk.
 #   * pipe_encode_serve encodes the corpus AGAINST the persisted
 #     tables: the word→ids mapping comes from the stored word table,
 #     the id map from a bounded collect of the stored symbol table
@@ -4166,23 +4167,12 @@ ORDER BY stage
 # tokenizer release; every corpus encode afterwards is one tokenize
 # scan + one word-keyed join against a loaded table.
 # --------------------------------------------------------------------------
-def _bpe_vocab_paths(sf_dir: str) -> tuple[str, str]:
-    import hashlib
-    import os
-
-    from jobx_spark.lineage import checkpoint_root
-
-    key = hashlib.sha256(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    root = os.path.join(checkpoint_root(), f"bpe-vocab-{key}")
-    return os.path.join(root, "words"), os.path.join(root, "symbols")
-
-
-def _bpe_vocab_write(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+def _bpe_vocab_write(
+    spark: SparkSession, sf_dir: str, wpath: str, spath: str
+) -> None:
     from pyspark.sql import Window as W
 
-    wpath, spath = _bpe_vocab_paths(sf_dir)
-    words = _bpe_learned_words(spark, sf_dir)
-    words.write.mode("overwrite").parquet(wpath)
+    _bpe_learned_words(spark, sf_dir).write.mode("overwrite").parquet(wpath)
     stored = spark.read.parquet(wpath)
     symv = (
         stored.select(
@@ -4199,25 +4189,15 @@ def _bpe_vocab_write(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         .write.mode("overwrite")
         .parquet(spath)
     )
-    return wpath, spath
 
 
-def _bpe_vocab_ensure(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    import os
-
-    from jobx_spark import artifacts as A
-
-    wpath, spath = _bpe_vocab_paths(sf_dir)
-    if not (
-        A.fs_exists(spark, os.path.join(wpath, "_SUCCESS"))
-        and A.fs_exists(spark, os.path.join(spath, "_SUCCESS"))
-    ):
-        _bpe_vocab_write(spark, sf_dir)
-    return wpath, spath
+BPE_VOCAB = index.Versioned(
+    "bpe-vocab", ("words", "symbols"), _bpe_vocab_write
+)
 
 
 def pipe_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, spath = _bpe_vocab_write(spark, sf_dir)
+    _, spath = BPE_VOCAB.build(spark, sf_dir)
     return (
         spark.read.parquet(spath)
         .select(
@@ -4251,7 +4231,7 @@ ORDER BY id
 
 
 def pipe_encode_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wpath, spath = _bpe_vocab_ensure(spark, sf_dir)
+    wpath, spath = BPE_VOCAB.ensure(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     words = spark.read.parquet(wpath)
     # the id map from the persisted symbol table: ≤ |chars| +

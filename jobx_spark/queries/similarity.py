@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jobx_spark import index
 from jobx_spark.functions import md5_long, md5_long_sql_duck
 from jobx_spark.lineage import cut_lineage
 from jobx_spark.operators.similarity import (
@@ -626,8 +627,17 @@ FROM per ORDER BY cell
 APPEND_MOD, APPEND_RES = 10, 9
 
 
+def _cells(df: DataFrame, centroids: DataFrame) -> DataFrame:
+    """(vec_id, cell) assignment of ``df`` under ``centroids``."""
+    from jobx_spark.operators.similarity import ivf_assign
+
+    return ivf_assign(df, centroids).select(
+        F.col("id").alias("vec_id"), "cell"
+    )
+
+
 def ann_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jobx_spark.operators.similarity import ivf_assign, kmeans_train
+    from jobx_spark.operators.similarity import kmeans_train
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % APPEND_MOD != APPEND_RES)
@@ -638,21 +648,12 @@ def ann_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the persisted index: base assignments materialize ONCE (at scale
     # this is the stored (cell)-bucketed table, not a computation)
-    base_idx = cut_lineage(
-        ivf_assign(base, centroids).select(
-            F.col("id").alias("vec_id"), "cell"
-        ),
-        "ivfa-index",
-    )
-    batch_idx = ivf_assign(batch, centroids).select(
-        F.col("id").alias("vec_id"), "cell"
-    )
+    base_idx = cut_lineage(_cells(base, centroids), "ivfa-index")
+    batch_idx = _cells(batch, centroids)
     # attestation leg: full re-assignment under the same frozen
     # centroids — never run in production, here it certifies
     # append == rebuild
-    rebuilt = ivf_assign(emb, centroids).select(
-        F.col("id").alias("vec_id"), "cell"
-    )
+    rebuilt = _cells(emb, centroids)
     return _ivf_append_census(spark, base_idx, batch_idx, rebuilt)
 
 
@@ -664,47 +665,10 @@ def _ivf_append_census(
 ) -> DataFrame:
     """Per-cell before/after/rebuild census with the membership-XOR
     append≡rebuild certificate — shared by ann_ivf_append and its
-    streaming twins. The base / batch / after legs are ONE conditional
-    aggregation over the tagged base∪batch union (guide §1.2-1, §2.4:
-    previously three separate aggregations + joins over the same rows;
-    count(when(tag, 1)) per cell is value-identical, and the after leg
-    over the union equals the old census over `appended` because every
-    caller passed appended ≡ base ∪ batch)."""
-    tagged = base_idx.withColumn(
-        "_is_base", F.lit(True)
-    ).unionByName(batch_idx.withColumn("_is_base", F.lit(False)))
-    after = tagged.groupBy("cell").agg(
-        F.count(F.when(F.col("_is_base"), 1)).alias("n_base"),
-        F.count(F.when(~F.col("_is_base"), 1)).alias("n_batch"),
-        F.count(F.lit(1)).alias("n_after"),
-        F.coalesce(F.bit_xor("vec_id"), F.lit(0).cast("long")).alias(
-            "xor_after"
-        ),
-    )
-    reb = rebuilt.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("n_rebuild"),
-        F.coalesce(F.bit_xor("vec_id"), F.lit(0).cast("long")).alias(
-            "xor_rebuild"
-        ),
-    )
-    dom = spark.range(KM_K).select(F.col("id").cast("int").alias("cell"))
-    out = dom.join(after, "cell", "left").join(reb, "cell", "left")
-    z = lambda c: F.coalesce(F.col(c), F.lit(0)).cast("long")  # noqa: E731
-    return (
-        out.select(
-            "cell",
-            z("n_base").alias("n_base"),
-            z("n_batch").alias("n_batch"),
-            z("n_after").alias("n_after"),
-            z("n_rebuild").alias("n_rebuild"),
-            (
-                (z("n_after") == z("n_rebuild"))
-                & (z("xor_after") == z("xor_rebuild"))
-            )
-            .cast("long")
-            .alias("append_matches_rebuild"),
-        )
-        .orderBy("cell")
+    persisted and streaming twins."""
+    return index.append_census(
+        spark, "cell", KM_K, index.tag(base_idx, batch_idx), rebuilt,
+        F.col("vec_id"),
     )
 
 
@@ -3004,12 +2968,7 @@ ORDER BY query_id, rank
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from jobx_spark.operators.similarity import (
-        _sdot,
-        cosine_from_scaled,
-        ivf_assign,
-        kmeans_train_multi,
-    )
+    from jobx_spark.operators.similarity import kmeans_train_multi
 
     emb = load_table(spark, sf_dir, "embeddings")
     subs, full, mat = _pq_subspaces(emb, with_full=True)
@@ -3021,9 +2980,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
     )
     coarse, sub_cents = trained[0], trained[1:]
-    cells = ivf_assign(full, coarse).select(
-        F.col("id").alias("vec_id"), "cell"
-    )
+    cells = _cells(full, coarse)
     # probe routing computed driver-side over the bounded probe set
     # (guide §2.4 — replaces a broadcast join + ranking window; same
     # numerics, see _driver_probes)
@@ -3979,102 +3936,71 @@ _KC_SCALED_SOURCE = (
 # of per-run retraining the r7–r9 plan audits kept attributing to the
 # ann_ivf* family disappears from the serving path entirely.
 # --------------------------------------------------------------------------
-def _ann_index_root(sf_dir: str) -> str:
-    import hashlib
-    import os
+def _train_centroids(
+    spark: SparkSession, corpus: DataFrame, cpath: str
+) -> DataFrame:
+    """Train the coarse quantizer on ``corpus``, persist it at
+    ``cpath`` and return the PERSISTED table (what is on disk is what
+    every assignment uses)."""
+    from jobx_spark.operators.similarity import kmeans_train
 
-    from jobx_spark.lineage import checkpoint_root
-
-    key = hashlib.sha256(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    return os.path.join(checkpoint_root(), f"ann-index-{key}")
-
-
-def _ann_index_write(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Train once, persist the serving tables under a NEW version dir,
-    then flip the version pointer (jobx_spark.artifacts, VERDICT r10
-    #5): a rebuild never mutates the published version, so a reader
-    pinned to v=N survives a concurrent rebuild to v=N+1 — the
-    snapshot-isolation contract a 1000-executor serve path needs. The
-    quantizer is deterministic, so every published version is
-    bit-identical and double-run sessions stay stable."""
-    import os
-
-    from jobx_spark import artifacts as A
-    from jobx_spark.operators.similarity import ivf_assign, kmeans_train
-
-    root = _ann_index_root(sf_dir)
-    ver, vdir = A.next_version_dir(spark, root)
-    cpath = os.path.join(vdir, "centroids")
-    ipath = os.path.join(vdir, "index")
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids = kmeans_train(
-        emb, k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
+    kmeans_train(
+        corpus, k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
         output="centroids",
-    )
-    centroids.write.mode("overwrite").parquet(cpath)
-    # the index row carries the vector's METADATA (label) beside the
-    # vector + its precomputed norm: filtered vector search
-    # (ann_filtered_topk) pushes metadata predicates into the pruned
-    # index scan instead of joining back to the corpus. The label rides
-    # THROUGH the assignment (ivf_assign extra_cols) — no
-    # corpus-to-corpus join in the build.
+    ).write.mode("overwrite").parquet(cpath)
+    return spark.read.parquet(cpath)
+
+
+def _write_serving_index(
+    spark: SparkSession, corpus: DataFrame, cpath: str, ipath: str,
+    extra_cols: tuple[str, ...] = (),
+) -> None:
+    """Train on ``corpus``, then persist the serving index: vector +
+    precomputed norm (+ ``extra_cols`` metadata) partitioned by cell."""
+    from jobx_spark.operators.similarity import ivf_assign
+
     cells = ivf_assign(
-        emb, spark.read.parquet(cpath), extra_cols=("label",)
+        corpus, _train_centroids(spark, corpus, cpath), extra_cols=extra_cols
     )
     (
         cells.select(
             F.col("id").alias("vec_id"),
             F.col("v").alias("embedding"),
             "norm_s",
-            "label",
+            *extra_cols,
             "cell",
         )
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(ipath)
     )
-    A.publish(spark, root, ver)
-    return cpath, ipath
 
 
-def _ann_index_ensure(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Resolve the published version via the pointer (Hadoop-FS-first
-    probes — portable to an S3/HDFS warehouse, VERDICT r10 #7); build
-    and publish v=1 if the artifact has never been published."""
-    import os
+def _ann_index_write(
+    spark: SparkSession, sf_dir: str, cpath: str, ipath: str
+) -> None:
+    """The quantizer is deterministic, so every published version is
+    bit-identical and double-run sessions stay stable. The index row
+    carries the vector's METADATA (label): filtered vector search
+    (ann_filtered_topk) pushes metadata predicates into the pruned
+    index scan instead of joining back to the corpus; the label rides
+    THROUGH the assignment — no corpus-to-corpus join in the build."""
+    _write_serving_index(
+        spark, load_table(spark, sf_dir, "embeddings"), cpath, ipath,
+        extra_cols=("label",),
+    )
 
-    from jobx_spark import artifacts as A
 
-    vdir = A.resolve(spark, _ann_index_root(sf_dir))
-    if vdir is not None:
-        cpath = os.path.join(vdir, "centroids")
-        ipath = os.path.join(vdir, "index")
-        if A.fs_exists(spark, os.path.join(cpath, "_SUCCESS")) and \
-                A.fs_exists(spark, os.path.join(ipath, "_SUCCESS")):
-            return cpath, ipath
-    return _ann_index_write(spark, sf_dir)
+ANN_INDEX = index.Versioned(
+    "ann-index", ("centroids", "index"), _ann_index_write
+)
 
 
 def ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cpath, ipath = _ann_index_write(spark, sf_dir)
-    idx = spark.read.parquet(ipath)
-    dom = spark.range(KM_K).select(F.col("id").cast("int").alias("cell"))
-    census = idx.groupBy("cell").agg(
-        F.count(F.lit(1)).cast("long").alias("n_vecs"),
-        F.coalesce(F.bit_xor("vec_id"), F.lit(0).cast("long")).alias(
-            "xor_vec_ids"
-        ),
-    )
-    return (
-        dom.join(census, "cell", "left")
-        .select(
-            "cell",
-            F.coalesce("n_vecs", F.lit(0)).cast("long").alias("n_vecs"),
-            F.coalesce("xor_vec_ids", F.lit(0).cast("long")).alias(
-                "xor_vec_ids"
-            ),
-        )
-        .orderBy("cell")
+    _cpath, ipath = ANN_INDEX.build(spark, sf_dir)
+    return index.census(
+        spark, {"cell": KM_K}, spark.read.parquet(ipath),
+        {"n_vecs": index.rows(), "xor_vec_ids": index.xor("vec_id")},
     )
 
 
@@ -4098,7 +4024,7 @@ ORDER BY cell
 
 
 def ann_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cpath, ipath = _ann_index_ensure(spark, sf_dir)
+    cpath, ipath = ANN_INDEX.ensure(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     return _index_serve_body(spark, cpath, ipath, _probe_queries(emb))
 
@@ -4269,7 +4195,7 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from jobx_spark.operators.dedup import cosine_from_scaled, scaled_dot
 
-    cpath, ipath = _ann_index_ensure(spark, sf_dir)
+    cpath, ipath = ANN_INDEX.ensure(spark, sf_dir)
     cent = spark.read.parquet(cpath).withColumn(
         "cnorm_s", scaled_dot(F.col("cv"), F.col("cv"))
     )
@@ -4442,70 +4368,41 @@ ORDER BY fr.query_id, fr.rank
 # XOR certificate as ann_ivf_append (identical output contract, so the
 # oracle is that query's oracle verbatim).
 # --------------------------------------------------------------------------
-def _ann_index_append_paths(sf_dir: str) -> tuple[str, str]:
-    import hashlib
-    import os
+def _ann_append_base(
+    spark: SparkSession, sf_dir: str, p: dict[str, str]
+) -> DataFrame:
+    """Train the quantizer ONCE on the base slice (persisted), and
+    assign the base against it."""
+    base = load_table(spark, sf_dir, "embeddings").filter(
+        F.col("vec_id") % APPEND_MOD != APPEND_RES
+    )
+    return _cells(base, _train_centroids(spark, base, p["centroids"]))
 
-    from jobx_spark.lineage import checkpoint_root
 
-    key = hashlib.sha256(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    root = os.path.join(checkpoint_root(), f"ann-index-append-{key}")
-    return os.path.join(root, "centroids"), os.path.join(root, "index")
+ANN_APPEND = index.Segmented(
+    "ann-index-append", "index", "cell", KM_K, ("vec_id",),
+    _ann_append_base, base_parts=("centroids",),
+)
 
 
 def ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from jobx_spark.operators.similarity import ivf_assign, kmeans_train
-
-    cpath, ipath = _ann_index_append_paths(sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") % APPEND_MOD != APPEND_RES)
     batch = emb.filter(F.col("vec_id") % APPEND_MOD == APPEND_RES)
-    # gate the base build on BOTH markers (ADVICE r10, mirrors
-    # _ann_index_ensure): a prior run that wrote centroids but died
-    # before the base index write would otherwise skip the repair and
-    # append a batch segment onto a missing base. (The append family's
-    # layout mutates in place by design — dynamic partition overwrite
-    # of the batch segment — so it stays unversioned; probes are
-    # portable via artifacts.fs_exists.)
-    from jobx_spark import artifacts as A
-
-    if not (
-        A.fs_exists(spark, os.path.join(cpath, "_SUCCESS"))
-        and A.fs_exists(spark, os.path.join(ipath, "_SUCCESS"))
-    ):
-        kmeans_train(
-            base, k=KM_K, iters=KM_ITERS, cent_base=KM_BASE,
-            scale=KM_SCALE, output="centroids",
-        ).write.mode("overwrite").parquet(cpath)
-        (
-            ivf_assign(base, spark.read.parquet(cpath))
-            .select(F.col("id").alias("vec_id"), "cell")
-            .withColumn("seg", F.lit("base"))
-            .write.mode("overwrite")
-            .partitionBy("seg", "cell")
-            .parquet(ipath)
-        )
     # THE APPEND: batch-side-only work against the persisted quantizer;
     # new files land under seg=batch/cell=*, base files untouched
-    (
-        ivf_assign(batch, spark.read.parquet(cpath))
-        .select(F.col("id").alias("vec_id"), "cell")
-        .withColumn("seg", F.lit("batch"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("seg", "cell")
-        .parquet(ipath)
+    p = ANN_APPEND.append(
+        spark, sf_dir,
+        lambda p: ANN_APPEND.write_segment(
+            _cells(batch, spark.read.parquet(p["centroids"])),
+            p["index"], "batch",
+        ),
     )
-    disk = spark.read.parquet(ipath).select("vec_id", "cell", "seg")
+    disk = spark.read.parquet(p["index"]).select("vec_id", "cell", "seg")
     base_idx = disk.filter(F.col("seg") == "base").select("vec_id", "cell")
     batch_idx = disk.filter(F.col("seg") == "batch").select("vec_id", "cell")
     # attestation leg: full re-assignment under the same persisted
     # centroids — never run in production
-    rebuilt = ivf_assign(emb, spark.read.parquet(cpath)).select(
-        F.col("id").alias("vec_id"), "cell"
-    )
+    rebuilt = _cells(emb, spark.read.parquet(p["centroids"]))
     return _ivf_append_census(spark, base_idx, batch_idx, rebuilt)
 
 
@@ -4528,70 +4425,8 @@ def ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 # FILES instead of nprobe × n_appends.
 # --------------------------------------------------------------------------
 def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    cpath, ipath = _ann_index_append_paths(sf_dir)
-    # repair gate checks BOTH markers (ADVICE r10): centroids written
-    # but index write died → cpath-only gating would read a missing
-    # ipath instead of re-running the idempotent append
-    from jobx_spark import artifacts as A
-
-    if not (
-        A.fs_exists(spark, os.path.join(cpath, "_SUCCESS"))
-        and A.fs_exists(spark, os.path.join(ipath, "_SUCCESS"))
-    ):
-        # materialize the appended generation this job compacts — the
-        # append's table writes run eagerly inside the call; its
-        # returned census frame is not needed here
-        ann_index_append(spark, sf_dir)
-    gpath = os.path.join(os.path.dirname(ipath), "index-compacted")
-    old = spark.read.parquet(ipath).select("vec_id", "cell")
-    (
-        old.repartition(KM_K, "cell")
-        .sortWithinPartitions("cell", "vec_id")
-        .write.mode("overwrite")
-        # the census pins files_after = 1 per populated cell; enforce
-        # the single-file physical claim in the PLAN (ADVICE r10) —
-        # a session-level maxRecordsPerFile would otherwise split a
-        # semantically correct compaction and fail the gate
-        .option("maxRecordsPerFile", 0)
-        .partitionBy("cell")
-        .parquet(gpath)
-    )
-    new = spark.read.parquet(gpath)
-    fcount = (
-        new.withColumn("f", F.input_file_name())
-        .groupBy("cell")
-        .agg(F.count_distinct("f").cast("long").alias("files_after"))
-    )
-
-    def census(df: DataFrame, n: str, x: str) -> DataFrame:
-        return df.groupBy("cell").agg(
-            F.count(F.lit(1)).cast("long").alias(n),
-            F.coalesce(F.bit_xor("vec_id"), F.lit(0).cast("long"))
-            .alias(x),
-        )
-
-    dom = spark.range(KM_K).select(F.col("id").cast("int").alias("cell"))
-    z = lambda c: F.coalesce(F.col(c), F.lit(0)).cast("long")  # noqa: E731
-    return (
-        dom.join(census(old, "n_before", "x_before"), "cell", "left")
-        .join(census(new.select("vec_id", "cell"), "n_after", "x_after"),
-              "cell", "left")
-        .join(fcount, "cell", "left")
-        .select(
-            "cell",
-            z("n_before").alias("n_before"),
-            z("n_after").alias("n_after"),
-            z("files_after").alias("files_after"),
-            (
-                (z("n_before") == z("n_after"))
-                & (z("x_before") == z("x_after"))
-            )
-            .cast("long")
-            .alias("content_match"),
-        )
-        .orderBy("cell")
+    return ANN_APPEND.compact(
+        spark, sf_dir, ann_index_append, {"x": index.xor("vec_id")}
     )
 
 
@@ -4665,27 +4500,11 @@ ORDER BY cell
 # (pinned by test): raw corpus vectors are never touched at query
 # time, only the code table and the query rows.
 # --------------------------------------------------------------------------
-def _pq_index_root(sf_dir: str) -> str:
-    import hashlib
-    import os
+def _pq_index_write(
+    spark: SparkSession, sf_dir: str, bpath: str, cpath: str
+) -> None:
+    from jobx_spark.operators.similarity import kmeans_train_multi
 
-    from jobx_spark.lineage import checkpoint_root
-
-    key = hashlib.sha256(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    return os.path.join(checkpoint_root(), f"ann-pq-index-{key}")
-
-
-def _pq_index_write(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    # version-pointer publish — see _ann_index_write
-    import os
-
-    from jobx_spark import artifacts as A
-    from jobx_spark.operators.similarity import ivf_assign, kmeans_train_multi
-
-    root = _pq_index_root(sf_dir)
-    ver, vdir = A.next_version_dir(spark, root)
-    bpath = os.path.join(vdir, "codebooks")
-    cpath = os.path.join(vdir, "codes")
     emb = load_table(spark, sf_dir, "embeddings")
     subs, _, mat = _pq_subspaces(emb)
     # all 4 subspace codebooks out of ONE fused Lloyd chain (guide
@@ -4711,53 +4530,18 @@ def _pq_index_write(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         "s", "vec_id", "cell"
     )
     codes.write.mode("overwrite").parquet(cpath)
-    A.publish(spark, root, ver)
-    return bpath, cpath
 
 
-def _pq_index_ensure(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    # pointer-resolved, Hadoop-FS-first — see _ann_index_ensure
-    import os
-
-    from jobx_spark import artifacts as A
-
-    vdir = A.resolve(spark, _pq_index_root(sf_dir))
-    if vdir is not None:
-        bpath = os.path.join(vdir, "codebooks")
-        cpath = os.path.join(vdir, "codes")
-        if A.fs_exists(spark, os.path.join(bpath, "_SUCCESS")) and \
-                A.fs_exists(spark, os.path.join(cpath, "_SUCCESS")):
-            return bpath, cpath
-    return _pq_index_write(spark, sf_dir)
+PQ_INDEX = index.Versioned(
+    "ann-pq-index", ("codebooks", "codes"), _pq_index_write
+)
 
 
 def ann_pq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, cpath = _pq_index_write(spark, sf_dir)
-    codes = spark.read.parquet(cpath)
-    dom = (
-        spark.range(PQ_SUB)
-        .select(F.col("id").cast("int").alias("s"))
-        .crossJoin(
-            spark.range(KM_K).select(F.col("id").cast("int").alias("cell"))
-        )
-    )
-    census = codes.groupBy("s", "cell").agg(
-        F.count(F.lit(1)).cast("long").alias("n_vecs"),
-        F.coalesce(F.bit_xor("vec_id"), F.lit(0).cast("long")).alias(
-            "xor_vec_ids"
-        ),
-    )
-    return (
-        dom.join(census, ["s", "cell"], "left")
-        .select(
-            "s",
-            "cell",
-            F.coalesce("n_vecs", F.lit(0)).cast("long").alias("n_vecs"),
-            F.coalesce("xor_vec_ids", F.lit(0).cast("long")).alias(
-                "xor_vec_ids"
-            ),
-        )
-        .orderBy("s", "cell")
+    _bpath, cpath = PQ_INDEX.build(spark, sf_dir)
+    return index.census(
+        spark, {"s": PQ_SUB, "cell": KM_K}, spark.read.parquet(cpath),
+        {"n_vecs": index.rows(), "xor_vec_ids": index.xor("vec_id")},
     )
 
 
@@ -4797,7 +4581,7 @@ def ann_pq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from jobx_spark.operators.similarity import _sdot
 
-    bpath, cpath = _pq_index_ensure(spark, sf_dir)
+    bpath, cpath = PQ_INDEX.ensure(spark, sf_dir)
     books = spark.read.parquet(bpath)
     codes = spark.read.parquet(cpath)
     emb = load_table(spark, sf_dir, "embeddings")
@@ -4866,42 +4650,21 @@ def _ann_scaled_corpus(emb: DataFrame) -> DataFrame:
     )
 
 
+def _ann_scaled_write(
+    spark: SparkSession, sf_dir: str, cpath: str, ipath: str
+) -> None:
+    scaled = _ann_scaled_corpus(load_table(spark, sf_dir, "embeddings"))
+    _write_serving_index(spark, scaled, cpath, ipath)
+
+
+ANN_SCALED = index.Versioned(
+    "ann-index", ("centroids", "index"), _ann_scaled_write, salt=":scaled"
+)
+
+
 def ann_index_serve_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
-    from jobx_spark.lineage import checkpoint_root
-    from jobx_spark.operators.similarity import ivf_assign, kmeans_train
-
-    key = hashlib.sha256(
-        (sf_dir.rstrip("/") + ":scaled").encode()
-    ).hexdigest()[:12]
-    root = os.path.join(checkpoint_root(), f"ann-index-{key}")
-    cpath, ipath = os.path.join(root, "centroids"), os.path.join(root, "index")
-    from jobx_spark import artifacts as A
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    scaled = _ann_scaled_corpus(emb)
-    if not (
-        A.fs_exists(spark, os.path.join(cpath, "_SUCCESS"))
-        and A.fs_exists(spark, os.path.join(ipath, "_SUCCESS"))
-    ):
-        kmeans_train(
-            scaled, k=KM_K, iters=KM_ITERS, cent_base=KM_BASE,
-            scale=KM_SCALE, output="centroids",
-        ).write.mode("overwrite").parquet(cpath)
-        (
-            ivf_assign(scaled, spark.read.parquet(cpath))
-            .select(
-                F.col("id").alias("vec_id"),
-                F.col("v").alias("embedding"),
-                "norm_s",
-                "cell",
-            )
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(ipath)
-        )
+    cpath, ipath = ANN_SCALED.ensure(spark, sf_dir)
+    scaled = _ann_scaled_corpus(load_table(spark, sf_dir, "embeddings"))
     return _index_serve_body(spark, cpath, ipath, _probe_queries(scaled))
 
 
@@ -4943,50 +4706,11 @@ WITH es AS (
 # the 8× probe): its number read against ann_index_serve's is the
 # flat-serve evidence.
 # --------------------------------------------------------------------------
-REP64 = 64
-
-
-def _scaled64_ensure(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    import hashlib
-    import os
-
-    from jobx_spark.lineage import checkpoint_root
-
-    cpath, ipath = _ann_index_ensure(spark, sf_dir)
-    key = hashlib.sha256(
-        (sf_dir.rstrip("/") + ":scaled64").encode()
-    ).hexdigest()[:12]
-    i64 = os.path.join(checkpoint_root(), f"ann-index-{key}", "index")
-    from jobx_spark import artifacts as A
-
-    if A.fs_exists(spark, os.path.join(i64, "_SUCCESS")):
-        return cpath, i64
-    rep = F.explode(F.array(*[F.lit(i) for i in range(REP64)])).alias("rep")
-    (
-        spark.read.parquet(ipath)
-        .select("vec_id", "embedding", "norm_s", "label", "cell", rep)
-        .select(
-            (
-                F.col("vec_id").cast("long")
-                + F.col("rep").cast("long") * F.lit(_ANN_REP_BASE)
-            ).alias("vec_id"),
-            "embedding",
-            "norm_s",
-            "label",
-            (
-                F.col("cell").cast("int")
-                + F.col("rep").cast("int") * F.lit(KM_K)
-            ).alias("cell"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(i64)
-    )
-    return cpath, i64
-
-
 def ann_index_serve_scaled64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cpath, i64 = _scaled64_ensure(spark, sf_dir)
+    cpath, ipath = ANN_INDEX.ensure(spark, sf_dir)
+    i64 = index.replicate(
+        spark, sf_dir, "ann-index", ipath, "vec_id", "cell", KM_K, ("cell",)
+    )
     emb = load_table(spark, sf_dir, "embeddings")
     return _index_serve_body(spark, cpath, i64, _probe_queries(emb))
 

@@ -1096,7 +1096,7 @@ def stream_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from jobx_spark.lineage import cut_lineage, scratch_dir
-    from jobx_spark.operators.similarity import ivf_assign, kmeans_train
+    from jobx_spark.operators.similarity import kmeans_train
     from jobx_spark.queries.similarity import (
         APPEND_MOD,
         APPEND_RES,
@@ -1104,6 +1104,7 @@ def stream_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         KM_ITERS,
         KM_K,
         KM_SCALE,
+        _cells,
         _ivf_append_census,
     )
     from jobx_spark.sources import load_table
@@ -1117,12 +1118,7 @@ def stream_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         base, k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
         output="centroids",
     )
-    base_idx = cut_lineage(
-        ivf_assign(base, centroids).select(
-            F.col("id").alias("vec_id"), "cell"
-        ),
-        "sivfa-index",
-    )
+    base_idx = cut_lineage(_cells(base, centroids), "sivfa-index")
     rdir = S.write_replay_files(batch, ["vec_id"], 3, "sivfa")
     st = S.stream_replay(spark, rdir)
     root = scratch_dir("stream_ivfa")
@@ -1130,8 +1126,7 @@ def stream_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _assign(batch_df: DataFrame, batch_id: int) -> None:
         (
-            ivf_assign(batch_df, centroids)
-            .select(F.col("id").alias("vec_id"), "cell")
+            _cells(batch_df, centroids)
             .withColumn("_batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -1151,9 +1146,7 @@ def stream_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination()
     S._capture_run(q)
     batch_idx = spark.read.parquet(out).select("vec_id", "cell")
-    rebuilt = ivf_assign(emb, centroids).select(
-        F.col("id").alias("vec_id"), "cell"
-    )
+    rebuilt = _cells(emb, centroids)
     return _ivf_append_census(spark, base_idx, batch_idx, rebuilt)
 
 
@@ -1180,24 +1173,17 @@ def _sivfa_oracle() -> str:
 def stream_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
     from jobx_spark.lineage import scratch_dir
-    from jobx_spark.operators.dedup import cosine_from_scaled, scaled_dot
     from jobx_spark.queries.similarity import (
-        K,
-        KM_NPROBE,
+        ANN_INDEX,
         N_QUERIES,
-        _ann_index_ensure,
+        _index_serve_body,
     )
     from jobx_spark.sources import load_table
 
-    cpath, ipath = _ann_index_ensure(spark, sf_dir)
-    cent = spark.read.parquet(cpath).withColumn(
-        "cnorm_s", scaled_dot(F.col("cv"), F.col("cv"))
-    )
-    idx = spark.read.parquet(ipath)
+    cpath, ipath = ANN_INDEX.ensure(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     qset = emb.filter(F.col("vec_id") < N_QUERIES).select(
         "vec_id", "embedding"
@@ -1208,64 +1194,11 @@ def stream_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     out, ckpt = f"{root}/out", f"{root}/ckpt"
 
     def _serve(batch_df: DataFrame, batch_id: int) -> None:
-        # zero-norm probe mask — see _index_serve_body (the oracle is
-        # _index_serve_oracle verbatim, which carries vnorm_s > 0)
-        q = (
-            batch_df.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("qv"),
-            )
-            .withColumn("qnorm_s", scaled_dot(F.col("qv"), F.col("qv")))
-            .filter(F.col("qnorm_s") > 0)
-        )
-        qcells = q.join(F.broadcast(cent)).select(
-            "query_id",
-            "qv",
-            "qnorm_s",
-            F.col("cent_id").alias("cell"),
-            cosine_from_scaled(
-                scaled_dot(F.col("qv"), F.col("cv")),
-                F.col("qnorm_s"),
-                F.col("cnorm_s"),
-            ).alias("ccos"),
-        )
-        wprobe = W.partitionBy("query_id").orderBy(
-            F.desc("ccos"), F.asc("cell")
-        )
-        probes = (
-            qcells.withColumn("pr", F.row_number().over(wprobe))
-            .filter(F.col("pr") <= KM_NPROBE)
-            .select("query_id", "qv", "qnorm_s", "cell")
-        )
-        # corpus-side zero-norm mask — see _index_serve_body; the
-        # scoring dot is the vectorized Arrow UDF (bit-equal), same
-        # swap as the batch serve kernel (guide §4.2)
-        from jobx_spark.operators.similarity import _sdot
-
-        scored = idx.filter(F.col("norm_s") > 0).join(
-            F.broadcast(probes), "cell"
-        ).select(
-            "query_id",
-            "vec_id",
-            F.col("cell").cast("int").alias("cell"),
-            cosine_from_scaled(
-                _sdot(F.col("qv"), F.col("embedding")),
-                F.col("qnorm_s"),
-                F.col("norm_s"),
-            ).alias("cosine"),
-        )
-        wrank = W.partitionBy("query_id").orderBy(
-            F.desc("cosine"), F.asc("vec_id")
-        )
+        # the batch serving kernel, per micro-batch of query vectors
         (
-            scored.withColumn("rank", F.row_number().over(wrank))
-            .filter(F.col("rank") <= K)
-            .select(
-                "query_id",
-                "vec_id",
-                F.col("rank").cast("int").alias("rank"),
-                "cosine",
-                "cell",
+            _index_serve_body(
+                spark, cpath, ipath,
+                batch_df.withColumnRenamed("vec_id", "query_id"),
             )
             .withColumn("_batch_id", F.lit(batch_id))
             .write.mode("overwrite")
@@ -1318,22 +1251,16 @@ def stream_dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from jobx_spark.lineage import scratch_dir
-    from jobx_spark.operators.dedup import banded_signature
+    from jobx_spark.lineage import cut_lineage, scratch_dir
     from jobx_spark.queries.dedup import (
-        BANDS,
+        DBKT,
+        DEDUP_INDEX,
         INCR_SPLIT_ID,
-        N_HASHES,
-        SEED,
-        SHINGLE_N,
-        _dedup_index_ensure,
+        _banded,
     )
     from jobx_spark.sources import load_table
 
-    from jobx_spark.lineage import cut_lineage
-    from jobx_spark.queries.dedup import DBKT
-
-    ipath = _dedup_index_ensure(spark, sf_dir)
+    (ipath,) = DEDUP_INDEX.ensure(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") >= INCR_SPLIT_ID).select(
         "doc_id", "text"
@@ -1345,10 +1272,7 @@ def stream_dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _probe(batch_df: DataFrame, batch_id: int) -> None:
         bb = cut_lineage(
-            banded_signature(
-                batch_df, n_hashes=N_HASHES, bands=BANDS,
-                shingle_n=SHINGLE_N, seed=SEED,
-            ).select(
+            _banded(batch_df).select(
                 F.col("id").alias("new_id"), "band", "bh",
                 F.pmod(F.col("bh"), F.lit(DBKT)).alias("bkt"),
             ),
@@ -1416,30 +1340,20 @@ def stream_dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from jobx_spark.lineage import cut_lineage, scratch_dir
-    from jobx_spark.operators.dedup import banded_signature
     from jobx_spark.queries.dedup import (
-        BANDS,
         INCR_SPLIT_ID,
-        N_HASHES,
-        SEED,
-        SHINGLE_N,
         _band_append_census,
+        _banded,
     )
     from jobx_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents")
 
-    def banded(df: DataFrame) -> DataFrame:
-        return banded_signature(
-            df, n_hashes=N_HASHES, bands=BANDS, shingle_n=SHINGLE_N,
-            seed=SEED,
-        )
-
     corpus = docs.filter(F.col("doc_id") < INCR_SPLIT_ID)
     batch = docs.filter(F.col("doc_id") >= INCR_SPLIT_ID).select(
         "doc_id", "text"
     )
-    base_idx = cut_lineage(banded(corpus), "sdida-index")
+    base_idx = cut_lineage(_banded(corpus), "sdida-index")
     rdir = S.write_replay_files(batch, ["doc_id"], 3, "sdida")
     st = S.stream_replay(spark, rdir)
     root = scratch_dir("stream_dedup_append")
@@ -1447,7 +1361,7 @@ def stream_dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _append(batch_df: DataFrame, batch_id: int) -> None:
         (
-            banded(batch_df)
+            _banded(batch_df)
             .withColumn("_batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -1467,7 +1381,7 @@ def stream_dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination()
     S._capture_run(q)
     batch_idx = spark.read.parquet(out).select("id", "band", "bh")
-    rebuilt = banded(docs)
+    rebuilt = _banded(docs)
     return _band_append_census(spark, base_idx, batch_idx, rebuilt)
 
 
@@ -1497,82 +1411,57 @@ def _sdida_oracle() -> str:
 # two lifecycles' artifacts never cross-contaminate a census.
 # --------------------------------------------------------------------------
 def stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
+    import dataclasses
     import os
 
     from pyspark.sql import functions as F
 
-    from jobx_spark import artifacts as A
-    from jobx_spark.lineage import checkpoint_root, scratch_dir
-    from jobx_spark.operators.similarity import ivf_assign, kmeans_train
+    from jobx_spark.lineage import scratch_dir
     from jobx_spark.queries.similarity import (
+        ANN_APPEND,
         APPEND_MOD,
         APPEND_RES,
-        KM_BASE,
-        KM_ITERS,
-        KM_K,
-        KM_SCALE,
+        _cells,
         _ivf_append_census,
     )
     from jobx_spark.sources import load_table
 
-    key = hashlib.sha256(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    root = os.path.join(checkpoint_root(), f"ann-index-ingest-{key}")
-    cpath, ipath = os.path.join(root, "centroids"), os.path.join(root, "index")
+    ingest = dataclasses.replace(ANN_APPEND, family="ann-index-ingest")
     emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") % APPEND_MOD != APPEND_RES)
     batch = emb.filter(F.col("vec_id") % APPEND_MOD == APPEND_RES).select(
         "vec_id", "embedding"
     )
-    if not (
-        A.fs_exists(spark, os.path.join(cpath, "_SUCCESS"))
-        and A.fs_exists(spark, os.path.join(ipath, "_SUCCESS"))
-    ):
-        kmeans_train(
-            base, k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
-            output="centroids",
-        ).write.mode("overwrite").parquet(cpath)
-        (
-            ivf_assign(base, spark.read.parquet(cpath))
-            .select(F.col("id").alias("vec_id"), "cell")
-            .withColumn("seg", F.lit("base"))
-            .write.mode("overwrite")
-            .partitionBy("seg", "cell")
-            .parquet(ipath)
-        )
-    centroids = spark.read.parquet(cpath)
-    rdir = S.write_replay_files(batch, ["vec_id"], 3, "singest")
-    st = S.stream_replay(spark, rdir)
-    ckpt = f"{scratch_dir('stream_ingest')}/ckpt"
 
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            ivf_assign(batch_df, centroids)
-            .select(F.col("id").alias("vec_id"), "cell")
-            .withColumn("seg", F.lit(f"b{batch_id}"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("seg", "cell")
-            .parquet(ipath)
-        )
+    def _stream(p: dict[str, str]) -> None:
+        centroids = spark.read.parquet(p["centroids"])
+        rdir = S.write_replay_files(batch, ["vec_id"], 3, "singest")
+        st = S.stream_replay(spark, rdir)
+        ckpt = f"{scratch_dir('stream_ingest')}/ckpt"
 
-    q = (
-        st.writeStream.foreachBatch(_ingest)
-        # contract label for the STREAM_PLANS audit: stateless per
-        # micro-batch — the quantizer is a frozen persisted side input
-        .queryName(f"singest_stateless_{os.getpid()}_{next(S._name_counter)}")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    S._capture_run(q)
-    disk = spark.read.parquet(ipath).select("vec_id", "cell", "seg")
+        def _ingest(batch_df: DataFrame, batch_id: int) -> None:
+            ingest.write_segment(
+                _cells(batch_df, centroids), p["index"], f"b{batch_id}"
+            )
+
+        q = (
+            st.writeStream.foreachBatch(_ingest)
+            # contract label for the STREAM_PLANS audit: stateless per
+            # micro-batch — the quantizer is a frozen persisted side input
+            .queryName(
+                f"singest_stateless_{os.getpid()}_{next(S._name_counter)}"
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        S._capture_run(q)
+
+    p = ingest.append(spark, sf_dir, _stream)
+    disk = spark.read.parquet(p["index"]).select("vec_id", "cell", "seg")
     base_idx = disk.filter(F.col("seg") == "base").select("vec_id", "cell")
     batch_idx = disk.filter(F.col("seg") != "base").select("vec_id", "cell")
-    rebuilt = ivf_assign(emb, centroids).select(
-        F.col("id").alias("vec_id"), "cell"
-    )
+    rebuilt = _cells(emb, spark.read.parquet(p["centroids"]))
     return _ivf_append_census(spark, base_idx, batch_idx, rebuilt)
 
 
@@ -1602,12 +1491,12 @@ def stream_bm25_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from jobx_spark.lineage import scratch_dir
     from jobx_spark.queries.text import (
+        BM25_INDEX,
         BM25_QUERIES,
-        _bm25_index_ensure,
         _bm25_serve_body,
     )
 
-    ppath, spath = _bm25_index_ensure(spark, sf_dir)
+    ppath, spath = BM25_INDEX.ensure(spark, sf_dir)
     qdf = spark.createDataFrame(
         sorted(BM25_QUERIES.items()), "query_id INT, qtext STRING"
     )
@@ -1686,88 +1575,55 @@ def _sbm25_oracle() -> str:
 # cross-contaminate a census.
 # --------------------------------------------------------------------------
 def stream_bm25_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
+    import dataclasses
     import os
 
     from pyspark.sql import functions as F
 
-    from jobx_spark import artifacts as A
-    from jobx_spark.lineage import checkpoint_root, scratch_dir
+    from jobx_spark.lineage import scratch_dir
     from jobx_spark.queries.dedup import INCR_SPLIT_ID
     from jobx_spark.queries.text import (
-        TBKT,
+        BM25_APPEND,
         _bm25_append_census,
-        _bm25_corpus_scalars,
         _bm25_postings,
+        _bm25_republish_scalars,
     )
     from jobx_spark.sources import load_table
 
-    key = hashlib.sha256(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    iroot = os.path.join(checkpoint_root(), f"bm25-index-ingest-{key}")
-    ppath = os.path.join(iroot, "postings")
-    sbase = os.path.join(iroot, "scalars_base")
-    spath = os.path.join(iroot, "scalars")
+    ingest = dataclasses.replace(BM25_APPEND, family="bm25-index-ingest")
     docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") < INCR_SPLIT_ID)
     batch = docs.filter(F.col("doc_id") >= INCR_SPLIT_ID).select(
         "doc_id", "text"
     )
-    if not A.fs_exists(spark, os.path.join(ppath, "_SUCCESS")):
-        (
-            _bm25_postings(corpus)
-            .withColumn("seg", F.lit("base"))
-            .repartition(TBKT, "tbkt")
-            .sortWithinPartitions("tbkt", "term", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("seg", "tbkt")
-            .parquet(ppath)
-        )
-        _bm25_corpus_scalars(corpus).write.mode("overwrite").parquet(sbase)
-    rdir = S.write_replay_files(batch, ["doc_id"], 3, "sbm25a")
-    st = S.stream_replay(spark, rdir)
-    ckpt = f"{scratch_dir('stream_bm25_append')}/ckpt"
 
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            _bm25_postings(batch_df)
-            .withColumn("seg", F.lit(f"b{batch_id}"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("seg", "tbkt")
-            .parquet(ppath)
-        )
+    def _stream(p: dict[str, str]) -> None:
+        rdir = S.write_replay_files(batch, ["doc_id"], 3, "sbm25a")
+        st = S.stream_replay(spark, rdir)
+        ckpt = f"{scratch_dir('stream_bm25_append')}/ckpt"
 
-    q = (
-        st.writeStream.foreachBatch(_append)
-        # contract label for the STREAM_PLANS audit: stateless per
-        # micro-batch — tokenization constants are frozen code
-        .queryName(
-            f"sbm25a_stateless_{os.getpid()}_{next(S._name_counter)}"
+        def _append(batch_df: DataFrame, batch_id: int) -> None:
+            ingest.write_segment(
+                _bm25_postings(batch_df), p["postings"], f"b{batch_id}"
+            )
+
+        q = (
+            st.writeStream.foreachBatch(_append)
+            # contract label for the STREAM_PLANS audit: stateless per
+            # micro-batch — tokenization constants are frozen code
+            .queryName(
+                f"sbm25a_stateless_{os.getpid()}_{next(S._name_counter)}"
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    S._capture_run(q)
-    # the scalars republish (base + the whole batch side's deltas)
-    sb = spark.read.parquet(sbase)
-    bd = _bm25_corpus_scalars(
-        docs.filter(F.col("doc_id") >= INCR_SPLIT_ID)
-    ).select(
-        F.col("n_docs").alias("b_docs"), F.col("t_toks").alias("b_toks")
-    )
-    (
-        sb.crossJoin(bd)
-        .select(
-            (F.col("n_docs") + F.col("b_docs")).alias("n_docs"),
-            (F.col("t_toks") + F.col("b_toks")).alias("t_toks"),
-        )
-        .write.mode("overwrite")
-        .parquet(spath)
-    )
-    A.touch(spark, os.path.join(iroot, "_APPEND_DONE"))
-    return _bm25_append_census(spark, sf_dir, ppath, spath)
+        q.awaitTermination()
+        S._capture_run(q)
+        # the scalars republish (base + the whole batch side's deltas)
+        _bm25_republish_scalars(spark, p, batch)
+
+    p = ingest.append(spark, sf_dir, _stream)
+    return _bm25_append_census(spark, sf_dir, p["postings"], p["scalars"])
 
 
 def _sbm25a_oracle() -> str:

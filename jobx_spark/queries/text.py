@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jobx_spark import index
 from jobx_spark.operators.text import (
     FINGERPRINT_MOD,
     LANG_STOPWORDS,
@@ -925,17 +926,24 @@ BM25_S_IDF = 10**6
 BM25_S_TF = 10**4
 
 
+def _bm25_query_terms(spark: SparkSession) -> tuple[DataFrame, list[str]]:
+    """The BM25_QUERIES batch as (query_id, term) rows, and its sorted
+    vocabulary."""
+    qterms = spark.createDataFrame(
+        [(qid, t) for qid, q in BM25_QUERIES.items() for t in q.split()],
+        "query_id INT, term STRING",
+    )
+    terms = sorted({t for q in BM25_QUERIES.values() for t in q.split()})
+    return qterms, terms
+
+
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     from jobx_spark.lineage import cut_lineage
 
     docs = load_table(spark, sf_dir, "documents")
-    all_terms = sorted({t for q in BM25_QUERIES.values() for t in q.split()})
-    qterms = spark.createDataFrame(
-        [(qid, t) for qid, q in BM25_QUERIES.items() for t in q.split()],
-        "query_id INT, term STRING",
-    )
+    qterms, all_terms = _bm25_query_terms(spark)
     tok = docs.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("term")
     )
@@ -1935,26 +1943,11 @@ def _bm25_bucket_py(term: str) -> int:
     return int(_h.md5(f"bm25:{term}".encode()).hexdigest()[:15], 16) % TBKT
 
 
-def _bm25_index_root(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    from jobx_spark.lineage import checkpoint_root
-
-    key = hashlib.sha256(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    return os.path.join(checkpoint_root(), f"bm25-index-{key}")
-
-
-def _bm25_index_write(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    import os
-
-    from jobx_spark import artifacts as A
+def _bm25_index_write(
+    spark: SparkSession, sf_dir: str, ppath: str, spath: str
+) -> None:
     from jobx_spark.functions import md5_long
 
-    root = _bm25_index_root(sf_dir)
-    ver, vdir = A.next_version_dir(spark, root)
-    ppath = os.path.join(vdir, "postings")
-    spath = os.path.join(vdir, "scalars")
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(
@@ -1978,60 +1971,23 @@ def _bm25_index_write(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         .partitionBy("tbkt")
         .parquet(ppath)
     )
-    # corpus scalars match text_bm25_topk's exactly: n_docs counts
-    # EVERY document row (null-text docs included), t_toks sums
-    # size(tokens) with nulls skipped
-    (
-        docs.select(
-            F.size(tokens(F.col("text"))).cast("long").alias("dl")
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("dl").alias("t_toks"),
-        )
-        .write.mode("overwrite")
-        .parquet(spath)
-    )
-    A.publish(spark, root, ver)
-    return ppath, spath
+    _bm25_corpus_scalars(docs).write.mode("overwrite").parquet(spath)
 
 
-def _bm25_index_ensure(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    import os
-
-    from jobx_spark import artifacts as A
-
-    vdir = A.resolve(spark, _bm25_index_root(sf_dir))
-    if vdir is not None:
-        ppath = os.path.join(vdir, "postings")
-        spath = os.path.join(vdir, "scalars")
-        if A.fs_exists(spark, os.path.join(ppath, "_SUCCESS")) and \
-                A.fs_exists(spark, os.path.join(spath, "_SUCCESS")):
-            return ppath, spath
-    return _bm25_index_write(spark, sf_dir)
+BM25_INDEX = index.Versioned(
+    "bm25-index", ("postings", "scalars"), _bm25_index_write
+)
 
 
 def text_bm25_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ppath, _spath = _bm25_index_write(spark, sf_dir)
-    post = spark.read.parquet(ppath)
-    dom = spark.range(TBKT).select(F.col("id").cast("int").alias("tbkt"))
-    census = post.groupBy("tbkt").agg(
-        F.count(F.lit(1)).cast("long").alias("n_postings"),
-        F.count_distinct("term").cast("long").alias("n_terms"),
-        F.coalesce(F.bit_xor("doc_id"), F.lit(0).cast("long")).alias(
-            "xor_doc_ids"
-        ),
-    )
-    z = lambda c: F.coalesce(F.col(c), F.lit(0)).cast("long")  # noqa: E731
-    return (
-        dom.join(census, "tbkt", "left")
-        .select(
-            "tbkt",
-            z("n_postings").alias("n_postings"),
-            z("n_terms").alias("n_terms"),
-            z("xor_doc_ids").alias("xor_doc_ids"),
-        )
-        .orderBy("tbkt")
+    ppath, _spath = BM25_INDEX.build(spark, sf_dir)
+    return index.census(
+        spark, {"tbkt": TBKT}, spark.read.parquet(ppath),
+        {
+            "n_postings": index.rows(),
+            "n_terms": F.count_distinct("term").cast("long"),
+            "xor_doc_ids": index.xor("doc_id"),
+        },
     )
 
 
@@ -2104,12 +2060,8 @@ def _bm25_serve_body(
 
 
 def text_bm25_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ppath, spath = _bm25_index_ensure(spark, sf_dir)
-    all_terms = sorted({t for q in BM25_QUERIES.values() for t in q.split()})
-    qterms = spark.createDataFrame(
-        [(qid, t) for qid, q in BM25_QUERIES.items() for t in q.split()],
-        "query_id INT, term STRING",
-    )
+    ppath, spath = BM25_INDEX.ensure(spark, sf_dir)
+    qterms, all_terms = _bm25_query_terms(spark)
     return _bm25_serve_body(spark, ppath, spath, qterms, all_terms)
 
 
@@ -2136,12 +2088,8 @@ def text_bm25_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     batch's own deltas (both addends derived from fixed inputs, so
 #     the republish is overwrite-idempotent — never read-modify-write
 #     of its own previous output);
-#   _APPEND_DONE — terminal marker touched AFTER the batch write and
-#     scalars republish; the compact job gates its repair on THIS,
-#     not the root _SUCCESS Spark writes after the base write (ADVICE
-#     r11: a crash between base and batch writes leaves _SUCCESS
-#     present, so a root-_SUCCESS gate would compact a base-only
-#     index).
+#   the terminal marker — touched AFTER the batch write and scalars
+#     republish; compact repair reads only it (jobx_spark.artifacts).
 #
 # Serving from the appended index recomputes df FROM THE PRUNED SCAN:
 # the query's term buckets are known driver-side, the postings scan
@@ -2174,22 +2122,6 @@ def text_bm25_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # which a query reads one file per probed bucket instead of
 # 1 + n_appends.
 # --------------------------------------------------------------------------
-def _bm25_append_paths(sf_dir: str) -> tuple[str, str, str, str]:
-    import hashlib
-    import os
-
-    from jobx_spark.lineage import checkpoint_root
-
-    key = hashlib.sha256(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    root = os.path.join(checkpoint_root(), f"bm25-index-append-{key}")
-    return (
-        os.path.join(root, "postings"),
-        os.path.join(root, "scalars_base"),
-        os.path.join(root, "scalars"),
-        os.path.join(root, "_APPEND_DONE"),
-    )
-
-
 def _bm25_postings(docs: DataFrame) -> DataFrame:
     """(term, doc_id, tf, dl, tbkt) postings frame — the append-family
     layout (no df: corpus-global, recomputed at serve time from the
@@ -2300,12 +2232,9 @@ def _bm25_append_serve_body(
 def _bm25_append_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The serve-after-append DataFrame (exposed for the plan test —
     the census certificate consumes it)."""
-    ppath, _sb, spath, _m = _bm25_append_paths(sf_dir)
-    all_terms = sorted({t for q in BM25_QUERIES.values() for t in q.split()})
-    qterms = spark.createDataFrame(
-        [(qid, t) for qid, q in BM25_QUERIES.items() for t in q.split()],
-        "query_id INT, term STRING",
-    )
+    p = BM25_APPEND.paths(sf_dir)
+    ppath, spath = p["postings"], p["scalars"]
+    qterms, all_terms = _bm25_query_terms(spark)
     return _bm25_append_serve_body(spark, ppath, spath, qterms, all_terms)
 
 
@@ -2330,113 +2259,74 @@ def _bm25_append_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # replica); its number read against text_bm25_index_serve's is the
 # term-side flat-serve evidence.
 # --------------------------------------------------------------------------
-_BM25_REP_BASE = 10**9
-BM25_REP64 = 64
-
-
-def _bm25_scaled64_ensure(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    import hashlib
-    import os
-
-    from jobx_spark import artifacts as A
-    from jobx_spark.lineage import checkpoint_root
-
-    ppath, spath = _bm25_index_ensure(spark, sf_dir)
-    key = hashlib.sha256(
-        (sf_dir.rstrip("/") + ":scaled64").encode()
-    ).hexdigest()[:12]
-    p64 = os.path.join(checkpoint_root(), f"bm25-index-{key}", "postings")
-    if A.fs_exists(spark, os.path.join(p64, "_SUCCESS")):
-        return p64, spath
-    rep = F.explode(
-        F.array(*[F.lit(i) for i in range(BM25_REP64)])
-    ).alias("rep")
-    base = spark.read.parquet(ppath)
-    cols = [c for c in base.columns if c != "tbkt"]
-    (
-        base.select(*cols, "tbkt", rep)
-        .select(
-            *[c for c in cols if c != "doc_id"],
-            (
-                F.col("doc_id").cast("long")
-                + F.col("rep").cast("long") * F.lit(_BM25_REP_BASE)
-            ).alias("doc_id"),
-            (
-                F.col("tbkt").cast("int")
-                + F.col("rep").cast("int") * F.lit(TBKT)
-            ).alias("tbkt"),
-        )
-        .repartition(TBKT, "tbkt")
-        .sortWithinPartitions("tbkt", "term", "doc_id")
-        .write.mode("overwrite")
-        .partitionBy("tbkt")
-        .parquet(p64)
-    )
-    return p64, spath
-
-
 def text_bm25_serve_scaled64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p64, spath = _bm25_scaled64_ensure(spark, sf_dir)
-    all_terms = sorted({t for q in BM25_QUERIES.values() for t in q.split()})
-    qterms = spark.createDataFrame(
-        [(qid, t) for qid, q in BM25_QUERIES.items() for t in q.split()],
-        "query_id INT, term STRING",
+    ppath, spath = BM25_INDEX.ensure(spark, sf_dir)
+    p64 = index.replicate(
+        spark, sf_dir, "bm25-index", ppath, "doc_id", "tbkt", TBKT, ("tbkt",),
+        lambda df: df.repartition(TBKT, "tbkt").sortWithinPartitions(
+            "tbkt", "term", "doc_id"
+        ),
     )
+    qterms, all_terms = _bm25_query_terms(spark)
     return _bm25_serve_body(spark, p64, spath, qterms, all_terms)
 
 
-def text_bm25_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from jobx_spark import artifacts as A
+def _bm25_append_base(
+    spark: SparkSession, sf_dir: str, p: dict[str, str]
+) -> DataFrame:
     from jobx_spark.queries.dedup import INCR_SPLIT_ID
 
-    ppath, sbase, spath, marker = _bm25_append_paths(sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") < INCR_SPLIT_ID)
-    batch = docs.filter(F.col("doc_id") >= INCR_SPLIT_ID)
-    if not A.fs_exists(spark, os.path.join(ppath, "_SUCCESS")):
-        (
-            _bm25_postings(corpus)
-            .withColumn("seg", F.lit("base"))
-            .repartition(TBKT, "tbkt")
-            .sortWithinPartitions("tbkt", "term", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("seg", "tbkt")
-            .parquet(ppath)
-        )
-        _bm25_corpus_scalars(corpus).write.mode("overwrite").parquet(sbase)
-    # THE APPEND: batch-side-only tokenization; new files land under
-    # seg=batch/tbkt=*, base files untouched; dynamic overwrite makes
-    # re-runs replace only the batch segment (double-run determinism)
-    (
-        _bm25_postings(batch)
-        .withColumn("seg", F.lit("batch"))
-        .repartition(TBKT, "tbkt")
-        .sortWithinPartitions("tbkt", "term", "doc_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("seg", "tbkt")
-        .parquet(ppath)
+    _bm25_corpus_scalars(corpus).write.mode("overwrite").parquet(
+        p["scalars_base"]
     )
-    # republish the global scalars: base (frozen on disk) + this
-    # batch's deltas — both addends independent of the table being
-    # overwritten, so a re-run writes the identical row
-    sb = spark.read.parquet(sbase)
+    return _bm25_postings(corpus)
+
+
+BM25_APPEND = index.Segmented(
+    "bm25-index-append", "postings", "tbkt", TBKT, ("term", "doc_id"),
+    _bm25_append_base, base_parts=("scalars_base",), batch_parts=("scalars",),
+)
+
+
+def _bm25_republish_scalars(
+    spark: SparkSession, p: dict[str, str], batch: DataFrame
+) -> None:
+    """scalars = scalars_base + the batch's deltas — both addends
+    independent of the table being overwritten, so a re-run writes the
+    identical row."""
     bd = _bm25_corpus_scalars(batch).select(
         F.col("n_docs").alias("b_docs"), F.col("t_toks").alias("b_toks")
     )
     (
-        sb.crossJoin(bd)
+        spark.read.parquet(p["scalars_base"])
+        .crossJoin(bd)
         .select(
             (F.col("n_docs") + F.col("b_docs")).alias("n_docs"),
             (F.col("t_toks") + F.col("b_toks")).alias("t_toks"),
         )
         .write.mode("overwrite")
-        .parquet(spath)
+        .parquet(p["scalars"])
     )
-    A.touch(spark, marker)
-    return _bm25_append_census(spark, sf_dir, ppath, spath)
+
+
+def text_bm25_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from jobx_spark.queries.dedup import INCR_SPLIT_ID
+
+    docs = load_table(spark, sf_dir, "documents")
+    batch = docs.filter(F.col("doc_id") >= INCR_SPLIT_ID)
+
+    def write(p: dict[str, str]) -> None:
+        # THE APPEND: batch-side-only tokenization under seg=batch,
+        # then the global scalars republish
+        BM25_APPEND.write_segment(
+            _bm25_postings(batch), p["postings"], "batch"
+        )
+        _bm25_republish_scalars(spark, p, batch)
+
+    p = BM25_APPEND.append(spark, sf_dir, write)
+    return _bm25_append_census(spark, sf_dir, p["postings"], p["scalars"])
 
 
 def _bm25_append_census(
@@ -2468,11 +2358,7 @@ def _bm25_append_census(
             .alias("scalars_match_rebuild")
         )
     )
-    all_terms = sorted({t for q in BM25_QUERIES.values() for t in q.split()})
-    qterms = spark.createDataFrame(
-        [(qid, t) for qid, q in BM25_QUERIES.items() for t in q.split()],
-        "query_id INT, term STRING",
-    )
+    qterms, all_terms = _bm25_query_terms(spark)
     served = _bm25_append_serve_body(
         spark, ppath, spath, qterms, all_terms
     ).alias("a")
@@ -2495,61 +2381,10 @@ def _bm25_append_census(
     )
 
     # ONE conditional aggregation over ONE scan of the on-disk postings
-    # (guide §1.2-1, §2.4): the base / batch / after censuses used to be
-    # three separate scans of the same parquet, three exchanges and
-    # three joins against the bucket domain. count(when(cond, 1)) per
-    # bucket is value-identical to count(*) over the filtered scan, and
-    # a bucket absent from the fused aggregate was absent from every
-    # per-filter aggregate too (the left join + coalesce(0) covers both
-    # shapes the same way).
-    disk_census = disk.groupBy("tbkt").agg(
-        F.count(F.when(F.col("seg") == "base", 1)).cast("long").alias(
-            "n_base"
-        ),
-        F.count(F.when(F.col("seg") != "base", 1)).cast("long").alias(
-            "n_batch"
-        ),
-        F.count(F.lit(1)).cast("long").alias("n_after"),
-        F.coalesce(
-            F.bit_xor(_bm25_posting_hash()), F.lit(0).cast("long")
-        ).alias("xor_after"),
-    )
-
-    def census(df: DataFrame, n: str, x: str) -> DataFrame:
-        return df.groupBy("tbkt").agg(
-            F.count(F.lit(1)).cast("long").alias(n),
-            F.coalesce(
-                F.bit_xor(_bm25_posting_hash()), F.lit(0).cast("long")
-            ).alias(x),
-        )
-
-    dom = spark.range(TBKT).select(F.col("id").cast("int").alias("tbkt"))
-    z = lambda c: F.coalesce(F.col(c), F.lit(0)).cast("long")  # noqa: E731
-    return (
-        dom.join(disk_census, "tbkt", "left")
-        .join(census(rebuilt, "n_rebuild", "xor_rebuild"), "tbkt", "left")
-        .crossJoin(F.broadcast(scalars_ok))
-        .crossJoin(F.broadcast(serve_ok))
-        .select(
-            "tbkt",
-            z("n_base").alias("n_base"),
-            z("n_batch").alias("n_batch"),
-            z("n_after").alias("n_after"),
-            z("n_rebuild").alias("n_rebuild"),
-            (
-                (z("n_after") == z("n_rebuild"))
-                & (z("xor_after") == z("xor_rebuild"))
-            )
-            .cast("long")
-            .alias("append_matches_rebuild"),
-            F.col("scalars_match_rebuild").cast("long").alias(
-                "scalars_match_rebuild"
-            ),
-            F.col("serve_matches_rebuild").cast("long").alias(
-                "serve_matches_rebuild"
-            ),
-        )
-        .orderBy("tbkt")
+    # (the seg column is the base/batch tag)
+    return index.append_census(
+        spark, "tbkt", TBKT, disk, rebuilt, _bm25_posting_hash(),
+        is_base=F.col("seg") == "base", extra=(scalars_ok, serve_ok),
     )
 
 
@@ -2617,75 +2452,10 @@ ORDER BY tbkt
 
 
 def text_bm25_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from jobx_spark import artifacts as A
-
-    ppath, _sbase, _spath, marker = _bm25_append_paths(sf_dir)
-    if not A.fs_exists(spark, marker):
-        # materialize the appended generation this job compacts; the
-        # gate is the TERMINAL marker, so a crash between the base and
-        # batch writes (root _SUCCESS present, batch segment missing)
-        # re-runs the idempotent append instead of compacting a
-        # base-only index
-        text_bm25_index_compact_repair(spark, sf_dir)
-    gpath = os.path.join(os.path.dirname(ppath), "postings-compacted")
-    old = spark.read.parquet(ppath).select(
-        "term", "doc_id", "tf", "dl", "tbkt"
+    return BM25_APPEND.compact(
+        spark, sf_dir, text_bm25_index_append,
+        {"x": index.xor(_bm25_posting_hash())},
     )
-    (
-        old.repartition(TBKT, "tbkt")
-        .sortWithinPartitions("tbkt", "term", "doc_id")
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", 0)
-        .partitionBy("tbkt")
-        .parquet(gpath)
-    )
-    new = spark.read.parquet(gpath)
-    fcount = (
-        new.withColumn("f", F.input_file_name())
-        .groupBy("tbkt")
-        .agg(F.count_distinct("f").cast("long").alias("files_after"))
-    )
-
-    def census(df: DataFrame, n: str, x: str) -> DataFrame:
-        return df.groupBy("tbkt").agg(
-            F.count(F.lit(1)).cast("long").alias(n),
-            F.coalesce(
-                F.bit_xor(_bm25_posting_hash()), F.lit(0).cast("long")
-            ).alias(x),
-        )
-
-    dom = spark.range(TBKT).select(F.col("id").cast("int").alias("tbkt"))
-    z = lambda c: F.coalesce(F.col(c), F.lit(0)).cast("long")  # noqa: E731
-    return (
-        dom.join(census(old, "n_before", "x_b"), "tbkt", "left")
-        .join(
-            census(new.select("term", "doc_id", "tf", "dl", "tbkt"),
-                   "n_after", "x_a"),
-            "tbkt", "left",
-        )
-        .join(fcount, "tbkt", "left")
-        .select(
-            "tbkt",
-            z("n_before").alias("n_before"),
-            z("n_after").alias("n_after"),
-            z("files_after").alias("files_after"),
-            (
-                (z("n_before") == z("n_after")) & (z("x_b") == z("x_a"))
-            )
-            .cast("long")
-            .alias("content_match"),
-        )
-        .orderBy("tbkt")
-    )
-
-
-def text_bm25_index_compact_repair(spark: SparkSession, sf_dir: str) -> None:
-    """Run the idempotent append to (re)materialize the segmented
-    generation — the census/serve legs of the returned frame stay
-    unexecuted; only the eager artifact writes matter here."""
-    text_bm25_index_append(spark, sf_dir)
 
 
 def _bm25_index_compact_oracle() -> str:

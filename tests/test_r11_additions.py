@@ -65,33 +65,6 @@ def test_serve_masks_do_not_change_clean_fixture_results(spark, sf_dir):
     assert served == inline
 
 
-def test_index_compact_repairs_partial_append_state(spark, tmp_path):
-    """ADVICE r10: a prior append that wrote centroids but died before
-    the index write leaves cpath/_SUCCESS present and ipath missing —
-    compact must re-run the idempotent append (both-marker gate), not
-    fail reading a missing index."""
-    import shutil
-
-    from jobx_spark.queries.similarity import (
-        QUERIES,
-        _ann_index_append_paths,
-    )
-
-    sf = str(tmp_path / "sfrepair")
-    shutil.copytree(SF_SMOKE, sf)
-    cpath, ipath = _ann_index_append_paths(sf)
-    # materialize the full appended generation, then simulate the
-    # mid-crash state: centroids committed, index gone
-    QUERIES["ann_index_append"](spark, sf).collect()
-    assert os.path.exists(os.path.join(cpath, "_SUCCESS"))
-    shutil.rmtree(ipath)
-    out = QUERIES["ann_index_compact"](spark, sf).collect()
-    assert len(out) == 8
-    assert all(r["content_match"] == 1 for r in out)
-    for r in out:
-        assert r["files_after"] == (1 if r["n_after"] > 0 else 0)
-
-
 def test_dedup_index_probe_plan_reads_artifact_not_corpus(spark, sf_dir):
     """VERDICT r10 #3 'done' criteria: the probe plan scans ONLY the
     persisted band index for the corpus side — exactly one documents
@@ -175,13 +148,13 @@ def test_index_snapshot_isolation(spark, tmp_path):
     import shutil
 
     from jobx_spark import artifacts as A
-    from jobx_spark.queries.similarity import QUERIES, _ann_index_root
+    from jobx_spark.queries.similarity import ANN_INDEX, QUERIES
 
     sf = str(tmp_path / "sfsnap")
     shutil.copytree(SF_SMOKE, sf)
     reader = QUERIES["ann_index_serve"](spark, sf)  # ensures + pins v=1
     before = {tuple(r) for r in reader.collect()}
-    root = _ann_index_root(sf)
+    root = ANN_INDEX.root(sf)
     assert A.current_version(spark, root) == 1
     QUERIES["ann_index_build"](spark, sf).collect()  # publishes v=2
     assert A.current_version(spark, root) == 2

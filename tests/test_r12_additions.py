@@ -1,16 +1,13 @@
 """Round-12 additions: executed-property pins for the round's fixes.
 
 Same style as tests/test_r11_additions.py: each test runs the REAL
-query against a real (or deliberately crash-mutated) sf dir and asserts
-the property the round's change introduced — the BM25 index lifecycle
-completion (VERDICT r11 #4) and the terminal-marker repair gates
-(ADVICE r11 #3).
+query against a real sf dir and asserts the property the round's
+change introduced — the BM25 index lifecycle completion (VERDICT r11
+#4). The terminal-marker repair gates are crash-injected in
+tests/test_artifacts.py.
 """
 
 import os
-import shutil
-
-from tests.conftest import SF_SMOKE
 
 
 def test_bm25_index_append_certificate_and_idempotence(spark, sf_dir):
@@ -79,35 +76,6 @@ def test_bm25_index_compact_single_file_per_bucket(spark, sf_dir):
     for r in out:
         assert r["files_after"] == (1 if r["n_after"] > 0 else 0)
     assert sum(r["n_after"] for r in out) > 0
-
-
-def test_bm25_compact_repairs_partial_append_state(spark, tmp_path):
-    """ADVICE r11 #3 applied to the new family from day one: a crash
-    between the base-segment write (which creates the root _SUCCESS)
-    and the batch-segment write leaves a base-only index. The compact
-    gate is the TERMINAL _APPEND_DONE marker — absent here — so
-    compact must re-run the idempotent append and compact the full
-    generation, not silently compact the base-only index."""
-    from jobx_spark.queries.text import QUERIES, _bm25_append_paths
-
-    sf = str(tmp_path / "sfbm25repair")
-    shutil.copytree(SF_SMOKE, sf)
-    QUERIES["text_bm25_index_append"](spark, sf).collect()
-    ppath, _sbase, _spath, marker = _bm25_append_paths(sf)
-    full = sum(
-        r["n_after"]
-        for r in QUERIES["text_bm25_index_compact"](spark, sf).collect()
-    )
-    # simulate the crash window: batch segment and terminal marker gone,
-    # root _SUCCESS still present
-    shutil.rmtree(os.path.join(ppath, "seg=batch"))
-    os.remove(marker)
-    assert os.path.exists(os.path.join(ppath, "_SUCCESS"))
-    out = QUERIES["text_bm25_index_compact"](spark, sf).collect()
-    assert all(r["content_match"] == 1 for r in out)
-    assert sum(r["n_after"] for r in out) == full, (
-        "repair must rematerialize the batch segment before compacting"
-    )
 
 
 def test_stream_bm25_index_append_equals_batch_append(spark, sf_dir):
@@ -186,31 +154,6 @@ def test_dedup_probe_scaled64_pruned_and_equals_1x(spark, sf_dir):
     }
     assert scaled == base
     assert scaled, "fixture must produce at least one candidate pair"
-
-
-def test_dedup_compact_repairs_partial_append_state(spark, tmp_path):
-    """ADVICE r11 #3, the dedup side: same crash window (root _SUCCESS
-    present, seg=batch missing, terminal marker gone) — the compact
-    gate must re-run the append, not compact a base-only band index."""
-    from jobx_spark.queries.dedup import (
-        QUERIES,
-        _dedup_index_append_paths,
-    )
-
-    sf = str(tmp_path / "sfdduprepair")
-    shutil.copytree(SF_SMOKE, sf)
-    QUERIES["dedup_index_append"](spark, sf).collect()
-    ipath = _dedup_index_append_paths(sf)
-    full = sum(
-        r["n_after"]
-        for r in QUERIES["dedup_index_compact"](spark, sf).collect()
-    )
-    shutil.rmtree(os.path.join(ipath, "seg=batch"))
-    os.remove(os.path.join(ipath, "_APPEND_DONE"))
-    assert os.path.exists(os.path.join(ipath, "_SUCCESS"))
-    out = QUERIES["dedup_index_compact"](spark, sf).collect()
-    assert all(r["content_match"] == 1 for r in out)
-    assert sum(r["n_after"] for r in out) == full
 
 
 def test_kmeans_train_multi_equals_per_column_chains(spark, sf_dir):

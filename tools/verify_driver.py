@@ -5,7 +5,9 @@ Plain, untuned SparkSession (hostile non-UTC session timezone as a
 probe), sf0.01, every ``queries()`` entry hash-compared against its
 ``oracle_sql()`` via DuckDB. Run from the repo root:
 
-    python tools/verify_driver.py [sf_dir]
+    python tools/verify_driver.py [sf_dir] [name ...]
+
+Names restrict the run to those queries; with none, all of them run.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+NAMES = sys.argv[2:]
 
 
 def main() -> int:
@@ -42,6 +45,12 @@ def main() -> int:
     if missing:
         print(f"[FAIL] oracle_sql keys missing from queries(): {missing}")
         return 1
+    unknown = sorted(set(NAMES) - set(qs))
+    if unknown:
+        print(f"[FAIL] not in queries(): {unknown}")
+        return 1
+    if NAMES:
+        qs = {name: qs[name] for name in NAMES}
 
     con = duck_connect(SF_DIR)
     failed, no_oracle = [], []
