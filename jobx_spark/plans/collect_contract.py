@@ -171,19 +171,14 @@ COLLECT_BOUNDS: dict[tuple[str, str, str], tuple[int, str]] = {
         "Gram matrix rows: dim²+1 rows (dim=64) — bounded by embedding "
         "dimension, never corpus size",
     ),
-    ("jobx_spark/queries/similarity.py", "ann_filtered_topk", "collect"): (
-        1,
-        "the router's shard list: distinct probed cell ids, ≤ "
-        "min(N_QUERIES·KM_NPROBE, KM_K) = 8 integers by construction — "
-        "same literal-isin partition-pruning device as ann_index_serve",
-    ),
-    ("jobx_spark/queries/similarity.py", "_index_serve_body", "collect"): (
+    ("jobx_spark/queries/similarity.py", "_probe_candidates", "collect"): (
         1,
         "the router's shard list: distinct probed cell ids, ≤ "
         "min(N_QUERIES·KM_NPROBE, KM_K) = 8 integers by construction — "
         "collected into the literal isin() that statically partition-"
         "prunes the persisted index scan to the probed cells (shared "
-        "serving kernel of ann_index_serve and its 8× scale probe)",
+        "probe routing of ann_index_serve, its scale probes, "
+        "ann_filtered_topk and the per-micro-batch stream serve)",
     ),
     ("jobx_spark/queries/similarity.py", "ann_multiprobe_lsh", "collect"): (
         1,
@@ -203,22 +198,16 @@ COLLECT_BOUNDS: dict[tuple[str, str, str], tuple[int, str]] = {
         1,
         "1-row min/max(ts) aggregate that sizes the replay split point",
     ),
-    ("jobx_spark/queries/dedup.py", "dedup_index_probe", "collect"): (
+    ("jobx_spark/queries/dedup.py", "_band_probe", "collect"): (
         1,
         "the probe's bucket list: distinct bkt = bh mod DBKT over the "
         "batch's band signatures, ≤ DBKT(=16) integers by construction "
         "— collected into the literal isin() that statically partition-"
         "prunes the persisted band-index scan to the probed buckets "
-        "(same device as ann_index_serve's probed cells)",
-    ),
-    ("jobx_spark/queries/dedup.py", "dedup_index_probe_scaled64",
-     "collect"): (
-        1,
-        "the probe's bucket list over the 64× replicated index: "
-        "distinct bkt = bh mod DBKT over the batch's band signatures, "
-        "≤ DBKT(=16) integers by construction — identical device to "
-        "dedup_index_probe's pruning collect; the 64× bucket space "
-        "is never enumerated",
+        "(same device as ann_index_serve's probed cells). Shared by "
+        "dedup_index_probe, its 64× replica (whose bucket space is "
+        "never enumerated) and each stream_dedup_index_probe "
+        "micro-batch",
     ),
     ("jobx_spark/queries/streams.py", "stream_bm25_index_serve._serve",
      "collect"): (
@@ -228,12 +217,5 @@ COLLECT_BOUNDS: dict[tuple[str, str, str], tuple[int, str]] = {
         "into the broadcast term list + the literal bucket pruning, "
         "exactly like the batch serve's pure-Python bucket math; the "
         "corpus is only ever touched by the pruned postings scan",
-    ),
-    ("jobx_spark/queries/streams.py", "stream_dedup_index_probe._probe",
-     "collect"): (
-        1,
-        "per-micro-batch bucket list: distinct bkt over that batch's "
-        "band signatures, ≤ DBKT(=16) integers — the streaming twin of "
-        "dedup_index_probe's pruning collect",
     ),
 }

@@ -100,7 +100,7 @@ def _utc_pinned(fn: QueryFn) -> QueryFn:
 #      streaming representatives covering the r5 run-capture
 #      instrumentation's three code paths (memory sink, foreachBatch
 #      MERGE, applyInPandasWithState) — the capture runs AFTER
-#      awaitTermination so results can't change, but the bar says
+#      the query terminates so results can't change, but the bar says
 #      changed paths re-prove; the other streams share these exact
 #      paths and are CI-covered by test_streaming_oracle +
 #      test_stream_plans;

@@ -281,31 +281,26 @@ DECON_BF_BITS = 1 << 23
 DECON_BF_K = 3
 
 
-def dedup_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jobx_spark.operators.sketches import bloom_positions, bloom_probe
-    from jobx_spark.operators.text import gram_rows, shingles
+def _decon_grams(docs: DataFrame, keys: list[str]) -> DataFrame:
+    """Distinct-per-doc shingle strings ``s`` of ``docs`` (Arrow gram
+    producer — the bloom operators hash internally), keyed by
+    ``keys``."""
+    from jobx_spark.operators.text import gram_rows
 
-    docs = load_table(spark, sf_dir, "documents")
-    # distinct-per-doc shingles, materialized once: feeds the probe,
-    # the per-doc hit counts, the exact residual AND the base census
-    # Arrow gram producer (gram strings — the bloom operators hash
-    # internally); per-doc dedup batch-side, no interpreted lambda
-    tg = cut_lineage(
-        gram_rows(
-            docs.filter(F.col("doc_id") % 10 != 0), ["doc_id"], "text",
-            ns=(SHINGLE_N,), distinct=True, emit="gram",
-        ).withColumnRenamed("g", "s"),
-        "bdecon-tg",
-    )
-    eg = cut_lineage(
-        gram_rows(
-            docs.filter(F.col("doc_id") % 10 == 0), [], "text",
-            ns=(SHINGLE_N,), distinct=True, emit="gram",
-        ).withColumnRenamed("g", "s")
-        .distinct(),
-        "bdecon-eg",
-    )
-    filt = bloom_positions(eg, "s", bits=DECON_BF_BITS, k=DECON_BF_K)
+    return gram_rows(
+        docs, keys, "text", ns=(SHINGLE_N,), distinct=True, emit="gram",
+    ).withColumnRenamed("g", "s")
+
+
+def _bloom_decon_census(
+    tg: DataFrame, eg: DataFrame, filt: DataFrame
+) -> DataFrame:
+    """The per-train-doc census kernel, shared by
+    dedup_bloom_decontaminate and its per-micro-batch stream twin: the
+    train grams ``tg`` probe the Bloom positions ``filt`` of the eval
+    grams ``eg``, and only flagged docs meet ``eg`` exactly."""
+    from jobx_spark.operators.sketches import bloom_probe
+
     passed = bloom_probe(tg, "s", filt, bits=DECON_BF_BITS, k=DECON_BF_K)
     bh = (
         tg.join(passed, tg.s == passed.key, "left_semi")
@@ -334,8 +329,25 @@ def dedup_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("fp_grams"),
             (F.coalesce("exact_hits", F.lit(0)) == 0).alias("keep"),
         )
-        .orderBy("doc_id")
     )
+
+
+def dedup_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from jobx_spark.operators.sketches import bloom_positions
+
+    docs = load_table(spark, sf_dir, "documents")
+    # distinct-per-doc shingles, materialized once: feeds the probe,
+    # the per-doc hit counts, the exact residual AND the base census
+    tg = cut_lineage(
+        _decon_grams(docs.filter(F.col("doc_id") % 10 != 0), ["doc_id"]),
+        "bdecon-tg",
+    )
+    eg = cut_lineage(
+        _decon_grams(docs.filter(F.col("doc_id") % 10 == 0), []).distinct(),
+        "bdecon-eg",
+    )
+    filt = bloom_positions(eg, "s", bits=DECON_BF_BITS, k=DECON_BF_K)
+    return _bloom_decon_census(tg, eg, filt).orderBy("doc_id")
 
 
 def _bloom_decon_oracle() -> str:
@@ -2663,16 +2675,19 @@ ORDER BY band
 """
 
 
-def dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ipath,) = DEDUP_INDEX.ensure(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    batch = docs.filter(F.col("doc_id") >= INCR_SPLIT_ID)
+def _band_probe(
+    spark: SparkSession, ipath: str, batch: DataFrame, tag: str
+) -> DataFrame:
+    """The band-index probe kernel, shared by dedup_index_probe, its 64×
+    twin and the per-micro-batch stream probe: band the batch, collect
+    its probed buckets, scan only those buckets of the persisted index
+    at ``ipath``, and count shared bands per (new_id, old_id)."""
     bb = cut_lineage(
         _banded(batch).select(
             F.col("id").alias("new_id"), "band", "bh",
             F.pmod(F.col("bh"), F.lit(DBKT)).alias("bkt"),
         ),
-        "didx-probe",
+        tag,
     )
     # the probe's bucket list: ≤ min(|batch|·BANDS, DBKT) ints
     # (declared in collect_contract) — a LITERAL isin() so the index
@@ -2689,7 +2704,15 @@ def dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx.join(F.broadcast(bb.drop("bkt")), ["band", "bh"])
         .groupBy("new_id", "old_id")
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-        .orderBy("new_id", "old_id")
+    )
+
+
+def dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    (ipath,) = DEDUP_INDEX.ensure(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
+    batch = docs.filter(F.col("doc_id") >= INCR_SPLIT_ID)
+    return _band_probe(spark, ipath, batch, "didx-probe").orderBy(
+        "new_id", "old_id"
     )
 
 
@@ -2854,24 +2877,8 @@ def dedup_index_probe_scaled64(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") >= INCR_SPLIT_ID)
-    bb = cut_lineage(
-        _banded(batch).select(
-            F.col("id").alias("new_id"), "band", "bh",
-            F.pmod(F.col("bh"), F.lit(DBKT)).alias("bkt"),
-        ),
-        "didx-probe64",
-    )
-    probed_bkts = sorted(
-        int(r["bkt"]) for r in bb.select("bkt").distinct().collect()
-    )
-    idx = spark.read.parquet(i64).filter(
-        F.col("bkt").isin(probed_bkts)
-    ).select(F.col("id").alias("old_id"), "band", "bh")
-    return (
-        idx.join(F.broadcast(bb.drop("bkt")), ["band", "bh"])
-        .groupBy("new_id", "old_id")
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-        .orderBy("new_id", "old_id")
+    return _band_probe(spark, i64, batch, "didx-probe64").orderBy(
+        "new_id", "old_id"
     )
 
 

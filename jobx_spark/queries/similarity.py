@@ -4029,13 +4029,19 @@ def ann_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _index_serve_body(spark, cpath, ipath, _probe_queries(emb))
 
 
-def _index_serve_body(
-    spark: SparkSession, cpath: str, ipath: str, queries: DataFrame
+def _probe_candidates(
+    spark: SparkSession,
+    cpath: str,
+    ipath: str,
+    queries: DataFrame,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """The serving kernel proper, shared by ann_index_serve and its 8×
-    replication probe: broadcast-centroid probe routing, the bounded
-    probed-cell collect (declared in collect_contract), the statically
-    partition-pruned index scan, exact ranking within."""
+    """The IVF probe routing, shared by every persisted-index serve:
+    broadcast-centroid routing of each (query_id, embedding) query to
+    its KM_NPROBE cells, the bounded probed-cell collect (declared in
+    collect_contract), and the statically partition-pruned index scan
+    joined to its probes. One row per (query, candidate index row) with
+    the query's ``carry`` columns and the exact ``cosine``."""
     from pyspark.sql import Window as W
 
     from jobx_spark.operators.dedup import cosine_from_scaled, scaled_dot
@@ -4050,7 +4056,9 @@ def _index_serve_body(
     # routing and ranking would disagree). The oracle's q CTE carries
     # the matching vnorm_s > 0 filter.
     q = (
-        queries.select(F.col("query_id"), F.col("embedding").alias("qv"))
+        queries.select(
+            F.col("query_id"), F.col("embedding").alias("qv"), *carry
+        )
         .withColumn("qnorm_s", scaled_dot(F.col("qv"), F.col("qv")))
         .filter(F.col("qnorm_s") > 0)
     )
@@ -4058,6 +4066,7 @@ def _index_serve_body(
         "query_id",
         "qv",
         "qnorm_s",
+        *carry,
         F.col("cent_id").alias("cell"),
         cosine_from_scaled(
             scaled_dot(F.col("qv"), F.col("cv")),
@@ -4069,7 +4078,7 @@ def _index_serve_body(
     probes = (
         qcells.withColumn("pr", F.row_number().over(wprobe))
         .filter(F.col("pr") <= KM_NPROBE)
-        .select("query_id", "qv", "qnorm_s", "cell")
+        .select("query_id", "qv", "qnorm_s", *carry, "cell")
     )
     # the router's shard list: ≤ min(N_QUERIES·KM_NPROBE, KM_K) ints
     # (declared in collect_contract) — a LITERAL isin() so the index
@@ -4093,15 +4102,29 @@ def _index_serve_body(
     # k-row probe-routing dots above stay expressions (tiny frames).
     from jobx_spark.operators.similarity import _sdot
 
-    scored = idx.join(F.broadcast(probes), "cell").select(
-        "query_id",
-        "vec_id",
-        F.col("cell").cast("int").alias("cell"),
+    return idx.join(F.broadcast(probes), "cell").withColumn(
+        "cosine",
         cosine_from_scaled(
             _sdot(F.col("qv"), F.col("embedding")),
             F.col("qnorm_s"),
             F.col("norm_s"),
-        ).alias("cosine"),
+        ),
+    )
+
+
+def _index_serve_body(
+    spark: SparkSession, cpath: str, ipath: str, queries: DataFrame
+) -> DataFrame:
+    """The serving kernel proper, shared by ann_index_serve, its
+    replication probes and the per-micro-batch stream serve: the probe
+    routing, exact top-K ranking within the probed cells."""
+    from pyspark.sql import Window as W
+
+    scored = _probe_candidates(spark, cpath, ipath, queries).select(
+        "query_id",
+        "vec_id",
+        F.col("cell").cast("int").alias("cell"),
+        "cosine",
     )
     wrank = W.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("vec_id")
@@ -4193,66 +4216,16 @@ ORDER BY query_id, rank
 def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from jobx_spark.operators.dedup import cosine_from_scaled, scaled_dot
-
     cpath, ipath = ANN_INDEX.ensure(spark, sf_dir)
-    cent = spark.read.parquet(cpath).withColumn(
-        "cnorm_s", scaled_dot(F.col("cv"), F.col("cv"))
-    )
     emb = load_table(spark, sf_dir, "embeddings")
-    # zero-norm probe mask — see _index_serve_body; oracle q CTE
-    # carries the matching e.vnorm_s > 0 filter
-    q = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            F.col("label").alias("qlabel"),
-        )
-        .withColumn("qnorm_s", scaled_dot(F.col("qv"), F.col("qv")))
-        .filter(F.col("qnorm_s") > 0)
+    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        "embedding",
+        F.col("label").alias("qlabel"),
     )
-    qcells = q.join(F.broadcast(cent)).select(
-        "query_id",
-        "qv",
-        "qnorm_s",
-        "qlabel",
-        F.col("cent_id").alias("cell"),
-        cosine_from_scaled(
-            scaled_dot(F.col("qv"), F.col("cv")),
-            F.col("qnorm_s"),
-            F.col("cnorm_s"),
-        ).alias("ccos"),
-    )
-    wprobe = W.partitionBy("query_id").orderBy(F.desc("ccos"), F.asc("cell"))
-    probes = (
-        qcells.withColumn("pr", F.row_number().over(wprobe))
-        .filter(F.col("pr") <= KM_NPROBE)
-        .select("query_id", "qv", "qnorm_s", "qlabel", "cell")
-    )
-    probed_cells = sorted(
-        int(r["cell"])
-        for r in probes.select("cell").distinct().collect()
-    )
-    # corpus-side zero-norm mask — see _index_serve_body
-    idx = spark.read.parquet(ipath).filter(
-        F.col("cell").isin(probed_cells) & (F.col("norm_s") > 0)
-    )
-    # corpus-side scoring via the vectorized Arrow dot — see
-    # _index_serve_body (same swap, same bit-equality)
-    from jobx_spark.operators.similarity import _sdot
-
     scored = cut_lineage(
-        idx.join(F.broadcast(probes), "cell").select(
-            "query_id",
-            "vec_id",
-            "qlabel",
-            "label",
-            cosine_from_scaled(
-                _sdot(F.col("qv"), F.col("embedding")),
-                F.col("qnorm_s"),
-                F.col("norm_s"),
-            ).alias("cosine"),
+        _probe_candidates(spark, cpath, ipath, queries, ("qlabel",)).select(
+            "query_id", "vec_id", "qlabel", "label", "cosine"
         ),
         "annft-scored",
     )

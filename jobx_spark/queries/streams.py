@@ -872,8 +872,6 @@ ORDER BY exact_n DESC, user_id ASC
 # equals the batch as-of join the oracle states with a window.
 # --------------------------------------------------------------------------
 def stream_scd_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
@@ -889,41 +887,27 @@ def stream_scd_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("v_id"),
         F.pmod(md5_long(F.col("event_id").cast("string")), F.lit(5)).alias("tier"),
     )
-    root = scratch_dir("stream_scd")
-    out, ckpt = f"{root}/out", f"{root}/ckpt"
+    out = f"{scratch_dir('stream_scd')}/out"
 
-    def _enrich(batch_df: DataFrame, batch_id: int) -> None:
+    def _enrich(batch_df: DataFrame, batch_id: int) -> DataFrame:
         joined = batch_df.join(
             F.broadcast(dim),
             (batch_df["user_id"] == dim["d_user"]) & (dim["v_ts"] <= batch_df["ts"]),
             "left",
         )
         w = W.partitionBy("event_id").orderBy(F.desc("v_ts"), F.desc("v_id"))
-        (
+        return (
             joined.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select(
                 "event_id", "user_id",
                 F.coalesce("tier", F.lit(-1)).alias("tier"),
-                F.lit(batch_id).alias("_batch_id"),
             )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
         )
 
-    q = (
-        ev.writeStream.foreachBatch(_enrich)
-        # contract label for the STREAM_PLANS audit: stateless per
-        # micro-batch — the SCD lookup state lives in the static dim
-        .queryName(f"scd_stateless_{os.getpid()}_{next(S._name_counter)}")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    S._capture_run(q)
+    # contract label for the STREAM_PLANS audit: stateless per
+    # micro-batch — the SCD lookup state lives in the static dim
+    S.stream_to_parquet(ev, out, name="scd_stateless", fn=_enrich)
     return (
         spark.read.parquet(out)
         .select("event_id", "user_id", "tier")
@@ -976,23 +960,21 @@ def _sbdecon_oracle() -> str:
 
 
 def stream_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from pyspark.sql import functions as F
 
     from jobx_spark.lineage import cut_lineage, scratch_dir
-    from jobx_spark.operators.sketches import bloom_positions, bloom_probe
-    from jobx_spark.operators.text import gram_rows
-    from jobx_spark.queries.dedup import DECON_BF_BITS, DECON_BF_K, SHINGLE_N
+    from jobx_spark.operators.sketches import bloom_positions
+    from jobx_spark.queries.dedup import (
+        DECON_BF_BITS,
+        DECON_BF_K,
+        _bloom_decon_census,
+        _decon_grams,
+    )
     from jobx_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     eg = cut_lineage(
-        gram_rows(
-            docs.filter(F.col("doc_id") % 10 == 0), [], "text",
-            ns=(SHINGLE_N,), distinct=True, emit="gram",
-        ).withColumnRenamed("g", "s")
-        .distinct(),
+        _decon_grams(docs.filter(F.col("doc_id") % 10 == 0), []).distinct(),
         "sbdecon-eg",
     )
     filt = cut_lineage(
@@ -1000,69 +982,20 @@ def stream_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sbdecon-filt",
     )
     train = docs.filter(F.col("doc_id") % 10 != 0).select("doc_id", "text")
-    rdir = S.write_replay_files(train, ["doc_id"], 3, "bdecon")
-    st = S.stream_replay(spark, rdir)
-    root = scratch_dir("stream_bdecon")
-    out, ckpt = f"{root}/out", f"{root}/ckpt"
-
-    def _decon(batch_df: DataFrame, batch_id: int) -> None:
-        # distinct-per-doc grams materialized once per batch — four
-        # consumers (probe, bloom census, exact residual, base census),
-        # same domsig device as the batch twin
-        tg = cut_lineage(
-            gram_rows(
-                batch_df, ["doc_id"], "text",
-                ns=(SHINGLE_N,), distinct=True, emit="gram",
-            ).withColumnRenamed("g", "s"),
-            "sbdecon-tg",
-        )
-        passed = bloom_probe(
-            tg, "s", filt, bits=DECON_BF_BITS, k=DECON_BF_K
-        )
-        bh = (
-            tg.join(passed, tg.s == passed.key, "left_semi")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("bloom_hits"))
-        )
-        eh = (
-            tg.join(bh.select("doc_id"), "doc_id", "left_semi")
-            .join(eg, "s", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("exact_hits"))
-        )
-        base = tg.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-        (
-            base.join(bh, "doc_id", "left")
-            .join(eh, "doc_id", "left")
-            .select(
-                "doc_id",
-                "n_grams",
-                F.coalesce("bloom_hits", F.lit(0)).alias("bloom_hits"),
-                F.coalesce("exact_hits", F.lit(0)).alias("exact_hits"),
-                (
-                    F.coalesce("bloom_hits", F.lit(0))
-                    - F.coalesce("exact_hits", F.lit(0))
-                ).alias("fp_grams"),
-                (F.coalesce("exact_hits", F.lit(0)) == 0).alias("keep"),
-                F.lit(batch_id).alias("_batch_id"),
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
-        )
-
-    q = (
-        st.writeStream.foreachBatch(_decon)
-        # contract label for the STREAM_PLANS audit: stateless per
-        # micro-batch — the filter state is the static broadcast side
-        .queryName(f"bdecon_stateless_{os.getpid()}_{next(S._name_counter)}")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    st = S.stream_replay(train, ["doc_id"], 3, "bdecon")
+    out = f"{scratch_dir('stream_bdecon')}/out"
+    # the batch census kernel per micro-batch; its distinct-per-doc
+    # grams are materialized once per batch (four consumers: probe,
+    # bloom census, exact residual, base census). Contract label for
+    # the STREAM_PLANS audit: stateless per micro-batch — the filter
+    # state is the static broadcast side
+    S.stream_to_parquet(
+        st, out, name="bdecon_stateless",
+        fn=lambda batch_df, _: _bloom_decon_census(
+            cut_lineage(_decon_grams(batch_df, ["doc_id"]), "sbdecon-tg"),
+            eg, filt,
+        ),
     )
-    q.awaitTermination()
-    S._capture_run(q)
     return (
         spark.read.parquet(out)
         .select(
@@ -1091,8 +1024,6 @@ def stream_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ann_ivf_append (identical output contract).
 # --------------------------------------------------------------------------
 def stream_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from pyspark.sql import functions as F
 
     from jobx_spark.lineage import cut_lineage, scratch_dir
@@ -1119,32 +1050,14 @@ def stream_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         output="centroids",
     )
     base_idx = cut_lineage(_cells(base, centroids), "sivfa-index")
-    rdir = S.write_replay_files(batch, ["vec_id"], 3, "sivfa")
-    st = S.stream_replay(spark, rdir)
-    root = scratch_dir("stream_ivfa")
-    out, ckpt = f"{root}/out", f"{root}/ckpt"
-
-    def _assign(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            _cells(batch_df, centroids)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
-        )
-
-    q = (
-        st.writeStream.foreachBatch(_assign)
-        # contract label for the STREAM_PLANS audit: stateless per
-        # micro-batch — the quantizer is a frozen broadcast side
-        .queryName(f"sivfa_stateless_{os.getpid()}_{next(S._name_counter)}")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    st = S.stream_replay(batch, ["vec_id"], 3, "sivfa")
+    out = f"{scratch_dir('stream_ivfa')}/out"
+    # contract label for the STREAM_PLANS audit: stateless per
+    # micro-batch — the quantizer is a frozen broadcast side
+    S.stream_to_parquet(
+        st, out, name="sivfa_stateless",
+        fn=lambda batch_df, _: _cells(batch_df, centroids),
     )
-    q.awaitTermination()
-    S._capture_run(q)
     batch_idx = spark.read.parquet(out).select("vec_id", "cell")
     rebuilt = _cells(emb, centroids)
     return _ivf_append_census(spark, base_idx, batch_idx, rebuilt)
@@ -1165,14 +1078,12 @@ def _sivfa_oracle() -> str:
 # jobs). Each micro-batch of query vectors routes to its KM_NPROBE
 # cells via the broadcast persisted centroids and ranks exactly within
 # the pruned index scan — stateless per batch, the quantizer and index
-# are frozen side inputs. write_replay_files splits the probe set
+# are frozen side inputs. stream_replay splits the probe set
 # across 3 micro-batches with each query in exactly one batch, so the
 # union of per-batch top-K results equals the batch serve result and
 # the oracle is _index_serve_oracle() verbatim.
 # --------------------------------------------------------------------------
 def stream_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from pyspark.sql import functions as F
 
     from jobx_spark.lineage import scratch_dir
@@ -1188,36 +1099,18 @@ def stream_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     qset = emb.filter(F.col("vec_id") < N_QUERIES).select(
         "vec_id", "embedding"
     )
-    rdir = S.write_replay_files(qset, ["vec_id"], 3, "sserve")
-    st = S.stream_replay(spark, rdir)
-    root = scratch_dir("stream_serve")
-    out, ckpt = f"{root}/out", f"{root}/ckpt"
-
-    def _serve(batch_df: DataFrame, batch_id: int) -> None:
-        # the batch serving kernel, per micro-batch of query vectors
-        (
-            _index_serve_body(
-                spark, cpath, ipath,
-                batch_df.withColumnRenamed("vec_id", "query_id"),
-            )
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
-        )
-
-    q = (
-        st.writeStream.foreachBatch(_serve)
-        # contract label for the STREAM_PLANS audit: stateless per
-        # micro-batch — centroids and index are frozen side inputs
-        .queryName(f"sserve_stateless_{os.getpid()}_{next(S._name_counter)}")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    st = S.stream_replay(qset, ["vec_id"], 3, "sserve")
+    out = f"{scratch_dir('stream_serve')}/out"
+    # the batch serving kernel, per micro-batch of query vectors;
+    # contract label for the STREAM_PLANS audit: stateless per
+    # micro-batch — centroids and index are frozen side inputs
+    S.stream_to_parquet(
+        st, out, name="sserve_stateless",
+        fn=lambda batch_df, _: _index_serve_body(
+            spark, cpath, ipath,
+            batch_df.withColumnRenamed("vec_id", "query_id"),
+        ),
     )
-    q.awaitTermination()
-    S._capture_run(q)
     return (
         spark.read.parquet(out)
         .select("query_id", "vec_id", "rank", "cosine", "cell")
@@ -1247,16 +1140,13 @@ def _sserve_oracle() -> str:
 # oracle is dedup_incremental's oracle verbatim.
 # --------------------------------------------------------------------------
 def stream_dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from pyspark.sql import functions as F
 
-    from jobx_spark.lineage import cut_lineage, scratch_dir
+    from jobx_spark.lineage import scratch_dir
     from jobx_spark.queries.dedup import (
-        DBKT,
         DEDUP_INDEX,
         INCR_SPLIT_ID,
-        _banded,
+        _band_probe,
     )
     from jobx_spark.sources import load_table
 
@@ -1265,49 +1155,16 @@ def stream_dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = docs.filter(F.col("doc_id") >= INCR_SPLIT_ID).select(
         "doc_id", "text"
     )
-    rdir = S.write_replay_files(batch, ["doc_id"], 3, "sdprobe")
-    st = S.stream_replay(spark, rdir)
-    root = scratch_dir("stream_dedup_probe")
-    out, ckpt = f"{root}/out", f"{root}/ckpt"
-
-    def _probe(batch_df: DataFrame, batch_id: int) -> None:
-        bb = cut_lineage(
-            _banded(batch_df).select(
-                F.col("id").alias("new_id"), "band", "bh",
-                F.pmod(F.col("bh"), F.lit(DBKT)).alias("bkt"),
-            ),
-            f"sdprobe-b{batch_id}",
-        )
-        # per-micro-batch bucket pruning, same device as the batch
-        # probe (bounded ≤ DBKT ints; declared in collect_contract)
-        probed_bkts = sorted(
-            int(r["bkt"]) for r in bb.select("bkt").distinct().collect()
-        )
-        idx = spark.read.parquet(ipath).filter(
-            F.col("bkt").isin(probed_bkts)
-        ).select(F.col("id").alias("old_id"), "band", "bh")
-        (
-            idx.join(F.broadcast(bb.drop("bkt")), ["band", "bh"])
-            .groupBy("new_id", "old_id")
-            .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
-        )
-
-    q = (
-        st.writeStream.foreachBatch(_probe)
-        # contract label for the STREAM_PLANS audit: stateless per
-        # micro-batch — the band index is a frozen side input
-        .queryName(f"sdprobe_stateless_{os.getpid()}_{next(S._name_counter)}")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    st = S.stream_replay(batch, ["doc_id"], 3, "sdprobe")
+    out = f"{scratch_dir('stream_dedup_probe')}/out"
+    # contract label for the STREAM_PLANS audit: stateless per
+    # micro-batch — the band index is a frozen side input
+    S.stream_to_parquet(
+        st, out, name="sdprobe_stateless",
+        fn=lambda batch_df, batch_id: _band_probe(
+            spark, ipath, batch_df, f"sdprobe-b{batch_id}"
+        ),
     )
-    q.awaitTermination()
-    S._capture_run(q)
     return (
         spark.read.parquet(out)
         .select("new_id", "old_id", "n_shared_bands")
@@ -1335,8 +1192,6 @@ def _sdprobe_oracle() -> str:
 # ingest provably equals a from-scratch rebuild.
 # --------------------------------------------------------------------------
 def stream_dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from pyspark.sql import functions as F
 
     from jobx_spark.lineage import cut_lineage, scratch_dir
@@ -1354,32 +1209,13 @@ def stream_dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     base_idx = cut_lineage(_banded(corpus), "sdida-index")
-    rdir = S.write_replay_files(batch, ["doc_id"], 3, "sdida")
-    st = S.stream_replay(spark, rdir)
-    root = scratch_dir("stream_dedup_append")
-    out, ckpt = f"{root}/out", f"{root}/ckpt"
-
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            _banded(batch_df)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
-        )
-
-    q = (
-        st.writeStream.foreachBatch(_append)
-        # contract label for the STREAM_PLANS audit: stateless per
-        # micro-batch — banding constants are frozen code
-        .queryName(f"sdida_stateless_{os.getpid()}_{next(S._name_counter)}")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    st = S.stream_replay(batch, ["doc_id"], 3, "sdida")
+    out = f"{scratch_dir('stream_dedup_append')}/out"
+    # contract label for the STREAM_PLANS audit: stateless per
+    # micro-batch — banding constants are frozen code
+    S.stream_to_parquet(
+        st, out, name="sdida_stateless", fn=lambda batch_df, _: _banded(batch_df)
     )
-    q.awaitTermination()
-    S._capture_run(q)
     batch_idx = spark.read.parquet(out).select("id", "band", "bh")
     rebuilt = _banded(docs)
     return _band_append_census(spark, base_idx, batch_idx, rebuilt)
@@ -1412,11 +1248,9 @@ def _sdida_oracle() -> str:
 # --------------------------------------------------------------------------
 def stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import dataclasses
-    import os
 
     from pyspark.sql import functions as F
 
-    from jobx_spark.lineage import scratch_dir
     from jobx_spark.queries.similarity import (
         ANN_APPEND,
         APPEND_MOD,
@@ -1434,28 +1268,18 @@ def stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _stream(p: dict[str, str]) -> None:
         centroids = spark.read.parquet(p["centroids"])
-        rdir = S.write_replay_files(batch, ["vec_id"], 3, "singest")
-        st = S.stream_replay(spark, rdir)
-        ckpt = f"{scratch_dir('stream_ingest')}/ckpt"
 
         def _ingest(batch_df: DataFrame, batch_id: int) -> None:
             ingest.write_segment(
                 _cells(batch_df, centroids), p["index"], f"b{batch_id}"
             )
 
-        q = (
-            st.writeStream.foreachBatch(_ingest)
-            # contract label for the STREAM_PLANS audit: stateless per
-            # micro-batch — the quantizer is a frozen persisted side input
-            .queryName(
-                f"singest_stateless_{os.getpid()}_{next(S._name_counter)}"
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        # contract label for the STREAM_PLANS audit: stateless per
+        # micro-batch — the quantizer is a frozen persisted side input
+        S._run(
+            S.stream_replay(batch, ["vec_id"], 3, "singest"),
+            "singest_stateless", _ingest,
         )
-        q.awaitTermination()
-        S._capture_run(q)
 
     p = ingest.append(spark, sf_dir, _stream)
     disk = spark.read.parquet(p["index"]).select("vec_id", "cell", "seg")
@@ -1485,14 +1309,11 @@ def _singest_oracle() -> str:
 # is text_bm25_topk's verbatim. Stateless per batch.
 # --------------------------------------------------------------------------
 def stream_bm25_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from pyspark.sql import functions as F
-
     from jobx_spark.lineage import scratch_dir
     from jobx_spark.queries.text import (
         BM25_INDEX,
         BM25_QUERIES,
+        _bm25_query_terms,
         _bm25_serve_body,
     )
 
@@ -1500,41 +1321,21 @@ def stream_bm25_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     qdf = spark.createDataFrame(
         sorted(BM25_QUERIES.items()), "query_id INT, qtext STRING"
     )
-    rdir = S.write_replay_files(qdf, ["query_id"], 3, "sbm25")
-    st = S.stream_replay(spark, rdir)
-    root = scratch_dir("stream_bm25")
-    out, ckpt = f"{root}/out", f"{root}/ckpt"
+    st = S.stream_replay(qdf, ["query_id"], 3, "sbm25")
+    out = f"{scratch_dir('stream_bm25')}/out"
 
-    def _serve(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.collect()  # ≤ |BM25_QUERIES| tiny query rows
-        if not rows:
-            return
-        terms = sorted({t for r in rows for t in r["qtext"].split()})
-        qterms = spark.createDataFrame(
-            [(int(r["query_id"]), t) for r in rows
-             for t in r["qtext"].split()],
-            "query_id INT, term STRING",
+    def _serve(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        # ≤ |BM25_QUERIES| tiny query rows; every replay batch holds
+        # at least one (stream_replay writes no empty file)
+        rows = batch_df.collect()
+        qterms, terms = _bm25_query_terms(
+            spark, {r["query_id"]: r["qtext"] for r in rows}
         )
-        (
-            _bm25_serve_body(spark, ppath, spath, qterms, terms)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
-        )
+        return _bm25_serve_body(spark, ppath, spath, qterms, terms)
 
-    q = (
-        st.writeStream.foreachBatch(_serve)
-        # contract label for the STREAM_PLANS audit: stateless per
-        # micro-batch — the inverted index is a frozen side input
-        .queryName(f"sbm25_stateless_{os.getpid()}_{next(S._name_counter)}")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    S._capture_run(q)
+    # contract label for the STREAM_PLANS audit: stateless per
+    # micro-batch — the inverted index is a frozen side input
+    S.stream_to_parquet(st, out, name="sbm25_stateless", fn=_serve)
     return (
         spark.read.parquet(out)
         .select("query_id", "rank", "doc_id", "score_s")
@@ -1576,11 +1377,9 @@ def _sbm25_oracle() -> str:
 # --------------------------------------------------------------------------
 def stream_bm25_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     import dataclasses
-    import os
 
     from pyspark.sql import functions as F
 
-    from jobx_spark.lineage import scratch_dir
     from jobx_spark.queries.dedup import INCR_SPLIT_ID
     from jobx_spark.queries.text import (
         BM25_APPEND,
@@ -1597,28 +1396,17 @@ def stream_bm25_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _stream(p: dict[str, str]) -> None:
-        rdir = S.write_replay_files(batch, ["doc_id"], 3, "sbm25a")
-        st = S.stream_replay(spark, rdir)
-        ckpt = f"{scratch_dir('stream_bm25_append')}/ckpt"
-
         def _append(batch_df: DataFrame, batch_id: int) -> None:
             ingest.write_segment(
                 _bm25_postings(batch_df), p["postings"], f"b{batch_id}"
             )
 
-        q = (
-            st.writeStream.foreachBatch(_append)
-            # contract label for the STREAM_PLANS audit: stateless per
-            # micro-batch — tokenization constants are frozen code
-            .queryName(
-                f"sbm25a_stateless_{os.getpid()}_{next(S._name_counter)}"
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        # contract label for the STREAM_PLANS audit: stateless per
+        # micro-batch — tokenization constants are frozen code
+        S._run(
+            S.stream_replay(batch, ["doc_id"], 3, "sbm25a"),
+            "sbm25a_stateless", _append,
         )
-        q.awaitTermination()
-        S._capture_run(q)
         # the scalars republish (base + the whole batch side's deltas)
         _bm25_republish_scalars(spark, p, batch)
 
@@ -1655,8 +1443,6 @@ def _sbm25a_oracle() -> str:
 # its one-time baseline aggregate.
 # --------------------------------------------------------------------------
 def stream_drift_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from pyspark.sql import functions as F
 
     from jobx_spark.lineage import scratch_dir
@@ -1673,12 +1459,10 @@ def stream_drift_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     isnew = (F.col("vec_id") % APPEND_MOD) == APPEND_RES
     base = emb.filter(~isnew)
     batch = emb.filter(isnew).select("vec_id", "embedding")
-    rdir = S.write_replay_files(batch, ["vec_id"], 3, "sdrift")
-    st = S.stream_replay(spark, rdir)
-    root = scratch_dir("stream_drift")
-    out, ckpt = f"{root}/out", f"{root}/ckpt"
+    st = S.stream_replay(batch, ["vec_id"], 3, "sdrift")
+    out = f"{scratch_dir('stream_drift')}/out"
 
-    def _partial(batch_df: DataFrame, batch_id: int) -> None:
+    def _partial(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # one parsed SQL expression per dim — this closure runs PER
         # MICRO-BATCH, so the Column-builder chatter (~70 py4j
         # round-trips × 64 dims) was paid three times per query run;
@@ -1690,27 +1474,12 @@ def stream_drift_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for i in range(DRIFT_DIM)
         ]
-        (
-            batch_df.agg(*aggs)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
-        )
+        return batch_df.agg(*aggs)
 
-    q = (
-        st.writeStream.foreachBatch(_partial)
-        # contract label for the STREAM_PLANS audit: stateless per
-        # micro-batch — one partial-sums row per batch, merged in the
-        # sink by exact integer addition
-        .queryName(f"sdrift_stateless_{os.getpid()}_{next(S._name_counter)}")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    S._capture_run(q)
+    # contract label for the STREAM_PLANS audit: stateless per
+    # micro-batch — one partial-sums row per batch, merged in the sink
+    # by exact integer addition
+    S.stream_to_parquet(st, out, name="sdrift_stateless", fn=_partial)
     merged_new = spark.read.parquet(out).agg(
         F.sum("n_new").cast("long").alias("n_new"),
         *[
@@ -1738,6 +1507,37 @@ def _sdrift_oracle() -> str:
     return _drift_census_oracle()
 
 
+def _restart_in_two_phases(
+    evb: DataFrame, halves, build, tag: str, **merge
+) -> DataFrame:
+    """Land ``evb`` as two files (rows matching each of the two
+    ``halves`` predicates) and stream each through ``build`` into the
+    keyed MERGE sink on ONE checkpoint: phase 2 resumes the phase-1
+    state and offsets and reads only the second file. Returns the
+    merged state table."""
+    import glob
+    import os
+    import shutil
+
+    from jobx_spark.lineage import scratch_dir
+
+    spark = evb.sparkSession
+    root = scratch_dir(tag)
+    src = os.path.join(root, "src")
+    os.makedirs(src)
+    state, ckpt = os.path.join(root, "state"), os.path.join(root, "ckpt")
+    for name, pred in zip("ab", halves):
+        d = os.path.join(root, "stage", name)
+        evb.filter(pred).coalesce(1).write.parquet(d)
+        part = glob.glob(os.path.join(d, "part-*.parquet"))[0]
+        shutil.copy(part, os.path.join(src, f"{name}.parquet"))
+        stream = spark.readStream.schema(evb.schema).parquet(src)
+        S.stream_upsert_parquet(
+            build(stream), state, ckpt, output_mode="update", **merge
+        )
+    return spark.read.parquet(state)
+
+
 # --------------------------------------------------------------------------
 # stream_incremental_restart — checkpoint-resume incrementality under
 # the gate: the event stream arrives in TWO batches of files through
@@ -1750,48 +1550,25 @@ def _sdrift_oracle() -> str:
 # just a unit test.
 # --------------------------------------------------------------------------
 def stream_incremental_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
 
-    from jobx_spark.lineage import scratch_dir
     from jobx_spark.sources import load_table
 
     evb = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    root = scratch_dir("stream_restart")
-    src = os.path.join(root, "src")
-    os.makedirs(src)
-    state, ckpt = os.path.join(root, "state"), os.path.join(root, "ckpt")
-
-    def land_half(pred, name: str) -> None:
-        d = os.path.join(root, "stage", name)
-        evb.filter(pred).coalesce(1).write.parquet(d)
-        part = glob.glob(os.path.join(d, "part-*.parquet"))[0]
-        shutil.copy(part, os.path.join(src, f"{name}.parquet"))
-
-    def run_phase() -> None:
-        stream = spark.readStream.schema(evb.schema).parquet(src)
-        agg = stream.groupBy("event_type").agg(
+    state = _restart_in_two_phases(
+        evb,
+        [F.col("event_id") % 2 == 0, F.col("event_id") % 2 == 1],
+        lambda stream: stream.groupBy("event_type").agg(
             F.count("*").alias("n"),
             F.sum(F.col("value").cast("decimal(38,8)")).alias("total_s"),
-        )
-        S.stream_upsert_parquet(
-            agg, state, ckpt,
-            key_cols=["event_type"], version_col="n", output_mode="update",
-            name="restart_merge",
-        )
-
-    land_half(F.col("event_id") % 2 == 0, "a")
-    run_phase()
-    land_half(F.col("event_id") % 2 == 1, "b")
-    run_phase()  # same checkpoint: resumes state, reads ONLY file b
+        ),
+        "stream_restart",
+        key_cols=["event_type"], version_col="n", name="restart_merge",
+    )
     return (
-        spark.read.parquet(state)
-        .select(
+        state.select(
             "event_type", "n",
             F.col("total_s").cast("string").cast("double").alias("total_value"),
         )
@@ -1822,13 +1599,8 @@ ORDER BY event_type
 # for an ORDER-SENSITIVE reducer.
 # --------------------------------------------------------------------------
 def stream_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
 
-    from jobx_spark.lineage import scratch_dir
     from jobx_spark.queries.pipeline import EWMA_SCALE
     from jobx_spark.sources import load_table
 
@@ -1840,38 +1612,18 @@ def stream_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lo, hi = evb.agg(F.min("ts"), F.max("ts")).collect()[0]
     mid = lo + (hi - lo) / 2
-
-    root = scratch_dir("stream_ewma")
-    src = os.path.join(root, "src")
-    os.makedirs(src)
-    state, ckpt = os.path.join(root, "state"), os.path.join(root, "ckpt")
-
-    def land_half(pred, name: str) -> None:
-        d = os.path.join(root, "stage", name)
-        evb.filter(pred).coalesce(1).write.parquet(d)
-        part = glob.glob(os.path.join(d, "part-*.parquet"))[0]
-        shutil.copy(part, os.path.join(src, f"{name}.parquet"))
-
-    def run_phase() -> None:
-        stream = spark.readStream.schema(evb.schema).parquet(src)
-        # memory sinks can't recover a checkpoint; the MERGE sink can —
-        # emissions carry strictly-growing n_events, so the keyed upsert
-        # keeps the newest accumulator per user.
-        S.stream_upsert_parquet(
-            S.stateful_ewma(stream), state, ckpt,
-            key_cols=["user_id"], version_col="n_events",
-            output_mode="update",
-            name="ewma_merge",
-        )
-
-    land_half(F.col("ts") < F.lit(mid), "a")
-    run_phase()
-    land_half(F.col("ts") >= F.lit(mid), "b")
-    run_phase()  # same checkpoint: resumes state, reads ONLY file b
-
+    # memory sinks can't recover a checkpoint; the MERGE sink can —
+    # emissions carry strictly-growing n_events, so the keyed upsert
+    # keeps the newest accumulator per user.
+    state = _restart_in_two_phases(
+        evb,
+        [F.col("ts") < F.lit(mid), F.col("ts") >= F.lit(mid)],
+        S.stateful_ewma,
+        "stream_ewma",
+        key_cols=["user_id"], version_col="n_events", name="ewma_merge",
+    )
     return (
-        spark.read.parquet(state)
-        .select(
+        state.select(
             "user_id", "n_events", "ewma_s",
             (F.col("ewma_s").cast("double") / EWMA_SCALE).alias("ewma"),
         )

@@ -926,14 +926,16 @@ BM25_S_IDF = 10**6
 BM25_S_TF = 10**4
 
 
-def _bm25_query_terms(spark: SparkSession) -> tuple[DataFrame, list[str]]:
-    """The BM25_QUERIES batch as (query_id, term) rows, and its sorted
-    vocabulary."""
+def _bm25_query_terms(
+    spark: SparkSession, queries: dict[int, str] = BM25_QUERIES
+) -> tuple[DataFrame, list[str]]:
+    """A query batch (BM25_QUERIES, or one stream micro-batch of it) as
+    (query_id, term) rows, and its sorted vocabulary."""
     qterms = spark.createDataFrame(
-        [(qid, t) for qid, q in BM25_QUERIES.items() for t in q.split()],
+        [(qid, t) for qid, q in queries.items() for t in q.split()],
         "query_id INT, term STRING",
     )
-    terms = sorted({t for q in BM25_QUERIES.values() for t in q.split()})
+    terms = sorted({t for q in queries.values() for t in q.split()})
     return qterms, terms
 
 

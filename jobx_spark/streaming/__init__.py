@@ -17,6 +17,14 @@ on a real cluster); watermarks bound that state. Complete output mode
 is used for the windowed aggregations here because the inputs are
 finite; production continuous runs would use append + watermark
 eviction — the plan shape is identical.
+
+One runner: every stream in the package — memory-sink results, the
+batch-id parquet sink, the keyed MERGE sink and each query's own
+``foreachBatch`` — runs through :func:`_run`, which owns the query
+name, the checkpoint, the AvailableNow trigger, the wait and the
+``RUN_LOG`` record. Each stateless twin of a batch query writes through
+:func:`stream_to_parquet` (the one batch-id sink) and calls its batch
+kernel once per micro-batch.
 """
 
 from __future__ import annotations
@@ -29,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from jobx_spark.lineage import scratch_dir
 
 _name_counter = itertools.count()
 
@@ -72,21 +82,12 @@ def _capture_run(query) -> None:
     )
 
 
-def _scratch(tag: str) -> str:
-    """Streaming checkpoints live under the atexit-cleaned process
-    scratch root, not bare mkdtemp — bench/verify loops previously
-    leaked one checkpoint dir per query run into /tmp."""
-    from jobx_spark.lineage import scratch_dir
-
-    return scratch_dir(tag)
-
-
-def write_replay_files(
+def stream_replay(
     df: DataFrame, order_cols: list[str], n_files: int, tag: str
-) -> str:
-    """Write ``df`` into ``n_files`` parquet files that a file-source
-    stream with ``maxFilesPerTrigger=1`` will replay as n_files
-    micro-batches in ``order_cols`` order — a deterministic
+) -> DataFrame:
+    """Write ``df`` into ``n_files`` parquet files and open them as a
+    file-source stream with ``maxFilesPerTrigger=1``, which replays them
+    as n_files micro-batches in ``order_cols`` order — a deterministic
     arriving-files harness for watermark-advance semantics (a
     single-file AvailableNow run is ONE batch, so its watermark never
     moves and nothing can ever be late).
@@ -100,7 +101,7 @@ def write_replay_files(
 
     from pyspark.sql import Window as W
 
-    out = _scratch(f"replay_{tag}_{next(_name_counter)}")
+    out = scratch_dir(f"replay_{tag}_{next(_name_counter)}")
     # ONE pass (guide §1.2-1: don't repeat passes you can fuse): rank
     # and total ride the same single-partition window — previously this
     # staging paid a count() job plus one filtered scan PER FILE
@@ -135,18 +136,13 @@ def write_replay_files(
         shutil.move(os.path.join(pdir, parts[0]), dest)
         os.utime(dest, (base_mtime + i, base_mtime + i))
     shutil.rmtree(tmp)
-    return out
-
-
-def stream_replay(spark: SparkSession, replay_dir: str) -> DataFrame:
-    """Open a ``write_replay_files`` directory as a one-file-per-batch
-    stream (schema from a footer-only batch read)."""
-    schema = spark.read.parquet(replay_dir).schema
+    # schema from a footer-only batch read of the replay files
+    spark = df.sparkSession
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(spark.read.parquet(out).schema)
         .option("pathGlobFilter", "*.parquet")
         .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
+        .parquet(out)
     )
 
 
@@ -178,6 +174,35 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
+def _run(
+    df: DataFrame,
+    label: str,
+    fn=None,
+    output_mode: str | None = None,
+    checkpoint: str | None = None,
+) -> str:
+    """Run ``df`` to completion over the currently available input and
+    return the query name ``<label>_<pid>_<n>``: into the memory sink
+    of that name, or through ``foreachBatch(fn)`` when ``fn`` is given.
+    The checkpoint defaults to a fresh scratch dir; the finished run is
+    recorded in ``RUN_LOG``. A failing batch raises out of the wait and
+    leaves the checkpoint for a re-run to resume from."""
+    name = f"{label}_{os.getpid()}_{next(_name_counter)}"
+    writer = df.writeStream.queryName(name)
+    writer = writer.foreachBatch(fn) if fn else writer.format("memory")
+    if output_mode:
+        writer = writer.outputMode(output_mode)
+    ckpt = checkpoint or scratch_dir(f"ckpt_{name}")
+    query = (
+        writer.option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    _capture_run(query)
+    return name
+
+
 def run_available_now(
     df: DataFrame, output_mode: str = "complete", name: str | None = None
 ) -> DataFrame:
@@ -189,19 +214,7 @@ def run_available_now(
     (windows × types, sessions, per-user state); raw-event streams
     would use a file/Kafka sink instead.
     """
-    spark = df.sparkSession
-    name = f"{name or 'stream'}_{os.getpid()}_{next(_name_counter)}"
-    query = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", _scratch(f"ckpt_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    _capture_run(query)
-    return spark.table(name)
+    return df.sparkSession.table(_run(df, name or "stream", output_mode=output_mode))
 
 
 # ------------------------------------------------------------------ windows
@@ -808,7 +821,11 @@ def zscore_anomaly(events: DataFrame) -> DataFrame:
 
 
 def stream_to_parquet(
-    df: DataFrame, path: str, checkpoint: str, name: str | None = None
+    df: DataFrame,
+    path: str,
+    checkpoint: str | None = None,
+    name: str | None = None,
+    fn=None,
 ) -> None:
     """Exactly-once-shaped streaming file sink via ``foreachBatch``.
 
@@ -821,26 +838,23 @@ def stream_to_parquet(
     partition byte-for-byte instead of appending duplicates —
     idempotent writes + the checkpoint's offset log = effectively
     exactly-once end-to-end. Runs to completion (AvailableNow).
+
+    ``fn(batch_df, batch_id) -> DataFrame`` is the per-batch body (the
+    identity when omitted): a stateless stream twin passes its batch
+    kernel here and the sink writes what it returns.
     """
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         (
-            batch_df.withColumn("_batch_id", F.lit(batch_id))
+            (fn(batch_df, batch_id) if fn else batch_df)
+            .withColumn("_batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("_batch_id")
             .parquet(path)
         )
 
-    query = (
-        df.writeStream.foreachBatch(_write)
-        .queryName(f"{name or 'to_parquet'}_{os.getpid()}_{next(_name_counter)}")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    _capture_run(query)
+    _run(df, name or "to_parquet", _write, checkpoint=checkpoint)
 
 
 def stream_upsert_parquet(
@@ -885,24 +899,12 @@ def stream_upsert_parquet(
             return
         upsert_parquet(spark, path, batch_df, key_cols, version_col)
 
-    writer = df.writeStream.foreachBatch(_merge)
-    if output_mode:
-        # aggregations feed the MERGE in "update" mode: each batch emits
-        # only the keys whose values changed, and the keyed upsert folds
-        # them into the state table — append mode would hold every
-        # window until the watermark passes it, which an AvailableNow
-        # run over finite input never does for the tail windows.
-        writer = writer.outputMode(output_mode)
-    query = (
-        writer.queryName(
-            f"{name or 'upsert'}_{os.getpid()}_{next(_name_counter)}"
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    _capture_run(query)
+    # aggregations feed the MERGE in "update" mode: each batch emits
+    # only the keys whose values changed, and the keyed upsert folds
+    # them into the state table — append mode would hold every window
+    # until the watermark passes it, which an AvailableNow run over
+    # finite input never does for the tail windows.
+    _run(df, name or "upsert", _merge, output_mode, checkpoint)
 
 
 def finalize_update_stream(snapshot: DataFrame) -> DataFrame:

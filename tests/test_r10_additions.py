@@ -180,22 +180,6 @@ def test_index_serve_equals_inline_trained_topk(spark, sf_dir):
     assert served == inline
 
 
-def test_stream_index_serve_equals_batch_serve(spark, sf_dir):
-    """Each query lives in exactly one replay micro-batch, so the
-    streaming twin's unioned per-batch top-K must equal the batch
-    serve result bit for bit."""
-    from jobx_spark.queries.similarity import QUERIES as AQ
-    from jobx_spark.queries.streams import QUERIES as SQ
-
-    batch = {
-        tuple(r) for r in AQ["ann_index_serve"](spark, sf_dir).collect()
-    }
-    streamed = {
-        tuple(r) for r in SQ["stream_index_serve"](spark, sf_dir).collect()
-    }
-    assert streamed == batch
-
-
 def test_encode_serve_plan_is_learn_free_and_equals_inline(spark, sf_dir):
     """The persisted-vocabulary serve path must contain zero learn-
     chain iterations (no bpee-w lineage cuts - the vocab tables are the

@@ -123,21 +123,6 @@ def test_dedup_index_append_certificate_and_idempotence(spark, sf_dir):
     assert all(r[3] == r[1] + r[2] for r in first)
 
 
-def test_stream_dedup_index_probe_equals_batch_probe(spark, sf_dir):
-    """Each new doc lives in exactly one replay micro-batch, so the
-    streaming twin's unioned per-batch pairs must equal the batch probe
-    bit for bit."""
-    from jobx_spark.queries.dedup import QUERIES as DQ
-    from jobx_spark.queries.streams import QUERIES as SQ
-
-    batch = {tuple(r) for r in DQ["dedup_index_probe"](spark, sf_dir).collect()}
-    streamed = {
-        tuple(r)
-        for r in SQ["stream_dedup_index_probe"](spark, sf_dir).collect()
-    }
-    assert streamed == batch
-
-
 def test_index_snapshot_isolation(spark, tmp_path):
     """VERDICT r10 #5: a reader pinned to the published version must
     survive a concurrent rebuild. The serve DataFrame resolves its
@@ -181,22 +166,6 @@ def test_dedup_index_compact_single_file_per_band(spark, sf_dir):
     for r in out:
         assert r["files_after"] == (1 if r["n_after"] > 0 else 0)
     assert sum(r["n_after"] for r in out) > 0
-
-
-def test_stream_dedup_index_append_equals_batch_append(spark, sf_dir):
-    """The streaming band-index ingest must produce the identical
-    per-band census (incl. the append≡rebuild certificate) as the
-    batch append job."""
-    from jobx_spark.queries.dedup import QUERIES as DQ
-    from jobx_spark.queries.streams import QUERIES as SQ
-
-    batch = [tuple(r) for r in DQ["dedup_index_append"](spark, sf_dir).collect()]
-    streamed = [
-        tuple(r)
-        for r in SQ["stream_dedup_index_append"](spark, sf_dir).collect()
-    ]
-    assert streamed == batch
-    assert all(r[5] == 1 for r in streamed)
 
 
 def test_stream_index_ingest_layout_and_census(spark, tmp_path):
@@ -246,21 +215,3 @@ def test_bm25_index_serve_plan_pruned_and_equals_inline(spark, sf_dir):
     inline = [tuple(r) for r in QUERIES["text_bm25_topk"](spark, sf_dir).collect()]
     assert served == inline
     assert served, "fixture must rank at least one document"
-
-
-def test_stream_bm25_index_serve_equals_batch_serve(spark, sf_dir):
-    """Whole queries replay (terms explode inside the batch), so the
-    streaming twin's unioned per-batch top-K must equal the batch
-    serve bit for bit."""
-    from jobx_spark.queries.streams import QUERIES as SQ
-    from jobx_spark.queries.text import QUERIES as TQ
-
-    batch = [
-        tuple(r)
-        for r in TQ["text_bm25_index_serve"](spark, sf_dir).collect()
-    ]
-    streamed = [
-        tuple(r)
-        for r in SQ["stream_bm25_index_serve"](spark, sf_dir).collect()
-    ]
-    assert streamed == batch

@@ -2,12 +2,11 @@
 
 Each r9 addition's oracle gate proves Spark == DuckDB; these tests pin
 the SEMANTIC claims the docstrings make — fusion dominance, greedy
-optimality, water-filling feasibility, recall monotonicity, phase
-partitioning, and the stream-equals-batch certificate — as executed
-properties computed independently of the query implementations.
+optimality, water-filling feasibility, recall monotonicity and phase
+partitioning — as executed properties computed independently of the
+query implementations (the stream-equals-batch certificate lives in
+tests/test_stream_runner.py).
 """
-
-import pytest
 
 SF = "/root/testdata/sf0.001"
 
@@ -267,21 +266,3 @@ def test_retention_day_zero_is_the_whole_cohort(spark):
                 r["retention_ppm"]
                 == r["n_users"] * 1000000 // r["cohort_size"]
             )
-
-
-# -- stream_drift_census -----------------------------------------------------
-@pytest.mark.parametrize("sf", [SF])
-def test_stream_drift_equals_batch_census_bit_for_bit(spark, sf):
-    """The mergeability certificate as an executed equality: the
-    streaming twin's merged micro-batch partials must reproduce the
-    batch census EXACTLY (same rows, same integers)."""
-    from jobx_spark.queries import all_queries
-
-    qs = all_queries()
-    batch = {r["dim"]: r for r in qs["ann_drift_census"](spark, sf).collect()}
-    stream = {
-        r["dim"]: r for r in qs["stream_drift_census"](spark, sf).collect()
-    }
-    assert sorted(batch) == sorted(stream)
-    for dim in batch:
-        assert batch[dim].asDict() == stream[dim].asDict(), f"dim {dim}"

@@ -21,7 +21,7 @@ is already gated by the append-mode stream queries. If an upgrade
 changes either behavior — late rows silently discarded, or the tail
 rule shifting — training pipelines built on "streaming loses nothing"
 MUST find out, so this test pins both with the multi-batch replay
-harness (``streaming.write_replay_files``), the only configuration in
+harness (``streaming.stream_replay``), the only configuration in
 which a watermark can advance mid-stream at all.
 """
 
@@ -47,8 +47,7 @@ def test_late_rows_merge_and_tail_is_watermark_bounded(spark, sf_dir):
 
     # ≤6 h jittered arrival split into 8 replay files — the watermark
     # advances 7 times mid-stream, so late rows genuinely exist
-    replay = S.write_replay_files(base, ["arr", "event_id"], 8, "wmsem")
-    stream = S.stream_replay(spark, replay)
+    stream = S.stream_replay(base, ["arr", "event_id"], 8, "wmsem")
     agg = (
         stream.withWatermark("ts", f"{delay_s} seconds")
         .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -88,8 +87,7 @@ def test_drop_duplicates_passes_late_rows(spark, sf_dir):
         "event_id", "ts", (F.unix_micros("ts") + jitter).alias("arr")
     )
     n_total = base.count()
-    replay = S.write_replay_files(base, ["arr", "event_id"], 8, "wmdd")
-    stream = S.stream_replay(spark, replay)
+    stream = S.stream_replay(base, ["arr", "event_id"], 8, "wmdd")
     dd = stream.withWatermark("ts", "900 seconds").dropDuplicates(
         ["event_id", "ts"]
     )
