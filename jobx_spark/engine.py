@@ -53,6 +53,7 @@ from jobx_spark.handlers import (
     parse_docstring_metadata,
 )
 from jobx_spark import result_writers
+from jobx_spark.sources import local_frame
 from jobx_spark.trace import INVOCATION_CAP, InvocationRecord, RequestTrace
 
 # unified row schema for every engine dataset
@@ -118,8 +119,13 @@ class Request:
         return self
 
 
+# json.dumps with non-default options builds a new JSONEncoder per call;
+# one shared encoder gives byte-identical output
+_ENCODER = json.JSONEncoder(sort_keys=True, separators=(",", ":"))
+
+
 def _encode(obj) -> str:
-    return json.dumps(obj, sort_keys=True, separators=(",", ":"))
+    return _ENCODER.encode(obj)
 
 
 def _decode(s: str):
@@ -483,7 +489,8 @@ def _phase1_one_invocation(
 def _make_fold_udf(step_plan: dict):
     """Reduce-over-children: merge-group the concatenated child results
     by key, then the parent step's reducer (mr/job_engine.py:689-819).
-    Cogrouped with the parent mapper's session rows."""
+    Cogrouped with the parent mapper's session rows (``submit_dataset``'s
+    root fold passes an empty session frame)."""
 
     def fold(key, results_pdf: pd.DataFrame, sessions_pdf: pd.DataFrame) -> pd.DataFrame:
         inv = key[0]
@@ -923,7 +930,7 @@ class Engine:
                     ("arg", root_inv, None, job.initial_step_name, i, _encode(k), _encode(v))
                     for i, (k, v) in enumerate(cast_args)
                 ] or [("arg_empty", root_inv, None, job.initial_step_name, 0, None, None)]
-                frontier = self.spark.createDataFrame(rows, schema=_ROWS_SCHEMA)
+                frontier = local_frame(self.spark, rows, _ROWS_SCHEMA)
                 result_rows = self._run_step(
                     workflow_name, job.initial_step_name, frontier,
                     request.trace, persisted,
@@ -1114,13 +1121,12 @@ class Engine:
                 n_invocations=n_buckets,
             )
             request.trace.record(0, job.initial_step_name, "fold")
-            fold_in = leaf.withColumn("gkey", F.col("parent_inv"))
-            empty_sessions = self.spark.createDataFrame([], schema=_ROWS_SCHEMA)
-            sess_in = empty_sessions.withColumn("gkey", F.col("inv"))
-            folded = (
-                fold_in.groupBy("gkey")
-                .cogroup(sess_in.groupBy("gkey"))
-                .applyInPandas(_make_fold_udf(plan), schema=_ROWS_SCHEMA)
+            # the dataset root runs no mapper, so it has no session rows
+            # to cogroup with
+            fold = _make_fold_udf(plan)
+            no_sessions = pd.DataFrame({"k": [], "v": []})
+            folded = leaf.groupBy("parent_inv").applyInPandas(
+                lambda key, pdf: fold(key, pdf, no_sessions), schema=_ROWS_SCHEMA
             )
             if result_writer in _DATASET_SINKS:
                 # distributed result path: the folded output is written

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from jobx_spark.operators.dedup import cosine_from_scaled, scaled_dot, scaled_dot_udf
+from jobx_spark.sources import local_frame
 
 # hyperplane weights: w(plane j, dim i) = +1 if ((j*1000003 + i*7919) mod 97)
 # is even else -1 — pure integer arithmetic, identical in any engine.
@@ -311,7 +312,8 @@ def kmeans_train_multi(
                     for cell, vals in nxt[i].items()
                 }
     return [
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 {"cent_id": c, "cv": [v / scale for v in cents[i][c]]}
                 for c in sorted(cents[i])
@@ -594,7 +596,8 @@ def kmeans_train(
             cell: [vals[i] for i in sorted(vals)] for cell, vals in nxt.items()
         }
     if output == "centroids":
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [
                 {"cent_id": c, "cv": [v / scale for v in cents[c]]}
                 for c in sorted(cents)
@@ -602,9 +605,7 @@ def kmeans_train(
             "cent_id bigint, cv array<double>",
         )
     if not cents:
-        return spark.createDataFrame(
-            [], "vec_id long, cell bigint, cosine double"
-        )
+        return local_frame(spark, [], "vec_id long, cell bigint, cosine double")
     final = e.withColumn("b", assign_col(with_cosine=True))
     return final.select(
         F.col("id").alias("vec_id"),
@@ -654,7 +655,8 @@ def brute_force_topk(
         F.col(query_id_col).alias("qid"), F.col(vec_col).alias("qv")
     ).collect()
     if not qrows:
-        return corpus.sparkSession.createDataFrame(
+        return local_frame(
+            corpus.sparkSession,
             [], "query_id long, vec_id long, rank int, cosine double"
         )
     qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
@@ -983,7 +985,8 @@ def hard_negative_topk(
         F.col(label_col).alias("qlabel"),
     ).collect()
     if not qrows:
-        return corpus.sparkSession.createDataFrame(
+        return local_frame(
+            corpus.sparkSession,
             [], "query_id long, vec_id long, rank int, cosine double"
         )
     qids = np.array([r["qid"] for r in qrows], dtype=np.int64)

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from jobx_spark.engine import Engine
 from jobx_spark.handlers import MrConfigureToReturn
-from jobx_spark.sources import load_table
+from jobx_spark.sources import load_table, local_frame
 
 
 def _mapper_passthrough(scope, arguments):
@@ -61,7 +61,8 @@ def mr_engine_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     engine = _build_engine(spark)
     req = engine.submit_dataset("mr", "job_sum", pairs)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(k, int(v)) for k, v in req.result["pairs"]], schema="k string, v long"
     )
 
@@ -156,7 +157,8 @@ def mr_engine_fanout_rekey(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine.create_step("mrf", "step_leaf", "rekey", "sum")
     engine.create_job("mrf", "job_fanout", "step_top")
     req = engine.submit_dataset("mrf", "job_fanout", pairs)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(k, int(v)) for k, v in req.result["pairs"]], schema="k string, v long"
     ).orderBy("k")
 
@@ -234,7 +236,8 @@ def mr_engine_combined_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         (k, int(st[0]), int(st[1]), int(st[2]), int(st[3]))
         for k, st in req.result["pairs"]
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, schema="k string, v_min long, v_max long, n long, v_sum long"
     ).orderBy("k")
 

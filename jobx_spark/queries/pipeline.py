@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from jobx_spark import index
 from jobx_spark.functions import dsum, dsum_sql, md5_long
 from jobx_spark.operators.text import tokens
-from jobx_spark.sources import load_table
+from jobx_spark.sources import load_table, local_frame
 
 _TOKS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
 _MD5 = "('0x'||substr(md5({e}),1,15))::BIGINT"
@@ -1439,8 +1439,8 @@ def pipe_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     final_syms = words.agg(
         F.sum(F.col("n") * F.size(F.split("sym", _BPE_SEP))).alias("final_symbols")
     )
-    mdf = spark.createDataFrame(
-        merges, "rank int, lhs string, rhs string, pair_n bigint"
+    mdf = local_frame(
+        spark, merges, "rank int, lhs string, rhs string, pair_n bigint"
     )
     return mdf.crossJoin(F.broadcast(final_syms)).orderBy("rank")
 

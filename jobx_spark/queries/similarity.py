@@ -17,7 +17,7 @@ from jobx_spark.operators.similarity import (
     brute_force_topk,
     lsh_topk,
 )
-from jobx_spark.sources import load_table
+from jobx_spark.sources import load_table, local_frame
 
 K = 10
 N_QUERIES = 5  # probe set: vec_id 0..4
@@ -1441,8 +1441,8 @@ def ann_multiprobe_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.append((int(r["query_id"]), base, base))
         for j in flips:
             pairs.append((int(r["query_id"]), base ^ (1 << j), base))
-    probes = spark.createDataFrame(
-        pairs, "query_id long, bucket long, base_bucket long"
+    probes = local_frame(
+        spark, pairs, "query_id long, bucket long, base_bucket long"
     )
     sdot = scaled_dot_udf()
     bucket_fn = hyperplane_bucket_udf(N_PLANES)
@@ -1452,7 +1452,8 @@ def ann_multiprobe_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("norm_s") > 0)
         .withColumn("bucket", bucket_fn(F.col("embedding")))
     )
-    qv = spark.createDataFrame(
+    qv = local_frame(
+        spark,
         [
             (int(r["query_id"]), list(map(float, r["embedding"])))
             for r in qrows
@@ -2031,7 +2032,8 @@ def ann_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
                     - (10 - MMR_LAM10) * best_ms,
                 )
             )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "query_id long, pick_order int, vec_id long, rel_ppm long,"
         " max_sim_ppm long, score_x long",
@@ -2608,8 +2610,8 @@ def _pq_adc_lut(
             dots = np.floor(cvm * qs * 1e12).astype(np.int64).sum(axis=1)
             for cid, d in zip(cent_ids.tolist(), dots.tolist()):
                 out.append((int(r["vec_id"]), s, int(cid), int(d)))
-    return spark.createDataFrame(
-        out, f"query_id bigint, s int, {cell_name} bigint, part bigint"
+    return local_frame(
+        spark, out, f"query_id bigint, s int, {cell_name} bigint, part bigint"
     )
 
 
@@ -2989,7 +2991,8 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
         .collect()
     )
-    probes = spark.createDataFrame(
+    probes = local_frame(
+        spark,
         _driver_probes(qrows, coarse.select("cent_id", "cv").collect(),
                        KM_NPROBE),
         "query_id bigint, cell bigint",
@@ -3171,9 +3174,7 @@ def ann_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     probe_pairs = _driver_probes(qrows, coarse_rows, KM_NPROBE)
-    probes = spark.createDataFrame(
-        probe_pairs, "query_id bigint, cell bigint"
-    )
+    probes = local_frame(spark, probe_pairs, "query_id bigint, cell bigint")
     qvmap = {
         int(r["vec_id"]): np.asarray(list(r["embedding"]), dtype=np.float64)
         for r in qrows
@@ -3194,7 +3195,8 @@ def ann_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             dots = np.floor(cvm * sl * 1e12).astype(np.int64).sum(axis=1)
             for cid, d in zip(cent_ids.tolist(), dots.tolist()):
                 lut_rows.append((qid, cell, s, int(cid), int(d)))
-    lut = spark.createDataFrame(
+    lut = local_frame(
+        spark,
         lut_rows,
         "query_id bigint, cell bigint, s int, pq_cell bigint, part bigint",
     )

@@ -1316,10 +1316,11 @@ def stream_bm25_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         _bm25_query_terms,
         _bm25_serve_body,
     )
+    from jobx_spark.sources import local_frame
 
     ppath, spath = BM25_INDEX.ensure(spark, sf_dir)
-    qdf = spark.createDataFrame(
-        sorted(BM25_QUERIES.items()), "query_id INT, qtext STRING"
+    qdf = local_frame(
+        spark, sorted(BM25_QUERIES.items()), "query_id INT, qtext STRING"
     )
     st = S.stream_replay(qdf, ["query_id"], 3, "sbm25")
     out = f"{scratch_dir('stream_bm25')}/out"

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from jobx_spark.functions import dsum, dsum_sql
-from jobx_spark.sources import load_table
+from jobx_spark.sources import load_table, local_frame
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -129,7 +129,7 @@ _BANDS = [
 
 def q21_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(_BANDS, "band string, lo double, hi double")
+    bands = local_frame(spark, _BANDS, "band string, lo double, hi double")
     return (
         orders.join(
             F.broadcast(bands),

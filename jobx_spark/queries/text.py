@@ -17,7 +17,7 @@ from jobx_spark.operators.text import (
     quality_stats,
     tokens,
 )
-from jobx_spark.sources import load_table
+from jobx_spark.sources import load_table, local_frame
 
 _TOKS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
 _MD5 = "('0x'||substr(md5({e}),1,15))::BIGINT"
@@ -931,7 +931,8 @@ def _bm25_query_terms(
 ) -> tuple[DataFrame, list[str]]:
     """A query batch (BM25_QUERIES, or one stream micro-batch of it) as
     (query_id, term) rows, and its sorted vocabulary."""
-    qterms = spark.createDataFrame(
+    qterms = local_frame(
+        spark,
         [(qid, t) for qid, q in queries.items() for t in q.split()],
         "query_id INT, term STRING",
     )

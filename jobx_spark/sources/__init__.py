@@ -6,11 +6,23 @@ sinks. Our engine fronts Spark's native readers instead, so every
 format Spark reads is a first-class source, with explicit schemas for
 the driver-generated testdata tables so scans prune columns and push
 predicates into the parquet footers.
+
+Driver-built rows (request arguments, collected centroids, probe and
+lookup tables, empty results) enter Spark only through
+:func:`local_frame`. ``spark.createDataFrame(<list>)`` plans a
+``LogicalRDD``, so every action that scans it first runs a Python-worker
+task wave just to unpickle the rows (0.3-0.5 s on 4 cores, even for an
+empty list); an Arrow table becomes a JVM ``LocalRelation`` that no
+Python task has to read, and whose size statistics let the planner
+broadcast it. ``tests/test_local_frame.py`` keeps ``createDataFrame``
+out of the rest of the package.
 """
 
 from __future__ import annotations
 
 import os
+
+from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,6 +59,36 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
     return spark.read.parquet(path)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Any], schema: str
+) -> DataFrame:
+    """Driver-side ``rows`` (tuples or dicts) as a DataFrame of the DDL
+    ``schema``, planned as a ``LocalRelation``.
+
+    Rows get the same type check ``createDataFrame(rows, schema)``
+    applies (a float in a bigint column raises instead of being
+    truncated by the Arrow conversion)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier, _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    verify = _make_type_verifier(struct)
+    names = struct.names
+    cols: list[list] = [[] for _ in names]
+    for row in rows:
+        verify(row)
+        values = (row.get(n) for n in names) if isinstance(row, dict) else row
+        for col, value in zip(cols, values):
+            col.append(value)
+    arrow_schema = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

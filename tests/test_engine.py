@@ -599,3 +599,36 @@ def test_request_sessions_capture(engine):
     # mapper_split writes key1=123 (int) and key2="uvw" (str) — values
     # must come back decoded, not as JSON text
     assert by_key == {"key1": 123, "key2": "uvw"}
+
+
+@pytest.mark.parametrize(
+    "obj",
+    [
+        0, -7, 2**63, 1.5, 1e16, 1e-7, float("nan"), float("inf"),
+        float("-inf"), "ünïcødé ✓", {"b": {"d": 1, "c": [2, "x"]}, "a": None},
+        (1, ("two", 3.0)), [True, False, None],
+    ],
+)
+def test_encode_matches_json_dumps(obj):
+    import json
+
+    from jobx_spark.engine import _encode
+
+    assert _encode(obj) == json.dumps(obj, sort_keys=True, separators=(",", ":"))
+
+
+def test_submit_frontier_is_a_local_relation(engine, monkeypatch):
+    """The request arguments reach the root step as a LocalRelation, so
+    reading them runs no Python task."""
+    frontiers = []
+    run_step = Engine._run_step
+
+    def spy(self, workflow_name, step_name, frontier, *args, **kwargs):
+        frontiers.append(frontier)
+        return run_step(self, workflow_name, step_name, frontier, *args, **kwargs)
+
+    monkeypatch.setattr(Engine, "_run_step", spy)
+    engine.submit("wf", "job5", {"arg1": 12})
+    plan = frontiers[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan
+    assert "LogicalRDD" not in plan
