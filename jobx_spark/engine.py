@@ -54,7 +54,12 @@ from jobx_spark.handlers import (
 )
 from jobx_spark import result_writers
 from jobx_spark.sources import local_frame
-from jobx_spark.trace import INVOCATION_CAP, InvocationRecord, RequestTrace
+from jobx_spark.trace import (
+    INVOCATION_CAP,
+    FusionDecision,
+    InvocationRecord,
+    RequestTrace,
+)
 
 # unified row schema for every engine dataset
 _ROWS_SCHEMA = (
@@ -120,8 +125,11 @@ class Request:
 
 
 # json.dumps with non-default options builds a new JSONEncoder per call;
-# one shared encoder gives byte-identical output
+# one shared encoder gives byte-identical output. The decoder twin skips
+# json.loads' per-call type and BOM checks (a BOM-prefixed string still
+# raises JSONDecodeError, at its first character).
 _ENCODER = json.JSONEncoder(sort_keys=True, separators=(",", ":"))
+_DECODER = json.JSONDecoder()
 
 
 def _encode(obj) -> str:
@@ -129,7 +137,7 @@ def _encode(obj) -> str:
 
 
 def _decode(s: str):
-    return json.loads(s)
+    return _DECODER.decode(s)
 
 
 def _seeded_random(*parts: str):
@@ -195,9 +203,27 @@ def _run_reduce(
 FUSE_MAX_CHILDREN = 16384
 
 
+class _Deadline:
+    """In-task time budget of one speculatively fused subtree. Every
+    fused frame checks it after each child; once it has passed, the
+    frames fall back to child rows from the innermost outwards (the
+    distributed path then runs the subtree)."""
+
+    __slots__ = ("at", "hit")
+
+    def __init__(self, budget_s: float):
+        self.at = time.perf_counter() + budget_s
+        self.hit = False
+
+    def passed(self) -> bool:
+        if not self.hit and time.perf_counter() > self.at:
+            self.hit = True
+        return self.hit
+
+
 def _make_phase1_udf(
     step_plan: dict, workdir: str | None, emit_forensics: bool = False,
-    plans: dict | None = None, depth: int = 0,
+    plans: dict | None = None, depth: int = 0, budget_s: float | None = None,
 ):
     """Bucket UDF: each Arrow group carries MANY invocations (the
     frontier is grouped by a hash bucket of the invocation id, not by
@@ -216,10 +242,19 @@ def _make_phase1_udf(
     task-local and the child's map→combine→reduce plus this
     invocation's fold need no exchange at all. The driver enables
     fusion per level only when the frontier holds enough invocations
-    to keep every core busy from the PARENT level (see _run_step).
-    The fan-out width cap is read here, when the step is planned, and
-    travels with the UDF: the Python workers that run it import this
-    module afresh and would not see a value set at planning time."""
+    to keep every core busy from the PARENT level, or speculatively
+    under ``budget_s`` — each frontier invocation's fused subtree is
+    kept only while its in-task time stays within the budget (see
+    Engine._fuse_plans). The fan-out width cap is read here, when the
+    step is planned, and travels with the UDF: the Python workers that
+    run it import this module afresh and would not see a value set at
+    planning time.
+
+    Each batch also emits one 'route' row for the driver's single
+    metadata collect (see Engine._run_step): child-row counts per next
+    step, the (step, depth) nodes that emitted session rows, the
+    batch's busy seconds, the slowest fused subtree and the number of
+    subtrees that overran the budget."""
     fuse_max = FUSE_MAX_CHILDREN
 
     def phase1(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -236,6 +271,7 @@ def _make_phase1_udf(
 
         import numpy as np
 
+        t_start = time.perf_counter()
         pdf = pdf.sort_values(["inv", "seq"])
         invs = pdf["inv"].to_numpy()
         pinvs = pdf["parent_inv"].to_numpy()
@@ -248,13 +284,27 @@ def _make_phase1_udf(
         rows: list[tuple] = []
         fcands: list[tuple] = []
         trans: set[tuple] = set()
+        children: dict[str, int] = {}
+        session_nodes: set[tuple] = set()
+        subtree_s = 0.0
+        overruns = 0
         for s, e_ in zip(bounds[:-1], bounds[1:]):
+            t_inv = time.perf_counter()
+            deadline = _Deadline(budget_s) if budget_s is not None else None
             out, side, fc, tr = _phase1_one_invocation(
                 step_plan, workdir, invs[s], pinvs[s],
                 rts[s:e_], seqs[s:e_], ks[s:e_], vs[s:e_],
                 plans=plans, depth=depth, want_forensics=emit_forensics,
-                fuse_max=fuse_max,
+                fuse_max=fuse_max, deadline=deadline,
             )
+            subtree_s = max(subtree_s, time.perf_counter() - t_inv)
+            if deadline is not None and deadline.hit:
+                overruns += 1
+            # a frontier invocation's out rows are all 'child' rows
+            # (distributed fan-out) or none are
+            if out and out[0][0] == "child":
+                children[out[0][3]] = children.get(out[0][3], 0) + len(out)
+            session_nodes.update((r[3], r[4]) for r in side)
             rows.extend(out)
             rows.extend(side)
             fcands.extend(fc)
@@ -266,9 +316,9 @@ def _make_phase1_udf(
         # row, replacing the driver-side distinct + full-frontier
         # window + two-aggregate join jobs that re-derived the same
         # facts from the persisted frames. The 512-record cap makes a
-        # per-(step, depth)-per-batch budget sound: the globally
-        # smallest CAP+1 inv ids of a step are a subset of each batch's
-        # smallest CAP+1, so the driver's TakeOrdered over these rows
+        # per-(step, depth)-per-batch budget sound: each of a node's
+        # globally smallest CAP+1 inv ids is among its own batch's
+        # smallest CAP+1, so the driver's per-node cut over these rows
         # sees every record it can keep. seq carries the invocation's
         # absolute fan-out depth so the driver can capture per
         # (step, depth) node in the fused output.
@@ -286,6 +336,14 @@ def _make_phase1_udf(
         # step-level trace events and per-node captures from these.
         for pstep, cstep, cdep in sorted(trans):
             rows.append(("traceev", "", pstep, cstep, cdep, None, None))
+        route = {
+            "children": children,
+            "session_nodes": sorted(session_nodes),
+            "subtree_s": subtree_s,
+            "overruns": overruns,
+            "busy_s": time.perf_counter() - t_start,
+        }
+        rows.append(("route", "", None, None, 0, None, _encode(route)))
         return pd.DataFrame(
             rows,
             columns=["row_type", "inv", "parent_inv", "step", "seq", "k", "v"],
@@ -331,7 +389,7 @@ def _phase1_one_invocation(
     step_plan: dict, workdir: str | None, inv, parent_inv,
     row_types, seqs, ks, vs,
     plans: dict | None = None, depth: int = 0, want_forensics: bool = False,
-    *, fuse_max: int,
+    *, fuse_max: int, deadline: _Deadline | None = None,
 ) -> tuple[list[tuple], list[tuple], list[tuple], set[tuple]]:
     """One invocation's mapper → routing → (leaf: combine+reduce
     in-place | fan-out: fused subtree when possible, else child rows).
@@ -433,7 +491,8 @@ def _phase1_one_invocation(
             # discarded and plain child rows are emitted instead;
             # handlers are deterministic under the engine's seeding
             # contract (Spark task retries already re-run them), so
-            # the discard is safe.
+            # the discard is safe. A speculative subtree is discarded
+            # the same way once its deadline has passed.
             fused = True
             child_pairs: list[tuple] = []
             c_side: list[tuple] = []
@@ -446,8 +505,11 @@ def _phase1_one_invocation(
                     ("arg",), (0,), (ek,), (ev,),
                     plans=plans, depth=depth + 1,
                     want_forensics=want_forensics, fuse_max=fuse_max,
+                    deadline=deadline,
                 )
-                if any(r[0] == "child" for r in c_out):
+                if any(r[0] == "child" for r in c_out) or (
+                    deadline is not None and deadline.passed()
+                ):
                     fused = False
                     break
                 child_pairs.extend((r[5], r[6]) for r in c_out if r[0] == "reduced")
@@ -517,17 +579,25 @@ class Engine:
         self.spark = spark
         self.catalog = catalog or Catalog()
         self.workdir = workdir
-        # Invocation forensics add one extra groupBy/join/collect Spark
-        # job per step per submit. Default on for reference parity
+        # Invocation forensics ride each step's metadata collect as
+        # extra rows; session capture adds one collect per fan-out node
+        # that wrote sessions. Default on for reference parity
         # (trace/graph endpoints); turn off for hot submit paths where
         # the per-step latency matters more than forensics.
         self.capture_forensics = capture_forensics
         # Minimum frontier width (invocations) for in-task subtree
         # fusion; None = 2 × defaultParallelism (scale-adaptive: a
-        # narrow frontier keeps the distributed recursion so fan-out
-        # parallelism is preserved; a wide one fuses child/fold
-        # exchanges away). Tests pin both paths by setting this.
+        # wide frontier fuses child/fold exchanges away; a narrow one
+        # fuses only speculatively, under a deadline — see
+        # _fuse_plans). Tests pin both paths by setting this, which
+        # also turns speculation off.
         self.fuse_min_invocations: int | None = None
+        # What one Python task wave costs, measured on every submit()
+        # root action (driver wall minus the busy time its UDF reports);
+        # the session minimum. None until the first request ran. Sets
+        # the budget of speculative fusion (see _fuse_plans).
+        self.wave_cost_s: float | None = None
+        self._wave_lock = threading.Lock()
         self._requests: dict[str, Request] = {}
         # The HTTP API serves from ThreadingHTTPServer: a DELETE
         # (cleanup_request) can race a concurrent list/find iterating
@@ -606,17 +676,20 @@ class Engine:
         }
 
     def _capture_invocations(
-        self, map_out: DataFrame,
+        self, forensic: dict[tuple, list],
         trace: RequestTrace | None, depth: int, step_name: str,
     ) -> None:
         """Forensic capture: one record per invocation at this (step,
         depth) node — parent edge, dataset sizes, a ≤3-pair argument
-        sample. The aggregation runs on the executors (map_out is
-        already persisted, so this reads cache, not the source); only
-        the capped record set transits to the driver (the reference
-        stores full per-invocation datasets in etcd,
-        mr/models/kv/invocation.py — at 100 TB the cap is what keeps
-        forensics from becoming a driver OOM)."""
+        sample. Phase 1 emitted the records as 'forensic' rows,
+        budgeted per (step, depth) node per batch at CAP+1, so the
+        globally-smallest room+1 inv ids of this node are all present
+        (see _make_phase1_udf); ``forensic`` holds them per node,
+        sorted by inv, from _run_step's one metadata collect. Only the
+        capped record set is kept (the reference stores full
+        per-invocation datasets in etcd, mr/models/kv/invocation.py —
+        at 100 TB the cap is what keeps forensics from becoming a
+        driver OOM)."""
         if (
             not self.capture_forensics
             or trace is None
@@ -624,26 +697,7 @@ class Engine:
         ):
             return
         room = INVOCATION_CAP - len(trace.invocations)
-        # Phase 1 already emitted one 'forensic' row per invocation
-        # (per-(step, depth)-per-batch budgeted at CAP+1, so the
-        # globally-smallest room+1 inv ids of this node are all
-        # present — see _make_phase1_udf): the capture is ONE
-        # TakeOrdered collect over the persisted map_out, replacing
-        # the distinct-ids job + full-frontier rank-window sample +
-        # two-aggregate join job that re-derived the same facts the
-        # phase-1 loop had in hand (guide §1.2-1). A fused run's
-        # map_out carries several (step, depth) nodes; seq holds the
-        # depth, so each node's capture filters to exactly its rows.
-        rows = (
-            map_out.filter(
-                (F.col("row_type") == "forensic")
-                & (F.col("step") == step_name)
-                & (F.col("seq") == depth)
-            )
-            .orderBy("inv")
-            .limit(room + 1)
-            .collect()
-        )
+        rows = forensic.get((step_name, depth), [])[: room + 1]
         trace.record_invocations(
             [
                 InvocationRecord(
@@ -692,30 +746,50 @@ class Engine:
             [(r["inv"], step_name, r["k"], _decode(r["v"])) for r in rows]
         )
 
-    def _fuse_plans(self, workflow_name: str, n_invocations: int | None) -> dict | None:
-        """The workflow's full step-plan table when subtree fusion is
-        on for this frontier, else None. Fusion trades the child/fold
-        exchanges for in-task recursion, so it is only right when the
-        PARENT level already holds enough invocations to keep every
-        core busy (a single wide root would serialize its whole subtree
-        into one task); below the threshold the distributed recursion
-        is the scalable shape."""
+    def _note_wave_cost(self, cost_s: float) -> None:
+        # concurrent requests (HTTP threads, async submits) measure too
+        with self._wave_lock:
+            if self.wave_cost_s is None or cost_s < self.wave_cost_s:
+                self.wave_cost_s = cost_s
+
+    def _fuse_plans(
+        self, workflow_name: str, n_invocations: int | None,
+    ) -> tuple[dict | None, float | None]:
+        """(step-plan table, in-task budget seconds) for one frontier:
+        the table is None when subtree fusion is off; a None budget
+        means no deadline. Fusion trades the child/fold exchanges for
+        in-task recursion, so it is always right when the PARENT level
+        already holds enough invocations to keep every core busy. Below
+        that width one heavy invocation would serialize its whole
+        subtree into one task, so fusion there is speculative: once
+        the engine has measured what a Python wave costs, the plans
+        ship under a budget of the two waves a distributed level adds,
+        and a subtree that overruns it falls back to the distributed
+        recursion (ski rental: a heavy subtree costs at most about 2×
+        the distributed path). A pinned ``fuse_min_invocations`` keeps
+        the plain width rule."""
         if n_invocations is None:
-            return None
+            return None, None
         threshold = self.fuse_min_invocations
+        speculate = threshold is None and self.wave_cost_s is not None
         if threshold is None:
             threshold = 2 * self.spark.sparkContext.defaultParallelism
-        if n_invocations < threshold:
-            return None
-        return {
+        if n_invocations >= threshold:
+            budget_s = None
+        elif speculate:
+            budget_s = 2 * self.wave_cost_s
+        else:
+            return None, None
+        plans = {
             s.name: self._step_plan(s)
             for s in self.catalog.list_steps(workflow_name)
         }
+        return plans, budget_s
 
     def _run_step(
         self, workflow_name: str, step_name: str, frontier: DataFrame,
         trace: RequestTrace, persisted: list, depth: int = 0,
-        n_invocations: int | None = None,
+        n_invocations: int | None = None, persist_frontier: bool = True,
     ) -> DataFrame:
         """Run one step over a frontier of invocations; returns reduced
         rows (inv, parent_inv, seq, k, v) for those invocations.
@@ -726,27 +800,28 @@ class Engine:
         unpersisted by the caller after the final action — never
         collected to the driver.
 
-        When the frontier is wide enough (``n_invocations`` ≥ the fuse
-        threshold), the phase-1 pass FUSES each invocation's fan-out
-        subtree in-task (guide §1.2-1/§2.4): child invocations are
-        single-pair by construction, so their map→combine→reduce and
-        this step's fold need no exchange; the driver recursion below
-        then only handles invocations that fell back (unknown step,
-        depth cap, or a fan-out wider than FUSE_MAX_CHILDREN)."""
+        When fusion is on for the frontier (see _fuse_plans), the
+        phase-1 pass FUSES each invocation's fan-out subtree in-task
+        (guide §1.2-1/§2.4): child invocations are single-pair by
+        construction, so their map→combine→reduce and this step's fold
+        need no exchange; the driver recursion below then only handles
+        invocations that fell back (unknown step, depth cap, a fan-out
+        wider than FUSE_MAX_CHILDREN, or an overrun deadline)."""
         if depth > _MAX_DEPTH:
             raise RuntimeError(f"fan-out depth exceeded {_MAX_DEPTH}")
         step = self.catalog.get_step(workflow_name, step_name)
         plan = self._step_plan(step)
         trace.record(depth, step_name, "map")
 
-        # The frontier is read by several consumers (the phase-1 map,
-        # the forensic capture's distinct + sample aggregations, and on
-        # the fan-out path the parent_map distinct) — persist it once
-        # so the source scan/JSON encode doesn't re-run per consumer
-        # (guide §5: reuse beats recompute when the recompute is a
-        # corpus pass; unpersisted by the caller like map_out).
-        frontier = frontier.persist()
-        persisted.append(frontier)
+        # A scanned or derived frontier is read by the phase-1 map and,
+        # on the fan-out path, the parent_map distinct — persist it
+        # once so the source scan/JSON encode doesn't re-run per
+        # consumer (guide §5; unpersisted by the caller like map_out).
+        # submit()'s local relation re-reads for free: persisting it
+        # would only add a cache-building job.
+        if persist_frontier:
+            frontier = frontier.persist()
+            persisted.append(frontier)
 
         # Group by a HASH BUCKET of the invocation id, not the id: a
         # wide fan-out makes invocations per-pair (reference semantics),
@@ -763,47 +838,65 @@ class Engine:
             and trace is not None
             and len(trace.invocations) < INVOCATION_CAP
         )
-        plans = self._fuse_plans(workflow_name, n_invocations)
+        plans, budget_s = self._fuse_plans(workflow_name, n_invocations)
         map_out = frontier.groupBy(
             F.pmod(F.xxhash64("inv"), F.lit(n_buckets)).alias("_bucket")
         ).applyInPandas(
-            _make_phase1_udf(plan, self.workdir, want_forensics, plans, depth),
+            _make_phase1_udf(plan, self.workdir, want_forensics, plans, depth, budget_s),
             schema=_ROWS_SCHEMA,
         ).persist()
         persisted.append(map_out)
-        self._capture_invocations(map_out, trace, depth, step_name)
         reduced = map_out.filter(F.col("row_type") == "reduced")
         child_rows = map_out.filter(F.col("row_type") == "child")
-        # Routing + fused-trace discovery in ONE tiny collect (bounded
-        # by catalog steps × depth, not data): distinct next steps of
-        # fallback child rows (with per-step invocation counts feeding
-        # the next level's fuse decision) plus the 'traceev' fan-out
-        # transitions fused subtrees took.
-        route_rows = (
-            map_out.filter(F.col("row_type").isin("child", "traceev"))
-            .select(
-                "row_type",
-                # parent_inv is per-parent on child rows — mask it so
-                # the aggregate stays bounded by catalog steps, not data
-                F.when(
-                    F.col("row_type") == "traceev", F.col("parent_inv")
-                ).alias("pstep"),
-                "step",
-                "seq",
-            )
-            .groupBy("row_type", "pstep", "step", "seq")
-            .count()
-            .collect()
-        )
+        # ONE metadata action per step: routing (child counts per next
+        # step from the per-batch 'route' rows), the 'traceev' fan-out
+        # transitions fused subtrees took, and every (step, depth)
+        # node's forensic records. Bounded by n_buckets × (CAP+1) rows
+        # per node (phase 1 budgets its forensic rows), not by data.
+        t_action = time.perf_counter()
+        meta = map_out.filter(
+            F.col("row_type").isin("route", "traceev", "forensic")
+        ).collect()
+        wall_s = time.perf_counter() - t_action
         next_steps: dict[str, int] = {}
-        for r in route_rows:
-            if r["row_type"] == "child":
-                next_steps[r["step"]] = next_steps.get(r["step"], 0) + r["count"]
-        transitions = sorted(
-            (r["pstep"], r["step"], r["seq"])
-            for r in route_rows
-            if r["row_type"] == "traceev"
-        )
+        session_nodes: set[tuple] = set()
+        transitions: set[tuple] = set()
+        forensic: dict[tuple, list] = {}
+        busy_s = subtree_s = 0.0
+        overruns = 0
+        for r in meta:
+            if r["row_type"] == "route":
+                route = _decode(r["v"])
+                for ns, n in route["children"].items():
+                    next_steps[ns] = next_steps.get(ns, 0) + n
+                session_nodes.update(tuple(nd) for nd in route["session_nodes"])
+                busy_s += route["busy_s"]
+                subtree_s = max(subtree_s, route["subtree_s"])
+                overruns += route["overruns"]
+            elif r["row_type"] == "traceev":
+                transitions.add((r["parent_inv"], r["step"], r["seq"]))
+            else:
+                forensic.setdefault((r["step"], r["seq"]), []).append(r)
+        for node_rows in forensic.values():
+            node_rows.sort(key=lambda r: r["inv"])
+        if depth == 0 and n_invocations == 1:
+            # submit()'s root runs one invocation in one batch: what the
+            # action cost beyond that batch's busy time is the cost of
+            # a Python wave (scheduling, worker hand-off, Arrow I/O)
+            self._note_wave_cost(max(wall_s - busy_s, 0.0))
+        if next_steps or transitions:
+            trace.fusion.append(FusionDecision(
+                depth, step_name,
+                "deadline-fallback" if overruns
+                else "distributed" if next_steps else "fused",
+                subtree_s, budget_s,
+            ))
+        self._capture_invocations(forensic, trace, depth, step_name)
+
+        def capture_node_sessions(d: int, s: str) -> None:
+            # a node without session rows would collect nothing
+            if (s, d) in session_nodes:
+                self._capture_sessions(map_out, trace, d, s)
 
         # Fused-subtree trace events + per-node captures, replayed in
         # the exact pre-order the driver recursion used to produce:
@@ -815,11 +908,11 @@ class Engine:
                 {cs for (ps, cs, cd) in transitions if ps == s and cd == d + 1}
             )
             if kids and capture_sessions:
-                self._capture_sessions(map_out, trace, d, s)
+                capture_node_sessions(d, s)
             for ns in kids:
                 trace.record(d, s, f"fanout→{ns}")
                 trace.record(d + 1, ns, "map")
-                self._capture_invocations(map_out, trace, d + 1, ns)
+                self._capture_invocations(forensic, trace, d + 1, ns)
                 _visit(d + 1, ns)
             if kids:
                 trace.record(d, s, "fold")
@@ -839,7 +932,7 @@ class Engine:
         # fan-out fallback: recurse per next step, then fold children
         # into their parents with this step's reducer.
         sessions = map_out.filter(F.col("row_type") == "session")
-        self._capture_sessions(map_out, trace, depth, step_name)
+        capture_node_sessions(depth, step_name)
         child_results = []
         for ns in sorted(next_steps):
             trace.record(depth, step_name, f"fanout→{ns}")
@@ -934,9 +1027,9 @@ class Engine:
                 result_rows = self._run_step(
                     workflow_name, job.initial_step_name, frontier,
                     request.trace, persisted,
-                    # submit() runs ONE root invocation — never fused,
-                    # so a wide root fan-out distributes its children.
-                    n_invocations=1,
+                    # ONE root invocation: its subtree fuses only
+                    # speculatively, under a measured deadline
+                    n_invocations=1, persist_frontier=False,
                 )
                 pairs = [
                     (_decode(r["k"]), _decode(r["v"]))

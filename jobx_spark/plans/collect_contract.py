@@ -30,14 +30,6 @@ from __future__ import annotations
 
 # (relative file, qualified enclosing function, action) -> (count, why)
 COLLECT_BOUNDS: dict[tuple[str, str, str], tuple[int, str]] = {
-    ("jobx_spark/engine.py", "_capture_invocations", "collect"): (
-        1,
-        "forensic trace capture: one TakeOrdered over the 'forensic' "
-        "rows phase 1 emitted (r12: the facts ride the existing map "
-        "pass), orderBy().limit(room+1) with room ≤ INVOCATION_CAP(512) "
-        "— the cap exists precisely so a 1M-invocation fan-out records "
-        "512 forensic rows, never the fan-out",
-    ),
     ("jobx_spark/engine.py", "_capture_sessions", "collect"): (
         1,
         "session-state forensics: orderBy().limit(room+1), room ≤ "
@@ -45,8 +37,13 @@ COLLECT_BOUNDS: dict[tuple[str, str, str], tuple[int, str]] = {
     ),
     ("jobx_spark/engine.py", "_run_step", "collect"): (
         1,
-        "routing decision: distinct next-step NAMES of one map stage — "
-        "bounded by the workflow catalog's step count, not the data",
+        "the step's one metadata collect: one 'route' row per phase-1 "
+        "batch (child counts per next step, busy time), 'traceev' "
+        "transitions (≤ steps × depth per batch) and 'forensic' rows, "
+        "which phase 1 budgets to CAP+1 per (step, depth) node per "
+        "batch — ≤ n_buckets × (INVOCATION_CAP(512)+1) rows per node, "
+        "whatever the data size; the driver keeps the room+1 smallest "
+        "invocation ids per node",
     ),
     ("jobx_spark/engine.py", "submit.run", "collect"): (
         1,

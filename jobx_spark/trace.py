@@ -55,6 +55,22 @@ class InvocationRecord:
     arg_sample: list = field(default_factory=list)  # ≤3 (k, v) JSON strings
 
 
+@dataclass
+class FusionDecision:
+    """How one engine level ran its fan-out: 'fused' (in-task subtree),
+    'distributed' (child exchange, child wave, fold) or
+    'deadline-fallback' (a speculative subtree overran its budget and
+    was discarded for the distributed path). ``subtree_s`` is the
+    slowest frontier invocation's in-task time, its fused subtree
+    included; ``budget_s`` is None when no deadline applied."""
+
+    depth: int
+    step_name: str
+    decision: str
+    subtree_s: float
+    budget_s: float | None
+
+
 # hard cap on collected invocation records per request — forensics must
 # never become a driver-OOM vector at scale
 INVOCATION_CAP = 512
@@ -72,6 +88,10 @@ class RequestTrace:
     # consumed mapper→reducer inside one task and never materialize.
     sessions: list[tuple] = field(default_factory=list)
     sessions_truncated: bool = False
+    # one record per engine level that fanned out. Kept apart from
+    # ``events``: fused and distributed runs of a request record the
+    # same events, and only this list tells them apart.
+    fusion: list[FusionDecision] = field(default_factory=list)
 
     def record(self, depth: int, step_name: str, phase: str) -> None:
         self.events.append(TraceEvent(depth, step_name, phase, time.time()))

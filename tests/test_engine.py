@@ -617,6 +617,39 @@ def test_encode_matches_json_dumps(obj):
     assert _encode(obj) == json.dumps(obj, sort_keys=True, separators=(",", ":"))
 
 
+@pytest.mark.parametrize(
+    "text",
+    [
+        "0", "-7", str(2**63), "1.5", "1e16", "1e-07", "NaN", "Infinity",
+        "-Infinity", '"\\u00fcn\\u00efc\\u00f8d\\u00e9 \\u2713"', '"ünïcødé ✓"',
+        '{"a":null,"b":{"c":[2,"x"],"d":1}}', '[1,["two",3.0]]',
+        "[true,false,null]", ' {"z": [ ] } ',
+    ],
+)
+def test_decode_matches_json_loads(text):
+    import json
+    import math
+
+    from jobx_spark.engine import _decode
+
+    got, want = _decode(text), json.loads(text)
+    if isinstance(want, float) and math.isnan(want):
+        assert isinstance(got, float) and math.isnan(got)
+    else:
+        assert got == want and type(got) is type(want)
+
+
+def test_decode_rejects_a_bom_like_json_loads():
+    import json
+
+    from jobx_spark.engine import _decode
+
+    with pytest.raises(json.JSONDecodeError):
+        json.loads('\ufeff{"a":1}')
+    with pytest.raises(json.JSONDecodeError):
+        _decode('\ufeff{"a":1}')
+
+
 def test_submit_frontier_is_a_local_relation(engine, monkeypatch):
     """The request arguments reach the root step as a LocalRelation, so
     reading them runs no Python task."""
