@@ -65,14 +65,10 @@ BENCH_REPS = 2  # per-query timing = min over this many runs
 # Editing this list is a deliberate set-version change — note it in
 # BENCH_NOTES.md.
 BENCH_CORE = [
-    # r11 set-version change (noted in BENCH_NOTES §r11): the flat-serve
-    # pair joins the core so the serving-cost-vs-corpus-size evidence is
-    # a permanent core comparable, not a 1-in-3-rounds pool visitor.
-    # Order matters: build runs first so the serve rows time the
+    # Order matters: build runs first so the serve row times the
     # SERVING path against the published artifact, not the ensure.
     "ann_index_build",
     "ann_index_serve",
-    "ann_index_serve_scaled64",
     "ann_bruteforce_topk",
     "ann_dim_truncation_sweep",
     "ann_drift_census",
@@ -233,20 +229,13 @@ BENCH_EXCLUDE = (
 BENCH_PREREQ: dict[str, tuple[str, ...]] = {
     # serve/probe rows: build publishes the artifact being served
     "ann_index_serve": ("ann_index_build",),
-    "ann_index_serve_scaled64": ("ann_index_build",),
     "ann_filtered_topk": ("ann_index_build",),
     "stream_index_serve": ("ann_index_build",),
     "ann_pq_index_serve": ("ann_pq_index_build",),
     "dedup_index_probe": ("dedup_index_build",),
     "stream_dedup_index_probe": ("dedup_index_build",),
-    # self-prereq: the first (untimed) run replicates the 1× band
-    # table into the 64× bucket space; the timed rep is probe-only
-    "dedup_index_probe_scaled64": ("dedup_index_probe_scaled64",),
     "text_bm25_index_serve": ("text_bm25_index_build",),
     "stream_bm25_index_serve": ("text_bm25_index_build",),
-    # self-prereq: the first (untimed) run replicates the 1× postings
-    # into the 64× bucket space; the timed rep is serve-only
-    "text_bm25_serve_scaled64": ("text_bm25_serve_scaled64",),
     "pipe_encode_serve": ("pipe_vocab_build",),
     # append rows: the first (untimed) run pays the one-off base
     # segment; the timed rep measures the incremental append

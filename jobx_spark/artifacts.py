@@ -24,8 +24,8 @@ Families covered: the IVF index (``ann-index``, its 8x ``:scaled``
 build, the ``ann-index-append`` and ``ann-index-ingest`` segmented
 twins), the PQ index (``ann-pq-index``), the dedup band index
 (``dedup-index``, ``dedup-index-append``), the BM25 postings
-(``bm25-index``, ``bm25-index-append``, ``bm25-index-ingest``), the BPE
-vocabulary (``bpe-vocab``) and the 64x replicas of the built indexes.
+(``bm25-index``, ``bm25-index-append``, ``bm25-index-ingest``) and the
+BPE vocabulary (``bpe-vocab``).
 
 All probes go through the Hadoop FileSystem API of the session's JVM
 (file://, hdfs://, s3a://, ... resolve uniformly), falling back to

@@ -574,17 +574,11 @@ class Engine:
 
     def __init__(
         self, spark: SparkSession, workdir: str | None = None,
-        catalog: Catalog | None = None, capture_forensics: bool = True,
+        catalog: Catalog | None = None,
     ):
         self.spark = spark
         self.catalog = catalog or Catalog()
         self.workdir = workdir
-        # Invocation forensics ride each step's metadata collect as
-        # extra rows; session capture adds one collect per fan-out node
-        # that wrote sessions. Default on for reference parity
-        # (trace/graph endpoints); turn off for hot submit paths where
-        # the per-step latency matters more than forensics.
-        self.capture_forensics = capture_forensics
         # Minimum frontier width (invocations) for in-task subtree
         # fusion; None = 2 × defaultParallelism (scale-adaptive: a
         # wide frontier fuses child/fold exchanges away; a narrow one
@@ -690,11 +684,7 @@ class Engine:
         per-invocation datasets in etcd, mr/models/kv/invocation.py —
         at 100 TB the cap is what keeps forensics from becoming a
         driver OOM)."""
-        if (
-            not self.capture_forensics
-            or trace is None
-            or len(trace.invocations) >= INVOCATION_CAP
-        ):
+        if trace is None or len(trace.invocations) >= INVOCATION_CAP:
             return
         room = INVOCATION_CAP - len(trace.invocations)
         rows = forensic.get((step_name, depth), [])[: room + 1]
@@ -722,11 +712,7 @@ class Engine:
         reads the already-persisted map_out cache, caps before the
         collect. Leaf sessions are consumed mapper→reducer inside one
         task and never materialize — documented deviation."""
-        if (
-            not self.capture_forensics
-            or trace is None
-            or len(trace.sessions) >= INVOCATION_CAP
-        ):
+        if trace is None or len(trace.sessions) >= INVOCATION_CAP:
             return
         room = INVOCATION_CAP - len(trace.sessions)
         rows = (
@@ -834,9 +820,7 @@ class Engine:
         # when capture will run, phase 1 emits the per-invocation
         # forensic rows itself — see _make_phase1_udf.
         want_forensics = (
-            self.capture_forensics
-            and trace is not None
-            and len(trace.invocations) < INVOCATION_CAP
+            trace is not None and len(trace.invocations) < INVOCATION_CAP
         )
         plans, budget_s = self._fuse_plans(workflow_name, n_invocations)
         map_out = frontier.groupBy(

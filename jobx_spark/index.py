@@ -14,8 +14,7 @@ module owns every lifecycle decision, once:
   partition overwrite, a terminal ``_APPEND_DONE`` marker that compact
   repair reads and nothing else, and a one-file-per-key compaction;
 * the per-key census over the key's full ``range(n)`` domain, so dead
-  keys stay visible as zero rows;
-* the 64x replication of a built table into disjoint id/key ranges.
+  keys stay visible as zero rows.
 
 The crash-consistency rule itself is documented in
 :mod:`jobx_spark.artifacts`.
@@ -35,8 +34,6 @@ from jobx_spark import artifacts as A
 
 SUCCESS = "_SUCCESS"
 APPEND_DONE = "_APPEND_DONE"
-REPLICAS = 64
-REPLICA_ID_STEP = 10**9
 
 
 def artifact_root(sf_dir: str, family: str, salt: str = "") -> str:
@@ -167,39 +164,6 @@ class Versioned:
             if all(committed(spark, p) for p in paths):
                 return paths
         return self.build(spark, sf_dir)
-
-
-def replicate(
-    spark: SparkSession, sf_dir: str, family: str, src: str, id_col: str,
-    key_col: str, key_size: int, partition_by: tuple[str, ...],
-    layout: Callable[[DataFrame], DataFrame] = lambda df: df,
-) -> str:
-    """The built table at ``src`` copied REPLICAS times into disjoint
-    ranges (``id + rep·10⁹``, ``key + rep·key_size``), written once
-    under the family's ``:scaled64`` root; returns its path."""
-    dest = os.path.join(
-        artifact_root(sf_dir, family, ":scaled64"), os.path.basename(src)
-    )
-    if committed(spark, dest):
-        return dest
-    df = spark.read.parquet(src)
-    rep = F.explode(F.array(*[F.lit(i) for i in range(REPLICAS)]))
-    shifted = {
-        id_col: F.col(id_col).cast("long")
-        + F.col("rep").cast("long") * F.lit(REPLICA_ID_STEP),
-        key_col: F.col(key_col).cast("int")
-        + F.col("rep").cast("int") * F.lit(key_size),
-    }
-    out = df.select(*df.columns, rep.alias("rep")).select(
-        *[shifted.get(c, F.col(c)).alias(c) for c in df.columns]
-    )
-    (
-        layout(out)
-        .write.mode("overwrite")
-        .partitionBy(*partition_by)
-        .parquet(dest)
-    )
-    return dest
 
 
 # -- segmented (appendable) artifacts ----------------------------------------

@@ -202,8 +202,7 @@ COLLECT_BOUNDS: dict[tuple[str, str, str], tuple[int, str]] = {
         "— collected into the literal isin() that statically partition-"
         "prunes the persisted band-index scan to the probed buckets "
         "(same device as ann_index_serve's probed cells). Shared by "
-        "dedup_index_probe, its 64× replica (whose bucket space is "
-        "never enumerated) and each stream_dedup_index_probe "
+        "dedup_index_probe and each stream_dedup_index_probe "
         "micro-batch",
     ),
     ("jobx_spark/queries/streams.py", "stream_bm25_index_serve._serve",

@@ -37,10 +37,10 @@ def _utc_pinned(fn: QueryFn) -> QueryFn:
 GATE_FIRST_50 = [
     # ROUND-13 GATE (VERDICT r12 #2 + the optimization round's
     # changed-plan discipline).
-    # -- 1. the ONLY registry rows with zero driver attestation (they
+    # -- 1. the ONLY registry row the gate has not yet checked (it
     #       landed after the r12 gate filled; builder-verified at
     #       sf0.001+sf0.01 under the driver recipe) --
-    "stream_bm25_index_append", "text_bm25_serve_scaled64",
+    "stream_bm25_index_append",
     # -- 2. changed-plan re-attests — every query whose Spark plan (or
     #       execution shape) changed in the r13 optimization round:
     #       the fused MR fan-out subtree + (k,v) dataset bucketing
@@ -59,14 +59,13 @@ GATE_FIRST_50 = [
     "stream_dedup_index_append",
     "text_trigram_lang_eval", "multimodal_audio_energy",
     "text_ngram_novelty",
-    # -- 3. oldest-cohort rotation: the first 29 (alphabetical) of the
+    # -- 3. oldest-cohort rotation: the first 30 (alphabetical) of the
     #       41-row r7-banked cohort (computed from CORRECTNESS_r*.json
-    #       hash_match max-round per query); the 12 that don't fit
-    #       (pipe_split_train_val_test, pipe_t_closeness,
-    #       stream_sink_rollup, text_bigram_score,
+    #       hash_match max-round per query); the 11 that don't fit
+    #       (pipe_t_closeness, stream_sink_rollup, text_bigram_score,
     #       text_cms_heavy_hitters, text_fingerprint, text_lang_id,
     #       text_perplexity_buckets, text_quality, text_repetition,
-    #       text_tfidf_terms, text_token_histogram) lead the r14
+    #       text_tfidf_terms, text_token_histogram) lead the next
     #       rotation --
     "ann_adc_rerank", "ann_centroid_outliers", "ann_cluster_purity",
     "ann_ivf_pq_residual_topk", "ann_knn_graph", "ann_quantize_int8",
@@ -77,7 +76,7 @@ GATE_FIRST_50 = [
     "dedup_simhash_pairs", "multimodal_features", "multimodal_frames",
     "multimodal_infer", "multimodal_meta", "multimodal_resize",
     "pipe_corpus_stats", "pipe_quality_funnel", "pipe_sample_hash",
-    "pipe_sample_join", "pipe_shuffle_audit",
+    "pipe_sample_join", "pipe_shuffle_audit", "pipe_split_train_val_test",
 ]
 
 

@@ -21,7 +21,7 @@ from jobx_spark.operators.dedup import (
     simhash,
     simhash_pairs,
 )
-from jobx_spark.sources import load_table
+from jobx_spark.sources import REPLICAS, load_table, replicate, replicate_sql
 
 _TOKS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
 _MD5 = "('0x'||substr(md5({e}),1,15))::BIGINT"
@@ -840,12 +840,12 @@ def dedup_components_lsss(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # dedup_components_scaled — the scale probe PROMOTED INTO THE GATE
-# (VERDICT r3 item 6): the corpus is replicated COMP_REP× with ids
+# (VERDICT r3 item 6): the corpus is replicated REPLICAS× with ids
 # remapped into disjoint ranges (doc_id + k·10⁹, the same remap as
-# tools/scale_probe.py), then the full LSH → candidate-pairs →
+# tools/bench_scale_probe.py), then the full LSH → candidate-pairs →
 # connected-components pipeline runs over the blown-up graph. Replicas
 # share text, so every original near-dup cluster becomes one cluster
-# COMP_REP× larger and every singleton becomes a COMP_REP-clique — the
+# REPLICAS× larger and every singleton becomes a REPLICAS-clique — the
 # pair-producer and the label loop both face a strictly denser graph
 # than the base corpus, and the driver hash-checks the FINAL LABELS of
 # that scaled run (not a self-reported timing). Replication is
@@ -853,25 +853,20 @@ def dedup_components_lsss(spark: SparkSession, sf_dir: str) -> DataFrame:
 # downstream is the production operator code, so a green row attests
 # the scaled behavior of the same pipeline dedup_components uses.
 # --------------------------------------------------------------------------
-COMP_REP = 8
-_REP_BASE = 10**9
+def _docs_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return replicate(docs, "doc_id", REPLICAS)
+
+
+_DOCS_SCALED_SQL = (
+    f"docs_scaled AS ({replicate_sql('documents', 'doc_id', REPLICAS)})"
+)
 
 
 def dedup_components_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jobx_spark.operators.dedup import connected_components
 
-    docs = load_table(spark, sf_dir, "documents")
-    scaled = docs.select(
-        "doc_id",
-        "text",
-        F.explode(F.array(*[F.lit(i) for i in range(COMP_REP)])).alias("rep"),
-    ).select(
-        (
-            F.col("doc_id").cast("long")
-            + F.col("rep").cast("long") * F.lit(_REP_BASE).cast("long")
-        ).alias("doc_id"),
-        "text",
-    )
+    scaled = _docs_scaled(spark, sf_dir)
     pairs = minhash_lsh_pairs(
         scaled, n_hashes=N_HASHES, bands=BANDS, shingle_n=SHINGLE_N, seed=SEED
     )
@@ -879,10 +874,7 @@ def dedup_components_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _components_scaled_oracle() -> str:
-    pre = f"""docs_scaled AS (
-  SELECT d.doc_id + r.rep * {_REP_BASE} AS doc_id, d.text
-  FROM documents d CROSS JOIN range({COMP_REP}) AS r(rep)
-), """
+    pre = f"{_DOCS_SCALED_SQL}, "
     return f"""{_components_cte(docs="docs_scaled", pre=pre)}
 SELECT node, comp FROM comp ORDER BY node
 """
@@ -1541,36 +1533,22 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # dedup_substring_scaled — the second scale probe PROMOTED INTO THE
 # GATE (VERDICT r4 item 4, dedup_components_scaled's mold): the corpus
-# replicated SUB_REP× with ids remapped into disjoint ranges, then the
+# replicated REPLICAS× with ids remapped into disjoint ranges, then the
 # PRODUCTION span census runs over the 8× token-window stream. Every
-# replica multiplies each span's occurrences by SUB_REP, so the census
+# replica multiplies each span's occurrences by REPLICAS, so the census
 # arithmetic itself attests the blow-up (n_total and n_docs are exactly
 # 8× their base-corpus values — hash-checked by the driver, not
 # self-reported). The report threshold scales with the replication
-# (n_docs > SUB_REP keeps exactly the spans that were cross-doc in the
+# (n_docs > REPLICAS keeps exactly the spans that were cross-doc in the
 # ORIGINAL corpus), so the probe exercises an 8× explode+aggregate
 # while the OUTPUT stays census-sized — the "aggregation bounds output"
 # claim under a green row, complementing components_scaled's graph-loop
 # probe.
 # --------------------------------------------------------------------------
-SUB_REP = 8
-
-
 def dedup_substring_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jobx_spark.operators.text import gram_rows
 
-    docs = load_table(spark, sf_dir, "documents")
-    scaled = docs.select(
-        "doc_id",
-        "text",
-        F.explode(F.array(*[F.lit(i) for i in range(SUB_REP)])).alias("rep"),
-    ).select(
-        (
-            F.col("doc_id").cast("long")
-            + F.col("rep").cast("long") * F.lit(_REP_BASE).cast("long")
-        ).alias("doc_id"),
-        "text",
-    )
+    scaled = _docs_scaled(spark, sf_dir)
     # Arrow gram producer over the REPLICATED corpus — the 8× span
     # stream is still genuinely produced and aggregated
     spans = gram_rows(scaled, ["doc_id"], "text", ns=(SPAN_N,), distinct=False)
@@ -1582,7 +1560,7 @@ def dedup_substring_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("first_doc"),
             F.max("doc_id").alias("last_doc"),
         )
-        .filter(F.col("n_docs") > SUB_REP)
+        .filter(F.col("n_docs") > REPLICAS)
         .orderBy("h")
     )
 
@@ -1836,10 +1814,7 @@ ORDER BY h
 
 
 ORACLE_DEDUP_SUBSTRING_SCALED = f"""
-WITH docs_scaled AS (
-  SELECT d.doc_id + r.rep * {_REP_BASE} AS doc_id, d.text
-  FROM documents d CROSS JOIN range({SUB_REP}) AS r(rep)
-), sp AS (
+WITH {_DOCS_SCALED_SQL}, sp AS (
   SELECT doc_id, unnest({_span_shingles_sql(SPAN_N)}) AS s FROM docs_scaled
 ), h AS (
   SELECT doc_id, {_MD5.format(e='s')} AS h FROM sp
@@ -1851,7 +1826,7 @@ SELECT h,
        max(doc_id) AS last_doc
 FROM h
 GROUP BY h
-HAVING count(DISTINCT doc_id) > {SUB_REP}
+HAVING count(DISTINCT doc_id) > {REPLICAS}
 ORDER BY h
 """
 
@@ -2678,8 +2653,8 @@ ORDER BY band
 def _band_probe(
     spark: SparkSession, ipath: str, batch: DataFrame, tag: str
 ) -> DataFrame:
-    """The band-index probe kernel, shared by dedup_index_probe, its 64×
-    twin and the per-micro-batch stream probe: band the batch, collect
+    """The band-index probe kernel, shared by dedup_index_probe and
+    the per-micro-batch stream probe: band the batch, collect
     its probed buckets, scan only those buckets of the persisted index
     at ``ipath``, and count shared bands per (new_id, old_id)."""
     bb = cut_lineage(
@@ -2849,42 +2824,8 @@ ORDER BY band
 """
 
 
-# --------------------------------------------------------------------------
-# dedup_index_probe_scaled64 — the flat-serve probe for the BAND index
-# (VERDICT r11 #6), ann_index_serve_scaled64's dedup twin. The claim
-# is "probe cost independent of corpus size": at 100 TB the band
-# index's BUCKET space grows with the corpus while per-bucket size
-# stays bounded, and a probe batch reads only the ≤DBKT buckets its
-# own band hashes fall in. This probe materializes that shape
-# directly: the 1× band table is replicated into 64 disjoint
-# bucket/id ranges (id + rep·10⁹, bkt + rep·DBKT — a cheap artifact
-# rewrite, no re-signing), so the on-disk index holds 64× the rows
-# across 64× the bucket partitions while every bucket keeps its 1×
-# size. The replica buckets model the cold regions of a larger corpus
-# the probe batch never hashes into, so the partition-pruned scan
-# reads CONSTANT bytes and the probed candidate pairs provably equal
-# the 1× probe — the oracle is dedup_incremental's verbatim,
-# hash-exact. Enrolled in the bench POOL; its number read against
-# dedup_index_probe's is the band-side flat-serve evidence
-# (BENCH_NOTES §r12 records the controlled 1× vs 64× pair).
-# --------------------------------------------------------------------------
-def dedup_index_probe_scaled64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ipath,) = DEDUP_INDEX.ensure(spark, sf_dir)
-    i64 = index.replicate(
-        spark, sf_dir, "dedup-index", ipath, "id", "bkt", DBKT,
-        ("band", "bkt"),
-        lambda df: df.repartition(BANDS * DBKT, "band", "bkt"),
-    )
-    docs = load_table(spark, sf_dir, "documents")
-    batch = docs.filter(F.col("doc_id") >= INCR_SPLIT_ID)
-    return _band_probe(spark, i64, batch, "didx-probe64").orderBy(
-        "new_id", "old_id"
-    )
-
-
 QUERIES = {
     "dedup_index_build": dedup_index_build,
-    "dedup_index_probe_scaled64": dedup_index_probe_scaled64,
     "dedup_index_compact": dedup_index_compact,
     "dedup_index_probe": dedup_index_probe,
     "dedup_index_append": dedup_index_append,
@@ -2933,9 +2874,6 @@ ORACLES = {
     # identical output contract to the in-plan incremental probe — the
     # persisted-index path attests the same candidate pairs
     "dedup_index_probe": _incremental_oracle(),
-    # replica buckets are disjoint from every probed bucket, so the
-    # 64× probe's candidate pairs equal the 1× incremental dedup's
-    "dedup_index_probe_scaled64": _incremental_oracle(),
     "dedup_index_append": _dedup_index_append_oracle(),
     "dedup_index_compact": _dedup_index_compact_oracle(),
     "dedup_semantic_leakage": _semantic_leakage_oracle(),

@@ -15,7 +15,7 @@ from jobx_spark.operators.multimodal import (
     payload_metadata,
     sample_frames,
 )
-from jobx_spark.sources import load_table
+from jobx_spark.sources import REPLICAS, load_table, replicate, replicate_sql
 
 
 def _assets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -495,33 +495,20 @@ ORDER BY asset_id
 # decode_stats — real zlib, all five PNG filters), then collapse to a
 # per-rep census: count, pixel-sum, and an order-certified md5 digest
 # over every asset's pixel hash — one changed byte in any of the 8×N
-# decodes flips its rep's digest. Scale shape: replication is a
-# crossJoin against a broadcast 8-row range; the decode is
+# decodes flips its rep's digest. Scale shape: replication is an
+# explode of an 8-element literal array (no join); the decode is
 # embarrassingly parallel per batch; the census is one rep-keyed
 # (8-row) aggregation.
 # --------------------------------------------------------------------------
-MM_REP = 8
-_MM_REP_BASE = 10**9
-
-
 def multimodal_decode_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jobx_spark.operators.multimodal import decode_stats
 
     docs = load_table(spark, sf_dir, "documents")
-    reps = spark.range(MM_REP).select(F.col("id").alias("rep"))
-    big = (
-        docs.select("doc_id", "text")
-        .crossJoin(F.broadcast(reps))
-        .select(
-            (F.col("doc_id") + F.col("rep") * _MM_REP_BASE).alias("doc_id"),
-            "text",
-            "rep",
-        )
-    )
+    big = replicate(docs.select("doc_id", "text"), "doc_id", REPLICAS)
     # rep CARRIES through the decode (like the oracle's r.rep) rather
-    # than being re-derived as asset_id div base — a doc_id at or above
-    # _MM_REP_BASE would otherwise collide replicated ids across reps
-    # and group the same asset differently on the two sides [ADVICE r7]
+    # than being re-derived as asset_id div 10⁹ — a doc_id at or above
+    # 10⁹ would otherwise collide replicated ids across reps and group
+    # the same asset differently on the two sides [ADVICE r7]
     stats = decode_stats(
         _synthetic_png_assets(big, passthrough=("rep",)), passthrough=("rep",)
     )
@@ -549,8 +536,8 @@ def multimodal_decode_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_MULTIMODAL_DECODE_SCALED = f"""
 WITH big AS (
-  SELECT doc_id + r.rep * {_MM_REP_BASE} AS asset_id, text, r.rep
-  FROM documents CROSS JOIN range({MM_REP}) AS r(rep)
+  SELECT doc_id AS asset_id, text, rep
+  FROM ({replicate_sql('documents', 'doc_id', REPLICAS)})
 ),
 st AS (
   SELECT asset_id, rep,

@@ -17,7 +17,13 @@ from jobx_spark.operators.similarity import (
     brute_force_topk,
     lsh_topk,
 )
-from jobx_spark.sources import load_table, local_frame
+from jobx_spark.sources import (
+    REPLICAS,
+    load_table,
+    local_frame,
+    replicate,
+    replicate_sql,
+)
 
 K = 10
 N_QUERIES = 5  # probe set: vec_id 0..4
@@ -93,41 +99,30 @@ ORDER BY query_id, rank
 # ann_bruteforce_scaled — the ANN scale probe (the
 # dedup_components_scaled / dedup_substring_scaled mold, completing
 # the probe trio: graph loop, span census, similarity scan): the
-# embedding corpus replicated ANN_REP× into disjoint id ranges, then
+# embedding corpus replicated REPLICAS× into disjoint id ranges, then
 # the PRODUCTION corpus-scan-once top-k over the blown-up corpus for
-# the original 5 probes. Every original vector now appears ANN_REP
+# the original 5 probes. Every original vector now appears REPLICAS
 # times at an EXACTLY TIED cosine, so the probe also attests the
 # deterministic tie policy (vec_id asc) that makes distributed top-k
 # hash-stable — the property a 1000-executor run depends on when
 # partial top-k lists merge.
 # --------------------------------------------------------------------------
-ANN_REP = 8
-_ANN_REP_BASE = 10**9
+def _ann_scaled_corpus(emb: DataFrame) -> DataFrame:
+    return replicate(emb.select("vec_id", "embedding"), "vec_id", REPLICAS)
+
+
+_ANN_SCALED_SQL = f"({replicate_sql('embeddings', 'vec_id', REPLICAS)})"
 
 
 def ann_bruteforce_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    scaled = emb.select(
-        "vec_id",
-        "embedding",
-        F.explode(F.array(*[F.lit(i) for i in range(ANN_REP)])).alias("rep"),
-    ).select(
-        (
-            F.col("vec_id").cast("long")
-            + F.col("rep").cast("long") * F.lit(_ANN_REP_BASE).cast("long")
-        ).alias("vec_id"),
-        "embedding",
-    )
+    scaled = _ann_scaled_corpus(load_table(spark, sf_dir, "embeddings"))
     return brute_force_topk(scaled, _probe_queries(scaled), k=K).orderBy(
         "query_id", "rank"
     )
 
 
 ORACLE_ANN_BRUTEFORCE_SCALED = f"""
-WITH es AS (
-  SELECT b.vec_id + r.rep * {_ANN_REP_BASE} AS vec_id, b.embedding
-  FROM embeddings b CROSS JOIN range({ANN_REP}) AS r(rep)
-), e0 AS (
+WITH es AS {_ANN_SCALED_SQL}, e0 AS (
   SELECT vec_id, embedding, {_SDOT.format(a='embedding', b='embedding')} AS norm_s
   FROM es
 ), e AS (
@@ -3803,26 +3798,15 @@ def ann_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # ann_kcenter_scaled — the coreset scale probe, in the
 # *_scaled mold (components/substring/bruteforce/window_distinct):
-# the corpus replicated ANN_REP× into disjoint id ranges AND the shard
+# the corpus replicated REPLICAS× into disjoint id ranges AND the shard
 # count grown by the same factor — exactly the "KC_SHARDS grows with
 # the corpus" scaling claim, executed: per-shard block size stays
 # constant while total work fans out 8×, and the hash gate checks the
-# full 8×-wider selection trajectory (KC_SHARDS·ANN_REP·KC_K rows).
+# full 8×-wider selection trajectory (KC_SHARDS·REPLICAS·KC_K rows).
 # --------------------------------------------------------------------------
 def ann_kcenter_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    scaled = emb.select(
-        "vec_id",
-        "embedding",
-        F.explode(F.array(*[F.lit(i) for i in range(ANN_REP)])).alias("rep"),
-    ).select(
-        (
-            F.col("vec_id").cast("long")
-            + F.col("rep").cast("long") * F.lit(_ANN_REP_BASE).cast("long")
-        ).alias("vec_id"),
-        "embedding",
-    )
-    return _kcenter_run(scaled, KC_SHARDS * ANN_REP)
+    scaled = _ann_scaled_corpus(load_table(spark, sf_dir, "embeddings"))
+    return _kcenter_run(scaled, KC_SHARDS * REPLICAS)
 
 
 def _kcenter_oracle(n_shards: int = KC_SHARDS, source: str = "embeddings") -> str:
@@ -3894,11 +3878,6 @@ JOIN npts n ON n.shard = c.shard
 ORDER BY c.shard, c.step
 """
 
-
-_KC_SCALED_SOURCE = (
-    f"(SELECT b.vec_id + r.rep * {_ANN_REP_BASE} AS vec_id, b.embedding"
-    f" FROM embeddings b CROSS JOIN range({ANN_REP}) AS r(rep))"
-)
 
 # --------------------------------------------------------------------------
 # ann_index_build / ann_index_serve — the persisted-index contract
@@ -4118,7 +4097,7 @@ def _index_serve_body(
     spark: SparkSession, cpath: str, ipath: str, queries: DataFrame
 ) -> DataFrame:
     """The serving kernel proper, shared by ann_index_serve, its
-    replication probes and the per-micro-batch stream serve: the probe
+    8× replication probe and the per-micro-batch stream serve: the probe
     routing, exact top-K ranking within the probed cells."""
     from pyspark.sql import Window as W
 
@@ -4599,32 +4578,18 @@ def ann_pq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # ann_index_serve_scaled — the persisted serving path under the 8×
 # replication probe (the ann_bruteforce_scaled device): the embedding
-# corpus replicated ANN_REP× into disjoint id ranges, the index BUILT
+# corpus replicated REPLICAS× into disjoint id ranges, the index BUILT
 # over the replicated corpus (training seeds live only in the rep-0
 # range, so the quantizer is identical to the unscaled one and every
 # replica lands in its original's cell — cells grow 8×, the probe
 # still reads KM_NPROBE of them), and the SAME serving kernel run
-# against it. Every original vector now appears ANN_REP times at an
+# against it. Every original vector now appears REPLICAS times at an
 # exactly tied cosine, so the probe also attests the deterministic tie
 # policy (vec_id asc) that keeps distributed top-k hash-stable when
 # partial lists merge across 1000 executors. Excluded from the bench
 # headline like the other replication probes; gated for correctness
 # every round.
 # --------------------------------------------------------------------------
-def _ann_scaled_corpus(emb: DataFrame) -> DataFrame:
-    return emb.select(
-        "vec_id",
-        "embedding",
-        F.explode(F.array(*[F.lit(i) for i in range(ANN_REP)])).alias("rep"),
-    ).select(
-        (
-            F.col("vec_id").cast("long")
-            + F.col("rep").cast("long") * F.lit(_ANN_REP_BASE).cast("long")
-        ).alias("vec_id"),
-        "embedding",
-    )
-
-
 def _ann_scaled_write(
     spark: SparkSession, sf_dir: str, cpath: str, ipath: str
 ) -> None:
@@ -4645,11 +4610,7 @@ def ann_index_serve_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _index_serve_scaled_oracle() -> str:
     base = _index_serve_oracle()
-    es = f"""
-WITH es AS (
-  SELECT b.vec_id + r.rep * {_ANN_REP_BASE} AS vec_id, b.embedding
-  FROM embeddings b CROSS JOIN range({ANN_REP}) AS r(rep)
-),"""
+    es = f"\nWITH es AS {_ANN_SCALED_SQL},"
     parts, _assign = _kmeans_ctes(source="es")
     body = ",\n".join(parts)
     # the base oracle from its cent CTE onward, re-rooted on the
@@ -4658,40 +4619,7 @@ WITH es AS (
     return es + "\n" + body + ",\ncent AS (" + tail
 
 
-# --------------------------------------------------------------------------
-# ann_index_serve_scaled64 — the serve-only probe at 64× (VERDICT r10
-# #6: the 8× probe "barely tests" the serving claim). The claim is
-# "query cost independent of corpus size", and in production that
-# holds because CELL COUNT grows with the corpus while per-cell size
-# stays fixed — a query reads KM_NPROBE cells no matter how many
-# exist. This probe materializes that shape directly: the TRAINED 1×
-# index is replicated into 64 disjoint CELL ranges (vec_id + rep·10⁹,
-# cell + rep·KM_K — no retraining, the build is a cheap artifact
-# rewrite), so the on-disk index holds 64× the rows across 64× the
-# cell partitions while every cell keeps its 1× size. The replica
-# cells model the cold regions of a larger corpus the probe set never
-# routes to, so the partition-pruned scan reads CONSTANT bytes and
-# the served top-K provably equals the 1× serve — the oracle is
-# _index_serve_oracle() verbatim, hash-exact.
-# Honest division of labor between the two probes: the 8× probe
-# builds FOR REAL over a replicated corpus (fixed cell count → cells
-# grow 8× → serve cost tracks cell size); this one fixes cell size
-# and grows cell count 64× (serve cost flat). Together they measure
-# both axes of IVF serving cost. Enrolled in the bench POOL (unlike
-# the 8× probe): its number read against ann_index_serve's is the
-# flat-serve evidence.
-# --------------------------------------------------------------------------
-def ann_index_serve_scaled64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cpath, ipath = ANN_INDEX.ensure(spark, sf_dir)
-    i64 = index.replicate(
-        spark, sf_dir, "ann-index", ipath, "vec_id", "cell", KM_K, ("cell",)
-    )
-    emb = load_table(spark, sf_dir, "embeddings")
-    return _index_serve_body(spark, cpath, i64, _probe_queries(emb))
-
-
 QUERIES = {
-    "ann_index_serve_scaled64": ann_index_serve_scaled64,
     "ann_index_serve_scaled": ann_index_serve_scaled,
     "ann_pq_index_build": ann_pq_index_build,
     "ann_pq_index_serve": ann_pq_index_serve,
@@ -4736,9 +4664,6 @@ QUERIES = {
 }
 
 ORACLES = {
-    # the 64× replicas live in never-probed replica cells and ties
-    # route to rep 0, so the served top-K equals the 1× serve exactly
-    "ann_index_serve_scaled64": _index_serve_oracle(),
     "ann_index_serve_scaled": _index_serve_scaled_oracle(),
     "ann_pq_index_build": _pq_index_build_oracle(),
     # identical output contract to the train-in-plan ADC ranker — the
@@ -4753,7 +4678,7 @@ ORACLES = {
     "ann_index_compact": _index_compact_oracle(),
     "ann_kcenter_select": _kcenter_oracle(),
     "ann_kcenter_scaled": _kcenter_oracle(
-        n_shards=KC_SHARDS * ANN_REP, source=_KC_SCALED_SOURCE
+        n_shards=KC_SHARDS * REPLICAS, source=_ANN_SCALED_SQL
     ),
     "ann_nprobe_sweep": _nprobe_sweep_oracle(),
     "ann_centroid_outliers": _centroid_outliers_oracle(),

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from jobx_spark import streaming as S
 from jobx_spark.functions import dsum_sql
 from jobx_spark.queries.pipeline import _pii_oracle
+from jobx_spark.sources import REPLICAS, replicate, replicate_sql
 
 
 def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1642,7 +1643,7 @@ def _stream_ewma_oracle() -> str:
 # stream_window_distinct_scaled — the STREAMING scale probe (VERDICT
 # r5 #4, the `*_scaled` mold of dedup_components_scaled /
 # dedup_substring_scaled / ann_bruteforce_scaled): the events corpus is
-# replicated 8× with disjoint user-id namespaces (user_id + rep·10⁶)
+# replicated 8× with disjoint user-id namespaces (user_id + rep·10⁹)
 # and pushed through the PRODUCTION chained-stateful path
 # (windowed_distinct_users — two state-store operators in one
 # append-mode query) under the hash gate. What it attests beyond the
@@ -1652,33 +1653,16 @@ def _stream_ewma_oracle() -> str:
 # open+closed window cardinality, never event cardinality. The batch
 # side had three such probes; this is the streaming one.
 # --------------------------------------------------------------------------
-STREAM_REP = 8
-_STREAM_REP_BASE = 10**6
-
-
 def stream_window_distinct_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-
-    from pyspark.sql import functions as F
 
     from jobx_spark.lineage import scratch_dir
     from jobx_spark.sources import load_table
 
     evb = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts",
-        F.col("user_id").cast("long").alias("user_id"),
-        "event_type", "value",
+        "event_id", "ts", "user_id", "event_type", "value"
     )
-    scaled = evb.select(
-        "event_id", "ts", "user_id", "event_type", "value",
-        F.explode(F.array(*[F.lit(i) for i in range(STREAM_REP)])).alias("rep"),
-    ).select(
-        "event_id", "ts",
-        (F.col("user_id") + F.col("rep") * F.lit(_STREAM_REP_BASE)).alias(
-            "user_id"
-        ),
-        "event_type", "value",
-    )
+    scaled = replicate(evb, "user_id", REPLICAS).drop("rep")
     src = os.path.join(scratch_dir("stream_wdist_scaled"), "src")
     scaled.write.parquet(src)
     stream = spark.readStream.schema(scaled.schema).parquet(src)
@@ -1689,10 +1673,7 @@ def stream_window_distinct_scaled(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 ORACLE_STREAM_WINDOW_DISTINCT_SCALED = f"""
-WITH ev AS (
-  SELECT e.ts, e.event_type, e.user_id + r.rep * {_STREAM_REP_BASE} AS user_id
-  FROM events e CROSS JOIN range({STREAM_REP}) AS r(rep)
-),
+WITH ev AS ({replicate_sql('events', 'user_id', REPLICAS)}),
 per_user AS (
   SELECT date_trunc('hour', ts) AS ws, event_type, user_id,
          count(*) AS n

@@ -61,6 +61,34 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+# Corpus replication for the scale rows: ``n`` copies of a table in
+# disjoint id ranges (``id + rep·REPLICA_ID_STEP``), every other column
+# verbatim, so replicas of one row tie exactly on content. Spark and
+# DuckDB twins, one policy.
+REPLICAS = 8
+REPLICA_ID_STEP = 10**9
+
+
+def replicate(df: DataFrame, id_col: str, n: int) -> DataFrame:
+    """``df`` copied ``n`` times, ``id_col`` shifted by ``rep·10⁹`` (as
+    long); keeps the frame's column order and appends ``rep`` (long)."""
+    rep = F.explode(F.array(*[F.lit(i) for i in range(n)]).cast("array<bigint>"))
+    shifted = F.col(id_col).cast("long") + F.col("rep") * F.lit(REPLICA_ID_STEP)
+    return df.select("*", rep.alias("rep")).select(
+        *[shifted.alias(c) if c == id_col else F.col(c) for c in df.columns],
+        "rep",
+    )
+
+
+def replicate_sql(table: str, id_col: str, n: int) -> str:
+    """DuckDB twin of :func:`replicate` over ``table`` (a name or a
+    parenthesized subquery)."""
+    return (
+        f"SELECT t.* REPLACE ({id_col} + r.rep * {REPLICA_ID_STEP} AS {id_col}),"
+        f" r.rep FROM {table} AS t CROSS JOIN range({n}) AS r(rep)"
+    )
+
+
 def local_frame(
     spark: SparkSession, rows: Iterable[Any], schema: str
 ) -> DataFrame:

@@ -13,7 +13,7 @@ SF_SMOKE = os.environ.get("JOBX_TEST_SF_DIR", "/root/testdata/sf0.001")
 # (`JOBX_FULL_SUITE=1 python -m pytest tests/ -q`) and any explicit
 # `-m` selection. What the default run keeps: every operator/engine/
 # contract/unit suite. What it defers to the full run:
-#   * test_registry_double_run_hash_stable — runs all 280 queries
+#   * test_registry_double_run_hash_stable — runs all 277 queries
 #     TWICE (~18.5 min alone);
 #   * test_llm_oracle — the full-registry oracle compare at sf0.001,
 #     redundant with the driver gate itself (~5 min);

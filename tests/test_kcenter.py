@@ -66,12 +66,13 @@ def test_kcenter_matches_independent_replay(spark, sf_dir):
 def test_kcenter_scaled_keeps_per_shard_block_constant(spark, sf_dir):
     """The 8× probe grows shards with the corpus: per-shard block size
     (the pandas-group memory bound) must stay flat, not grow 8×."""
-    from jobx_spark.queries.similarity import ANN_REP, ann_kcenter_scaled
+    from jobx_spark.queries.similarity import ann_kcenter_scaled
+    from jobx_spark.sources import REPLICAS
 
     base = ann_kcenter_select(spark, sf_dir).toPandas()
     scaled = ann_kcenter_scaled(spark, sf_dir).toPandas()
-    assert len(scaled) == KC_SHARDS * ANN_REP * KC_K
-    assert scaled["n_points"].sum() == base["n_points"].sum() * ANN_REP
+    assert len(scaled) == KC_SHARDS * REPLICAS * KC_K
+    assert scaled["n_points"].sum() == base["n_points"].sum() * REPLICAS
     assert scaled["n_points"].max() <= base["n_points"].max() * 2, (
         "per-shard block grew with the corpus — shards did not scale"
     )

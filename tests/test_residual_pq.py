@@ -14,6 +14,9 @@ residual codebooks and the advantage is not systematic — that
 under-trained regime is real FAISS behavior too (IVFPQ wants training
 points ≫ k per cell), so the pin lives at the scale where the
 precondition holds and the sf0.001 check is shape-only.
+
+The fused multi-chain Lloyd trainer that learns the PQ codebooks is
+pinned here too, chain by chain, against the single-chain trainer.
 """
 
 import pytest
@@ -85,3 +88,85 @@ def test_residual_returns_full_topk_per_query(spark):
     byq = _topk_sets(spark, "ann_ivf_pq_residual_topk", SF_SHAPE)
     assert sorted(byq) == [0, 1, 2, 3, 4]
     assert all(len(v) == 10 for v in byq.values())
+
+
+def test_kmeans_train_multi_equals_per_column_chains(spark, sf_dir):
+    """The fused multi-chain Lloyd trainer (one job per round for ALL
+    subspace chains) must be bit-identical, per column, to the
+    single-column kmeans_train it replaced in the PQ queries."""
+    from pyspark.sql import functions as F
+
+    from jobx_spark.operators.similarity import (
+        kmeans_train,
+        kmeans_train_multi,
+    )
+    from jobx_spark.queries.similarity import (
+        KM_BASE,
+        KM_ITERS,
+        KM_K,
+        KM_SCALE,
+        PQ_DIM,
+        PQ_SUB,
+    )
+    from jobx_spark.sources import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    mat = emb.select(
+        "vec_id",
+        *[
+            F.slice("embedding", s * PQ_DIM + 1, PQ_DIM).alias(f"sub{s}")
+            for s in range(PQ_SUB)
+        ],
+        "embedding",
+    )
+    cols = ["embedding"] + [f"sub{s}" for s in range(PQ_SUB)]
+    multi = kmeans_train_multi(
+        mat, cols, k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE
+    )
+    for col, got in zip(cols, multi):
+        want = kmeans_train(
+            mat.select("vec_id", F.col(col).alias("embedding")),
+            k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
+            output="centroids",
+        )
+        g = sorted((r["cent_id"], list(r["cv"])) for r in got.collect())
+        w = sorted((r["cent_id"], list(r["cv"])) for r in want.collect())
+        assert g == w, f"chain {col} diverged from kmeans_train"
+        assert g, f"chain {col} trained no centroids on the fixture"
+
+
+def test_kmeans_train_multi_dead_cell_matches_single_chain(spark):
+    """A chain whose cell goes empty (duplicate seed vectors — ties
+    assign to the LOWEST cent_id, so the higher seed's cell dies in
+    round 1) must drop it exactly like the single-column trainer,
+    independently per chain."""
+    from pyspark.sql import functions as F
+
+    from jobx_spark.operators.similarity import (
+        kmeans_train,
+        kmeans_train_multi,
+    )
+
+    data = []
+    for i in range(24):
+        a = [1.0, 0.25] if i % 2 == 0 else [0.25, 1.0]
+        b = [float(i % 3) + 0.5, 1.0]
+        if i == 11:
+            a = [1.0, 0.25]  # duplicate of seed 10 in chain a
+        data.append((i, a, b))
+    mat = spark.createDataFrame(
+        data, "vec_id long, a array<double>, b array<double>"
+    )
+    multi = kmeans_train_multi(
+        mat, ["a", "b"], k=2, iters=3, cent_base=10, scale=10**6
+    )
+    for col, got in zip(["a", "b"], multi):
+        want = kmeans_train(
+            mat.select("vec_id", F.col(col).alias("embedding")),
+            k=2, iters=3, cent_base=10, scale=10**6, output="centroids",
+        )
+        g = sorted((r["cent_id"], list(r["cv"])) for r in got.collect())
+        w = sorted((r["cent_id"], list(r["cv"])) for r in want.collect())
+        assert g == w, f"chain {col} diverged from kmeans_train"
+    assert multi[0].count() == 1, "chain a's duplicate-seed cell must die"
+    assert multi[1].count() == 2, "chain b must keep both cells"

@@ -150,14 +150,14 @@ def test_scaled_probe_state_rows_watermark_bounded(run_logs, spark):
     are WINDOW-cardinality-sized (the watermark evicted closed
     windows), never event-cardinality-sized — the property that keeps
     a continuous 100 TB deployment's state store finite."""
-    from jobx_spark.queries.streams import STREAM_REP
+    from jobx_spark.sources import REPLICAS
 
     runs = run_logs["stream_window_distinct_scaled"]
     assert runs, "probe did not record a streaming run"
     rows = [n for r in runs for n in r.get("state_rows", []) if n is not None]
     assert rows, "no state-row counts captured"
     n_events = (
-        spark.read.parquet(f"{SF}/events.parquet").count() * STREAM_REP
+        spark.read.parquet(f"{SF}/events.parquet").count() * REPLICAS
     )
     # events span ~a month of hourly windows × a handful of types: the
     # retained state must be orders of magnitude below event count

@@ -54,19 +54,19 @@ DEFAULT_QUERIES = [
 
 REPS = int(os.environ.get("JOBX_PROBE_REPS", "2"))
 
-# tables the probe queries read; replicated with their id column
+# tables the probe queries read, each with the id column its replicas
+# shift into disjoint ranges
 TABLES = {
     "documents": "doc_id",
     "events": "event_id",
     "embeddings": "vec_id",
-    "media": None,       # replicated verbatim if present (id remap n/a)
 }
 
 
 def replicate(spark, src: str, dst: str, rep: int) -> None:
     import shutil
 
-    from pyspark.sql import functions as F
+    from jobx_spark.sources import replicate as replicate_table
 
     os.makedirs(dst, exist_ok=True)
     # embeddings are tiny (2,000 rows at sf0.1) — replicate them deeper
@@ -75,19 +75,8 @@ def replicate(spark, src: str, dst: str, rep: int) -> None:
     emb_rep = int(os.environ.get("JOBX_PROBE_EMB_REP", str(rep * 8)))
     for tbl, idc in TABLES.items():
         n_rep = emb_rep if tbl == "embeddings" else rep
-        reps = spark.range(n_rep).select(F.col("id").alias("_rep"))
-        path = os.path.join(src, f"{tbl}.parquet")
-        if not os.path.exists(path):
-            continue
-        df = spark.read.parquet(path)
-        if idc is not None and idc in df.columns:
-            out = (
-                df.crossJoin(F.broadcast(reps))
-                .withColumn(idc, F.col(idc) + F.col("_rep") * F.lit(10**9))
-                .drop("_rep")
-            )
-        else:
-            out = df.crossJoin(F.broadcast(reps)).drop("_rep")
+        df = spark.read.parquet(os.path.join(src, f"{tbl}.parquet"))
+        out = replicate_table(df, idc, n_rep).drop("rep")
         if tbl == "events":
             # the streaming file source globs on the exact file name
             # events.parquet, so this table must stay ONE FILE — stage
@@ -112,8 +101,6 @@ def replicate(spark, src: str, dst: str, rep: int) -> None:
             )
     # non-replicated side tables copied as-is (relational dims some
     # queries broadcast)
-    import shutil
-
     for f in os.listdir(src):
         if f.endswith(".parquet") and f.split(".")[0] not in TABLES:
             d = os.path.join(dst, f)
