@@ -15,12 +15,13 @@ Spark DataFrames:
     recurses in the driver (the Pregel pattern): millions of child
     invocations are rows, not tasks;
   * the hierarchical fold-up (mr/job_engine.py:689-819: union children →
-    regroup by key → parent reducer) is a second ``applyInPandas`` per
-    level; Spark's hash aggregation spills where the reference's
-    in-memory dict regroup "has a high [memory] cost for large sets"
-    (mr/job_engine.py:772-775);
-  * sessions ride the same DataFrames as ``row_type='session'`` rows and
-    meet their reducer through a cogroup — no driver-sized state.
+    regroup by key → parent reducer) is one kernel, ``_fold``: in-task
+    for a fused subtree, else one ``groupBy(parent).applyInPandas`` per
+    level (``_fold_up``); Spark's hash aggregation spills where the
+    reference's in-memory dict regroup "has a high [memory] cost for
+    large sets" (mr/job_engine.py:772-775);
+  * a fan-out invocation's session writes ride its own ``'fold'`` row
+    to its reducer in the same grouped pass — no driver-sized state.
 
 Values are JSON-encoded strings end-to-end — the reference's loose JSON
 typing (mr/config/kv.py:12-13) inside a fixed Spark schema.
@@ -69,26 +70,6 @@ _ROWS_SCHEMA = (
 
 _MAX_DEPTH = 32
 
-# submit_dataset's distributed sinks: folded results written in parallel
-# by the executors (same writer contracts as jobx_spark/sources/sinks.py),
-# never collect()ed. The driver-side writers (inline/file/http/email)
-# remain for small results and reference parity (mr/result_writers/*).
-_DATASET_SINKS = {
-    "parquet": lambda df, path, **kw: df.write.mode("overwrite").parquet(path, **kw),
-    "csv": lambda df, path, **kw: df.write.mode("overwrite")
-    .option("header", "true")
-    .csv(path, **kw),
-    "json": lambda df, path, **kw: df.write.mode("overwrite").json(path, **kw),
-}
-_DATASET_READERS = {
-    "parquet": lambda spark, path: spark.read.parquet(path),
-    "csv": lambda spark, path: spark.read.schema(_ROWS_RESULT_SCHEMA)
-    .option("header", "true")
-    .csv(path),
-    "json": lambda spark, path: spark.read.schema(_ROWS_RESULT_SCHEMA).json(path),
-}
-_ROWS_RESULT_SCHEMA = "seq long, k string, v string"
-
 
 class HandlerInvocationError(RuntimeError):
     """Carries (step, invocation, traceback) back to the driver — the
@@ -107,9 +88,9 @@ class Request:
     error: str | None = None
     failed_invocation_id: str | None = None
     result: dict | None = None
-    # distributed result path (submit_dataset with a table sink): the
-    # folded output as a DataFrame read back from the sink — table-scale
-    # results never transit the driver.
+    # distributed result path (submit_dataset with the parquet writer):
+    # the folded output as a DataFrame read back from the files —
+    # table-scale results never transit the driver.
     result_df: DataFrame | None = None
     created_at: float = field(default_factory=time.time)
     finished_at: float | None = None
@@ -194,6 +175,54 @@ def _run_reduce(
             f"phase=reduce\n{traceback.format_exc()}"
         ) from None
     return rows
+
+
+def _fold(
+    step_plan: dict, inv: str, parent_inv, pairs: list[tuple[str, str]],
+    session_writes: dict,
+) -> list[tuple]:
+    """The fold-up (mr/job_engine.py:689-819): merge-group the children's
+    JSON-encoded result pairs by key (the reference's dict regroup,
+    sorted), then run the parent step's reducer over them with the
+    parent mapper's session writes. A parent with no children folds an
+    empty set. One kernel for both paths: a fused subtree calls it
+    in-task, the distributed recursion through ``_fold_up``."""
+    return _run_reduce(
+        step_plan, inv, parent_inv, _default_combine(pairs), session_writes
+    )
+
+
+def _fold_up(step_plan: dict, rows: DataFrame) -> DataFrame:
+    """Fold result rows into their parents in one grouped pass. A
+    'reduced' row belongs to its ``parent_inv``; a parent's own 'fold'
+    row (emitted by phase 1 on the distributed fan-out path) belongs to
+    its ``inv`` and carries what the fold needs besides the results:
+    the parent's own parent, which the folded rows are stamped with for
+    the next level up, and its session writes. A group without a fold
+    row is submit_dataset's root, which runs no mapper."""
+
+    def fold(key, pdf):
+        is_fold = (pdf["row_type"] == "fold").to_numpy()
+        parent_inv, session_writes = None, {}
+        if is_fold.any():
+            own = pdf[is_fold].iloc[0]
+            parent_inv, session_writes = own["parent_inv"], _decode(own["v"])
+        results = pdf[~is_fold]
+        rows = _fold(
+            step_plan, key[0], parent_inv,
+            list(zip(results["k"], results["v"])), session_writes,
+        )
+        return pd.DataFrame(
+            rows,
+            columns=["row_type", "inv", "parent_inv", "step", "seq", "k", "v"],
+        )
+
+    parent = F.when(F.col("row_type") == "fold", F.col("inv")).otherwise(
+        F.col("parent_inv")
+    )
+    return rows.groupBy(parent.alias("_parent")).applyInPandas(
+        fold, schema=_ROWS_SCHEMA
+    )
 
 
 # Per-invocation fan-out width cap for in-task subtree fusion: one
@@ -300,10 +329,12 @@ def _make_phase1_udf(
             subtree_s = max(subtree_s, time.perf_counter() - t_inv)
             if deadline is not None and deadline.hit:
                 overruns += 1
-            # a frontier invocation's out rows are all 'child' rows
-            # (distributed fan-out) or none are
-            if out and out[0][0] == "child":
-                children[out[0][3]] = children.get(out[0][3], 0) + len(out)
+            # a frontier invocation's out rows are 'reduced' rows, or
+            # (distributed fan-out) its 'fold' row, which names the
+            # child step, and then its 'child' rows
+            if out and out[0][0] == "fold":
+                ns = out[0][3]
+                children[ns] = children.get(ns, 0) + len(out) - 1
             session_nodes.update((r[3], r[4]) for r in side)
             rows.extend(out)
             rows.extend(side)
@@ -399,7 +430,8 @@ def _phase1_one_invocation(
 
     Returns ``(out_rows, side_rows, forensic_candidates, transitions)``:
     out_rows are this invocation's result rows ('reduced' for a leaf or
-    a fused fold, 'child' rows on the distributed-fallback path);
+    a fused fold; on the distributed-fallback path one 'fold' row, then
+    the 'child' rows);
     side_rows are 'session' rows of every fan-out invocation in the
     fused subtree; forensic_candidates are unbudgeted per-invocation
     records (the batch wrapper applies the CAP+1 budget); transitions
@@ -460,10 +492,9 @@ def _phase1_one_invocation(
         )
         n_reduced = len(rows)
     elif isinstance(route, MrConfigureToMap):
-        # session rows are only needed on the fan-out path (the leaf
-        # path consumed them in-UDF above); emitting them here keeps
-        # the fold cogroup free of spurious leaf session groups. seq
-        # carries the fan-out depth for per-node driver capture.
+        # session rows feed the request's session capture (the leaf
+        # path consumed its sessions in-UDF above); seq carries the
+        # fan-out depth for per-node driver capture.
         next_step = route.next_step_name
         n_mapped = len(pairs)
         for key, val in scope.session_writes().items():
@@ -479,12 +510,11 @@ def _phase1_one_invocation(
             # single-pair invocation whose arguments are in hand, so
             # run map→combine→reduce for each child HERE and fold the
             # results with this step's reducer in-task — the child
-            # exchange, the fold exchange and the parent-stamp join all
-            # disappear. Numerics are identical: the same seeded-RNG
-            # discipline runs before every handler call, child ids are
-            # the same sha1 derivation, and the fold consumes the same
-            # _default_combine(child reduced pairs) + session-writes
-            # dict the driver-side cogroup fold consumed. If any
+            # exchange and the fold exchange disappear. Numerics are
+            # identical: the same seeded-RNG discipline runs before
+            # every handler call, child ids are the same sha1
+            # derivation, and the same _fold kernel consumes the same
+            # child reduced pairs and session writes. If any
             # descendant cannot complete in-task (unknown step or the
             # depth cap — the driver recursion then reports the exact
             # legacy error), the subtree's speculative output is
@@ -507,20 +537,19 @@ def _phase1_one_invocation(
                     want_forensics=want_forensics, fuse_max=fuse_max,
                     deadline=deadline,
                 )
-                if any(r[0] == "child" for r in c_out) or (
+                if (c_out and c_out[0][0] == "fold") or (
                     deadline is not None and deadline.passed()
                 ):
                     fused = False
                     break
-                child_pairs.extend((r[5], r[6]) for r in c_out if r[0] == "reduced")
+                child_pairs.extend((r[5], r[6]) for r in c_out)
                 c_side.extend(cs)
                 c_fcands.extend(cf)
                 c_trans |= ct
             if fused:
-                grouped = _default_combine(child_pairs)
                 rows.extend(
-                    _run_reduce(
-                        step_plan, inv, parent_inv, grouped,
+                    _fold(
+                        step_plan, inv, parent_inv, child_pairs,
                         scope.session_writes(),
                     )
                 )
@@ -529,6 +558,13 @@ def _phase1_one_invocation(
                 trans |= c_trans
                 trans.add((step_plan["name"], next_step, depth + 1))
         if not fused:
+            # the driver enters the child step this row names even when
+            # no pair was yielded, then folds this invocation over its
+            # children's results (see _fold_up)
+            rows.append((
+                "fold", inv, parent_inv, next_step, 0, None,
+                _encode(scope.session_writes()),
+            ))
             for i, (ek, ev) in enumerate(pairs):
                 child = hashlib.sha1(f"{inv}:{i}".encode()).hexdigest()
                 rows.append(("child", child, inv, next_step, 0, ek, ev))
@@ -545,27 +581,6 @@ def _phase1_one_invocation(
             )
         )
     return rows, side, fcands, trans
-
-
-
-def _make_fold_udf(step_plan: dict):
-    """Reduce-over-children: merge-group the concatenated child results
-    by key, then the parent step's reducer (mr/job_engine.py:689-819).
-    Cogrouped with the parent mapper's session rows (``submit_dataset``'s
-    root fold passes an empty session frame)."""
-
-    def fold(key, results_pdf: pd.DataFrame, sessions_pdf: pd.DataFrame) -> pd.DataFrame:
-        inv = key[0]
-        pairs = list(zip(results_pdf["k"], results_pdf["v"]))
-        grouped = _default_combine(pairs)  # dict-regroup parity, sorted
-        sessions = dict(zip(sessions_pdf["k"], sessions_pdf["v"]))
-        rows = _run_reduce(step_plan, inv, None, grouped, sessions)
-        return pd.DataFrame(
-            rows,
-            columns=["row_type", "inv", "parent_inv", "step", "seq", "k", "v"],
-        )
-
-    return fold
 
 
 class Engine:
@@ -775,16 +790,22 @@ class Engine:
     def _run_step(
         self, workflow_name: str, step_name: str, frontier: DataFrame,
         trace: RequestTrace, persisted: list, depth: int = 0,
-        n_invocations: int | None = None, persist_frontier: bool = True,
+        n_invocations: int | None = None,
     ) -> DataFrame:
         """Run one step over a frontier of invocations; returns reduced
         rows (inv, parent_inv, seq, k, v) for those invocations.
 
-        Intermediates are persisted (the reference durably writes every
-        stage boundary to etcd — mr/job_engine.py:421-439; for us a
-        persist is enough because Spark recomputes lineage on loss) and
-        unpersisted by the caller after the final action — never
-        collected to the driver.
+        The phase-1 output is persisted (the reference durably writes
+        every stage boundary to etcd — mr/job_engine.py:421-439; for us
+        a persist is enough because Spark recomputes lineage on loss)
+        and unpersisted by the caller after the final action — never
+        collected to the driver. The frontier itself is read once.
+
+        A fan-out invocation that was not fused emits one 'fold' row
+        and its 'child' rows; the driver recurses into each child step
+        (an empty one too, so the trace matches the fused path), then
+        folds the child results and the fold rows into their parents
+        with this step's reducer in one grouped pass (_fold_up).
 
         When fusion is on for the frontier (see _fuse_plans), the
         phase-1 pass FUSES each invocation's fan-out subtree in-task
@@ -798,16 +819,6 @@ class Engine:
         step = self.catalog.get_step(workflow_name, step_name)
         plan = self._step_plan(step)
         trace.record(depth, step_name, "map")
-
-        # A scanned or derived frontier is read by the phase-1 map and,
-        # on the fan-out path, the parent_map distinct — persist it
-        # once so the source scan/JSON encode doesn't re-run per
-        # consumer (guide §5; unpersisted by the caller like map_out).
-        # submit()'s local relation re-reads for free: persisting it
-        # would only add a cache-building job.
-        if persist_frontier:
-            frontier = frontier.persist()
-            persisted.append(frontier)
 
         # Group by a HASH BUCKET of the invocation id, not the id: a
         # wide fan-out makes invocations per-pair (reference semantics),
@@ -831,7 +842,6 @@ class Engine:
         ).persist()
         persisted.append(map_out)
         reduced = map_out.filter(F.col("row_type") == "reduced")
-        child_rows = map_out.filter(F.col("row_type") == "child")
         # ONE metadata action per step: routing (child counts per next
         # step from the per-batch 'route' rows), the 'traceev' fan-out
         # transitions fused subtrees took, and every (step, depth)
@@ -915,53 +925,19 @@ class Engine:
 
         # fan-out fallback: recurse per next step, then fold children
         # into their parents with this step's reducer.
-        sessions = map_out.filter(F.col("row_type") == "session")
         capture_node_sessions(depth, step_name)
-        child_results = []
+        child_rows = map_out.filter(F.col("row_type") == "child")
+        fold_in = map_out.filter(F.col("row_type") == "fold")
         for ns in sorted(next_steps):
             trace.record(depth, step_name, f"fanout→{ns}")
-            child_frontier = child_rows.filter(F.col("step") == ns).select(
-                "row_type", "inv", "parent_inv", "step", "seq", "k", "v"
-            )
-            child_results.append(
+            fold_in = fold_in.unionByName(
                 self._run_step(
-                    workflow_name, ns, child_frontier, trace, persisted,
-                    depth + 1, n_invocations=next_steps[ns],
+                    workflow_name, ns, child_rows.filter(F.col("step") == ns),
+                    trace, persisted, depth + 1, n_invocations=next_steps[ns],
                 )
             )
-        all_children = child_results[0]
-        for df in child_results[1:]:
-            all_children = all_children.unionByName(df)
-
         trace.record(depth, step_name, "fold")
-        # child results keyed by their parent (= this level's inv).
-        # Sessions are restricted to invocations that actually have
-        # fold input: a fused invocation's fold already ran in-task,
-        # and its session rows must not spawn an empty-input fold group
-        # in the cogroup below.
-        fold_in = all_children.withColumn("gkey", F.col("parent_inv"))
-        fallback_parents = child_rows.select(
-            F.col("parent_inv").alias("inv")
-        ).distinct()
-        sess_in = sessions.join(fallback_parents, "inv", "left_semi").withColumn(
-            "gkey", F.col("inv")
-        )
-        folded = (
-            fold_in.groupBy("gkey")
-            .cogroup(sess_in.groupBy("gkey"))
-            .applyInPandas(_make_fold_udf(plan), schema=_ROWS_SCHEMA)
-        )
-        # stamp each folded invocation's own parent for the next level up
-        parent_map = frontier.select(
-            F.col("inv").alias("inv"), F.col("parent_inv").alias("pinv")
-        ).distinct()
-        folded = (
-            folded.drop("parent_inv")
-            .join(parent_map, "inv", "left")
-            .withColumnRenamed("pinv", "parent_inv")
-            .select("row_type", "inv", "parent_inv", "step", "seq", "k", "v")
-        )
-        return reduced.unionByName(folded)
+        return reduced.unionByName(_fold_up(plan, fold_in))
 
     def submit(
         self,
@@ -983,6 +959,44 @@ class Engine:
         mapper = self.catalog.get_handler(workflow_name, step.map_handler_name)
         cast_args = mapper.cast_arguments(arguments)
 
+        def run(request: Request, persisted: list) -> None:
+            # content-derived root id: identical submissions replay the
+            # same invocation tree (and the same per-invocation RNG
+            # seeds), making results golden-hashable (FIXTURES.md A.4).
+            root_inv = hashlib.sha1(
+                f"{workflow_name}:{job_name}:{_encode(dict(cast_args))}".encode()
+            ).hexdigest()
+            rows = [
+                ("arg", root_inv, None, job.initial_step_name, i, _encode(k), _encode(v))
+                for i, (k, v) in enumerate(cast_args)
+            ] or [("arg_empty", root_inv, None, job.initial_step_name, 0, None, None)]
+            frontier = local_frame(self.spark, rows, _ROWS_SCHEMA)
+            result_rows = self._run_step(
+                workflow_name, job.initial_step_name, frontier,
+                request.trace, persisted,
+                # ONE root invocation: its subtree fuses only
+                # speculatively, under a measured deadline
+                n_invocations=1,
+            )
+            pairs = [
+                (_decode(r["k"]), _decode(r["v"]))
+                for r in sorted(result_rows.collect(), key=lambda r: r["seq"])
+            ]
+            writer = result_writers.get_writer(result_writer, writer_options)
+            request.result = writer.render(request, pairs)
+
+        return self._run_request(workflow_name, job_name, context, blocking, run)
+
+    def _run_request(
+        self, workflow_name: str, job_name: str, context: dict | None,
+        blocking: bool, body,
+    ) -> Request:
+        """The one request lifecycle of submit and submit_dataset:
+        register the request, run ``body(request, persisted)`` (on its
+        own thread unless blocking), stamp a failure's error and failed
+        invocation (the reference's error stamping, mr/job_engine.py:
+        535-572), unpersist what the body persisted and mark the request
+        done. A blocking request re-raises its failure after stamping."""
         request = Request(
             request_id=uuid.uuid4().hex,
             workflow_name=workflow_name,
@@ -997,39 +1011,14 @@ class Engine:
         def run():
             persisted: list[DataFrame] = []
             try:
-                # content-derived root id: identical submissions replay the
-                # same invocation tree (and the same per-invocation RNG
-                # seeds), making results golden-hashable (FIXTURES.md A.4).
-                root_inv = hashlib.sha1(
-                    f"{workflow_name}:{job_name}:{_encode(dict(cast_args))}".encode()
-                ).hexdigest()
-                rows = [
-                    ("arg", root_inv, None, job.initial_step_name, i, _encode(k), _encode(v))
-                    for i, (k, v) in enumerate(cast_args)
-                ] or [("arg_empty", root_inv, None, job.initial_step_name, 0, None, None)]
-                frontier = local_frame(self.spark, rows, _ROWS_SCHEMA)
-                result_rows = self._run_step(
-                    workflow_name, job.initial_step_name, frontier,
-                    request.trace, persisted,
-                    # ONE root invocation: its subtree fuses only
-                    # speculatively, under a measured deadline
-                    n_invocations=1, persist_frontier=False,
-                )
-                pairs = [
-                    (_decode(r["k"]), _decode(r["v"]))
-                    for r in sorted(result_rows.collect(), key=lambda r: r["seq"])
-                ]
-                writer = result_writers.get_writer(result_writer, writer_options)
-                request.result = writer.render(request, pairs)
-            except Exception as e:  # error stamping parity
+                body(request, persisted)
+            except Exception as e:
                 msg = str(e)
                 request.error = msg
                 if "JOBX_HANDLER_ERROR" in msg:
                     marker = msg[msg.index("JOBX_HANDLER_ERROR"):]
                     request.failed_invocation_id = _extract_field(marker, "inv")
                 if blocking:
-                    request.is_done = True
-                    request.finished_at = time.time()
                     raise
             finally:
                 # request cleanup (GC parity — mr/request_cleanup.py):
@@ -1041,9 +1030,10 @@ class Engine:
 
         if blocking:
             run()
-            return request
-        thread = threading.Thread(target=run, name=f"jobx-{request.request_id}", daemon=True)
-        thread.start()
+        else:
+            threading.Thread(
+                target=run, name=f"jobx-{request.request_id}", daemon=True
+            ).start()
         return request
 
     def get_request(self, request_id: str) -> Request:
@@ -1054,8 +1044,7 @@ class Engine:
         """Drop a FINISHED request — trace, sessions, registry entry —
         from this engine (reference: mr_kv_request_cleanup walks and
         deletes the request's KV subtree, setup.py:52; our plane is the
-        driver registry, so cleanup is a registry pop plus unpersisting
-        any dataset-sink result still cached).
+        driver registry, so cleanup is a registry pop).
 
         Raises KeyError for unknown/foreign requests and ValueError for
         a request still running — the reference's cleanup likewise only
@@ -1068,11 +1057,6 @@ class Engine:
             if not request.is_done and request.error is None:
                 raise ValueError(f"request {request_id} is still running")
             del self._requests[request_id]
-        if request.result_df is not None:
-            try:
-                request.result_df.unpersist()
-            except Exception:  # noqa: BLE001 - cleanup best-effort
-                pass
         return request
 
     def list_requests(self, workflow_name: str | None = None) -> list[Request]:
@@ -1136,7 +1120,8 @@ class Engine:
         partial/final aggregation. ``pairs_df`` must have columns
         ``k``/``v`` as JSON-encoded strings.
 
-        Result contract: for dataset sinks, ``request.result_df``
+        Result contract: with ``result_writer="parquet"`` (and a
+        ``path`` in ``writer_options``), ``request.result_df``
         carries DECODED ``k``/``v`` string columns (JSON-string quoting
         stripped; numbers as their text; arrays/objects as JSON text) —
         mirroring the inline path's ``_decode``, so string keys read
@@ -1152,18 +1137,7 @@ class Engine:
         step = self.catalog.get_step(workflow_name, job.initial_step_name)
         plan = self._step_plan(step)
 
-        request = Request(
-            request_id=uuid.uuid4().hex,
-            workflow_name=workflow_name,
-            job_name=job_name,
-            context=None,
-            is_blocking=True,
-            trace=RequestTrace(),
-        )
-        with self._requests_lock:
-            self._requests[request.request_id] = request
-        persisted: list[DataFrame] = []
-        try:
+        def run(request: Request, persisted: list) -> None:
             root_inv = hashlib.sha1(f"{workflow_name}:{job_name}:dataset".encode()).hexdigest()
             # Bucket by (k, v), not k alone (guide §2.5: a synthetic
             # partitioning key with too few distinct values starves the
@@ -1198,30 +1172,23 @@ class Engine:
                 n_invocations=n_buckets,
             )
             request.trace.record(0, job.initial_step_name, "fold")
-            # the dataset root runs no mapper, so it has no session rows
-            # to cogroup with
-            fold = _make_fold_udf(plan)
-            no_sessions = pd.DataFrame({"k": [], "v": []})
-            folded = leaf.groupBy("parent_inv").applyInPandas(
-                lambda key, pdf: fold(key, pdf, no_sessions), schema=_ROWS_SCHEMA
-            )
-            if result_writer in _DATASET_SINKS:
+            folded = _fold_up(plan, leaf)
+            if result_writer == "parquet":
                 # distributed result path: the folded output is written
-                # by the executors (sources/sinks.py), never collected —
-                # at table scale (per-user/per-key results over 100 TB of
-                # input) the driver only sees a path. seq rides along so
-                # a reader can restore the reducer's deterministic order.
+                # by the executors, never collected — at table scale
+                # (per-user/per-key results over 100 TB of input) the
+                # driver only sees a path. seq rides along so a reader
+                # can restore the reducer's deterministic order.
                 opts = dict(writer_options or {})
                 path = opts.pop("path")
-                out = folded.select("seq", "k", "v")
-                _DATASET_SINKS[result_writer](out, path, **opts)
+                folded.select("seq", "k", "v").write.mode("overwrite").parquet(
+                    path, **opts
+                )
                 # Decode on read-back (JVM-side): get_json_object('$')
                 # unquotes JSON strings and passes other scalars/
                 # composites through as text — the inline _decode
                 # contract, so k.cast(...) and string keys both behave.
-                request.result_df = _DATASET_READERS[result_writer](
-                    self.spark, path
-                ).select(
+                request.result_df = self.spark.read.parquet(path).select(
                     "seq",
                     F.get_json_object("k", "$").alias("k"),
                     F.get_json_object("v", "$").alias("v"),
@@ -1238,12 +1205,8 @@ class Engine:
                 ]
                 writer = result_writers.get_writer(result_writer, writer_options)
                 request.result = writer.render(request, pairs)
-            return request
-        finally:
-            for df in persisted:
-                df.unpersist()
-            request.is_done = True
-            request.finished_at = time.time()
+
+        return self._run_request(workflow_name, job_name, None, True, run)
 
 
 def _extract_field(marker: str, name: str) -> str | None:

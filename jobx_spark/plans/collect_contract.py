@@ -52,7 +52,7 @@ COLLECT_BOUNDS: dict[tuple[str, str, str], tuple[int, str]] = {
         "workflow to return (reference parity: mr handlers' "
         "collect-result leaves)",
     ),
-    ("jobx_spark/engine.py", "submit_dataset", "collect"): (
+    ("jobx_spark/engine.py", "submit_dataset.run", "collect"): (
         1,
         "user-requested result materialization: blocking submit of a "
         "dataset request renders the request's own result rows "

@@ -521,6 +521,41 @@ def test_submit_dataset_sink_decodes_string_keys(spark, tmp_path):
     assert got == {"user_0": 34, "user_1": 33, "user_2": 33}
 
 
+def _mapper_raises_on_13(scope, arguments):
+    yield MrConfigureToReturn()
+    for k, v in arguments:
+        if v == 13:
+            raise ValueError("boom on 13")
+        yield (k, v)
+
+
+def test_failed_submit_dataset_is_stamped(spark):
+    """A failed dataset request is stamped like a failed submit: done,
+    with the error and the invocation that raised."""
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    eng = Engine(spark)
+    eng.create_workflow("wfe")
+    eng.register_handler("wfe", "raise13", fn=_mapper_raises_on_13, handler_type="mapper")
+    eng.register_handler("wfe", "sum", fn=reducer_sum, handler_type="reducer")
+    eng.create_step("wfe", "se", "raise13", "sum")
+    eng.create_job("wfe", "je", "se")
+
+    pairs = spark.range(20).select(
+        (F.col("id") % 3).cast("string").alias("k"),
+        F.col("id").cast("string").alias("v"),
+    )
+    with pytest.raises(Exception, match="boom on 13"):
+        eng.submit_dataset("wfe", "je", pairs, n_buckets=4)
+    [req] = eng.list_requests("wfe")
+    assert req.is_done and req.finished_at is not None
+    assert req.error and "boom on 13" in req.error
+    root_inv = hashlib.sha1(b"wfe:je:dataset").hexdigest()
+    assert req.failed_invocation_id.startswith(root_inv + ":")
+
+
 def test_invocation_trace_and_graph(engine):
     """Invocation forensics parity (reference mr/trace.py:170-334):
     fan-out job records parent->child invocation edges with dataset

@@ -70,6 +70,14 @@ def mapper_to_nap_mid(scope, arguments):
         yield (1, value // 2 + value % 2)
 
 
+def mapper_zero(scope, arguments):
+    scope.session_set("fan", "zero")
+    yield MrConfigureToMap("step_leaf")
+    for _name, value in arguments:
+        if value % 2:
+            yield (0, value)
+
+
 NAP_S = 0.05
 
 
@@ -98,6 +106,14 @@ def reducer_noop(scope, results):
         yield (k, value_list)
 
 
+def reducer_count(scope, results):
+    n = 0
+    for _k, value_list in results:
+        n += len(value_list)
+    yield ("fan", scope.session_get("fan"))
+    yield ("n", n)
+
+
 def _build(spark) -> Engine:
     e = Engine(spark)
     e.create_workflow("wf13")
@@ -114,6 +130,9 @@ def _build(spark) -> Engine:
     e.register_handler("wf13", "to_nap_mid", fn=mapper_to_nap_mid,
                        handler_type="mapper", argument_spec=[("arg1", "int")])
     e.register_handler("wf13", "nap", fn=mapper_nap, handler_type="mapper")
+    e.register_handler("wf13", "zero", fn=mapper_zero, handler_type="mapper",
+                       argument_spec=[("arg1", "int")])
+    e.register_handler("wf13", "count", fn=reducer_count, handler_type="reducer")
     e.register_handler("wf13", "total", fn=reducer_total, handler_type="reducer")
     e.register_handler("wf13", "sum", fn=reducer_sum, handler_type="reducer")
     e.register_handler("wf13", "noop", fn=reducer_noop, handler_type="reducer")
@@ -127,11 +146,15 @@ def _build(spark) -> Engine:
     e.create_step("wf13", "step_nap_top", "to_nap", "noop")
     e.create_step("wf13", "step_nap_mid", "to_nap", "noop")
     e.create_step("wf13", "step_nap_deep", "to_nap_mid", "noop")
+    e.create_step("wf13", "step_zero", "zero", "count")
     e.create_job("wf13", "job_fan", "step_split")
     e.create_job("wf13", "job_deep", "step_split_top")
     e.create_job("wf13", "job_spread", "step_spread")
     e.create_job("wf13", "job_nap", "step_nap_top")
     e.create_job("wf13", "job_nap_deep", "step_nap_deep")
+    # an even argument fans out to no child at all: the parent still
+    # folds, over an empty set
+    e.create_job("wf13", "job_zero", "step_zero")
     return e
 
 
@@ -170,7 +193,7 @@ def _snapshot(req):
     }
 
 
-@pytest.mark.parametrize("job", ["job_fan", "job_deep"])
+@pytest.mark.parametrize("job", ["job_fan", "job_deep", "job_zero"])
 def test_fused_subtree_matches_distributed_recursion(spark, job):
     """fuse_min_invocations=1 forces the in-task subtree; a huge
     threshold forces the legacy distributed recursion. Every observable
@@ -186,6 +209,31 @@ def test_fused_subtree_matches_distributed_recursion(spark, job):
     fused = _snapshot(e_fused.submit("wf13", job, {"arg1": 144}))
     plain = _snapshot(e_plain.submit("wf13", job, {"arg1": 144}))
     assert fused == plain
+    if job == "job_zero":
+        assert fused["pairs"] == [["fan", "zero"], ["n", 0]]
+
+
+def test_distributed_fold_is_one_grouped_pass(spark, monkeypatch):
+    """The distributed fold-up groups child results and the parents'
+    'fold' rows by parent key in one pass: no cogroup and no join that
+    stamps each folded row with its parent."""
+    run_step = Engine._run_step
+    plans = []
+
+    def spy(self, *args, **kwargs):
+        out = run_step(self, *args, **kwargs)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(Engine, "_run_step", spy)
+    e = _build(spark)
+    e.fuse_min_invocations = 10**9
+    req = e.submit("wf13", "job_deep", ARGS["job_deep"])
+    assert {f.decision for f in req.trace.fusion} == {"distributed"}
+    root = plans[-1]  # the root call returns last
+    assert "FlatMapGroupsInPandas" in root
+    assert "FlatMapCoGroupsInPandas" not in root
+    assert "Join" not in root
 
 
 def test_fuse_width_cap_falls_back(spark, monkeypatch):

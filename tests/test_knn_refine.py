@@ -7,6 +7,11 @@ candidate is rescored EXACTLY, so per-query recall against brute-force
 truth can never drop — keep-top-k over a superset, same exact score,
 same tiebreak. That monotonicity is pinned here as an executed
 property at both smoke scales, not a docstring claim.
+
+The other ANN retrieval rows' semantic claims are pinned the same way,
+computed independently of the query implementations: hybrid RRF
+fusion soundness, MMR greedy optimality, multi-probe recall dominance
+and the dimension-truncation recall curve.
 """
 
 import pytest
@@ -56,3 +61,164 @@ def test_quantile_sketch_merged_equals_direct(spark):
             assert exact < est <= exact + QSK_BINW, (
                 f"{src} {tag}: est {est} outside ({exact}, {exact + QSK_BINW}]"
             )
+
+
+def _rows(spark, sf_dir, name):
+    from jobx_spark.queries import all_queries
+
+    return all_queries()[name](spark, sf_dir).collect()
+
+
+# -- ann_hybrid_rrf ----------------------------------------------------------
+def test_rrf_fused_ranking_is_sound(spark, sf_dir):
+    from jobx_spark.queries.similarity import K, RRF_L, RRF_RC
+
+    rows = _rows(spark, sf_dir, "ann_hybrid_rrf")
+    assert rows
+    by_q = {}
+    for r in rows:
+        by_q.setdefault(r["query_id"], []).append(r)
+    for qid, rs in by_q.items():
+        rs = sorted(rs, key=lambda r: r["rank"])
+        for r in rs:
+            # every fused doc came from at least one retriever, and its
+            # score is exactly the sum of the two lcm-scaled terms
+            assert r["lex_rank"] > 0 or r["dense_rank"] > 0
+            want = (RRF_L // (RRF_RC + r["lex_rank"]) if r["lex_rank"] else 0)
+            want += (
+                RRF_L // (RRF_RC + r["dense_rank"]) if r["dense_rank"] else 0
+            )
+            assert r["rrf_x"] == want
+        # fused order is non-increasing in score with doc_id tiebreak
+        for a, b in zip(rs, rs[1:]):
+            assert (a["rrf_x"], -a["doc_id"]) > (b["rrf_x"], -b["doc_id"])
+        # a doc ranked #1 by BOTH retrievers holds the maximum possible
+        # score and must lead the fusion
+        both_first = [
+            r for r in rs if r["lex_rank"] == 1 and r["dense_rank"] == 1
+        ]
+        if both_first:
+            assert both_first[0]["rank"] == 1
+        assert len(rs) <= K
+
+
+# -- ann_mmr_diversify -------------------------------------------------------
+def test_mmr_each_pick_maximizes_the_objective(spark, sf_dir):
+    """Independent re-derivation: rebuild the pool and pairwise sims
+    from the attested building blocks, then check every pick is the
+    argmax of 7·rel − 3·max_sim over the remaining candidates given the
+    PRIOR picks (ties to the lowest vec_id)."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from jobx_spark.operators.similarity import brute_force_topk
+    from jobx_spark.queries.similarity import (
+        MMR_LAM10,
+        MMR_M,
+        MMR_POOL,
+        _probe_queries,
+    )
+    from jobx_spark.sources import load_table
+
+    rows = _rows(spark, sf_dir, "ann_mmr_diversify")
+    assert rows
+    emb = load_table(spark, sf_dir, "embeddings")
+    bf = brute_force_topk(emb, _probe_queries(emb), k=MMR_POOL + 1).filter(
+        F.col("vec_id") != F.col("query_id")
+    )
+    pool = (
+        bf.join(emb.select("vec_id", "embedding"), "vec_id")
+        .select(
+            "query_id",
+            "vec_id",
+            (F.col("cosine") * F.lit(1000000.0)).cast("long").alias("rel"),
+            "embedding",
+        )
+        .collect()
+    )
+    by_q = {}
+    for p in pool:
+        by_q.setdefault(p["query_id"], []).append(p)
+    picks = {}
+    for r in rows:
+        picks.setdefault(r["query_id"], []).append(r)
+    for qid, prs in picks.items():
+        prs = sorted(prs, key=lambda r: r["pick_order"])
+        assert [r["pick_order"] for r in prs] == list(range(1, MMR_M + 1))
+        cands = by_q[qid]
+        ids = [p["vec_id"] for p in cands]
+        rel = {p["vec_id"]: p["rel"] for p in cands}
+        mat = {
+            p["vec_id"]: np.asarray(p["embedding"], dtype=np.float64)
+            for p in cands
+        }
+
+        def sim(a, b):
+            da = np.floor(mat[a] * mat[b] * 1e12).astype(np.int64).sum()
+            na = np.floor(mat[a] * mat[a] * 1e12).astype(np.int64).sum()
+            nb = np.floor(mat[b] * mat[b] * 1e12).astype(np.int64).sum()
+            return int(
+                np.trunc(
+                    float(da) / (np.sqrt(float(na)) * np.sqrt(float(nb)))
+                    * 1e6
+                )
+            )
+
+        chosen = []
+        for r in prs:
+            best = max(
+                (v for v in ids if v not in chosen),
+                key=lambda v: (
+                    MMR_LAM10 * rel[v]
+                    - (10 - MMR_LAM10)
+                    * (max(sim(v, s) for s in chosen) if chosen else 0),
+                    -v,
+                ),
+            )
+            assert r["vec_id"] == best, (
+                f"query {qid} pick {r['pick_order']}: got {r['vec_id']}, "
+                f"objective argmax is {best}"
+            )
+            chosen.append(best)
+        assert len(set(chosen)) == MMR_M  # picks are distinct
+
+
+# -- ann_multiprobe_lsh ------------------------------------------------------
+def test_multiprobe_recall_never_below_single_probe(spark, sf_dir):
+    """Superset candidates + exact rescore + same tiebreak ⇒ per-query
+    mp_hits ≥ sp_hits (the ann_knn_refine monotonicity argument),
+    executed; the probe count and candidate superset ride along."""
+    from jobx_spark.queries.similarity import MP_FLIPS
+
+    rows = _rows(spark, sf_dir, "ann_multiprobe_lsh")
+    assert rows
+    for r in rows:
+        assert r["mp_hits"] >= r["sp_hits"], (
+            f"query {r['query_id']}: multi-probe dropped recall "
+            f"{r['sp_hits']} -> {r['mp_hits']}"
+        )
+        assert r["mp_cands"] >= r["sp_cands"]
+        assert r["n_probes"] == MP_FLIPS + 1
+        assert 0 <= r["mp_hits"] <= r["k"]
+
+
+# -- ann_dim_truncation_sweep ------------------------------------------------
+def test_dim_sweep_recall_is_monotone_with_full_dim_control(spark, sf_dir):
+    from jobx_spark.queries.similarity import TRUNC_DIMS
+
+    rows = _rows(spark, sf_dir, "ann_dim_truncation_sweep")
+    assert rows
+    by_q = {}
+    for r in rows:
+        by_q.setdefault(r["query_id"], {})[r["trunc_dim"]] = r
+    for qid, per in by_q.items():
+        assert sorted(per) == sorted(TRUNC_DIMS)
+        assert per[max(TRUNC_DIMS)]["recall_permille"] == 1000
+    # average recall must be non-decreasing in d (per-query can wobble;
+    # the curve is the deliverable)
+    avgs = [
+        sum(per[d]["recall_permille"] for per in by_q.values())
+        / len(by_q)
+        for d in sorted(TRUNC_DIMS)
+    ]
+    assert avgs == sorted(avgs), f"recall curve not monotone: {avgs}"

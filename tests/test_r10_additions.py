@@ -1,8 +1,7 @@
 """Round-10 additions: executed-property pins for the round's fixes.
 
 Each test runs the REAL query against a real (or minimally mutated)
-sf dir and asserts the property the round's change introduced — the
-same style as tests/test_r9_additions.py.
+sf dir and asserts the property the round's change introduced.
 """
 
 import os

@@ -1,8 +1,8 @@
 """Round-11 additions: executed-property pins for the round's fixes.
 
-Same style as tests/test_r9_additions.py / test_r10_additions.py: each
-test runs the REAL query against a real (or minimally mutated) sf dir
-and asserts the property the round's change introduced.
+Same style as tests/test_r10_additions.py: each test runs the REAL
+query against a real (or minimally mutated) sf dir and asserts the
+property the round's change introduced.
 """
 
 import os

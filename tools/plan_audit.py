@@ -12,11 +12,16 @@ pushed filters and read schemas. Run from the repo root:
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+
+# scratch_dir/cut_lineage directories end in a run-random "-<12 hex>";
+# stripped so that two runs at one commit write the same file
+_RUN_SUFFIX = re.compile(r"-[0-9a-f]{12}$")
 
 JOIN_NODES = (
     "BroadcastHashJoin",
@@ -55,6 +60,7 @@ def main() -> None:
         scans = []
         for s in P.scans(plan):
             table = s.location.rsplit("/", 1)[-1].rstrip("]").replace(".parquet", "")
+            table = _RUN_SUFFIX.sub("", table)
             nf = len(s.pushed_filters)
             scans.append(f"{table}({nf}f/{len(s.read_columns)}c)")
         lines.append(
