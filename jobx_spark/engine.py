@@ -42,7 +42,7 @@ import uuid
 from dataclasses import dataclass, field
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from jobx_spark.catalog import Catalog, Handler, Step
@@ -1036,9 +1036,14 @@ class Engine:
             ).start()
         return request
 
-    def get_request(self, request_id: str) -> Request:
+    def get_request(self, workflow_name: str, request_id: str) -> Request:
+        """The registered request ``request_id`` of ``workflow_name``;
+        KeyError for an unknown request or one of another workflow."""
         with self._requests_lock:
-            return self._requests[request_id]
+            request = self._requests[request_id]
+        if request.workflow_name != workflow_name:
+            raise KeyError(request_id)
+        return request
 
     def cleanup_request(self, workflow_name: str, request_id: str) -> Request:
         """Drop a FINISHED request — trace, sessions, registry entry —
@@ -1050,12 +1055,10 @@ class Engine:
         a request still running — the reference's cleanup likewise only
         makes sense for settled requests (a running one would rebuild
         its subtree mid-walk)."""
+        request = self.get_request(workflow_name, request_id)
+        if not request.is_done and request.error is None:
+            raise ValueError(f"request {request_id} is still running")
         with self._requests_lock:
-            request = self._requests[request_id]
-            if request.workflow_name != workflow_name:
-                raise KeyError(request_id)
-            if not request.is_done and request.error is None:
-                raise ValueError(f"request {request_id} is still running")
             del self._requests[request_id]
         return request
 
@@ -1179,24 +1182,31 @@ class Engine:
                 # (per-user/per-key results over 100 TB of input) the
                 # driver only sees a path. seq rides along so a reader
                 # can restore the reducer's deterministic order.
+                # The write counts its own rows (an Observation), and the
+                # read-back names its schema, so no job runs after it.
                 opts = dict(writer_options or {})
                 path = opts.pop("path")
-                folded.select("seq", "k", "v").write.mode("overwrite").parquet(
-                    path, **opts
-                )
+                written = Observation()
+                folded.select("seq", "k", "v").observe(
+                    written, F.count(F.lit(1)).alias("n")
+                ).write.mode("overwrite").parquet(path, **opts)
                 # Decode on read-back (JVM-side): get_json_object('$')
                 # unquotes JSON strings and passes other scalars/
                 # composites through as text — the inline _decode
                 # contract, so k.cast(...) and string keys both behave.
-                request.result_df = self.spark.read.parquet(path).select(
-                    "seq",
-                    F.get_json_object("k", "$").alias("k"),
-                    F.get_json_object("v", "$").alias("v"),
+                request.result_df = (
+                    self.spark.read.schema("seq long, k string, v string")
+                    .parquet(path)
+                    .select(
+                        "seq",
+                        F.get_json_object("k", "$").alias("k"),
+                        F.get_json_object("v", "$").alias("v"),
+                    )
                 )
                 request.result = {
                     "path": path,
                     "format": result_writer,
-                    "n_pairs": request.result_df.count(),
+                    "n_pairs": written.get["n"],
                 }
             else:
                 pairs = [

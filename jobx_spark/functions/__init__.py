@@ -65,7 +65,6 @@ def davg_sql(expr: str, scale: int = 8) -> str:
 
 # ---------------------------------------------------------------- portable hash
 
-MD5_LONG_SQL_SPARK = "CAST(CONV(SUBSTRING(MD5({expr}), 1, 15), 16, 10) AS BIGINT)"
 MD5_LONG_SQL_DUCK = "(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
 
 
@@ -79,10 +78,6 @@ def md5_long_sql_duck(expr: str) -> str:
     return MD5_LONG_SQL_DUCK.format(expr=expr)
 
 
-def md5_long_sql_spark(expr: str) -> str:
-    return MD5_LONG_SQL_SPARK.format(expr=expr)
-
-
 # Universal-hash family over the 60-bit base hash, for minhash seeds.
 # h_i(x) = (a_i * h(x) + b_i) mod P  computed in modular arithmetic that
 # stays within signed-64 range: P < 2^30 so a*h mod P < 2^60.
@@ -92,10 +87,6 @@ MINHASH_P = 1_073_741_789  # largest prime < 2^30
 def perm_hash(base: Column, a: int, b: int) -> Column:
     """(a * (h mod P) + b) mod P — same arithmetic is expressible in SQL."""
     return ((base % MINHASH_P) * a + b) % MINHASH_P
-
-
-def perm_hash_sql(expr: str, a: int, b: int) -> str:
-    return f"((({expr}) % {MINHASH_P}) * {a} + {b}) % {MINHASH_P}"
 
 
 def minhash_coeffs(n: int, seed: int = 7) -> list[tuple[int, int]]:
@@ -110,24 +101,3 @@ def minhash_coeffs(n: int, seed: int = 7) -> list[tuple[int, int]]:
         b = state % MINHASH_P
         coeffs.append((a, b))
     return coeffs
-
-
-# ------------------------------------------------------------- vector helpers
-
-
-def cosine_sim(vec_a: Column, vec_b: Column) -> Column:
-    """Cosine similarity between two ARRAY<FLOAT/DOUBLE> columns using
-    JVM-side higher-order functions (no Python UDF). Sequential
-    left-to-right fold, same order DuckDB's list functions use."""
-    dot = F.aggregate(
-        F.zip_with(vec_a, vec_b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    na = F.sqrt(
-        F.aggregate(vec_a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    )
-    nb = F.sqrt(
-        F.aggregate(vec_b, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    )
-    return dot / (na * nb)

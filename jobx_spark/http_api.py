@@ -67,11 +67,26 @@ class _Handler(BaseHTTPRequestHandler):
 
     # ------------------------------------------------------------ routes
 
-    def do_GET(self):  # noqa: N802 - http.server API
+    def _route(self):
+        """(parsed url, decoded path segments). The path is split BEFORE
+        unquoting so a %2F inside a name can't inject a path separator;
+        each segment then decodes independently."""
         url = urlparse(self.path)
-        # split BEFORE unquoting so a %2F inside a name can't inject a
-        # path separator; each segment then decodes independently
-        parts = [unquote(p) for p in url.path.split("/") if p]
+        return url, [unquote(p) for p in url.path.split("/") if p]
+
+    def _request(self, workflow_name: str, request_id: str):
+        """The workflow's request, or None after answering 404."""
+        try:
+            return self.engine.get_request(workflow_name, request_id)
+        except KeyError:
+            self._send_json(
+                404,
+                {"error": f"unknown request {request_id} in workflow {workflow_name}"},
+            )
+            return None
+
+    def do_GET(self):  # noqa: N802 - http.server API
+        url, parts = self._route()
         if not parts:
             self._send_text(200, "Map me. Reduce me.\n")
             return
@@ -251,16 +266,8 @@ document.querySelector('form').addEventListener('submit', async (ev) => {
         """Sessions stored under a request's invocations (reference:
         mr_get_request_sessions over the SessionsTree). Fan-out-path
         sessions, capped like invocation forensics."""
-        try:
-            request = self.engine.get_request(request_id)
-        except KeyError:
-            self._send_json(404, {"error": f"unknown request {request_id}"})
-            return
-        if request.workflow_name != workflow_name:
-            self._send_json(
-                404,
-                {"error": f"request {request_id} not in workflow {workflow_name}"},
-            )
+        request = self._request(workflow_name, request_id)
+        if request is None:
             return
         trace = request.trace
         self._send_json(
@@ -280,16 +287,8 @@ document.querySelector('form').addEventListener('submit', async (ev) => {
         finished) its result envelope. The reference delivers async
         results only through result writers; polling is the natural
         HTTP companion and costs nothing (driver-side state lookup)."""
-        try:
-            request = self.engine.get_request(request_id)
-        except KeyError:
-            self._send_json(404, {"error": f"unknown request {request_id}"})
-            return
-        if request.workflow_name != workflow_name:
-            self._send_json(
-                404,
-                {"error": f"request {request_id} not in workflow {workflow_name}"},
-            )
+        request = self._request(workflow_name, request_id)
+        if request is None:
             return
         self._send_json(
             200,
@@ -303,10 +302,7 @@ document.querySelector('form').addEventListener('submit', async (ev) => {
         )
 
     def do_DELETE(self):  # noqa: N802 - http.server API
-        url = urlparse(self.path)
-        # split BEFORE unquoting so a %2F inside a name can't inject a
-        # path separator; each segment then decodes independently
-        parts = [unquote(p) for p in url.path.split("/") if p]
+        url, parts = self._route()
         if parts and parts[0] == "request" and len(parts) == 3:
             self._delete_request(parts[1], parts[2])
             return
@@ -334,10 +330,7 @@ document.querySelector('form').addEventListener('submit', async (ev) => {
         )
 
     def do_POST(self):  # noqa: N802 - http.server API
-        url = urlparse(self.path)
-        # split BEFORE unquoting so a %2F inside a name can't inject a
-        # path separator; each segment then decodes independently
-        parts = [unquote(p) for p in url.path.split("/") if p]
+        url, parts = self._route()
         if parts and parts[0] == "job" and len(parts) == 3:
             qs = parse_qs(url.query)
             blocking = qs.get("blocking", ["true"])[0] == "true"
@@ -387,16 +380,8 @@ document.querySelector('form').addEventListener('submit', async (ev) => {
         """Flat invocation listing (reference:
         mr_get_invocation_flat_list prints every invocation row of a
         request) — same records the graph renders, as plain JSON."""
-        try:
-            request = self.engine.get_request(request_id)
-        except KeyError:
-            self._send_json(404, {"error": f"unknown request {request_id}"})
-            return
-        if request.workflow_name != workflow_name:
-            self._send_json(
-                404,
-                {"error": f"request {request_id} not in workflow {workflow_name}"},
-            )
+        request = self._request(workflow_name, request_id)
+        if request is None:
             return
         trace = request.trace
         recs = trace.invocations if trace else []
@@ -423,16 +408,8 @@ document.querySelector('form').addEventListener('submit', async (ev) => {
     def _get_request_graph(self, workflow_name: str, request_id: str):
         from jobx_spark.trace import InvocationGraph
 
-        try:
-            request = self.engine.get_request(request_id)
-        except KeyError:
-            self._send_json(404, {"error": f"unknown request {request_id}"})
-            return
-        if request.workflow_name != workflow_name:
-            self._send_json(
-                404,
-                {"error": f"request {request_id} not in workflow {workflow_name}"},
-            )
+        request = self._request(workflow_name, request_id)
+        if request is None:
             return
         steps = self.engine.catalog.list_steps(workflow_name)
         graph = InvocationGraph(

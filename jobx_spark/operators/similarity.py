@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from jobx_spark.operators.dedup import cosine_from_scaled, scaled_dot, scaled_dot_udf
+from jobx_spark.operators.dedup import cosine_from_scaled, scaled_dot_udf
 from jobx_spark.sources import local_frame
 
 # hyperplane weights: w(plane j, dim i) = +1 if ((j*1000003 + i*7919) mod 97)
@@ -120,8 +120,8 @@ def _centroid_arrays(rows, scale: int | None = None):
 def _nearest_cells(mat, cent_ids, cv, cnorm_sqrt):
     """Vectorized nearest-centroid assignment over a (rows, dim) batch:
     returns (best_index_into_cent_ids, vnorm_s int64). The shared
-    numerics of :func:`_nearest_centroid_udf` and the fused Lloyd
-    update (:func:`_update_partials_gen`): per-element
+    numerics of :func:`_nearest_centroid_udf` and the Lloyd update
+    (:func:`_update_partials_gen`): per-element
     ``floor(x·c·1e12)`` int64 dots, cosine in IEEE doubles, undefined
     cosines (zero norm) = -inf so np.argmax ties to the LOWEST
     cent_id."""
@@ -144,65 +144,17 @@ def _nearest_cells(mat, cent_ids, cv, cnorm_sqrt):
     return np.argmax(cos, axis=1), vnorm_s, cos
 
 
-def _assign_update_arrays(mat, cent_ids, cv, cnorm_sqrt, scale: int):
-    """ONE Lloyd round's assign + update partials for a (rows, dim)
-    float64 batch — THE single definition of the per-chain numerics
-    (ADVICE r12 #1: :func:`_update_partials_gen` and
-    :func:`_multi_update_partials_gen` previously re-implemented this
-    inline; an edit to one could silently desynchronize the other and
-    break the bit-identical contract the PQ queries pin). Returns the
-    four parallel column arrays (cell, idx, s, n) of the non-empty
-    cells' integer partials: s = Σ floor(x·scale) int64 (exact,
-    order-free), n = rows assigned to the cell."""
-    bi, _, _ = _nearest_cells(mat, cent_ids, cv, cnorm_sqrt)
-    x = np.floor(mat * scale).astype(np.int64)
-    dim = mat.shape[1]
-    k = len(cent_ids)
-    sums = np.zeros((k, dim), dtype=np.int64)
-    np.add.at(sums, bi, x)
-    counts = np.bincount(bi, minlength=k).astype(np.int64)
-    ki = np.nonzero(counts > 0)[0]
-    return (
-        np.repeat(cent_ids[ki], dim),
-        np.tile(np.arange(dim, dtype=np.int32), len(ki)),
-        sums[ki].ravel(),
-        np.repeat(counts[ki], dim),
-    )
-
-
-def _update_partials_gen(cent_ids, cv, cnorm_sqrt, scale: int, vec_col: str):
+def _update_partials_gen(active, scale: int):
     """mapInPandas generator fusing one Lloyd round's ASSIGN + UPDATE
-    partials per Arrow batch: vectors cross the Python boundary once,
-    are assigned with :func:`_nearest_cells`, and the batch emits k·dim
-    partial rows (cell, idx, s=Σ floor(x·S) int64, n=rows-in-cell) —
-    the previous shape shipped the assignment struct back to the JVM
-    and re-exploded every vector element (rows·dim rows through an
-    interpreted floor + hash aggregate). Integer partials are exact and
-    order-free, so groupBy(cell, idx).sum reproduces the old
-    posexplode aggregation bit-for-bit."""
-
-    def gen(pdfs):
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack(pdf[vec_col].values).astype(np.float64)
-            cell, idx, s, n = _assign_update_arrays(
-                mat, cent_ids, cv, cnorm_sqrt, scale
-            )
-            yield pd.DataFrame({"cell": cell, "idx": idx, "s": s, "n": n})
-
-    return gen
-
-
-def _multi_update_partials_gen(active, scale: int):
-    """mapInPandas generator fusing one Lloyd round of SEVERAL
-    independent k-means chains into one boundary crossing: ``active``
-    is [(chain_index, vec_col, cent_ids, cv, cnorm_sqrt), ...] and each
-    Arrow batch emits every chain's (sub, cell, idx, s, n) integer
-    partials — per chain the exact rows :func:`_update_partials_gen`
-    produces, tagged with the chain index so one aggregation serves all
-    chains. Chains are independent, so fusing cannot change any
-    value."""
+    partials of SEVERAL independent k-means chains into one boundary
+    crossing: ``active`` is [(chain_index, vec_col, cent_ids, cv,
+    cnorm_sqrt), ...] and each Arrow batch emits, per chain, the
+    non-empty cells' (sub, cell, idx, s=Σ floor(x·S) int64,
+    n=rows-in-cell) partials, tagged with the chain index so one
+    aggregation serves all chains. Vectors cross the Python boundary
+    once and never re-explode per element in the JVM; integer partials
+    are exact and order-free, and chains are independent, so fusing
+    cannot change any value."""
 
     def gen(pdfs):
         for pdf in pdfs:
@@ -211,17 +163,22 @@ def _multi_update_partials_gen(active, scale: int):
             frames = []
             for i, col, cent_ids, cv, cnorm_sqrt in active:
                 mat = np.stack(pdf[col].values).astype(np.float64)
-                cell, idx, s, n = _assign_update_arrays(
-                    mat, cent_ids, cv, cnorm_sqrt, scale
-                )
+                bi, _, _ = _nearest_cells(mat, cent_ids, cv, cnorm_sqrt)
+                dim, k = mat.shape[1], len(cent_ids)
+                sums = np.zeros((k, dim), dtype=np.int64)
+                np.add.at(sums, bi, np.floor(mat * scale).astype(np.int64))
+                counts = np.bincount(bi, minlength=k).astype(np.int64)
+                ki = np.nonzero(counts > 0)[0]
                 frames.append(
                     pd.DataFrame(
                         {
-                            "sub": np.full(len(cell), i, dtype=np.int32),
-                            "cell": cell,
-                            "idx": idx,
-                            "s": s,
-                            "n": n,
+                            "sub": np.full(len(ki) * dim, i, dtype=np.int32),
+                            "cell": np.repeat(cent_ids[ki], dim),
+                            "idx": np.tile(
+                                np.arange(dim, dtype=np.int32), len(ki)
+                            ),
+                            "s": sums[ki].ravel(),
+                            "n": np.repeat(counts[ki], dim),
                         }
                     )
                 )
@@ -231,7 +188,7 @@ def _multi_update_partials_gen(active, scale: int):
     return gen
 
 
-def kmeans_train_multi(
+def kmeans_train(
     mat: DataFrame,
     vec_cols: list[str],
     k: int = 8,
@@ -240,22 +197,34 @@ def kmeans_train_multi(
     cent_base: int = 10,
     scale: int = 10**6,
 ) -> list[DataFrame]:
-    """Train one :func:`kmeans_train` chain PER COLUMN of ``mat`` with
-    every chain's Lloyd round fused into ONE job (guide §2.4, §1.2-1):
-    the PQ queries train 4-5 independent subspace codebooks over the
-    same materialized projection, which as concurrent single-column
-    chains costs 4-5 scans + 4-5 (tiny) update jobs per round; fused,
-    each round is one scan of the needed columns emitting every chain's
-    tagged integer partials through one boundary crossing and one
-    map-side-combined (sub, cell, idx) aggregation.
+    """Deterministic spherical k-means for IVF and PQ codebook
+    training: one independent chain PER COLUMN of ``mat``, each
+    returned as its trained (cent_id, cv) centroid table (the input
+    :func:`ivf_assign` and :func:`ivf_topk` expect), index-aligned with
+    ``vec_cols``.
 
-    Returns the (cent_id, cv) centroid table per column, index-aligned
-    with ``vec_cols`` — each bit-identical to ``kmeans_train(
-    mat.select(id, col as embedding), ..., output="centroids")``: the
-    seeds are the same filter+floor rows, each chain's assignment uses
-    :func:`_nearest_cells` on the same data, the summed partials are
-    the same order-free int64 sums, and the update division stays the
-    same Spark ``div`` applied per (sub, cell, idx)."""
+    Cross-engine exactness (the reason this is hash-verifiable when
+    textbook float k-means is not): centroids live as scaled-INTEGER
+    vectors — init ``floor(x·S)`` from the `k` seed vectors (ids
+    ``cent_base..cent_base+k``), update ``Σ floor(x·S) // count`` per
+    dimension (exact int64) — and assignment uses the same scaled-dot
+    cosine as the rest of the similarity stack, with ties to the lowest
+    cent_id. Every operation is either integer or a deterministic IEEE
+    double op on identical inputs, so DuckDB running the same unrolled
+    rounds reproduces bit-identical centroids. A cell that no vector
+    picks dies for the rest of its chain.
+
+    Scale shape: one seed collect (k rows, every chain's slice), then
+    ONE Spark job per Lloyd round for ALL chains — a scan of the needed
+    columns emitting every chain's tagged integer partials through one
+    boundary crossing (:func:`_update_partials_gen`) and one
+    map-side-combined (sub, cell, idx) aggregation whose ≤ chains·k·dim
+    rows are collected back. The centroid matrices live on the DRIVER
+    and ship in the task closure, so assignment is a pure map: no join,
+    no broadcast exchange, no corpus shuffle. The update division stays
+    a Spark ``div`` so its truncation is byte-identical to the SQL
+    oracle's. A restart replays from the deterministic seed, so no
+    checkpoint is needed."""
     spark = mat.sparkSession
     ncols = len(vec_cols)
     seed_rows = (
@@ -290,7 +259,7 @@ def kmeans_train_multi(
             active.append((i, col, cent_ids, cvm, cnorm_sqrt))
         if not active:
             break
-        gen = _multi_update_partials_gen(active, scale)
+        gen = _update_partials_gen(active, scale)
         cols_needed = list(dict.fromkeys(col for _, col, *_ in active))
         upd_rows = (
             mat.select(*cols_needed)
@@ -411,6 +380,7 @@ def ivf_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     extra_cols: tuple[str, ...] = (),
+    with_cosine: bool = False,
 ) -> DataFrame:
     """Assign each vector to its nearest centroid by cosine (IVF coarse
     quantization). The k-row centroid table is collected to the driver
@@ -418,7 +388,9 @@ def ivf_assign(
     assignment is a pure map — no join, no shuffle; ties to the lowest
     cent_id exactly as before.
 
-    Output (id, v, norm_s, *extra_cols, cell). ``extra_cols`` carries
+    Output (id, v, norm_s, *extra_cols, cell), plus the vector's
+    ``cosine`` to its cell's centroid (NULL when undefined) when
+    ``with_cosine`` is set. ``extra_cols`` carries
     per-vector metadata (e.g. the label an index stores for filtered
     search) THROUGH the assignment — the alternative, joining the
     assignment back to the corpus on id, is a corpus-to-corpus shuffle
@@ -428,16 +400,18 @@ def ivf_assign(
     """
     crows = centroids.select("cent_id", "cv").collect()
     cent_ids, cvm, cnorm_sqrt = _centroid_arrays(crows)
-    best = _nearest_centroid_udf(cent_ids, cvm, cnorm_sqrt, with_cosine=False)
+    best = _nearest_centroid_udf(cent_ids, cvm, cnorm_sqrt, with_cosine)
     v = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"), *extra_cols
     )
+    cos = ["cosine"] if with_cosine else []
     if len(crows) == 0:
         return (
             v.withColumn("norm_s", _sdot(F.col("v"), F.col("v")))
             .withColumn("cell", F.lit(None).cast("long"))
+            .withColumn("cosine", F.lit(None).cast("double"))
             .filter(F.lit(False))
-            .select("id", "v", "norm_s", *extra_cols, "cell")
+            .select("id", "v", "norm_s", *extra_cols, "cell", *cos)
         )
     return v.withColumn("b", best(F.col("v"))).select(
         "id",
@@ -445,6 +419,7 @@ def ivf_assign(
         F.col("b.norm_s").alias("norm_s"),
         *extra_cols,
         F.col("b.cell").alias("cell"),
+        *[F.col(f"b.{c}").alias(c) for c in cos],
     )
 
 
@@ -506,114 +481,6 @@ def ivf_topk(
     )
 
 
-def kmeans_train(
-    df: DataFrame,
-    k: int = 8,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cent_base: int = 10,
-    scale: int = 10**6,
-    output: str = "assignments",
-) -> DataFrame:
-    """Deterministic spherical k-means for IVF centroid training —
-    (vec_id, cell, cosine): each vector's final cell and its cosine to
-    that cell's centroid after exactly `iters` Lloyd rounds. With
-    ``output="centroids"`` returns the trained (cent_id, cv) table
-    instead — the input :func:`ivf_topk` expects.
-
-    Cross-engine exactness (the reason this is hash-verifiable when
-    textbook float k-means is not): centroids live as scaled-INTEGER
-    vectors — init ``floor(x·S)`` from the `k` seed vectors (ids
-    ``cent_base..cent_base+k``), update ``Σ floor(x·S) // count`` per
-    dimension (exact int64) — and assignment uses the same scaled-dot
-    cosine as the rest of the similarity stack, with ties to the lowest
-    cent_id. Every operation is either integer or a deterministic IEEE
-    double op on identical inputs, so DuckDB running the same unrolled
-    rounds reproduces bit-identical centroids and assignments.
-
-    Scale shape per round: the k·dim scaled-int centroid matrix lives
-    on the DRIVER (bounded by k and dim, never the corpus) and ships in
-    the task closure, so assignment is a pure map — no join, no
-    broadcast exchange, no corpus shuffle; the update is one posexplode
-    + (cell, dim)-keyed aggregation (map-side partial) whose k·dim
-    output rows are collected back. One Spark job per Lloyd round (the
-    previous shape paid a broadcast join, a full-corpus groupBy(id)
-    shuffle carrying the vectors, and a parquet lineage-cut round-trip
-    per round). Driver never sees corpus vectors; a restart replays
-    from the deterministic seed, so no checkpoint is needed.
-    """
-    spark = df.sparkSession
-    e = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    # Seed centroids: k rows collected to the driver (bounded by k,
-    # never the corpus) — the whole Lloyd loop iterates driver-side on
-    # k·dim integers, so each round is ONE job whose only shuffle is
-    # the map-side-combined (cell, dim) update aggregate.
-    seed_rows = (
-        e.filter((F.col("id") >= cent_base) & (F.col("id") < cent_base + k))
-        .select(
-            (F.col("id") - cent_base).alias("cent_id"),
-            F.transform(
-                "v", lambda x: F.floor(x.cast("double") * scale).cast("long")
-            ).alias("cv_s"),
-        )
-        .collect()
-    )
-    cents = {int(r["cent_id"]): list(r["cv_s"]) for r in seed_rows}
-
-    def assign_col(with_cosine: bool):
-        rows = [{"cent_id": c, "cv_s": cents[c]} for c in sorted(cents)]
-        cent_ids, cvm, cnorm_sqrt = _centroid_arrays(rows, scale=scale)
-        return _nearest_centroid_udf(
-            cent_ids, cvm, cnorm_sqrt, with_cosine=with_cosine
-        )(F.col("v"))
-
-    for _ in range(iters):
-        if not cents:
-            break
-        # One job per round, ONE boundary crossing: the mapInPandas
-        # batch assigns cells and emits k·dim integer partials directly
-        # (the previous shape returned the assignment struct to the JVM
-        # and re-exploded rows·dim elements through an interpreted
-        # floor + hash aggregate). Partials are exact int64 sums —
-        # order-free — and the integer division stays a Spark `div` so
-        # its truncation semantics are byte-identical.
-        rows = [{"cent_id": c, "cv_s": cents[c]} for c in sorted(cents)]
-        cent_ids, cvm, cnorm_sqrt = _centroid_arrays(rows, scale=scale)
-        gen = _update_partials_gen(cent_ids, cvm, cnorm_sqrt, scale, "v")
-        upd_rows = (
-            e.select("v")
-            .mapInPandas(gen, "cell long, idx int, s long, n long")
-            .groupBy("cell", "idx")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .select("cell", "idx", F.expr("s div n").alias("val_s"))
-            .collect()
-        )
-        nxt: dict[int, dict[int, int]] = {}
-        for r in upd_rows:
-            nxt.setdefault(int(r["cell"]), {})[int(r["idx"])] = int(r["val_s"])
-        cents = {
-            cell: [vals[i] for i in sorted(vals)] for cell, vals in nxt.items()
-        }
-    if output == "centroids":
-        return local_frame(
-            spark,
-            [
-                {"cent_id": c, "cv": [v / scale for v in cents[c]]}
-                for c in sorted(cents)
-            ],
-            "cent_id bigint, cv array<double>",
-        )
-    if not cents:
-        return local_frame(spark, [], "vec_id long, cell bigint, cosine double")
-    final = e.withColumn("b", assign_col(with_cosine=True))
-    return final.select(
-        F.col("id").alias("vec_id"),
-        F.col("b.cell").alias("cell"),
-        F.col("b.cosine").alias("cosine"),
-    )
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -621,9 +488,15 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
+    label_col: str | None = None,
 ) -> DataFrame:
     """Exact cosine top-k, corpus-scan-once. Output
-    (query_id, vec_id, rank, cosine); ids must be integral.
+    (query_id, vec_id, rank, cosine); ids must be integral. With
+    ``label_col`` set (on both frames), each query ranks only corpus
+    vectors whose label differs from its own: exact top-k HARD
+    NEGATIVES, the mining step that builds contrastive/retrieval
+    training pairs (negatives that are hard because they look like
+    positives).
 
     The query set is small by contract (a probe set — the same bound
     that justified broadcasting it); it is collected into a numpy
@@ -635,7 +508,9 @@ def brute_force_topk(
     ranking carries ≤ batches·|Q|·k candidate rows instead of |corpus|·
     |Q| scored pairs. That map-side k-selection is what makes exact
     brute force viable as the verification pass at 100 TB; for query
-    sets too large for one closure, chunk them and union.
+    sets too large for one closure, chunk them and union. The label
+    mask applies during the scan, not as a post-rank filter (which
+    would under-fill k).
 
     Numerics are bit-identical to :func:`jobx_spark.operators.dedup.
     scaled_dot` / ``cosine_from_scaled``: per-element
@@ -645,14 +520,16 @@ def brute_force_topk(
     comparator (cosine desc, vec_id asc) matches the final ranking, so
     the global result is exactly the full-scored answer.
 
-    Zero-norm vectors (cosine undefined) are masked like
-    :func:`hard_negative_topk` does (ADVICE r7/r8): zero-norm queries
+    Zero-norm vectors (cosine undefined) are masked: zero-norm queries
     produce no rows, zero-norm corpus vectors never rank — otherwise a
     single zero vector yields NaN cosines with engine-dependent
     ordering against the SQL oracles, whose base CTEs carry the
     matching ``WHERE norm_s > 0`` mask."""
+    labels = [label_col] if label_col else []
     qrows = queries.select(
-        F.col(query_id_col).alias("qid"), F.col(vec_col).alias("qv")
+        F.col(query_id_col).alias("qid"),
+        F.col(vec_col).alias("qv"),
+        *[F.col(c).alias("qlabel") for c in labels],
     ).collect()
     if not qrows:
         return local_frame(
@@ -660,6 +537,10 @@ def brute_force_topk(
             [], "query_id long, vec_id long, rank int, cosine double"
         )
     qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
+    # no int64 cast on labels: string/any-typed label columns compare
+    # fine via numpy object equality, and a hard cast raised inside
+    # the Arrow worker for non-integer labels
+    qlabels = np.array([r["qlabel"] for r in qrows]) if label_col else None
     qmat = np.array([r["qv"] for r in qrows], dtype=np.float64)  # (nq, dim)
     qnorm_sqrt = np.sqrt(
         np.floor((qmat * qmat) * 1e12).astype(np.int64).sum(axis=1).astype(np.float64)
@@ -679,6 +560,8 @@ def brute_force_topk(
             )
             # zero-norm corpus rows masked (cosine undefined)
             valid = cnorm_sqrt != 0.0
+            if label_col:
+                clabels = pdf[label_col].to_numpy()[valid]
             if not valid.all():
                 ids, mat, cnorm_sqrt = ids[valid], mat[valid], cnorm_sqrt[valid]
             if len(ids) == 0:
@@ -688,17 +571,23 @@ def brute_force_topk(
                 if qnorm_sqrt[j] == 0.0:
                     # zero-norm query: cosine undefined for every row
                     continue
+                qi, qm, qc = ids, mat, cnorm_sqrt
+                if label_col:
+                    other = clabels != qlabels[j]
+                    if not other.any():
+                        continue
+                    qi, qm, qc = ids[other], mat[other], cnorm_sqrt[other]
                 dot = (
-                    np.floor((mat * qmat[j]) * 1e12)
+                    np.floor((qm * qmat[j]) * 1e12)
                     .astype(np.int64)
                     .sum(axis=1)
                     .astype(np.float64)
                 )
-                cos = dot / (qnorm_sqrt[j] * cnorm_sqrt)
+                cos = dot / (qnorm_sqrt[j] * qc)
                 # local top-k with the FINAL comparator (cos desc, id asc)
-                keep = np.lexsort((ids, -cos))[:k]
+                keep = np.lexsort((qi, -cos))[:k]
                 out_q.append(np.full(len(keep), qids[j], dtype=np.int64))
-                out_id.append(ids[keep])
+                out_id.append(qi[keep])
                 out_cos.append(cos[keep])
             if not out_q:
                 continue
@@ -710,7 +599,7 @@ def brute_force_topk(
                 }
             )
 
-    cand = corpus.select(id_col, vec_col).mapInPandas(
+    cand = corpus.select(id_col, *labels, vec_col).mapInPandas(
         score_partition, schema="qid long, vec_id long, cosine double"
     )
     w = W.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
@@ -955,103 +844,3 @@ def power_iteration_top(
     w = [sum(gn[i][j] * v[j] for j in range(dim)) for i in range(dim)]
     lam_s = max(abs(x) for x in w) // ((max(abs(x) for x in v) // 1000) + 1)
     return v, lam_s
-
-
-def hard_negative_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Exact top-k HARD NEGATIVES per query: highest-cosine corpus
-    vectors whose label differs from the query's — the mining step
-    that builds contrastive/retrieval training pairs (the negatives
-    that are hard precisely because they look like positives).
-
-    Same corpus-scan-once shape as :func:`brute_force_topk` (queries +
-    their labels ship in the task closure; each Arrow batch scores all
-    queries vectorized and keeps its local top-k AFTER masking
-    same-label rows), so the shuffle carries ≤ batches·|Q|·k candidate
-    rows — never |corpus|·|Q| scored pairs. The label mask is applied
-    during the scan, not by a post-rank filter (which would under-fill
-    k), and numerics are bit-identical to the brute-force ranker.
-    """
-    qrows = queries.select(
-        F.col(query_id_col).alias("qid"),
-        F.col(vec_col).alias("qv"),
-        F.col(label_col).alias("qlabel"),
-    ).collect()
-    if not qrows:
-        return local_frame(
-            corpus.sparkSession,
-            [], "query_id long, vec_id long, rank int, cosine double"
-        )
-    qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
-    # no int64 cast on labels: string/any-typed label columns compare
-    # fine via numpy object equality, and a hard cast raised inside
-    # the Arrow worker for non-integer labels [ADVICE r6]
-    qlabels = np.array([r["qlabel"] for r in qrows])
-    qmat = np.array([r["qv"] for r in qrows], dtype=np.float64)
-    qnorm_sqrt = np.sqrt(
-        np.floor((qmat * qmat) * 1e12).astype(np.int64).sum(axis=1).astype(np.float64)
-    )
-
-    def score_partition(pdfs):
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            labels = pdf[label_col].to_numpy()
-            mat = np.stack(pdf[vec_col].values).astype(np.float64)
-            cnorm_sqrt = np.sqrt(
-                np.floor((mat * mat) * 1e12)
-                .astype(np.int64)
-                .sum(axis=1)
-                .astype(np.float64)
-            )
-            out_q, out_id, out_cos = [], [], []
-            for j in range(len(qids)):
-                if qnorm_sqrt[j] == 0.0:
-                    # zero-norm query: cosine is undefined for every
-                    # corpus row — emit nothing rather than NaN ranks
-                    continue
-                # zero-norm corpus rows masked like same-label rows:
-                # their cosine is undefined, so they can never be a
-                # valid hard negative [ADVICE r6]
-                keepmask = (labels != qlabels[j]) & (cnorm_sqrt != 0.0)
-                if not keepmask.any():
-                    continue
-                mids = ids[keepmask]
-                dot = (
-                    np.floor((mat[keepmask] * qmat[j]) * 1e12)
-                    .astype(np.int64)
-                    .sum(axis=1)
-                    .astype(np.float64)
-                )
-                cos = dot / (qnorm_sqrt[j] * cnorm_sqrt[keepmask])
-                keep = np.lexsort((mids, -cos))[:k]
-                out_q.append(np.full(len(keep), qids[j], dtype=np.int64))
-                out_id.append(mids[keep])
-                out_cos.append(cos[keep])
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "qid": np.concatenate(out_q),
-                    "vec_id": np.concatenate(out_id),
-                    "cosine": np.concatenate(out_cos),
-                }
-            )
-
-    cand = corpus.select(id_col, label_col, vec_col).mapInPandas(
-        score_partition, schema="qid long, vec_id long, cosine double"
-    )
-    w = W.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("qid").alias("query_id"), "vec_id", "rank", "cosine")
-    )

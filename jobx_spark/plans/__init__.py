@@ -112,25 +112,6 @@ def scan_for(plan: str, table: str) -> ScanInfo | None:
     return None
 
 
-def plan_report(df: DataFrame) -> dict:
-    """One-glance summary used by tests and the plan audit."""
-    plan = plan_str(df)
-    return {
-        "nodes": node_names(plan),
-        "shuffles": count_shuffles(plan),
-        "broadcasts": count_nodes(plan, "BroadcastExchange"),
-        "codegen_stages": codegen_stage_count(plan),
-        "scans": [
-            {
-                "location": s.location.rsplit("/", 1)[-1].rstrip("]"),
-                "pushed_filters": s.pushed_filters,
-                "read_columns": s.read_columns,
-            }
-            for s in scans(plan)
-        ],
-    }
-
-
 # ---- window-partition audit (VERDICT r7 #2) -------------------------------
 #
 # WindowExec co-locates ALL rows of one partition key in a single task;

@@ -65,20 +65,13 @@ COLLECT_BOUNDS: dict[tuple[str, str, str], tuple[int, str]] = {
     ),
     ("jobx_spark/operators/similarity.py", "kmeans_train", "collect"): (
         2,
-        "driver-side Lloyd state: the seed collect is k rows and each "
-        "round's update collect is ≤ k·dim (cell, idx, val_s) rows — "
-        "both bounded by k and the embedding dimension, never the "
-        "corpus; the centroid matrix then ships in the task closure so "
-        "assignment is a pure map (no join, no corpus shuffle)",
-    ),
-    ("jobx_spark/operators/similarity.py", "kmeans_train_multi", "collect"): (
-        2,
-        "driver-side Lloyd state for the FUSED multi-chain trainer: the "
-        "seed collect is k rows (all chains' seed slices in one pass) "
-        "and each round's update collect is ≤ chains·k·dim (sub, cell, "
-        "idx, val_s) rows — bounded by the chain count (≤5), k and the "
-        "embedding dimension, never the corpus; same contract as "
-        "kmeans_train, one job per round for ALL chains",
+        "driver-side Lloyd state: the seed collect is k rows (every "
+        "chain's seed slice in one pass) and each round's update "
+        "collect is ≤ chains·k·dim (sub, cell, idx, val_s) rows — "
+        "bounded by the chain count (≤5), k and the embedding "
+        "dimension, never the corpus; the centroid matrices then ship "
+        "in the task closure so assignment is a pure map (no join, no "
+        "corpus shuffle)",
     ),
     ("jobx_spark/operators/similarity.py", "ivf_assign", "collect"): (
         1,
@@ -89,14 +82,10 @@ COLLECT_BOUNDS: dict[tuple[str, str, str], tuple[int, str]] = {
     ),
     ("jobx_spark/operators/similarity.py", "brute_force_topk", "collect"): (
         1,
-        "probe query set: small by documented contract (it ships in the "
-        "task closure; callers chunk-and-union larger sets) — the bound "
-        "that also justified broadcasting it",
-    ),
-    ("jobx_spark/operators/similarity.py", "hard_negative_topk", "collect"): (
-        1,
-        "probe query set + labels: same small-by-contract closure "
-        "shipping as brute_force_topk",
+        "probe query set (+ labels when masking same-label rows): small "
+        "by documented contract (it ships in the task closure; callers "
+        "chunk-and-union larger sets) — the bound that also justified "
+        "broadcasting it",
     ),
     ("jobx_spark/oracle.py", "compare", "toPandas"): (
         1,

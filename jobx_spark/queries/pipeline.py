@@ -2064,12 +2064,6 @@ DSIR_TAU = 2 * DSIR_K  # mean ratio ≥ 2 ⇒ always accepted
 DSIR_TARGET = "src0"
 
 
-def _dsir_grams(text_col) -> "F.Column":
-    from jobx_spark.operators.text import shingles
-
-    return F.concat(tokens(text_col), shingles(text_col, 2))
-
-
 def pipe_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jobx_spark.lineage import cut_lineage
 

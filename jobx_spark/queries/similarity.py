@@ -195,13 +195,23 @@ ORDER BY query_id, rank
 KM_K, KM_ITERS, KM_BASE, KM_SCALE = 8, 3, 10, 10**6
 
 
-def ann_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jobx_spark.operators.similarity import kmeans_train
+def _kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, cell, cosine): each embedding's cell after the KM_ITERS
+    Lloyd rounds and its cosine to that cell's centroid."""
+    from jobx_spark.operators.similarity import ivf_assign, kmeans_train
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return kmeans_train(
-        emb, k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE
-    ).orderBy("vec_id")
+    cents = kmeans_train(
+        emb, ["embedding"], k=KM_K, iters=KM_ITERS, cent_base=KM_BASE,
+        scale=KM_SCALE,
+    )[0]
+    return ivf_assign(emb, cents, with_cosine=True).select(
+        F.col("id").alias("vec_id"), "cell", "cosine"
+    )
+
+
+def ann_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _kmeans_assignments(spark, sf_dir).orderBy("vec_id")
 
 
 def _kmeans_ctes(
@@ -288,13 +298,13 @@ ORDER BY vec_id
 # candidates, never |corpus|·|Q| scored pairs.
 # --------------------------------------------------------------------------
 def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jobx_spark.operators.similarity import hard_negative_topk
-
     emb = load_table(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "embedding", "label"
     )
-    return hard_negative_topk(emb, qs, k=K).orderBy("query_id", "rank")
+    return brute_force_topk(emb, qs, k=K, label_col="label").orderBy(
+        "query_id", "rank"
+    )
 
 
 ORACLE_ANN_HARD_NEGATIVES = f"""
@@ -303,7 +313,7 @@ WITH e0 AS (
          {_SDOT.format(a='embedding', b='embedding')} AS norm_s
   FROM embeddings
 ), e AS (
-  -- zero-norm mask mirrored from hard_negative_topk (ADVICE r7): the
+  -- zero-norm mask mirrored from brute_force_topk (ADVICE r7): the
   -- Spark side skips zero-norm queries and masks zero-norm corpus rows
   -- (cosine undefined); without this filter the oracle divides by zero
   -- the moment the dataset contains a zero vector
@@ -348,9 +358,9 @@ def ann_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = kmeans_train(
-        emb, k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
-        output="centroids",
-    )
+        emb, ["embedding"], k=KM_K, iters=KM_ITERS,
+        cent_base=KM_BASE, scale=KM_SCALE,
+    )[0]
     sizes = (
         ivf_assign(emb, centroids)
         .groupBy("cell")
@@ -412,9 +422,9 @@ def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = kmeans_train(
-        emb, k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
-        output="centroids",
-    )
+        emb, ["embedding"], k=KM_K, iters=KM_ITERS,
+        cent_base=KM_BASE, scale=KM_SCALE,
+    )[0]
     return ivf_topk(
         emb, _probe_queries(emb), centroids, k=K, nprobe=KM_NPROBE
     ).orderBy("query_id", "rank")
@@ -489,15 +499,9 @@ ORDER BY query_id, rank
 # deterministic IEEE product, so rows hash-verify.
 # --------------------------------------------------------------------------
 def ann_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jobx_spark.operators.similarity import kmeans_train
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    asg = kmeans_train(
-        emb, k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
-        output="assignments",
-    )
     return (
-        asg.withColumn(
+        _kmeans_assignments(spark, sf_dir)
+        .withColumn(
             "band", F.floor(F.col("cosine") * F.lit(10.0)).cast("long")
         )
         .groupBy("cell", "band")
@@ -548,9 +552,9 @@ def ann_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the label rides THROUGH the pure-map assignment (ivf_assign
     # extra_cols) instead of a corpus self-join on vec_id (guide §2.4)
     cents = kmeans_train(
-        emb, k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
-        output="centroids",
-    )
+        emb, ["embedding"], k=KM_K, iters=KM_ITERS,
+        cent_base=KM_BASE, scale=KM_SCALE,
+    )[0]
     cl = (
         ivf_assign(emb, cents, extra_cols=("label",))
         .groupBy("cell", "label")
@@ -638,9 +642,9 @@ def ann_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.filter(F.col("vec_id") % APPEND_MOD != APPEND_RES)
     batch = emb.filter(F.col("vec_id") % APPEND_MOD == APPEND_RES)
     centroids = kmeans_train(
-        base, k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
-        output="centroids",
-    )
+        base, ["embedding"], k=KM_K, iters=KM_ITERS,
+        cent_base=KM_BASE, scale=KM_SCALE,
+    )[0]
     # the persisted index: base assignments materialize ONCE (at scale
     # this is the stored (cell)-bucketed table, not a computation)
     base_idx = cut_lineage(_cells(base, centroids), "ivfa-index")
@@ -897,9 +901,9 @@ def ann_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = _probe_queries(emb)
     centroids = kmeans_train(
-        emb, k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
-        output="centroids",
-    )
+        emb, ["embedding"], k=KM_K, iters=KM_ITERS,
+        cent_base=KM_BASE, scale=KM_SCALE,
+    )[0]
     # ONE assignment pass and ONE truth pass serve every sweep point
     # (lineage-cut, the PQ device) — without this, each union leg
     # re-scans the corpus for its own cells and ground truth
@@ -2673,16 +2677,15 @@ def ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sdot,
         cosine_from_scaled,
         ivf_assign,
-        kmeans_train_multi,
+        kmeans_train,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     subs, _, mat = _pq_subspaces(emb)
     # all 4 subspace codebooks out of ONE fused Lloyd chain — each
     # round is one scan + one tagged-partials aggregation instead of 4
-    # concurrent single-column chains (guide §2.4, §1.2-1; values
-    # per-chain bit-identical, see kmeans_train_multi)
-    cents = kmeans_train_multi(
+    # concurrent single-column chains (guide §2.4, §1.2-1)
+    cents = kmeans_train(
         mat, [f"sub{s}" for s in range(PQ_SUB)],
         k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
     )
@@ -2739,7 +2742,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jobx_spark.operators.similarity import (
         _sdot,
         ivf_assign,
-        kmeans_train_multi,
+        kmeans_train,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2747,7 +2750,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Train ONCE per subspace (assignment reuses the trained centroids
     # via the shared pure-map assigner rather than re-running the Lloyd
     # rounds), all 4 chains FUSED into one job per round (guide §2.4).
-    cents = kmeans_train_multi(
+    cents = kmeans_train(
         mat, [f"sub{s}" for s in range(PQ_SUB)],
         k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
     )
@@ -2834,14 +2837,14 @@ def ann_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sdot,
         cosine_from_scaled,
         ivf_assign,
-        kmeans_train_multi,
+        kmeans_train,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     subs, full, mat = _pq_subspaces(emb, with_full=True)
     # all 4 subspace chains fused into one job per Lloyd round (guide
-    # §2.4; values per-chain bit-identical, see kmeans_train_multi)
-    cents = kmeans_train_multi(
+    # §2.4)
+    cents = kmeans_train(
         mat, [f"sub{s}" for s in range(PQ_SUB)],
         k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
     )
@@ -2965,14 +2968,14 @@ ORDER BY query_id, rank
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from jobx_spark.operators.similarity import kmeans_train_multi
+    from jobx_spark.operators.similarity import kmeans_train
 
     emb = load_table(spark, sf_dir, "embeddings")
     subs, full, mat = _pq_subspaces(emb, with_full=True)
     # coarse (full-vector) chain + 4 subspace chains, ALL fused into
     # one job per Lloyd round over the one materialized projection
-    # (guide §2.4; values per-chain bit-identical, kmeans_train_multi)
-    trained = kmeans_train_multi(
+    # (guide §2.4)
+    trained = kmeans_train(
         mat, ["embedding"] + [f"sub{s}" for s in range(PQ_SUB)],
         k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
     )
@@ -3117,15 +3120,14 @@ def ann_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _centroid_arrays,
         _residual_subs_udf,
         kmeans_train,
-        kmeans_train_multi,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     full = cut_lineage(emb.select("vec_id", "embedding"), "ivfpq-res-base")
     coarse = kmeans_train(
-        full, k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
-        output="centroids",
-    )
+        full, ["embedding"], k=KM_K, iters=KM_ITERS,
+        cent_base=KM_BASE, scale=KM_SCALE,
+    )[0]
     # one residual materialization feeds the 4 subspace chains AND the
     # candidate cell map — the corpus is never rescanned per chain, and
     # the assignment + residual subtract + subspace slices are FUSED in
@@ -3145,9 +3147,8 @@ def ann_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pq-resid",
     )
     # the 4 residual-subspace chains fused into one job per Lloyd
-    # round over the residual materialization (guide §2.4; values
-    # per-chain bit-identical, see kmeans_train_multi)
-    sub_cents = kmeans_train_multi(
+    # round over the residual materialization (guide §2.4)
+    sub_cents = kmeans_train(
         mat, [f"sub{s}" for s in range(PQ_SUB)],
         k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
     )
@@ -3341,9 +3342,9 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jobx_spark.operators.similarity import ivf_assign
 
     cents = kmeans_train(
-        emb, k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
-        output="centroids",
-    )
+        emb, ["embedding"], k=KM_K, iters=KM_ITERS,
+        cent_base=KM_BASE, scale=KM_SCALE,
+    )[0]
     members = cut_lineage(  # consumed by both sides of the pair join
         ivf_assign(emb, cents).select(
             F.col("id").alias("vec_id"),
@@ -3908,8 +3909,8 @@ ORDER BY c.shard, c.step
 #     iterations and touches the corpus ONLY through the pruned index
 #     scan; the embeddings table appears once, filter-pushed to the
 #     N_QUERIES probe rows (the query batch is the serving input, not
-#     the corpus). tests/test_r10_additions.py pins both properties
-#     from the executed plan.
+#     the corpus). tests/test_artifacts.py pins both properties from
+#     the executed plan.
 #
 # 100 TB story: build cost is the one-off training + one bucketed
 # write; serve cost is nprobe partitions of the index + a k-row
@@ -3926,9 +3927,9 @@ def _train_centroids(
     from jobx_spark.operators.similarity import kmeans_train
 
     kmeans_train(
-        corpus, k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
-        output="centroids",
-    ).write.mode("overwrite").parquet(cpath)
+        corpus, ["embedding"], k=KM_K, iters=KM_ITERS,
+        cent_base=KM_BASE, scale=KM_SCALE,
+    )[0].write.mode("overwrite").parquet(cpath)
     return spark.read.parquet(cpath)
 
 
@@ -4438,7 +4439,7 @@ ORDER BY cell
 # callout: ann_ivf_pq_residual_topk's 15 s is "five concurrent k-means
 # trainings; would drop to ~nothing under a persisted-index
 # contract"). Build trains the PQ_SUB subspace codebooks once
-# (fused into one job per Lloyd round, kmeans_train_multi), persists
+# (fused into one job per Lloyd round, kmeans_train), persists
 #   * `codebooks` (s, cent_id, cv) — PQ_SUB·KM_K rows, the artifact a
 #     serving tier broadcasts, and
 #   * `codes` (s, vec_id, cell) — the PQ-compressed corpus, the
@@ -4457,13 +4458,13 @@ ORDER BY cell
 def _pq_index_write(
     spark: SparkSession, sf_dir: str, bpath: str, cpath: str
 ) -> None:
-    from jobx_spark.operators.similarity import kmeans_train_multi
+    from jobx_spark.operators.similarity import kmeans_train
 
     emb = load_table(spark, sf_dir, "embeddings")
     subs, _, mat = _pq_subspaces(emb)
     # all 4 subspace codebooks out of ONE fused Lloyd chain (guide
-    # §2.4; values per-chain bit-identical, see kmeans_train_multi)
-    cents = kmeans_train_multi(
+    # §2.4)
+    cents = kmeans_train(
         mat, [f"sub{s}" for s in range(PQ_SUB)],
         k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
     )

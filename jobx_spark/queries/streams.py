@@ -110,7 +110,9 @@ ORDER BY user_id
 def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev1 = S.stream_events(spark, sf_dir)
     ev2 = S.stream_events(spark, sf_dir)
-    out = S.run_available_now(S.interval_join(ev1, ev2), "append", "ivjoin")
+    out = S.run_available_now(
+        S.interval_join(ev1, ev2, "inner"), "append", "ivjoin"
+    )
     return out.orderBy("purchase_id", "click_id")
 
 
@@ -166,7 +168,7 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev1 = S.stream_events(spark, sf_dir)
     ev2 = S.stream_events(spark, sf_dir)
     out = S.run_available_now(
-        S.interval_join_left_outer(ev1, ev2), "append", "lojoin"
+        S.interval_join(ev1, ev2, "left_outer"), "append", "lojoin"
     )
     return out.orderBy("purchase_id", "click_id")
 
@@ -216,13 +218,13 @@ def stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev1 = S.stream_events(spark, sf_dir)
     ev2 = S.stream_events(spark, sf_dir)
     out = S.run_available_now(
-        S.interval_join_full_outer(ev1, ev2), "append", "fojoin"
+        S.interval_join(ev1, ev2, "full_outer"), "append", "fojoin"
     )
     return out.orderBy("purchase_id", "click_id")
 
 
 # Matched rows ≡ the inner interval join; null rows are watermark-gated
-# PER SIDE (see interval_join_full_outer): unmatched purchases emit iff
+# PER SIDE (see interval_join): unmatched purchases emit iff
 # p.ts < watermark (their window closes at p.ts), unmatched clicks iff
 # c.ts + 1h < watermark (they can match purchases up to c.ts + 1h).
 # Watermark = min of both sides' max event time, ms-truncated, minus
@@ -1047,9 +1049,9 @@ def stream_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding"
     )
     centroids = kmeans_train(
-        base, k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
-        output="centroids",
-    )
+        base, ["embedding"], k=KM_K, iters=KM_ITERS,
+        cent_base=KM_BASE, scale=KM_SCALE,
+    )[0]
     base_idx = cut_lineage(_cells(base, centroids), "sivfa-index")
     st = S.stream_replay(batch, ["vec_id"], 3, "sivfa")
     out = f"{scratch_dir('stream_ivfa')}/out"

@@ -16,6 +16,28 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+# Runtime-settable SQL confs every session runs under, whether built
+# here (get_spark) or handed in by the driver (tune_for_session).
+SQL_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.sql.parquet.compression.codec": "snappy",
+    # testdata parquet stores timestamp[us] with isAdjustedToUTC=false;
+    # read it as session-TZ TIMESTAMP (UTC) not TIMESTAMP_NTZ so time
+    # functions (unix_micros, window) apply and values match the DuckDB
+    # oracle's naive timestamps.
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # Spark still defaults timestamp writes to deprecated INT96, which
+    # carries NO min/max footer stats — every timestamp predicate then
+    # reads every row group. Micros is the modern encoding and makes
+    # sort-on-write layouts (sinks.write_sorted) actually prune.
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+}
+
 
 def get_spark(app_name: str = "jobx_spark", cpus: str | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's standard config.
@@ -29,22 +51,12 @@ def get_spark(app_name: str = "jobx_spark", cpus: str | None = None) -> SparkSes
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.parquet.compression.codec", "snappy")
-        # testdata parquet stores timestamp[us] with isAdjustedToUTC=false;
-        # read it as session-TZ TIMESTAMP (UTC) not TIMESTAMP_NTZ so
-        # time functions (unix_micros, window) apply and values match the
-        # DuckDB oracle's naive timestamps.
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        .config("spark.sql.shuffle.partitions", str(cpus))
     )
+    for key, value in SQL_CONFS.items():
+        builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
@@ -55,16 +67,7 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
     session (the driver hands us its own SparkSession in
     ``__spark_entry__.entry``; static confs like driver memory cannot be
     changed there, but these can)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.shuffle.partitions", DEFAULT_CPUS)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    # Spark still defaults timestamp writes to deprecated INT96, which
-    # carries NO min/max footer stats — every timestamp predicate then
-    # reads every row group. Micros is the modern encoding and makes
-    # sort-on-write layouts (sinks.write_sorted) actually prune.
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    for key, value in SQL_CONFS.items():
+        spark.conf.set(key, value)
     return spark

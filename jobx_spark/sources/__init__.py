@@ -119,24 +119,6 @@ def local_frame(
     return spark.createDataFrame(table, struct)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view for the SQL surface.
-
-    Views are lazy — registration costs only a footer read, so
-    re-registering per query call is cheap and keeps each call
-    self-contained (the driver calls ``queries()[name](spark, sf_dir)``
-    with fresh sessions/dirs).
-    """
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
-
-
 def read_csv(spark: SparkSession, path: str, schema=None, header: bool = True) -> DataFrame:
     """CSV scan. Schema should be supplied at scale (inference reads the
     data twice)."""
@@ -153,10 +135,6 @@ def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
     if schema is not None:
         reader = reader.schema(schema)
     return reader.json(path)
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:

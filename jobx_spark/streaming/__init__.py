@@ -329,103 +329,20 @@ def streaming_dedup(events: DataFrame) -> DataFrame:
     )
 
 
-def interval_join(events: DataFrame, events2: DataFrame) -> DataFrame:
-    """Stream-stream inner join: each purchase matched to the same
-    user's clicks from the preceding hour.
+def interval_join(events: DataFrame, events2: DataFrame, how: str) -> DataFrame:
+    """Stream-stream interval join (``how`` = inner, left_outer or
+    full_outer): each purchase matched to the same user's clicks from
+    the preceding hour; outer joins also emit the unmatched side's rows
+    with nulls on the other side.
 
-    Both sides carry watermarks so the join state is BOUNDED: a click
-    is droppable once the watermark passes its ts + 1 h (the largest
-    gap the condition can still match), which is what makes an
-    infinite-stream join feasible — state size tracks the time window,
-    not history. Inner-join matches emit as soon as both rows arrive.
-    """
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    clicks = (
-        events2.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "2 hours")
-    )
-    return purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-    ).select(
-        "purchase_id",
-        F.col("p_user").alias("user_id"),
-        "click_id",
-        (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_us"),
-    )
-
-
-def interval_join_left_outer(events: DataFrame, events2: DataFrame) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join: every purchase, with its
-    same-user clicks from the preceding hour — or a null click if none
-    arrives before the watermark closes the match window.
-
-    The outer side's null rows cannot emit eagerly (a matching click
-    may still arrive); they emit on state eviction, once the click-side
-    watermark passes the end of the purchase's match window. Matching
-    clicks satisfy ``c_ts <= p_ts`` (they precede the purchase), so
-    that window closes at ``p_ts`` itself: a purchase emits its null
-    row iff ``p_ts < watermark``, and purchases inside the final
-    watermark delay stay open and unEmitted at end-of-input. This is
-    the production semantics of unbounded outer joins: completeness is
-    only ever claimed up to the watermark.
-    """
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    clicks = (
-        events2.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "2 hours")
-    )
-    return purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-        "left_outer",
-    ).select(
-        "purchase_id",
-        F.col("p_user").alias("user_id"),
-        "click_id",
-        (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_us"),
-    )
-
-
-def interval_join_full_outer(events: DataFrame, events2: DataFrame) -> DataFrame:
-    """Stream-stream FULL OUTER interval join — both sides' unmatched
-    rows emit on state eviction, completing the streaming join matrix
-    (inner / left-outer / full-outer).
-
-    Eviction is per-side, read off the join condition
-    ``p_ts - 1h <= c_ts <= p_ts``: a PURCHASE's match window closes at
-    ``p_ts`` (clicks precede it), so its null row emits once the
-    watermark passes ``p_ts``; a CLICK can match purchases up to
+    Both sides carry watermarks so the join state is BOUNDED: state size
+    tracks the time window, not history, which is what makes an
+    infinite-stream join feasible. Matches emit as soon as both rows
+    arrive. Unmatched rows cannot emit eagerly (a match may still
+    arrive); they emit on state eviction, per side, read off the join
+    condition ``p_ts - 1h <= c_ts <= p_ts``: a PURCHASE's match window
+    closes at ``p_ts`` (clicks precede it), so its null row emits once
+    the watermark passes ``p_ts``; a CLICK can match purchases up to
     ``c_ts + 1h``, so its null row emits once the watermark passes
     ``c_ts + 1h``. Rows inside the final watermark delay stay open and
     unemitted at end-of-input — completeness up to the watermark, the
@@ -454,9 +371,11 @@ def interval_join_full_outer(events: DataFrame, events2: DataFrame) -> DataFrame
         (F.col("p_user") == F.col("c_user"))
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
         & (F.col("c_ts") <= F.col("p_ts")),
-        "full_outer",
+        how,
     ).select(
         "purchase_id",
+        # p_user on every inner and left-outer row; c_user only on a
+        # full-outer join's unmatched clicks
         F.coalesce("p_user", "c_user").alias("user_id"),
         "click_id",
         (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_us"),

@@ -227,3 +227,73 @@ def test_stream_bm25_index_append_equals_batch_append(spark, sf_dir):
         for r in TQ["text_bm25_index_append"](spark, sf_dir).collect()
     ]
     assert streamed == batch
+
+
+def test_ann_index_serve_plan_is_training_free_and_pruned(spark, sf_dir):
+    """VERDICT r9 #4 'done' criteria: the serve plan shows zero k-means
+    iterations (no posexplode update stage, no Lloyd joins) and touches
+    the corpus only through the persisted index scan, statically
+    partition-pruned to the probed cells."""
+    from jobx_spark.queries.similarity import QUERIES
+
+    df = QUERIES["ann_index_serve"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # zero training in the serve plan: the kmeans update stage is the
+    # only posexplode in the ANN stack
+    assert "posexplode" not in plan
+    # the corpus arrives via the persisted index table, partition-
+    # pruned by the router's literal cell list
+    assert "ann-index-" in plan
+    pf = plan.split("PartitionFilters: [")[1]
+    assert pf.startswith("cell#") and " IN (" in pf[:80]
+    # the embeddings table appears only as the probe-query input,
+    # filter-pushed to the probe ids (plus Spark's dynamic-pruning
+    # replica of that same subtree), never as a corpus scan
+    assert "vec_id), LessThan(vec_id" in plan or "vec_id#" in plan
+
+
+def test_ann_index_build_census_attests_persisted_table(spark, sf_dir):
+    """The build census must be planned over the PERSISTED index table
+    (gate hash attests what is on disk), and build must be overwrite-
+    idempotent: rebuilding yields a bit-identical census."""
+    from jobx_spark.queries.similarity import QUERIES
+
+    df = QUERIES["ann_index_build"](spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "embeddings" not in plan  # census reads the index parquet
+    first = [tuple(r) for r in df.collect()]
+    again = [tuple(r) for r in QUERIES["ann_index_build"](spark, sf_dir).collect()]
+    assert first == again
+    assert len(first) == 8
+    assert sum(r[1] for r in first) > 0
+
+
+def test_ann_index_compact_single_file_per_cell(spark, sf_dir):
+    """Compaction's physical claim, verified from the result itself:
+    every populated cell holds exactly ONE file after the rewrite, and
+    content identity holds for all cells."""
+    from jobx_spark.queries.similarity import QUERIES
+
+    out = QUERIES["ann_index_compact"](spark, sf_dir).collect()
+    assert len(out) == 8
+    assert all(r["content_match"] == 1 for r in out)
+    for r in out:
+        assert r["files_after"] == (1 if r["n_after"] > 0 else 0)
+
+
+def test_index_serve_equals_inline_trained_topk(spark, sf_dir):
+    """The persisted serving path and the inline train-in-plan path use
+    the same quantizer constants, so their results must be IDENTICAL
+    row sets — the certificate that persisting the index changed the
+    execution shape, not the answer."""
+    from jobx_spark.queries.similarity import QUERIES
+
+    served = {
+        (r["query_id"], r["vec_id"], r["rank"], r["cosine"])
+        for r in QUERIES["ann_index_serve"](spark, sf_dir).collect()
+    }
+    inline = {
+        (r["query_id"], r["vec_id"], r["rank"], r["cosine"])
+        for r in QUERIES["ann_ivf_trained_topk"](spark, sf_dir).collect()
+    }
+    assert served == inline

@@ -521,6 +521,52 @@ def test_submit_dataset_sink_decodes_string_keys(spark, tmp_path):
     assert got == {"user_0": 34, "user_1": 33, "user_2": 33}
 
 
+def _jobs_of(spark, group, fn):
+    """Ids of the Spark jobs ``fn()`` runs, listed under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_submit_dataset_parquet_result_runs_no_job_after_the_write(
+    spark, tmp_path
+):
+    """The parquet result path writes where the inline path collects,
+    and runs nothing else: the read-back names its schema (no
+    footer-listing job) and ``n_pairs`` comes from an Observation on
+    the write (no count jobs over the files just written)."""
+    from pyspark.sql import functions as F
+
+    eng = Engine(spark)
+    eng.create_workflow("wfj")
+    eng.register_handler("wfj", "pass", fn=_mapper_passthrough, handler_type="mapper")
+    eng.register_handler("wfj", "sum", fn=reducer_sum, handler_type="reducer")
+    eng.create_step("wfj", "sj", "pass", "sum")
+    eng.create_job("wfj", "jj", "sj")
+    pairs = spark.range(1000).select(
+        (F.col("id") % 7).cast("string").alias("k"),
+        F.lit("1").alias("v"),
+    )
+
+    _, inline_jobs = _jobs_of(
+        spark, "dataset-inline",
+        lambda: eng.submit_dataset("wfj", "jj", pairs, n_buckets=4),
+    )
+    req, parquet_jobs = _jobs_of(
+        spark, "dataset-parquet",
+        lambda: eng.submit_dataset(
+            "wfj", "jj", pairs, n_buckets=4, result_writer="parquet",
+            writer_options={"path": str(tmp_path / "folded")},
+        ),
+    )
+    assert inline_jobs and len(parquet_jobs) <= len(inline_jobs)
+    assert req.result["n_pairs"] == req.result_df.count() == 7
+
+
 def _mapper_raises_on_13(scope, arguments):
     yield MrConfigureToReturn()
     for k, v in arguments:

@@ -114,6 +114,31 @@ def test_unknown_request_graph_404(server):
     assert exc_info.value.code == 404
 
 
+def test_request_of_another_workflow_is_404_on_every_route(server):
+    """A request id read under a workflow it does not belong to is
+    unknown there: 404 on the graph, flat list, result, sessions and
+    DELETE routes, and the DELETE leaves the request in place."""
+    resp, _ = _post(server.url + "/job/wfh/j1", {"arguments": {"arg1": 2}})
+    rid = resp.headers["X-MR-REQUEST-ID"]
+    for path in (
+        f"/request/other/{rid}",
+        f"/request/other/{rid}?format=flat",
+        f"/result/other/{rid}",
+        f"/sessions/other/{rid}",
+    ):
+        with pytest.raises(urllib.error.HTTPError) as exc_info:
+            urllib.request.urlopen(server.url + path)
+        assert exc_info.value.code == 404, path
+    delete = urllib.request.Request(
+        f"{server.url}/request/other/{rid}", method="DELETE"
+    )
+    with pytest.raises(urllib.error.HTTPError) as exc_info:
+        urllib.request.urlopen(delete)
+    assert exc_info.value.code == 404
+    with urllib.request.urlopen(f"{server.url}/result/wfh/{rid}") as r:
+        assert json.loads(r.read())["is_done"] is True
+
+
 def test_cli_serve_over_saved_catalog(spark, tmp_path):
     """The CLI's serve path: a catalog built via the CRUD surface and
     saved to JSON comes back up behind the HTTP façade; a job submitted

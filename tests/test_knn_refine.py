@@ -14,7 +14,12 @@ fusion soundness, MMR greedy optimality, multi-probe recall dominance
 and the dimension-truncation recall curve.
 """
 
+import os
+
+import duckdb
 import pytest
+
+from tests.conftest import SF_SMOKE
 
 SFS = ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
 
@@ -222,3 +227,53 @@ def test_dim_sweep_recall_is_monotone_with_full_dim_control(spark, sf_dir):
         for d in sorted(TRUNC_DIMS)
     ]
     assert avgs == sorted(avgs), f"recall curve not monotone: {avgs}"
+
+
+def _sf_with_zero_norm_probe(tmp_path) -> str:
+    """A clone of the smoke sf dir whose embeddings table has vec_id=1
+    (inside the probe set, vec_id < N_QUERIES) zeroed out — the
+    divergence ADVICE r9 flagged: the fixtures never hold a zero-norm
+    PROBE, so the gate could not see Spark emitting a divide-by-zero
+    counts row the oracle drops."""
+    sf = str(tmp_path / "sfzero")
+    os.makedirs(sf)
+    for f in os.listdir(SF_SMOKE):
+        if f.endswith(".parquet") and f != "embeddings.parquet":
+            os.symlink(os.path.join(SF_SMOKE, f), os.path.join(sf, f))
+    emb = duckdb.sql(
+        f"SELECT * FROM '{SF_SMOKE}/embeddings.parquet'"
+    ).df()
+    dim = len(emb.loc[0, "embedding"])
+    emb["embedding"] = [
+        [0.0] * dim if vid == 1 else list(map(float, v))
+        for vid, v in zip(emb["vec_id"], emb["embedding"])
+    ]
+    duckdb.sql(
+        "COPY (SELECT * FROM emb) TO '{}' (FORMAT PARQUET)".format(
+            os.path.join(sf, "embeddings.parquet")
+        )
+    )
+    return sf
+
+
+def test_multiprobe_lsh_masks_zero_norm_probe(spark, tmp_path):
+    """ADVICE r9: a zero-norm probe query must be dropped by BOTH
+    engines — Spark used to emit a counts row with divide-by-zero
+    cosines while the oracle's q CTE (derived from e, norm_s > 0)
+    dropped it."""
+    from jobx_spark.oracle import compare, duck_connect
+    from jobx_spark.queries.similarity import ORACLES, QUERIES
+
+    sf = _sf_with_zero_norm_probe(tmp_path)
+    df = QUERIES["ann_multiprobe_lsh"](spark, sf)
+    rows = df.collect()
+    assert 1 not in {r["query_id"] for r in rows}, (
+        "zero-norm probe query must not emit a counts row"
+    )
+    res = compare(
+        "ann_multiprobe_lsh",
+        QUERIES["ann_multiprobe_lsh"](spark, sf),
+        duck_connect(sf),
+        ORACLES["ann_multiprobe_lsh"],
+    )
+    assert res.ok, res

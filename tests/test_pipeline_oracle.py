@@ -81,3 +81,39 @@ def test_curriculum_phases_partition_the_corpus(spark, sf_dir):
         if hi is not None:
             assert r["max_toks"] <= hi
         assert r["min_toks"] <= r["max_toks"]
+
+
+def test_corpus_funnel_single_scan_and_monotone(spark, sf_dir):
+    """The funnel's returned plan must derive every stage from the ONE
+    materialized per-doc flag table (no documents re-scan), and stage
+    survival must be monotone non-increasing with exact raw totals."""
+    from jobx_spark.queries.pipeline import PCF_STAGES, QUERIES
+
+    df = QUERIES["pipe_corpus_funnel"](spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "documents" not in plan, (
+        "funnel must plan against the materialized pcf-base table"
+    )
+    out = df.collect()
+    assert [r["name"] for r in out] == PCF_STAGES
+    docs = [r["n_docs"] for r in out]
+    toks = [r["n_tokens"] for r in out]
+    assert all(a >= b for a, b in zip(docs, docs[1:]))
+    assert all(a >= b for a, b in zip(toks, toks[1:]))
+    assert out[0]["kept_ppm"] == 1000000 and out[0]["drop_ppm"] == 0
+
+
+def test_encode_serve_plan_is_learn_free_and_equals_inline(spark, sf_dir):
+    """The persisted-vocabulary serve path must contain zero learn-
+    chain iterations (no bpee-w lineage cuts - the vocab tables are the
+    only non-corpus scans) and return the identical row set to the
+    learn-in-plan encode."""
+    from jobx_spark.queries.pipeline import QUERIES
+
+    df = QUERIES["pipe_encode_serve"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "bpee-w" not in plan
+    assert "bpe-vocab-" in plan
+    served = {tuple(r) for r in df.collect()}
+    inline = {tuple(r) for r in QUERIES["pipe_bpe_encode"](spark, sf_dir).collect()}
+    assert served == inline

@@ -1,8 +1,7 @@
 """Round-11 additions: executed-property pins for the round's fixes.
 
-Same style as tests/test_r10_additions.py: each test runs the REAL
-query against a real (or minimally mutated) sf dir and asserts the
-property the round's change introduced.
+Each test runs the REAL query against a real (or minimally mutated)
+sf dir and asserts the property the round's change introduced.
 """
 
 import os
@@ -10,7 +9,7 @@ import os
 import pytest
 
 from tests.conftest import SF_SMOKE
-from tests.test_r10_additions import _sf_with_zero_norm_probe
+from tests.test_knn_refine import _sf_with_zero_norm_probe
 
 
 @pytest.mark.parametrize(

@@ -15,8 +15,9 @@ under-trained regime is real FAISS behavior too (IVFPQ wants training
 points ≫ k per cell), so the pin lives at the scale where the
 precondition holds and the sf0.001 check is shape-only.
 
-The fused multi-chain Lloyd trainer that learns the PQ codebooks is
-pinned here too, chain by chain, against the single-chain trainer.
+The multi-chain Lloyd trainer that learns the PQ codebooks is pinned
+here too, chain by chain, against the DuckDB trainer and against each
+chain trained alone.
 """
 
 import pytest
@@ -91,15 +92,15 @@ def test_residual_returns_full_topk_per_query(spark):
 
 
 def test_kmeans_train_multi_equals_per_column_chains(spark, sf_dir):
-    """The fused multi-chain Lloyd trainer (one job per round for ALL
-    subspace chains) must be bit-identical, per column, to the
-    single-column kmeans_train it replaced in the PQ queries."""
+    """The multi-chain Lloyd trainer (one job per round for ALL chains)
+    must reproduce, per column, the DuckDB trainer ``_kmeans_ctes`` (an
+    independent implementation) run on that column alone: DuckDB's
+    trained ``c{KM_ITERS}`` ``cv_s`` is Spark's ``cv·KM_SCALE``, checked
+    bit-exactly as ``cv == cv_s / KM_SCALE``."""
     from pyspark.sql import functions as F
 
-    from jobx_spark.operators.similarity import (
-        kmeans_train,
-        kmeans_train_multi,
-    )
+    from jobx_spark.operators.similarity import kmeans_train
+    from jobx_spark.oracle import duck_connect
     from jobx_spark.queries.similarity import (
         KM_BASE,
         KM_ITERS,
@@ -107,6 +108,7 @@ def test_kmeans_train_multi_equals_per_column_chains(spark, sf_dir):
         KM_SCALE,
         PQ_DIM,
         PQ_SUB,
+        _kmeans_ctes,
     )
     from jobx_spark.sources import load_table
 
@@ -119,33 +121,33 @@ def test_kmeans_train_multi_equals_per_column_chains(spark, sf_dir):
         ],
         "embedding",
     )
-    cols = ["embedding"] + [f"sub{s}" for s in range(PQ_SUB)]
-    multi = kmeans_train_multi(
-        mat, cols, k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE
+    duck_exprs = {"embedding": "embedding"} | {
+        f"sub{s}": f"list_slice(embedding, {s * PQ_DIM + 1}, {(s + 1) * PQ_DIM})"
+        for s in range(PQ_SUB)
+    }
+    trained = kmeans_train(
+        mat, list(duck_exprs), k=KM_K, iters=KM_ITERS, cent_base=KM_BASE,
+        scale=KM_SCALE,
     )
-    for col, got in zip(cols, multi):
-        want = kmeans_train(
-            mat.select("vec_id", F.col(col).alias("embedding")),
-            k=KM_K, iters=KM_ITERS, cent_base=KM_BASE, scale=KM_SCALE,
-            output="centroids",
-        )
+    con = duck_connect(sf_dir)
+    for (col, expr), got in zip(duck_exprs.items(), trained):
+        parts, _ = _kmeans_ctes(emb_expr=expr)
+        body = ",\n".join(parts)
+        want = con.sql(
+            f"WITH {body} SELECT cent_id, cv_s FROM c{KM_ITERS} ORDER BY cent_id"
+        ).fetchall()
         g = sorted((r["cent_id"], list(r["cv"])) for r in got.collect())
-        w = sorted((r["cent_id"], list(r["cv"])) for r in want.collect())
-        assert g == w, f"chain {col} diverged from kmeans_train"
+        w = [(c, [v / KM_SCALE for v in cv_s]) for c, cv_s in want]
+        assert g == w, f"chain {col} diverged from the DuckDB trainer"
         assert g, f"chain {col} trained no centroids on the fixture"
 
 
 def test_kmeans_train_multi_dead_cell_matches_single_chain(spark):
     """A chain whose cell goes empty (duplicate seed vectors — ties
     assign to the LOWEST cent_id, so the higher seed's cell dies in
-    round 1) must drop it exactly like the single-column trainer,
-    independently per chain."""
-    from pyspark.sql import functions as F
-
-    from jobx_spark.operators.similarity import (
-        kmeans_train,
-        kmeans_train_multi,
-    )
+    round 1) must drop it exactly as when trained alone: chains
+    trained together equal each chain trained by itself."""
+    from jobx_spark.operators.similarity import kmeans_train
 
     data = []
     for i in range(24):
@@ -157,16 +159,27 @@ def test_kmeans_train_multi_dead_cell_matches_single_chain(spark):
     mat = spark.createDataFrame(
         data, "vec_id long, a array<double>, b array<double>"
     )
-    multi = kmeans_train_multi(
-        mat, ["a", "b"], k=2, iters=3, cent_base=10, scale=10**6
-    )
+    multi = kmeans_train(mat, ["a", "b"], k=2, iters=3, cent_base=10, scale=10**6)
     for col, got in zip(["a", "b"], multi):
-        want = kmeans_train(
-            mat.select("vec_id", F.col(col).alias("embedding")),
-            k=2, iters=3, cent_base=10, scale=10**6, output="centroids",
-        )
+        [alone] = kmeans_train(mat, [col], k=2, iters=3, cent_base=10, scale=10**6)
         g = sorted((r["cent_id"], list(r["cv"])) for r in got.collect())
-        w = sorted((r["cent_id"], list(r["cv"])) for r in want.collect())
-        assert g == w, f"chain {col} diverged from kmeans_train"
+        w = sorted((r["cent_id"], list(r["cv"])) for r in alone.collect())
+        assert g == w, f"chain {col} diverged from its single-chain run"
     assert multi[0].count() == 1, "chain a's duplicate-seed cell must die"
     assert multi[1].count() == 2, "chain b must keep both cells"
+
+
+def test_pq_index_serve_plan_is_training_free_and_equals_inline(spark, sf_dir):
+    """The persisted-PQ serving path: zero k-means stages in the plan
+    (no posexplode update stage), corpus touched only through the
+    persisted codes table, and the ranking identical to the
+    train-in-plan ADC search."""
+    from jobx_spark.queries.similarity import QUERIES
+
+    df = QUERIES["ann_pq_index_serve"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "posexplode" not in plan
+    assert "ann-pq-index-" in plan
+    served = {tuple(r) for r in df.collect()}
+    inline = {tuple(r) for r in QUERIES["ann_pq_adc_topk"](spark, sf_dir).collect()}
+    assert served == inline
