@@ -1,24 +1,24 @@
-"""Persisted-artifact contract: portable filesystem probes, a
-version-pointer layout, and the one crash rule every persisted index
-follows.
+"""Persisted-artifact contract: portable filesystem probes and the one
+rule every persisted index follows (implemented in
+:mod:`jobx_spark.index`).
 
-The rule (implemented once, in :mod:`jobx_spark.index`):
-
-* **build = versioned publish.** A writer materializes every part
-  under ``<root>/v=<N+1>/`` and only then publishes it by creating the
-  empty marker ``<root>/_v<N+1>.ptr`` (a single atomic create, the
-  rename-free analogue of a manifest swap). Readers resolve ``max(N)``
-  over the markers, so a crash at any point leaves the previous
-  version current; ensure = resolve + every part's ``_SUCCESS``.
-* **append = base-complete gate + terminal marker.** Appendable
-  artifacts mutate in place: the append clears ``<root>/_APPEND_DONE``,
-  rewrites the base segment unless EVERY base part committed, writes
-  its batch segment by dynamic partition overwrite, and touches
-  ``_APPEND_DONE`` last.
-* **repair reads only the marker.** Compaction re-runs the idempotent
-  append whenever ``_APPEND_DONE`` is absent; Spark's root
-  ``_SUCCESS`` cannot attest a multi-segment write (the first
-  segment's commit already creates it).
+* **Publish by manifest.** A writer puts everything it writes into
+  fresh directories it never rewrites once published, then publishes
+  version ``N`` in two driver-side steps: the manifest
+  ``<root>/_v<N>.json`` (each name a reader opens → its directory,
+  relative to ``root``), then the empty pointer ``<root>/_v<N>.ptr``
+  (a single atomic create, the rename-free analogue of a metadata
+  swap). Readers resolve ``max(N)`` over the pointers and scan exactly
+  what its manifest lists, so a crash at any point leaves the previous
+  version (or none) current, and unlisted leftovers are never read.
+* **Retention by reference.** The latest two manifests are retained.
+  A publish deletes a directory only when neither of them lists it, so
+  a reader resolved against version ``N`` survives exactly one later
+  publish; long-lived readers re-resolve per query (every serve path
+  does).
+* **Single writer per root.** Two concurrent writers would resolve the
+  same next version and overwrite each other's directories;
+  coordinating writers across processes needs an external lock.
 
 Families covered: the IVF index (``ann-index``, its 8x ``:scaled``
 build, the ``ann-index-append`` and ``ann-index-ingest`` segmented
@@ -30,16 +30,7 @@ BPE vocabulary (``bpe-vocab``).
 All probes go through the Hadoop FileSystem API of the session's JVM
 (file://, hdfs://, s3a://, ... resolve uniformly), falling back to
 ``os.path`` only when no JVM is reachable, so a local run exercises
-the same code path a cluster uses. Retention keeps the latest two
-versions: a reader pinned to ``v=N`` survives exactly one subsequent
-publish; long-lived readers re-resolve per query (every serve path
-does).
-
-Scope: a SINGLE WRITER per artifact root. Two concurrent writers
-would resolve the same next version, and ``next_version_dir``'s
-crash-leftover cleanup could delete the other writer's in-flight
-directory; coordinating writers across processes would need an
-external lock.
+the same code path a cluster uses.
 Reference basis: the publish-then-flip-pointer discipline of table
 formats' metadata pointer (Iceberg's version-hint, Delta's
 _last_checkpoint), re-expressed for plain parquet directories.
@@ -48,6 +39,7 @@ _last_checkpoint), re-expressed for plain parquet directories.
 from __future__ import annotations
 
 import glob
+import json
 import os
 import re
 
@@ -63,30 +55,43 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, hpath
 
 
-def fs_exists(spark: SparkSession | None, path: str) -> bool:
-    """Existence probe through the Hadoop FS API (portable to any
-    warehouse scheme); ``os.path`` fallback when no JVM is reachable
-    (e.g. pure-Python unit tests)."""
+def touch(spark: SparkSession | None, path: str, text: str = "") -> None:
+    """Create (or truncate) a file holding ``text``."""
     if spark is not None:
         try:
             fs, p = _hadoop_fs(spark, path)
-            return bool(fs.exists(p))
-        except Exception:
-            pass
-    return os.path.exists(path)
-
-
-def touch(spark: SparkSession | None, path: str) -> None:
-    """Create (or truncate) an empty marker file."""
-    if spark is not None:
-        try:
-            fs, p = _hadoop_fs(spark, path)
-            fs.create(p, True).close()
+            out = fs.create(p, True)
+            try:
+                out.write(bytearray(text.encode()))
+            finally:
+                out.close()
             return
         except Exception:
             pass
-    with open(path, "w", encoding="utf-8"):
-        pass
+    with open(path, "w", encoding="utf-8") as f:
+        f.write(text)
+
+
+def read_text(spark: SparkSession | None, path: str) -> str | None:
+    """A small file's contents, or None when it does not exist."""
+    if spark is not None:
+        try:
+            fs, p = _hadoop_fs(spark, path)
+            if not fs.exists(p):
+                return None
+            hio = spark._jvm.org.apache.hadoop.io.IOUtils
+            stream = fs.open(p)
+            try:
+                return bytes(hio.readFullyToByteArray(stream)).decode()
+            finally:
+                stream.close()
+        except Exception:
+            pass
+    try:
+        with open(path, encoding="utf-8") as f:
+            return f.read()
+    except FileNotFoundError:
+        return None
 
 
 def delete(spark: SparkSession | None, path: str) -> None:
@@ -139,26 +144,45 @@ def version_dir(root: str, version: int) -> str:
     return os.path.join(root, f"v={version}")
 
 
-def resolve(spark: SparkSession | None, root: str) -> str | None:
-    """Path of the current published version's directory, or None."""
-    v = current_version(spark, root)
-    return None if v is None else version_dir(root, v)
+def _manifest_path(root: str, version: int) -> str:
+    return os.path.join(root, f"_v{version}.json")
 
 
-def publish(spark: SparkSession | None, root: str, version: int) -> str:
-    """Flip the pointer to ``version`` (whose directory must already be
-    fully written) and prune versions older than the previous one —
-    the latest TWO stay on disk so a reader pinned to the prior
-    version survives THIS publish (one-publish window: a second
-    subsequent publish deletes v=N, see the module docstring's
-    retention bound). Single-writer per root, also per the module
-    docstring."""
+def manifest(
+    spark: SparkSession | None, root: str, version: int | None = None
+) -> dict[str, str]:
+    """What ``version`` (default: the current one) lists, name →
+    directory relative to ``root``; ``{}`` when it was never
+    published."""
+    if version is None:
+        version = current_version(spark, root)
+    text = None if version is None else read_text(
+        spark, _manifest_path(root, version)
+    )
+    return json.loads(text) if text else {}
+
+
+def publish(
+    spark: SparkSession | None, root: str, version: int,
+    listed: dict[str, str] | None = None,
+) -> None:
+    """Publish ``version`` (every directory in ``listed`` fully
+    written): write its manifest, create its pointer, then drop the
+    versions older than the previous one. A dropped version's pointer
+    and manifest go first, then each directory it listed, and its own
+    ``v=<old>``, that neither retained manifest lists or contains.
+    Single-writer per root, per the module docstring."""
+    touch(spark, _manifest_path(root, version), json.dumps(listed or {}))
     touch(spark, os.path.join(root, f"_v{version}.ptr"))
-    for old in _list_markers(spark, root):
-        if old < version - 1:
-            delete(spark, os.path.join(root, f"_v{old}.ptr"))
-            delete(spark, version_dir(root, old))
-    return version_dir(root, version)
+    vs = _list_markers(spark, root)
+    live = [p for v in vs[-2:] for p in manifest(spark, root, v).values()]
+    for old in vs[:-2]:
+        dropped = manifest(spark, root, old)
+        delete(spark, os.path.join(root, f"_v{old}.ptr"))
+        delete(spark, _manifest_path(root, old))
+        for rel in (*dropped.values(), f"v={old}"):
+            if not any(p == rel or p.startswith(rel + "/") for p in live):
+                delete(spark, os.path.join(root, rel))
 
 
 def next_version_dir(spark: SparkSession | None, root: str) -> tuple[int, str]:

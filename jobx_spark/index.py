@@ -4,20 +4,22 @@ Each family (IVF centroids + cells, PQ codebooks + codes, the dedup
 band index, BM25 postings, the BPE vocabulary, and the persisted
 streaming ingests) supplies only what is its own: the row producer,
 the partition key with its domain size, and the census members. This
-module owns every lifecycle decision, once:
+module owns every lifecycle decision, once, under the one rule of
+:mod:`jobx_spark.artifacts` (publish by manifest, retention by
+reference, single writer per root):
 
 * where an artifact lives (:func:`artifact_root`);
-* build-once artifacts (:class:`Versioned`): write every part under a
-  fresh ``v=N``, then publish; ensure = resolve + every part committed;
-* segmented artifacts (:class:`Segmented`): a base segment written
-  once and gated on every base part, batch segments by dynamic
-  partition overwrite, a terminal ``_APPEND_DONE`` marker that compact
-  repair reads and nothing else, and a one-file-per-key compaction;
+* build-once artifacts (:class:`Versioned`): every part under a fresh
+  ``v=<N>/``, then publish; ensure = the current manifest lists every
+  part, else build;
+* appendable artifacts (:class:`Segmented`): each append writes its
+  segments and side parts into fresh directories and publishes the
+  current manifest with them added (a segment replaces the one of the
+  same name); nothing published means the base is written first;
+  compaction publishes one file per key as its own versioned
+  generation;
 * the per-key census over the key's full ``range(n)`` domain, so dead
   keys stay visible as zero rows.
-
-The crash-consistency rule itself is documented in
-:mod:`jobx_spark.artifacts`.
 """
 
 from __future__ import annotations
@@ -32,21 +34,12 @@ from pyspark.sql import functions as F
 
 from jobx_spark import artifacts as A
 
-SUCCESS = "_SUCCESS"
-APPEND_DONE = "_APPEND_DONE"
-
-
 def artifact_root(sf_dir: str, family: str, salt: str = "") -> str:
     """``<checkpoint_root>/<family>-<sha256(sf_dir + salt)[:12]>``."""
     from jobx_spark.lineage import checkpoint_root
 
     key = hashlib.sha256((sf_dir.rstrip("/") + salt).encode()).hexdigest()[:12]
     return os.path.join(checkpoint_root(), f"{family}-{key}")
-
-
-def committed(spark: SparkSession, path: str) -> bool:
-    """A Spark write to ``path`` committed (its ``_SUCCESS`` exists)."""
-    return A.fs_exists(spark, os.path.join(path, SUCCESS))
 
 
 # -- census ------------------------------------------------------------------
@@ -149,47 +142,90 @@ class Versioned:
     def build(self, spark: SparkSession, sf_dir: str) -> list[str]:
         """Write a new version and publish it; the part paths."""
         root = self.root(sf_dir)
-        ver, vdir = A.next_version_dir(spark, root)
-        paths = [os.path.join(vdir, p) for p in self.parts]
+        ver, _ = A.next_version_dir(spark, root)
+        listed = {p: f"v={ver}/{p}" for p in self.parts}
+        paths = [os.path.join(root, listed[p]) for p in self.parts]
         self.write(spark, sf_dir, *paths)
-        A.publish(spark, root, ver)
+        A.publish(spark, root, ver, listed)
         return paths
 
     def ensure(self, spark: SparkSession, sf_dir: str) -> list[str]:
         """The published version's part paths, building it first when
-        none is published or a part is not committed."""
-        vdir = A.resolve(spark, self.root(sf_dir))
-        if vdir is not None:
-            paths = [os.path.join(vdir, p) for p in self.parts]
-            if all(committed(spark, p) for p in paths):
-                return paths
+        no published manifest lists every part."""
+        root = self.root(sf_dir)
+        listed = A.manifest(spark, root)
+        if all(p in listed for p in self.parts):
+            return [os.path.join(root, listed[p]) for p in self.parts]
         return self.build(spark, sf_dir)
 
 
 # -- segmented (appendable) artifacts ----------------------------------------
+@dataclasses.dataclass
+class Generation:
+    """One version of a :class:`Segmented` artifact. ``listed`` maps
+    each segment (``<table>/seg=<s>``) and side part to its directory
+    relative to ``root``: a pending generation adds what its append
+    writes, a published one is exactly what a reader scans."""
+
+    spark: SparkSession
+    art: "Segmented"
+    root: str
+    version: int
+    listed: dict[str, str]
+
+    def __getitem__(self, name: str) -> str:
+        """Path of the listed segment or side part ``name``."""
+        return os.path.join(self.root, self.listed[name])
+
+    def part(self, name: str) -> str:
+        """A fresh directory for side part ``name``, listed from now on."""
+        self.listed[name] = f"v={self.version}/{name}"
+        return self[name]
+
+    def segment(self, df: DataFrame, seg: str) -> None:
+        """Write ``df`` as segment ``seg`` into a fresh directory, one
+        file per key value; it replaces any listed segment of that
+        name, so a re-append is idempotent. (The directory is new to
+        this version, so ``overwrite`` can only clear the leftover of
+        an unpublished attempt.)"""
+        name = f"{self.art.table}/seg={seg}"
+        rel = f"{name}/v={self.version}"
+        self.art.layout(df).write.mode("overwrite").partitionBy(
+            self.art.key
+        ).parquet(os.path.join(self.root, rel))
+        self.listed[name] = rel
+
+    def table(self) -> DataFrame:
+        """The listed segments as ONE scan, with ``seg`` and the key as
+        partition columns (the per-write ``v`` level dropped)."""
+        prefix = f"{self.art.table}/seg="
+        return (
+            self.spark.read.option(
+                "basePath", os.path.join(self.root, self.art.table)
+            )
+            .parquet(*[self[n] for n in sorted(self.listed)
+                       if n.startswith(prefix)])
+            .drop("v")
+        )
+
+
 @dataclasses.dataclass(frozen=True)
 class Segmented:
-    """An appendable artifact: ``table`` partitioned by (seg, key), plus
-    side parts. ``base(spark, sf_dir, paths)`` writes the base side
-    parts and returns the base segment's rows. Appends stay in place
-    (versioning would re-copy the base on every ingest)."""
+    """An appendable artifact: ``table`` segments partitioned by
+    ``key``, plus side parts. ``base(spark, sf_dir, gen)`` writes the
+    base side parts through ``gen.part`` and returns the base segment's
+    rows. An append re-lists the segments it does not write, so the
+    base is never copied."""
 
     family: str
     table: str
     key: str
     size: int
     sort: tuple[str, ...]
-    base: Callable[[SparkSession, str, dict[str, str]], DataFrame]
-    base_parts: tuple[str, ...] = ()
-    batch_parts: tuple[str, ...] = ()
+    base: Callable[[SparkSession, str, Generation], DataFrame]
 
     def root(self, sf_dir: str) -> str:
         return artifact_root(sf_dir, self.family)
-
-    def paths(self, sf_dir: str) -> dict[str, str]:
-        root = self.root(sf_dir)
-        names = (self.table, *self.base_parts, *self.batch_parts, APPEND_DONE)
-        return {n: os.path.join(root, n) for n in names}
 
     def layout(self, df: DataFrame) -> DataFrame:
         """One file per key value per write, rows sorted within it."""
@@ -197,49 +233,45 @@ class Segmented:
             self.key, *self.sort
         )
 
-    def write_segment(self, df: DataFrame, path: str, seg: str) -> None:
-        """``seg="base"`` replaces the whole table; any other segment
-        replaces only its own partitions (dynamic partition overwrite),
-        so a re-run is idempotent and other segments stay untouched."""
-        w = self.layout(df.withColumn("seg", F.lit(seg))).write.mode(
-            "overwrite"
-        )
-        if seg != "base":
-            w = w.option("partitionOverwriteMode", "dynamic")
-        w.partitionBy("seg", self.key).parquet(path)
+    def current(self, spark: SparkSession, sf_dir: str) -> Generation:
+        """The published generation (empty when none is published)."""
+        root = self.root(sf_dir)
+        ver = A.current_version(spark, root) or 0
+        return Generation(spark, self, root, ver, A.manifest(spark, root, ver))
 
     def append(
         self, spark: SparkSession, sf_dir: str,
-        write: Callable[[dict[str, str]], None],
-    ) -> dict[str, str]:
-        """Clear the marker, (re)write the base unless every base part
-        is committed, run ``write(paths)`` for the batch segment(s),
-        then touch the marker; returns the paths."""
-        p = self.paths(sf_dir)
-        A.delete(spark, p[APPEND_DONE])
-        parts = (self.table, *self.base_parts)
-        if not all(committed(spark, p[n]) for n in parts):
-            base_rows = self.base(spark, sf_dir, p)
-            self.write_segment(base_rows, p[self.table], "base")
-        write(p)
-        A.touch(spark, p[APPEND_DONE])
-        return p
+        write: Callable[[Generation], None],
+    ) -> Generation:
+        """Publish the current generation plus what ``write(gen)``
+        writes as the next version, writing the base first when nothing
+        is published; returns the published generation."""
+        root = self.root(sf_dir)
+        ver, _ = A.next_version_dir(spark, root)
+        gen = Generation(spark, self, root, ver, A.manifest(spark, root, ver - 1))
+        if not gen.listed:
+            gen.segment(self.base(spark, sf_dir, gen), "base")
+        write(gen)
+        A.publish(spark, root, ver, gen.listed)
+        return gen
 
     def compact(
         self, spark: SparkSession, sf_dir: str,
         repair: Callable[[SparkSession, str], object],
         members: dict[str, Column],
     ) -> DataFrame:
-        """Rewrite base ∪ batches as one file per key under
-        ``<table>-compacted`` (repairing first via ``repair`` when no
-        append finished), and census both generations per key:
-        n_before, n_after, files_after and content_match (counts and
-        every XOR member equal)."""
-        p = self.paths(sf_dir)
-        if not A.fs_exists(spark, p[APPEND_DONE]):
+        """Rewrite the published segments as one file per key and
+        publish that as the next version of ``<table>-compacted``
+        (running ``repair`` first when nothing is published), then
+        census both generations per key: n_before, n_after,
+        files_after and content_match (counts and every XOR member
+        equal)."""
+        root = self.root(sf_dir)
+        if A.current_version(spark, root) is None:
             repair(spark, sf_dir)
-        gpath = p[self.table] + "-compacted"
-        old = spark.read.parquet(p[self.table]).drop("seg")
+        old = self.current(spark, sf_dir).table().drop("seg")
+        croot = os.path.join(root, f"{self.table}-compacted")
+        ver, gpath = A.next_version_dir(spark, croot)
         (
             self.layout(old)
             .write.mode("overwrite")
@@ -249,6 +281,7 @@ class Segmented:
             .partitionBy(self.key)
             .parquet(gpath)
         )
+        A.publish(spark, croot, ver, {self.table: f"v={ver}"})
         new = spark.read.parquet(gpath)
         fcount = (
             new.withColumn("f", F.input_file_name())

@@ -28,7 +28,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-ASSET_SCHEMA = "asset_id bigint, kind string, data binary, src_len bigint"
 N_FAKE_FEATURES = 4
 
 

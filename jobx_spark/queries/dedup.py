@@ -2576,8 +2576,9 @@ ORDER BY source
 #     oracle verbatim — the persisted path provably changes the
 #     execution shape, not the answer.
 #   dedup_index_append — the ingest-commit: the probed batch's band
-#     signatures land under seg=batch/band=* via dynamic partition
-#     overwrite (base files untouched, re-runs idempotent), with the
+#     signatures land as the seg=batch segment in a fresh directory,
+#     published by manifest beside the re-listed base (re-runs
+#     replace the segment's entry, so they are idempotent), with the
 #     same append≡rebuild certificate as ann_index_append: per band,
 #     the on-disk row count AND doc_id-XOR membership must equal an
 #     in-plan re-banding of the full corpus (banding is per-doc
@@ -2692,7 +2693,7 @@ def dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_append_base(
-    spark: SparkSession, sf_dir: str, p: dict[str, str]
+    spark: SparkSession, sf_dir: str, gen: index.Generation
 ) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return _banded(docs.filter(F.col("doc_id") < INCR_SPLIT_ID))
@@ -2706,16 +2707,13 @@ DEDUP_APPEND = index.Segmented(
 def dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") >= INCR_SPLIT_ID)
-    # THE APPEND: batch-side-only banding; new files land under
-    # seg=batch/band=*, base files untouched; dynamic overwrite makes
-    # re-runs replace only the batch segment (double-run determinism)
-    p = DEDUP_APPEND.append(
-        spark, sf_dir,
-        lambda p: DEDUP_APPEND.write_segment(
-            _banded(batch), p["index"], "batch"
-        ),
+    # THE APPEND: batch-side-only banding, written as the seg=batch
+    # segment beside the re-listed base; a re-run replaces only the
+    # batch segment's manifest entry (double-run determinism)
+    gen = DEDUP_APPEND.append(
+        spark, sf_dir, lambda g: g.segment(_banded(batch), "batch")
     )
-    disk = spark.read.parquet(p["index"])
+    disk = gen.table()
     # attestation leg: full re-banding of the whole corpus — never run
     # in production; banding is per-doc deterministic so append must
     # equal rebuild bit for bit
@@ -2785,7 +2783,8 @@ ORDER BY band
 # text-side twin: after appends the band index accumulates small
 # per-batch files under seg=batch/band=*, and probe latency degrades
 # with file count, not row count. Compaction rewrites base ∪ batch as
-# a new single-segment generation (never in place), clustered so each
+# one segment published as the next version of its own versioned
+# generation (never in place), clustered so each
 # band holds ONE file — the physical claim enforced in the plan
 # (per-file record cap disabled) and verified from the
 # compacted layout via input_file_name. Census attests per-band

@@ -2221,9 +2221,6 @@ ORDER BY source
 # bounded, the second is ~5 rows. The balance band uses floor(x/1000)
 # on the SAME IEEE double op both engines run, so banding is exact.
 # --------------------------------------------------------------------------
-K_ANON_BANDS = [(1, 1), (2, 4), (5, 9), (10, 49), (50, None)]
-
-
 def pipe_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     qi = cust.select(

@@ -4,6 +4,8 @@ from the same deterministic arithmetic."""
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -4312,52 +4314,53 @@ ORDER BY fr.query_id, fr.rank
 # ann_ivf_append models incremental maintenance in-plan (the base index
 # is a lineage cut), this operates on the ON-DISK contract tables the
 # way a production ingest job does. The quantizer trains ONCE on the
-# base slice and persists; the base assignments persist under
-# seg=base/cell=*; the daily batch (vec_id ≡ APPEND_RES mod APPEND_MOD)
-# is assigned via the PERSISTED centroids and written as NEW FILES
-# under seg=batch/cell=* — dynamic partition overwrite, so the base
-# files are never touched and a re-run replaces only the batch segment
+# base slice and persists; the base assignments persist as the
+# seg=base segment; the daily batch (vec_id ≡ APPEND_RES mod
+# APPEND_MOD) is assigned via the PERSISTED centroids and written as
+# the seg=batch segment in a fresh directory, then published by
+# manifest — the published base is re-listed, never rewritten, and a
+# re-run replaces only the batch segment's manifest entry
 # (idempotent: the double-run determinism attestation holds). The
-# census is planned over the on-disk table AFTER the append — the gate
-# hash attests the persisted layout — with the same append≡rebuild
+# census is planned over the published segments AFTER the append — the
+# gate hash attests the persisted layout — with the same append≡rebuild
 # XOR certificate as ann_ivf_append (identical output contract, so the
 # oracle is that query's oracle verbatim).
 # --------------------------------------------------------------------------
 def _ann_append_base(
-    spark: SparkSession, sf_dir: str, p: dict[str, str]
+    spark: SparkSession, sf_dir: str, gen: index.Generation
 ) -> DataFrame:
     """Train the quantizer ONCE on the base slice (persisted), and
     assign the base against it."""
     base = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") % APPEND_MOD != APPEND_RES
     )
-    return _cells(base, _train_centroids(spark, base, p["centroids"]))
+    return _cells(base, _train_centroids(spark, base, gen.part("centroids")))
 
 
 ANN_APPEND = index.Segmented(
-    "ann-index-append", "index", "cell", KM_K, ("vec_id",),
-    _ann_append_base, base_parts=("centroids",),
+    "ann-index-append", "index", "cell", KM_K, ("vec_id",), _ann_append_base
 )
+# stream_index_ingest's own root, disjoint from the batch append's
+ANN_INGEST = dataclasses.replace(ANN_APPEND, family="ann-index-ingest")
 
 
 def ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     batch = emb.filter(F.col("vec_id") % APPEND_MOD == APPEND_RES)
-    # THE APPEND: batch-side-only work against the persisted quantizer;
-    # new files land under seg=batch/cell=*, base files untouched
-    p = ANN_APPEND.append(
+    # THE APPEND: batch-side-only work against the persisted quantizer,
+    # written as the seg=batch segment beside the re-listed base
+    gen = ANN_APPEND.append(
         spark, sf_dir,
-        lambda p: ANN_APPEND.write_segment(
-            _cells(batch, spark.read.parquet(p["centroids"])),
-            p["index"], "batch",
+        lambda g: g.segment(
+            _cells(batch, spark.read.parquet(g["centroids"])), "batch"
         ),
     )
-    disk = spark.read.parquet(p["index"]).select("vec_id", "cell", "seg")
+    disk = gen.table().select("vec_id", "cell", "seg")
     base_idx = disk.filter(F.col("seg") == "base").select("vec_id", "cell")
     batch_idx = disk.filter(F.col("seg") == "batch").select("vec_id", "cell")
     # attestation leg: full re-assignment under the same persisted
     # centroids — never run in production
-    rebuilt = _cells(emb, spark.read.parquet(p["centroids"]))
+    rebuilt = _cells(emb, spark.read.parquet(gen["centroids"]))
     return _ivf_append_census(spark, base_idx, batch_idx, rebuilt)
 
 
@@ -4366,11 +4369,11 @@ def ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lifecycle (build → append → COMPACT → serve): after appends the index
 # accumulates small per-batch files under seg=batch/cell=*, and probe
 # latency degrades with file count, not row count. Compaction rewrites
-# base ∪ batch as a NEW single-segment generation (seg=compacted under
-# a fresh generation dir — never in place, the swap is atomic at the
-# directory level exactly like a table-format rewrite), clustered so
-# each cell holds ONE file. The census is planned over BOTH on-disk
-# generations and attests content identity per cell: row count AND
+# base ∪ batch as ONE segment, published as the next version of its
+# own versioned generation (index-compacted/v=<N>, pointer-flipped
+# like every build — never in place), clustered so each cell holds ONE
+# file. The census is planned over BOTH on-disk generations and
+# attests content identity per cell: row count AND
 # vec_id-XOR membership must match (content_match = 1), plus
 # files_after = 1 per populated cell read from the compacted layout —
 # the physical claim, verified from disk, not assumed. Dead cells stay

@@ -1236,26 +1236,24 @@ def _sdida_oracle() -> str:
 # stream_index_ingest — the PERSISTED streaming vector ingest, closing
 # the triangle ann_index_append (persisted, batch) / stream_ivf_append
 # (streaming, in-plan) left open: each micro-batch of new vectors is
-# assigned via the frozen persisted quantizer and lands as NEW FILES
-# directly in the on-disk index under its own segment
-# (seg=b<batch_id>/cell=*, dynamic partition overwrite — re-running a
-# batch replaces exactly its segment, so replay/recovery is idempotent
-# and the base files are never touched). This is how a production
-# vector store actually ingests: streaming writers append bucketed
-# files; build/compact jobs own rewrites. The census is planned over
-# the on-disk table AFTER ingest with the same append≡rebuild XOR
+# assigned via the frozen persisted quantizer and lands as its own
+# segment seg=b<batch_id> in a fresh directory of the on-disk index —
+# re-running a batch replaces exactly that segment, so replay/recovery
+# is idempotent — and the drained stream's segments are published by
+# manifest beside the re-listed base. This is how a production vector
+# store actually ingests: streaming writers append bucketed files;
+# build/compact jobs own rewrites. The census is planned over the
+# published segments AFTER ingest with the same append≡rebuild XOR
 # certificate, so the gate hash attests the persisted layout; output
 # contract identical to ann_ivf_append (oracle verbatim). Own root
 # (ann-index-ingest-*), disjoint from the batch append family, so the
 # two lifecycles' artifacts never cross-contaminate a census.
 # --------------------------------------------------------------------------
 def stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import dataclasses
-
     from pyspark.sql import functions as F
 
     from jobx_spark.queries.similarity import (
-        ANN_APPEND,
+        ANN_INGEST,
         APPEND_MOD,
         APPEND_RES,
         _cells,
@@ -1263,19 +1261,16 @@ def stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from jobx_spark.sources import load_table
 
-    ingest = dataclasses.replace(ANN_APPEND, family="ann-index-ingest")
     emb = load_table(spark, sf_dir, "embeddings")
     batch = emb.filter(F.col("vec_id") % APPEND_MOD == APPEND_RES).select(
         "vec_id", "embedding"
     )
 
-    def _stream(p: dict[str, str]) -> None:
-        centroids = spark.read.parquet(p["centroids"])
+    def _stream(gen) -> None:
+        centroids = spark.read.parquet(gen["centroids"])
 
         def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-            ingest.write_segment(
-                _cells(batch_df, centroids), p["index"], f"b{batch_id}"
-            )
+            gen.segment(_cells(batch_df, centroids), f"b{batch_id}")
 
         # contract label for the STREAM_PLANS audit: stateless per
         # micro-batch — the quantizer is a frozen persisted side input
@@ -1284,11 +1279,11 @@ def stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "singest_stateless", _ingest,
         )
 
-    p = ingest.append(spark, sf_dir, _stream)
-    disk = spark.read.parquet(p["index"]).select("vec_id", "cell", "seg")
+    gen = ANN_INGEST.append(spark, sf_dir, _stream)
+    disk = gen.table().select("vec_id", "cell", "seg")
     base_idx = disk.filter(F.col("seg") == "base").select("vec_id", "cell")
     batch_idx = disk.filter(F.col("seg") != "base").select("vec_id", "cell")
-    rebuilt = _cells(emb, spark.read.parquet(p["centroids"]))
+    rebuilt = _cells(emb, spark.read.parquet(gen["centroids"]))
     return _ivf_append_census(spark, base_idx, batch_idx, rebuilt)
 
 
@@ -1322,6 +1317,7 @@ def stream_bm25_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jobx_spark.sources import local_frame
 
     ppath, spath = BM25_INDEX.ensure(spark, sf_dir)
+    postings, scalars = spark.read.parquet(ppath), spark.read.parquet(spath)
     qdf = local_frame(
         spark, sorted(BM25_QUERIES.items()), "query_id INT, qtext STRING"
     )
@@ -1335,7 +1331,7 @@ def stream_bm25_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         qterms, terms = _bm25_query_terms(
             spark, {r["query_id"]: r["qtext"] for r in rows}
         )
-        return _bm25_serve_body(spark, ppath, spath, qterms, terms)
+        return _bm25_serve_body(postings, scalars, qterms, terms)
 
     # contract label for the STREAM_PLANS audit: stateless per
     # micro-batch — the inverted index is a frozen side input
@@ -1362,15 +1358,15 @@ def _sbm25_oracle() -> str:
 # stream_index_ingest, bands: stream_dedup_index_append, terms: THIS):
 # each micro-batch of new documents is tokenized into (term, doc_id,
 # tf, dl) postings — per-doc arithmetic against frozen code, stateless
-# — and lands as NEW FILES directly in the on-disk inverted index
-# under its own segment (seg=b<batch_id>/tbkt=*, dynamic partition
-# overwrite: a replayed batch replaces exactly its segment, base files
-# never touched). The BM25-specific step the other two families don't
-# have: after the stream drains, the corpus-global scalars table is
-# REPUBLISHED (base-on-disk + the full batch side's deltas — both
-# addends independent of the table being overwritten, so recovery
-# re-runs are idempotent); df needs no republish at all because the
-# append layout never denormalizes it (serving recomputes df from the
+# — and lands as its own segment seg=b<batch_id> in a fresh directory
+# of the on-disk inverted index (a replayed batch replaces exactly its
+# segment), published by manifest beside the re-listed base once the
+# stream drains. The BM25-specific step the other two families don't
+# have: before that publish, the corpus-global scalars table is
+# REWRITTEN (base-on-disk + the full batch side's deltas — both
+# addends independent of the part being written, so recovery re-runs
+# are idempotent); df needs no republish at all because the postings
+# layout never denormalizes it (serving recomputes df from the
 # bucket-pruned scan — jobx_spark/queries/text.py design note). The
 # returned census is text_bm25_index_append's verbatim (oracle too):
 # per term bucket, append≡rebuild on the posting-content hash,
@@ -1380,30 +1376,25 @@ def _sbm25_oracle() -> str:
 # cross-contaminate a census.
 # --------------------------------------------------------------------------
 def stream_bm25_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import dataclasses
-
     from pyspark.sql import functions as F
 
     from jobx_spark.queries.dedup import INCR_SPLIT_ID
     from jobx_spark.queries.text import (
-        BM25_APPEND,
+        BM25_INGEST,
         _bm25_append_census,
         _bm25_postings,
         _bm25_republish_scalars,
     )
     from jobx_spark.sources import load_table
 
-    ingest = dataclasses.replace(BM25_APPEND, family="bm25-index-ingest")
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") >= INCR_SPLIT_ID).select(
         "doc_id", "text"
     )
 
-    def _stream(p: dict[str, str]) -> None:
+    def _stream(gen) -> None:
         def _append(batch_df: DataFrame, batch_id: int) -> None:
-            ingest.write_segment(
-                _bm25_postings(batch_df), p["postings"], f"b{batch_id}"
-            )
+            gen.segment(_bm25_postings(batch_df), f"b{batch_id}")
 
         # contract label for the STREAM_PLANS audit: stateless per
         # micro-batch — tokenization constants are frozen code
@@ -1412,10 +1403,10 @@ def stream_bm25_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sbm25a_stateless", _append,
         )
         # the scalars republish (base + the whole batch side's deltas)
-        _bm25_republish_scalars(spark, p, batch)
+        _bm25_republish_scalars(spark, gen, batch)
 
-    p = ingest.append(spark, sf_dir, _stream)
-    return _bm25_append_census(spark, sf_dir, p["postings"], p["scalars"])
+    gen = BM25_INGEST.append(spark, sf_dir, _stream)
+    return _bm25_append_census(spark, sf_dir, gen)
 
 
 def _sbm25a_oracle() -> str:

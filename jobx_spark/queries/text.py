@@ -4,6 +4,8 @@ oracle (the SQL mirrors the Spark column algebra construct-for-construct
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1911,31 +1913,33 @@ ORDER BY rank
 # pays that once at build time and serves from the artifact.
 #
 #   text_bm25_index_build — ONE corpus tokenization materializes the
-#     full-vocabulary postings table (term, doc_id, tf) DENORMALIZED
-#     with the two per-posting scoring inputs (dl — the doc's length,
-#     df — the term's document frequency), partitioned by the term
-#     bucket tbkt = h('bm25:'||term) mod TBKT and sorted by term within
-#     each bucket, plus a 1-row corpus-scalars table (n_docs, t_toks).
-#     Version-pointer published (jobx_spark.artifacts) like the other
+#     full-vocabulary postings table (term, doc_id, tf) with the
+#     per-posting doc length dl, partitioned by the term bucket
+#     tbkt = h('bm25:'||term) mod TBKT and sorted by term within each
+#     bucket, plus a 1-row corpus-scalars table (n_docs, t_toks). The
+#     layout is _bm25_postings', the one the append family writes too.
+#     Published by manifest (jobx_spark.artifacts) like the other
 #     serving artifacts. Returns a per-bucket census planned over the
 #     ON-DISK postings — the gate hash attests the artifact.
 #   text_bm25_index_serve — the online path: the query's term buckets
 #     are computed DRIVER-SIDE from the query constants (pure Python
 #     md5 arithmetic — no collect, no corpus touch), the postings scan
 #     is statically partition-pruned to those buckets with the term
-#     list pushed to parquet, and the SAME scaled-integer BM25 formula
-#     ranks — output contract identical to text_bm25_topk, oracle
-#     verbatim: the persisted path provably changes the execution
-#     shape, not the ranking. Zero documents scans in the serve plan.
+#     list pushed to parquet, df is the per-term posting count over
+#     exactly those rows (every posting of a query term lies in its
+#     bucket), and the SAME scaled-integer BM25 formula ranks — output
+#     contract identical to text_bm25_topk, oracle verbatim: the
+#     persisted path provably changes the execution shape, not the
+#     ranking. Zero documents scans in the serve plan.
 #   stream_bm25_index_serve (streams.py) — the query STREAM served
 #     per micro-batch against the frozen index, stateless.
 #
 # 100 TB story: the index is the corpus-sized artifact (postings ~
 # token count), but a query reads |q| buckets ≈ vocabulary/TBKT-th of
 # it — partition pruning + parquet term-range skipping inside the
-# bucket (rows sorted by term); df/dl denormalization means serving
-# joins NOTHING corpus-sized (only the broadcast query terms and the
-# 1-row scalars).
+# bucket (rows sorted by term); serving joins NOTHING corpus-sized
+# (dl rides on the posting; df is a query-vocabulary-bounded aggregate
+# of the pruned scan; the query terms and the 1-row scalars broadcast).
 # --------------------------------------------------------------------------
 TBKT = 16
 
@@ -1949,31 +1953,11 @@ def _bm25_bucket_py(term: str) -> int:
 def _bm25_index_write(
     spark: SparkSession, sf_dir: str, ppath: str, spath: str
 ) -> None:
-    from jobx_spark.functions import md5_long
-
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
-    tf = tok.groupBy("doc_id", "term").agg(
-        F.count(F.lit(1)).cast("long").alias("tf")
-    )
-    # dl from the same exploded frame (= size(tokens) for every doc
-    # that has postings); df is the term's posting count
-    dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("dl"))
-    df_t = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    (
-        tf.join(dl, "doc_id")
-        .join(df_t, "term")
-        .withColumn(
-            "tbkt",
-            F.pmod(md5_long(F.concat(F.lit("bm25:"), F.col("term"))),
-                   F.lit(TBKT)),
-        )
-        .repartition(TBKT, "tbkt")
-        .sortWithinPartitions("tbkt", "term", "doc_id")
-        .write.mode("overwrite")
-        .partitionBy("tbkt")
-        .parquet(ppath)
-    )
+    # the append family's layout: one file per bucket, sorted by term
+    BM25_APPEND.layout(_bm25_postings(docs)).write.mode(
+        "overwrite"
+    ).partitionBy("tbkt").parquet(ppath)
     _bm25_corpus_scalars(docs).write.mode("overwrite").parquet(spath)
 
 
@@ -2016,22 +2000,28 @@ ORDER BY tbkt
 
 
 def _bm25_serve_body(
-    spark: SparkSession, ppath: str, spath: str, qterms: DataFrame,
+    postings: DataFrame, scalars: DataFrame, qterms: DataFrame,
     terms: list[str],
 ) -> DataFrame:
-    """The serving kernel: bucket-pruned postings scan + broadcast
-    query terms + broadcast 1-row scalars + the scaled-integer BM25
-    formula (identical constants to text_bm25_topk). Shared by the
-    batch serve and its streaming twin."""
+    """The one serving kernel, over any _bm25_postings layout (the
+    built index, or the appended segments): bucket-pruned postings
+    scan, df recomputed over exactly the pruned rows (every posting
+    of a query term lies in its bucket), broadcast query terms and
+    1-row scalars, and the scaled-integer BM25 formula (identical
+    constants to text_bm25_topk). Shared by the batch serve, its
+    streaming twin and the append census."""
     from pyspark.sql import Window as W
 
     buckets = sorted({_bm25_bucket_py(t) for t in terms})
-    post = spark.read.parquet(ppath).filter(
+    post = postings.filter(
         F.col("tbkt").isin(buckets) & F.col("term").isin(sorted(terms))
     )
-    scalars = spark.read.parquet(spath)
+    df_t = post.groupBy("term").agg(
+        F.count(F.lit(1)).cast("long").alias("df")
+    )
     scored = (
-        post.join(F.broadcast(qterms), "term")
+        post.join(F.broadcast(df_t), "term")
+        .join(F.broadcast(qterms), "term")
         .crossJoin(F.broadcast(scalars))
         .select(
             "query_id",
@@ -2065,7 +2055,10 @@ def _bm25_serve_body(
 def text_bm25_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ppath, spath = BM25_INDEX.ensure(spark, sf_dir)
     qterms, all_terms = _bm25_query_terms(spark)
-    return _bm25_serve_body(spark, ppath, spath, qterms, all_terms)
+    return _bm25_serve_body(
+        spark.read.parquet(ppath), spark.read.parquet(spath), qterms,
+        all_terms,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -2075,32 +2068,30 @@ def text_bm25_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # families (dedup_index_append/compact, ann_index_append/compact).
 #
 # The BM25-specific twist (absent from bands and vectors): df, n_docs
-# and avgdl are CORPUS-GLOBAL. The build family denormalizes df onto
-# every posting — correct for a frozen index, but an append would
-# leave every base-segment posting holding a stale df, and rewriting
-# the base on each ingest defeats the delta design. So the APPEND
-# layout drops the df column entirely:
+# and avgdl are CORPUS-GLOBAL. A df stored on every posting would go
+# stale in the base segment on each ingest, so the postings layout
+# (_bm25_postings, shared with the build) carries no df at all:
 #
-#   postings/ (seg=base|batch, tbkt=0..15): (term, doc_id, tf, dl) —
-#     the batch lands under seg=batch via dynamic partition overwrite
-#     (base files untouched, re-runs idempotent, exactly
-#     dedup_index_append's discipline);
-#   scalars_base/ — (n_docs, t_toks) over the base corpus, written
+#   postings/ segments (seg=base|batch, tbkt=0..15): (term, doc_id,
+#     tf, dl) — the batch is written as a fresh seg=batch segment and
+#     published by manifest beside the re-listed base (re-runs replace
+#     the segment's entry: idempotent, exactly dedup_index_append's
+#     discipline);
+#   scalars_base — (n_docs, t_toks) over the base corpus, written
 #     once with the base segment;
-#   scalars/ — REPUBLISHED on every append as scalars_base + the
-#     batch's own deltas (both addends derived from fixed inputs, so
-#     the republish is overwrite-idempotent — never read-modify-write
-#     of its own previous output);
-#   the terminal marker — touched AFTER the batch write and scalars
-#     republish; compact repair reads only it (jobx_spark.artifacts).
+#   scalars — REWRITTEN on every append as scalars_base + the batch's
+#     own deltas (both addends derived from fixed inputs, so a re-run
+#     writes the identical row — never read-modify-write of its own
+#     previous output), listed by the same manifest.
 #
-# Serving from the appended index recomputes df FROM THE PRUNED SCAN:
-# the query's term buckets are known driver-side, the postings scan
-# prunes to those ≤|q| partitions with the term list pushed down, and
-# df = per-term posting count over exactly those rows — a
-# query-vocabulary-bounded aggregate (≤15 terms), no corpus-sized
-# join, no separate terms artifact to go stale. The serve plan scans
-# ONLY postings + the 1-row scalars table.
+# Serving recomputes df FROM THE PRUNED SCAN (_bm25_serve_body, the
+# one kernel for the built and the appended index): the query's term
+# buckets are known driver-side, the postings scan prunes to those
+# ≤|q| partitions with the term list pushed down, and df = per-term
+# posting count over exactly those rows — a query-vocabulary-bounded
+# aggregate (≤15 terms), no corpus-sized join, no separate terms
+# artifact to go stale. The serve plan scans ONLY postings + the 1-row
+# scalars table.
 #
 # text_bm25_index_append returns a per-bucket census with THREE
 # certificates (the gate hash attests all of them):
@@ -2126,9 +2117,9 @@ def text_bm25_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 1 + n_appends.
 # --------------------------------------------------------------------------
 def _bm25_postings(docs: DataFrame) -> DataFrame:
-    """(term, doc_id, tf, dl, tbkt) postings frame — the append-family
-    layout (no df: corpus-global, recomputed at serve time from the
-    pruned scan)."""
+    """(term, doc_id, tf, dl, tbkt) postings frame — the one postings
+    layout, built and appended (no df: corpus-global, recomputed at
+    serve time from the pruned scan)."""
     from jobx_spark.functions import md5_long
 
     from pyspark.sql import Window as W
@@ -2181,103 +2172,45 @@ def _bm25_corpus_scalars(docs: DataFrame) -> DataFrame:
     )
 
 
-def _bm25_append_serve_body(
-    spark: SparkSession, ppath: str, spath: str, qterms: DataFrame,
-    terms: list[str],
-) -> DataFrame:
-    """Serve from the APPENDED (segmented, df-free) postings: bucket-
-    pruned scan, df recomputed over exactly the pruned rows (query-
-    vocabulary-bounded), same scaled-integer formula. Scans only
-    postings + scalars."""
-    from pyspark.sql import Window as W
-
-    buckets = sorted({_bm25_bucket_py(t) for t in terms})
-    post = spark.read.parquet(ppath).filter(
-        F.col("tbkt").isin(buckets) & F.col("term").isin(sorted(terms))
-    )
-    df_t = post.groupBy("term").agg(
-        F.count(F.lit(1)).cast("long").alias("df")
-    )
-    scalars = spark.read.parquet(spath)
-    scored = (
-        post.join(F.broadcast(df_t), "term")
-        .join(F.broadcast(qterms), "term")
-        .crossJoin(F.broadcast(scalars))
-        .select(
-            "query_id",
-            "doc_id",
-            F.expr(f"(( (n_docs - df) * {BM25_S_IDF} ) div df)").alias(
-                "idf_s"
-            ),
-            F.expr(
-                f"(22 * t_toks * tf * {BM25_S_TF})"
-                f" div (10 * t_toks * tf + 3 * t_toks + 9 * dl * n_docs)"
-            ).alias("tf_part_s"),
-        )
-        .select(
-            "query_id", "doc_id",
-            F.expr(f"(idf_s * tf_part_s) div {BM25_S_TF}").alias("contrib"),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score_s"))
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("score_s").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= BM25_K)
-        .select("query_id", "rank", "doc_id", "score_s")
-        .orderBy("query_id", "rank")
-    )
-
-
-def _bm25_append_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The serve-after-append DataFrame (exposed for the plan test —
-    the census certificate consumes it)."""
-    p = BM25_APPEND.paths(sf_dir)
-    ppath, spath = p["postings"], p["scalars"]
-    qterms, all_terms = _bm25_query_terms(spark)
-    return _bm25_append_serve_body(spark, ppath, spath, qterms, all_terms)
-
-
 def _bm25_append_base(
-    spark: SparkSession, sf_dir: str, p: dict[str, str]
+    spark: SparkSession, sf_dir: str, gen: index.Generation
 ) -> DataFrame:
     from jobx_spark.queries.dedup import INCR_SPLIT_ID
 
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") < INCR_SPLIT_ID)
     _bm25_corpus_scalars(corpus).write.mode("overwrite").parquet(
-        p["scalars_base"]
+        gen.part("scalars_base")
     )
     return _bm25_postings(corpus)
 
 
 BM25_APPEND = index.Segmented(
     "bm25-index-append", "postings", "tbkt", TBKT, ("term", "doc_id"),
-    _bm25_append_base, base_parts=("scalars_base",), batch_parts=("scalars",),
+    _bm25_append_base,
 )
+# stream_bm25_index_append's own root, disjoint from the batch append's
+BM25_INGEST = dataclasses.replace(BM25_APPEND, family="bm25-index-ingest")
 
 
 def _bm25_republish_scalars(
-    spark: SparkSession, p: dict[str, str], batch: DataFrame
+    spark: SparkSession, gen: index.Generation, batch: DataFrame
 ) -> None:
     """scalars = scalars_base + the batch's deltas — both addends
-    independent of the table being overwritten, so a re-run writes the
+    independent of the part being written, so a re-run writes the
     identical row."""
     bd = _bm25_corpus_scalars(batch).select(
         F.col("n_docs").alias("b_docs"), F.col("t_toks").alias("b_toks")
     )
     (
-        spark.read.parquet(p["scalars_base"])
+        spark.read.parquet(gen["scalars_base"])
         .crossJoin(bd)
         .select(
             (F.col("n_docs") + F.col("b_docs")).alias("n_docs"),
             (F.col("t_toks") + F.col("b_toks")).alias("t_toks"),
         )
         .write.mode("overwrite")
-        .parquet(p["scalars"])
+        .parquet(gen.part("scalars"))
     )
 
 
@@ -2287,32 +2220,31 @@ def text_bm25_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") >= INCR_SPLIT_ID)
 
-    def write(p: dict[str, str]) -> None:
-        # THE APPEND: batch-side-only tokenization under seg=batch,
-        # then the global scalars republish
-        BM25_APPEND.write_segment(
-            _bm25_postings(batch), p["postings"], "batch"
-        )
-        _bm25_republish_scalars(spark, p, batch)
+    def write(gen: index.Generation) -> None:
+        # THE APPEND: batch-side-only tokenization as seg=batch, then
+        # the global scalars republish
+        gen.segment(_bm25_postings(batch), "batch")
+        _bm25_republish_scalars(spark, gen, batch)
 
-    p = BM25_APPEND.append(spark, sf_dir, write)
-    return _bm25_append_census(spark, sf_dir, p["postings"], p["scalars"])
+    gen = BM25_APPEND.append(spark, sf_dir, write)
+    return _bm25_append_census(spark, sf_dir, gen)
 
 
 def _bm25_append_census(
-    spark: SparkSession, sf_dir: str, ppath: str, spath: str
+    spark: SparkSession, sf_dir: str, gen: index.Generation
 ) -> DataFrame:
     """Per-bucket census + the three certificates, planned over the
-    given append-family root (seg=base is the frozen corpus segment;
-    everything else — seg=batch for the batch job, seg=b<k> for the
-    streaming ingest — counts as appended). Shared by
+    given append-family generation (seg=base is the frozen corpus
+    segment; everything else — seg=batch for the batch job, seg=b<k>
+    for the streaming ingest — counts as appended). Shared by
     text_bm25_index_append and stream_bm25_index_append; the rebuild
     and inline-ranking legs are attestation-only."""
     docs = load_table(spark, sf_dir, "documents")
-    disk = spark.read.parquet(ppath)
+    disk = gen.table()
+    scalars = spark.read.parquet(gen["scalars"])
     rebuilt = _bm25_postings(docs)
     scalars_ok = (
-        spark.read.parquet(spath)
+        scalars
         .crossJoin(
             _bm25_corpus_scalars(docs).select(
                 F.col("n_docs").alias("r_docs"),
@@ -2329,9 +2261,7 @@ def _bm25_append_census(
         )
     )
     qterms, all_terms = _bm25_query_terms(spark)
-    served = _bm25_append_serve_body(
-        spark, ppath, spath, qterms, all_terms
-    ).alias("a")
+    served = _bm25_serve_body(disk, scalars, qterms, all_terms).alias("a")
     inline = text_bm25_topk(spark, sf_dir).alias("b")
     serve_ok = (
         served.join(inline, ["query_id", "rank"], "full_outer")

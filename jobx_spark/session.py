@@ -39,6 +39,16 @@ SQL_CONFS = {
 }
 
 
+def driver_heap(phys_bytes: int | None = None) -> str:
+    """Default driver heap: a quarter of the machine's physical memory
+    (whole GiB, at least 1g, at most 16g), so a session never asks for
+    more than a shared box can give. ``SPARK_GRAFT_DRIVER_MEM``
+    overrides it in :func:`get_spark`."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(16, max(1, phys_bytes // 4 // 2**30))}g"
+
+
 def get_spark(app_name: str = "jobx_spark", cpus: str | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's standard config.
 
@@ -51,7 +61,10 @@ def get_spark(app_name: str = "jobx_spark", cpus: str | None = None) -> SparkSes
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_heap(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", str(cpus))
     )

@@ -21,7 +21,6 @@ Layout guidance encoded in the API:
 
 from __future__ import annotations
 
-import math
 import os
 import shutil
 
@@ -180,46 +179,6 @@ def write_zordered(
 
 def drop_table(spark: SparkSession, table_name: str) -> None:
     spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-
-
-def compact(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    partition_by: list[str] | None = None,
-) -> int:
-    """Small-file compaction: rewrite a parquet dataset into files of
-    ~``target_file_bytes`` each. Returns the file count written.
-
-    Streaming sinks and over-parallel writers leave thousands of tiny
-    files; at 100 TB that turns every downstream scan into a metadata
-    storm (one task + one footer fetch per file). Compaction = read →
-    ``repartition(ceil(bytes/target))`` → atomic swap via a temp dir
-    (write the compacted copy first, then replace, so readers never see
-    a half-written dataset; on object stores use a manifest/table
-    format for true atomicity).
-
-    The repartition is a round-robin shuffle of the full dataset — the
-    price of perfect file sizing. For merely-reducing-count,
-    ``coalesce`` would avoid the shuffle but inherits upstream skew.
-    """
-    src = spark.read.parquet(path)
-    # Size from the filesystem, not Spark stats: sum of data-file sizes.
-    total = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    tmp = path.rstrip("/") + ".compacting"
-    w = src.repartition(n_files).write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(tmp)
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
-    return n_files
 
 
 def upsert_parquet(

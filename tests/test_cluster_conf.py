@@ -2,12 +2,15 @@
 fill whole waves, clamp at both ends, and produce confs a builder
 accepts."""
 
+import os
+
 from jobx_spark.cluster import (
     MAX_SHUFFLE_PARTITIONS,
     MB,
     TB,
     cluster_conf,
 )
+from jobx_spark.session import driver_heap
 
 
 def _parts(conf):
@@ -61,3 +64,13 @@ def test_confs_apply_to_a_real_session(spark):
 
     tune_for_session(spark)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(10 * MB))
+
+
+def test_driver_heap_is_a_quarter_of_memory_clamped():
+    gib = 2**30
+    assert driver_heap(2 * gib) == "1g"  # floor
+    assert driver_heap(15 * gib) == "3g"  # whole GiB, rounded down
+    assert driver_heap(64 * gib) == "16g"
+    assert driver_heap(512 * gib) == "16g"  # cap
+    machine = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    assert driver_heap() == driver_heap(machine)

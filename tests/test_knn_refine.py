@@ -277,3 +277,55 @@ def test_multiprobe_lsh_masks_zero_norm_probe(spark, tmp_path):
         ORACLES["ann_multiprobe_lsh"],
     )
     assert res.ok, res
+
+
+@pytest.mark.parametrize(
+    "qname",
+    ["ann_index_serve", "ann_filtered_topk", "stream_index_serve"],
+)
+def test_serve_family_masks_zero_norm_probe(spark, tmp_path, qname):
+    """ADVICE r10: the persisted-serve family must mask zero-norm
+    probes exactly like ann_multiprobe_lsh (r9 fix) — a zero-norm
+    query vector gives NULL cosines in Spark (sorted last under desc)
+    vs NaN in DuckDB IEEE mode (sorted first), so probe routing and
+    ranking would diverge. The fixture zeroes vec_id=1, which is both
+    a probe (vec_id < N_QUERIES) and a corpus/index row, so this also
+    pins the corpus-side serve mask (norm_s > 0 on the pruned index
+    scan; the build census still counts the row)."""
+    from jobx_spark.oracle import compare, duck_connect
+    from jobx_spark.queries.similarity import ORACLES as AQ_ORACLES
+    from jobx_spark.queries.similarity import QUERIES as AQ
+    from jobx_spark.queries.streams import ORACLES as SQ_ORACLES
+    from jobx_spark.queries.streams import QUERIES as SQ
+
+    queries = {**AQ, **SQ}
+    oracles = {**AQ_ORACLES, **SQ_ORACLES}
+    sf = _sf_with_zero_norm_probe(tmp_path)
+    df = queries[qname](spark, sf)
+    rows = df.collect()
+    ids = {r["query_id"] for r in rows} | {r["vec_id"] for r in rows}
+    assert 1 not in ids, (
+        "zero-norm vector must appear neither as a served query nor as "
+        "a ranked candidate"
+    )
+    res = compare(qname, queries[qname](spark, sf), duck_connect(sf),
+                  oracles[qname])
+    assert res.ok, res
+
+
+def test_serve_masks_do_not_change_clean_fixture_results(spark, sf_dir):
+    """The zero-norm masks are no-ops on the committed fixtures (no
+    zero-norm vectors exist), so serve==inline identity still holds —
+    the certificate that the ADVICE fix changed edge-case semantics
+    only."""
+    from jobx_spark.queries.similarity import QUERIES
+
+    served = {
+        (r["query_id"], r["vec_id"], r["rank"], r["cosine"])
+        for r in QUERIES["ann_index_serve"](spark, sf_dir).collect()
+    }
+    inline = {
+        (r["query_id"], r["vec_id"], r["rank"], r["cosine"])
+        for r in QUERIES["ann_ivf_trained_topk"](spark, sf_dir).collect()
+    }
+    assert served == inline

@@ -9,7 +9,6 @@ from jobx_spark import plans as P
 from jobx_spark.operators.skew import salted_aggregate, salted_join
 from jobx_spark.sources import load_table, read_csv, read_json
 from jobx_spark.sources.sinks import (
-    compact,
     drop_table,
     upsert_parquet,
     write_bucketed,
@@ -17,24 +16,6 @@ from jobx_spark.sources.sinks import (
     write_json,
     write_parquet,
 )
-
-
-def test_compact_reduces_files_preserves_data(spark, sf_dir, tmp_path):
-    li = load_table(spark, sf_dir, "lineitem")
-    path = str(tmp_path / "li_shattered")
-    li.repartition(64).write.parquet(path)  # 64 tiny files
-    import glob
-
-    before = len(glob.glob(f"{path}/*.parquet"))
-    assert before >= 32
-    expected_rows = li.count()
-    expected_sum = li.agg(F.sum("l_orderkey")).collect()[0][0]
-    n = compact(spark, path, target_file_bytes=64 * 1024 * 1024)
-    after = len(glob.glob(f"{path}/*.parquet"))
-    assert after == n and after < before
-    back = spark.read.parquet(path)
-    assert back.count() == expected_rows
-    assert back.agg(F.sum("l_orderkey")).collect()[0][0] == expected_sum
 
 
 def test_upsert_parquet_merges_by_key(spark, sf_dir, tmp_path):

@@ -22,6 +22,9 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 # scratch_dir/cut_lineage directories end in a run-random "-<12 hex>";
 # stripped so that two runs at one commit write the same file
 _RUN_SUFFIX = re.compile(r"-[0-9a-f]{12}$")
+# a published segment scan lists <table>/seg=<s>/v=<N> directories:
+# name it by the table, not by its trailing key=value levels
+_LEVELS = re.compile(r"(/[^/]+=[^/]*)+$")
 
 JOIN_NODES = (
     "BroadcastHashJoin",
@@ -59,8 +62,9 @@ def main() -> None:
         joins = sorted({n for n in nodes if n in JOIN_NODES})
         scans = []
         for s in P.scans(plan):
-            table = s.location.rsplit("/", 1)[-1].rstrip("]").replace(".parquet", "")
-            table = _RUN_SUFFIX.sub("", table)
+            first = s.location.split(", ... ")[0].rstrip("]")
+            table = _LEVELS.sub("", first).rsplit("/", 1)[-1]
+            table = _RUN_SUFFIX.sub("", table.replace(".parquet", ""))
             nf = len(s.pushed_filters)
             scans.append(f"{table}({nf}f/{len(s.read_columns)}c)")
         lines.append(
