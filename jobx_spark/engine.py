@@ -6,10 +6,15 @@ Spark DataFrames:
 
   * an **invocation** is a group key, not a queue message: one step's
     mapper+combiner+reducer run inside a single Arrow-batched
-    ``applyInPandas`` over ``groupBy(invocation_id)`` — one shuffle per
-    step instead of the reference's one queue message + etcd dataset
-    *per yielded pair* (its self-documented scheduling cliff,
-    mr/job_engine.py:349-358);
+    ``applyInPandas`` over a hash bucket of the invocation id — one
+    shuffle per step instead of the reference's one queue message +
+    etcd dataset *per yielded pair* (its self-documented scheduling
+    cliff, mr/job_engine.py:349-358);
+  * a ``submit()`` request is one Spark job: its root is one
+    invocation the driver built, which needs no grouping, so its step
+    runs as one ``mapInPandas`` task and one collect (see
+    ``Engine._run_step``); a fused subtree adds no job, and only a
+    fallback to the distributed recursion does;
   * dynamic fan-out (``MrConfigureToMap`` — mr/job_engine.py:330-386)
     re-keys each yielded pair to a derived child invocation id and
     recurses in the driver (the Pregel pattern): millions of child
@@ -34,6 +39,7 @@ a deliberate deviation so results are golden-hashable — FIXTURES.md A.4).
 from __future__ import annotations
 
 import hashlib
+import heapq
 import json
 import threading
 import time
@@ -225,6 +231,22 @@ def _fold_up(step_plan: dict, rows: DataFrame) -> DataFrame:
     )
 
 
+# Phase-1 rows the driver reads itself; every other row type ('reduced',
+# 'fold', 'child') stays a DataFrame for the result and the fallback.
+_META_ROWS = ("route", "traceev", "forensic", "session")
+
+
+def _whole_partition(phase1):
+    """``phase1`` as a ``mapInPandas`` function: Arrow hands a partition
+    over in batches of at most ``arrow.maxRecordsPerBatch`` rows, and
+    an invocation must reach the kernel whole, in one call."""
+
+    def run(batches):
+        yield phase1(pd.concat(list(batches), ignore_index=True))
+
+    return run
+
+
 # Per-invocation fan-out width cap for in-task subtree fusion: one
 # invocation yielding more pairs than this falls back to distributed
 # child rows so a single skewed fan-out never serializes inside one
@@ -281,9 +303,8 @@ def _make_phase1_udf(
 
     Each batch also emits one 'route' row for the driver's single
     metadata collect (see Engine._run_step): child-row counts per next
-    step, the (step, depth) nodes that emitted session rows, the
-    batch's busy seconds, the slowest fused subtree and the number of
-    subtrees that overran the budget."""
+    step, the batch's busy seconds, the slowest fused subtree and the
+    number of subtrees that overran the budget."""
     fuse_max = FUSE_MAX_CHILDREN
 
     def phase1(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -312,9 +333,9 @@ def _make_phase1_udf(
         bounds = np.append(starts, len(invs))
         rows: list[tuple] = []
         fcands: list[tuple] = []
+        scands: list[tuple] = []
         trans: set[tuple] = set()
         children: dict[str, int] = {}
-        session_nodes: set[tuple] = set()
         subtree_s = 0.0
         overruns = 0
         for s, e_ in zip(bounds[:-1], bounds[1:]):
@@ -335,9 +356,8 @@ def _make_phase1_udf(
             if out and out[0][0] == "fold":
                 ns = out[0][3]
                 children[ns] = children.get(ns, 0) + len(out) - 1
-            session_nodes.update((r[3], r[4]) for r in side)
             rows.extend(out)
-            rows.extend(side)
+            scands.extend(side)
             fcands.extend(fc)
             trans |= tr
         # Forensics ride phase 1 (guide §1.2-1: don't recompute what an
@@ -347,21 +367,20 @@ def _make_phase1_udf(
         # row, replacing the driver-side distinct + full-frontier
         # window + two-aggregate join jobs that re-derived the same
         # facts from the persisted frames. The 512-record cap makes a
-        # per-(step, depth)-per-batch budget sound: each of a node's
-        # globally smallest CAP+1 inv ids is among its own batch's
-        # smallest CAP+1, so the driver's per-node cut over these rows
-        # sees every record it can keep. seq carries the invocation's
-        # absolute fan-out depth so the driver can capture per
-        # (step, depth) node in the fused output.
-        if emit_forensics and fcands:
-            by_node: dict[tuple, list] = {}
-            for c in fcands:
-                by_node.setdefault((c[0], c[1]), []).append(c)
-            for cs in by_node.values():
-                for stp, dep, inv, pinv, counts, sample in heapq.nsmallest(
-                    INVOCATION_CAP + 1, cs, key=lambda c: c[2]
-                ):
-                    rows.append(("forensic", inv, pinv, stp, dep, counts, sample))
+        # per-(step, depth)-per-batch budget sound (_smallest_per_node).
+        # seq carries the invocation's absolute fan-out depth so the
+        # driver can capture per (step, depth) node in the fused output.
+        if emit_forensics:
+            for stp, dep, inv, pinv, counts, sample in _smallest_per_node(
+                fcands, lambda c: (c[0], c[1]), lambda c: c[2]
+            ):
+                rows.append(("forensic", inv, pinv, stp, dep, counts, sample))
+        # 'session' rows feed only the request's session capture, which
+        # keeps a node's room+1 smallest (inv, k): the same per-node
+        # per-batch budget makes them metadata rows too.
+        rows.extend(
+            _smallest_per_node(scands, lambda r: (r[3], r[4]), lambda r: (r[1], r[5]))
+        )
         # one 'traceev' marker per fused fan-out transition per batch
         # (bounded by steps × depth): the driver reconstructs the
         # step-level trace events and per-node captures from these.
@@ -369,7 +388,6 @@ def _make_phase1_udf(
             rows.append(("traceev", "", pstep, cstep, cdep, None, None))
         route = {
             "children": children,
-            "session_nodes": sorted(session_nodes),
             "subtree_s": subtree_s,
             "overruns": overruns,
             "busy_s": time.perf_counter() - t_start,
@@ -383,6 +401,21 @@ def _make_phase1_udf(
     return phase1
 
 
+def _smallest_per_node(rows: list[tuple], node, key) -> list[tuple]:
+    """Each (step, depth) node's INVOCATION_CAP+1 smallest ``rows`` by
+    ``key``: a batch's budget for the driver's per-node capture. Each
+    of a node's globally smallest CAP+1 rows is among its own batch's
+    smallest CAP+1, so the driver's cut over every batch's rows sees
+    every record it can keep."""
+    by_node: dict[tuple, list] = {}
+    for r in rows:
+        by_node.setdefault(node(r), []).append(r)
+    return [
+        r for rs in by_node.values()
+        for r in heapq.nsmallest(INVOCATION_CAP + 1, rs, key=key)
+    ]
+
+
 def _forensic_candidate(
     step_name: str, depth: int, inv, parent_inv, seqs, ks, vs,
     n_mapped: int, n_reduced: int,
@@ -392,8 +425,6 @@ def _forensic_candidate(
     (seq ASC, k ASC, v ASC) NULLS FIRST, exactly the window ordering
     the pre-r12 driver-side sample used (arg_empty sentinel rows carry
     NULL k/v)."""
-    import heapq
-
     sample = heapq.nsmallest(
         3,
         zip((int(x) for x in seqs), ks, vs),
@@ -718,29 +749,21 @@ class Engine:
         )
 
     def _capture_sessions(
-        self, map_out: DataFrame, trace: RequestTrace | None,
-        depth: int, step_name: str,
+        self, sessions: dict[tuple, list],
+        trace: RequestTrace | None, depth: int, step_name: str,
     ) -> None:
         """Capture fan-out-path session rows for request inspection
         (reference: mr_get_request_sessions walks every invocation's
         SessionsTree). Same cap/discipline as invocation forensics:
-        reads the already-persisted map_out cache, caps before the
-        collect. Leaf sessions are consumed mapper→reducer inside one
-        task and never materialize — documented deviation."""
+        phase 1 emitted the 'session' rows budgeted per (step, depth)
+        node per batch at CAP+1; ``sessions`` holds them per node,
+        sorted by (inv, k), from _run_step's one metadata collect.
+        Leaf sessions are consumed mapper→reducer inside one task and
+        never materialize — documented deviation."""
         if trace is None or len(trace.sessions) >= INVOCATION_CAP:
             return
         room = INVOCATION_CAP - len(trace.sessions)
-        rows = (
-            map_out.filter(
-                (F.col("row_type") == "session")
-                & (F.col("step") == step_name)
-                & (F.col("seq") == depth)
-            )
-            .select("inv", "k", "v")
-            .orderBy("inv", "k")
-            .limit(room + 1)
-            .collect()
-        )
+        rows = sessions.get((step_name, depth), [])[: room + 1]
         trace.record_sessions(
             # session keys are plain strings; values are JSON-encoded
             # by HandlerScope.session_set
@@ -790,16 +813,29 @@ class Engine:
     def _run_step(
         self, workflow_name: str, step_name: str, frontier: DataFrame,
         trace: RequestTrace, persisted: list, depth: int = 0,
-        n_invocations: int | None = None,
+        n_invocations: int | None = None, driver_built: bool = False,
     ) -> DataFrame:
         """Run one step over a frontier of invocations; returns reduced
         rows (inv, parent_inv, seq, k, v) for those invocations.
 
-        The phase-1 output is persisted (the reference durably writes
-        every stage boundary to etcd — mr/job_engine.py:421-439; for us
-        a persist is enough because Spark recomputes lineage on loss)
-        and unpersisted by the caller after the final action — never
-        collected to the driver. The frontier itself is read once.
+        Phase 1 takes one of two shapes, chosen by the frontier:
+
+        * ``driver_built`` (submit()'s root: ONE invocation whose rows
+          the driver holds, as a LocalRelation): one invocation needs
+          no grouping, so phase 1 is one ``mapInPandas`` task over the
+          coalesced relation and ONE collect brings back every row it
+          emits — no exchange, no persist, no second action. The
+          non-metadata rows go back into a LocalRelation, whose
+          filter-collects run no Spark job, so the result collect and
+          a fallback recursion below read them as they would the
+          persisted output, without recomputing them.
+        * a distributed frontier (submit_dataset, child levels) is
+          grouped by a hash bucket of the invocation id; the output is
+          persisted (the reference durably writes every stage boundary
+          to etcd — mr/job_engine.py:421-439; for us a persist is
+          enough because Spark recomputes lineage on loss), unpersisted
+          by the caller after the final action, and only its metadata
+          rows are collected. The frontier itself is read once.
 
         A fan-out invocation that was not fused emits one 'fold' row
         and its 'child' rows; the driver recurses into each child step
@@ -816,16 +852,12 @@ class Engine:
         wider than FUSE_MAX_CHILDREN, or an overrun deadline)."""
         if depth > _MAX_DEPTH:
             raise RuntimeError(f"fan-out depth exceeded {_MAX_DEPTH}")
+        if driver_built:
+            n_invocations = 1
         step = self.catalog.get_step(workflow_name, step_name)
         plan = self._step_plan(step)
         trace.record(depth, step_name, "map")
 
-        # Group by a HASH BUCKET of the invocation id, not the id: a
-        # wide fan-out makes invocations per-pair (reference semantics),
-        # and per-id grouping would pay pandas-group overhead per PAIR.
-        # Bucket count ~4 groups per core keeps every task busy while
-        # the in-UDF loop amortizes Arrow batching over invocations.
-        n_buckets = max(self.spark.sparkContext.defaultParallelism * 4, 64)
         # Decide forensics at plan-build time (single-writer trace: the
         # cap can only have been consumed by steps that already ran):
         # when capture will run, phase 1 emits the per-invocation
@@ -834,46 +866,69 @@ class Engine:
             trace is not None and len(trace.invocations) < INVOCATION_CAP
         )
         plans, budget_s = self._fuse_plans(workflow_name, n_invocations)
-        map_out = frontier.groupBy(
-            F.pmod(F.xxhash64("inv"), F.lit(n_buckets)).alias("_bucket")
-        ).applyInPandas(
-            _make_phase1_udf(plan, self.workdir, want_forensics, plans, depth, budget_s),
-            schema=_ROWS_SCHEMA,
-        ).persist()
-        persisted.append(map_out)
-        reduced = map_out.filter(F.col("row_type") == "reduced")
-        # ONE metadata action per step: routing (child counts per next
-        # step from the per-batch 'route' rows), the 'traceev' fan-out
-        # transitions fused subtrees took, and every (step, depth)
-        # node's forensic records. Bounded by n_buckets × (CAP+1) rows
-        # per node (phase 1 budgets its forensic rows), not by data.
+        phase1 = _make_phase1_udf(
+            plan, self.workdir, want_forensics, plans, depth, budget_s
+        )
+        if driver_built:
+            # coalesce: a local relation is sliced into
+            # defaultParallelism partitions
+            action = frontier.coalesce(1).mapInPandas(
+                _whole_partition(phase1), schema=_ROWS_SCHEMA
+            )
+        else:
+            # Group by a HASH BUCKET of the invocation id, not the id: a
+            # wide fan-out makes invocations per-pair (reference
+            # semantics), and per-id grouping would pay pandas-group
+            # overhead per PAIR. Bucket count ~4 groups per core keeps
+            # every task busy while the in-UDF loop amortizes Arrow
+            # batching over invocations.
+            n_buckets = max(self.spark.sparkContext.defaultParallelism * 4, 64)
+            map_out = frontier.groupBy(
+                F.pmod(F.xxhash64("inv"), F.lit(n_buckets)).alias("_bucket")
+            ).applyInPandas(phase1, schema=_ROWS_SCHEMA).persist()
+            persisted.append(map_out)
+            action = map_out.filter(F.col("row_type").isin(*_META_ROWS))
+        # ONE action per step: routing (child counts per next step from
+        # the per-batch 'route' rows), the 'traceev' fan-out transitions
+        # fused subtrees took, and every (step, depth) node's forensic
+        # and session records. The metadata is bounded by n_buckets ×
+        # (CAP+1) rows per node (phase 1 budgets its forensic and
+        # session rows), not by data.
         t_action = time.perf_counter()
-        meta = map_out.filter(
-            F.col("row_type").isin("route", "traceev", "forensic")
-        ).collect()
+        collected = action.collect()
         wall_s = time.perf_counter() - t_action
+        if driver_built:
+            map_out = local_frame(
+                self.spark,
+                [r for r in collected if r["row_type"] not in _META_ROWS],
+                _ROWS_SCHEMA,
+            )
+        reduced = map_out.filter(F.col("row_type") == "reduced")
         next_steps: dict[str, int] = {}
-        session_nodes: set[tuple] = set()
         transitions: set[tuple] = set()
         forensic: dict[tuple, list] = {}
+        sessions: dict[tuple, list] = {}
         busy_s = subtree_s = 0.0
         overruns = 0
-        for r in meta:
+        for r in collected:
             if r["row_type"] == "route":
                 route = _decode(r["v"])
                 for ns, n in route["children"].items():
                     next_steps[ns] = next_steps.get(ns, 0) + n
-                session_nodes.update(tuple(nd) for nd in route["session_nodes"])
                 busy_s += route["busy_s"]
                 subtree_s = max(subtree_s, route["subtree_s"])
                 overruns += route["overruns"]
             elif r["row_type"] == "traceev":
                 transitions.add((r["parent_inv"], r["step"], r["seq"]))
-            else:
+            elif r["row_type"] == "forensic":
                 forensic.setdefault((r["step"], r["seq"]), []).append(r)
+            elif r["row_type"] == "session":
+                sessions.setdefault((r["step"], r["seq"]), []).append(r)
         for node_rows in forensic.values():
             node_rows.sort(key=lambda r: r["inv"])
-        if depth == 0 and n_invocations == 1:
+        for node_rows in sessions.values():
+            node_rows.sort(key=lambda r: (r["inv"], r["k"]))
+        if driver_built:
             # submit()'s root runs one invocation in one batch: what the
             # action cost beyond that batch's busy time is the cost of
             # a Python wave (scheduling, worker hand-off, Arrow I/O)
@@ -887,11 +942,6 @@ class Engine:
             ))
         self._capture_invocations(forensic, trace, depth, step_name)
 
-        def capture_node_sessions(d: int, s: str) -> None:
-            # a node without session rows would collect nothing
-            if (s, d) in session_nodes:
-                self._capture_sessions(map_out, trace, d, s)
-
         # Fused-subtree trace events + per-node captures, replayed in
         # the exact pre-order the driver recursion used to produce:
         # map → [per child step: fanout-edge, child subtree] → fold.
@@ -902,7 +952,7 @@ class Engine:
                 {cs for (ps, cs, cd) in transitions if ps == s and cd == d + 1}
             )
             if kids and capture_sessions:
-                capture_node_sessions(d, s)
+                self._capture_sessions(sessions, trace, d, s)
             for ns in kids:
                 trace.record(d, s, f"fanout→{ns}")
                 trace.record(d + 1, ns, "map")
@@ -925,7 +975,7 @@ class Engine:
 
         # fan-out fallback: recurse per next step, then fold children
         # into their parents with this step's reducer.
-        capture_node_sessions(depth, step_name)
+        self._capture_sessions(sessions, trace, depth, step_name)
         child_rows = map_out.filter(F.col("row_type") == "child")
         fold_in = map_out.filter(F.col("row_type") == "fold")
         for ns in sorted(next_steps):
@@ -974,9 +1024,10 @@ class Engine:
             result_rows = self._run_step(
                 workflow_name, job.initial_step_name, frontier,
                 request.trace, persisted,
-                # ONE root invocation: its subtree fuses only
-                # speculatively, under a measured deadline
-                n_invocations=1,
+                # ONE root invocation: phase 1 is one action, and its
+                # subtree fuses only speculatively, under a measured
+                # deadline
+                driver_built=True,
             )
             pairs = [
                 (_decode(r["k"]), _decode(r["v"]))

@@ -30,20 +30,20 @@ from __future__ import annotations
 
 # (relative file, qualified enclosing function, action) -> (count, why)
 COLLECT_BOUNDS: dict[tuple[str, str, str], tuple[int, str]] = {
-    ("jobx_spark/engine.py", "_capture_sessions", "collect"): (
-        1,
-        "session-state forensics: orderBy().limit(room+1), room ≤ "
-        "INVOCATION_CAP(512) — same cap as the invocation capture",
-    ),
     ("jobx_spark/engine.py", "_run_step", "collect"): (
         1,
-        "the step's one metadata collect: one 'route' row per phase-1 "
-        "batch (child counts per next step, busy time), 'traceev' "
-        "transitions (≤ steps × depth per batch) and 'forensic' rows, "
-        "which phase 1 budgets to CAP+1 per (step, depth) node per "
-        "batch — ≤ n_buckets × (INVOCATION_CAP(512)+1) rows per node, "
-        "whatever the data size; the driver keeps the room+1 smallest "
-        "invocation ids per node",
+        "the step's one action. A distributed frontier collects only "
+        "metadata: one 'route' row per phase-1 batch (child counts per "
+        "next step, busy time), 'traceev' transitions (≤ steps × depth "
+        "per batch), and 'forensic' and 'session' rows, which phase 1 "
+        "budgets to CAP+1 per (step, depth) node per batch — ≤ "
+        "n_buckets × (INVOCATION_CAP(512)+1) rows per node, whatever "
+        "the data size; the driver keeps the room+1 smallest per node. "
+        "submit()'s root (one invocation the driver built) collects "
+        "that one batch's metadata plus its output: the request's "
+        "result rows (user-requested result materialization, as "
+        "submit.run) or, when its fan-out falls back, the one "
+        "invocation's yields, which ran in one task",
     ),
     ("jobx_spark/engine.py", "submit.run", "collect"): (
         1,

@@ -193,13 +193,14 @@ def upsert_parquet(
     survives (ties broken toward the update batch).
 
     Implementation is union → per-key top-1 (max_by over a precedence
-    struct) → atomic-swap rewrite. Without a table format there is no
-    row-level update in parquet, so upsert IS a rewrite — at scale,
-    partition the dataset and rewrite only partitions the update batch
-    touches (join the update keys against partition values first), or
-    adopt a table format; this function is the single-partition core
-    of that loop.
+    struct) → crash-safe swap rewrite (see :func:`finish_swap`).
+    Without a table format there is no row-level update in parquet, so
+    upsert IS a rewrite — at scale, partition the dataset and rewrite
+    only partitions the update batch touches (join the update keys
+    against partition values first), or adopt a table format; this
+    function is the single-partition core of that loop.
     """
+    finish_swap(path)
     existing = spark.read.parquet(path)
     cols = existing.columns
     tagged = existing.withColumn("__prio", F.lit(0)).unionByName(
@@ -215,7 +216,33 @@ def upsert_parquet(
         )
         .select("__row.*")
     )
-    tmp = path.rstrip("/") + ".upserting"
+    tmp, old = _swap_paths(path)
     merged.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
+    shutil.move(path, old)
     shutil.move(tmp, path)
+    shutil.rmtree(old)
+
+
+def _swap_paths(path: str) -> tuple[str, str]:
+    """(new dataset being written, old dataset moved aside) of a swap."""
+    base = path.rstrip("/")
+    return base + ".upserting", base + ".replaced"
+
+
+def finish_swap(path: str) -> None:
+    """Complete a swap of ``path`` that a crash interrupted.
+
+    The swap moves the old dataset aside, moves the fully written new
+    one in, then deletes the old one, so ``path`` is missing only
+    between the two moves. A crash there leaves both copies beside it:
+    the new one is complete (it was written before the first move), so
+    it is moved in. A crash after the second move leaves only the old
+    copy to delete. A crash before the first move leaves ``path``
+    intact (the next write overwrites the partial new copy)."""
+    tmp, old = _swap_paths(path)
+    if not os.path.exists(old):
+        return
+    if not os.path.exists(path):
+        shutil.move(tmp if os.path.exists(tmp) else old, path)
+    if os.path.exists(old):
+        shutil.rmtree(old)

@@ -787,7 +787,7 @@ def stream_upsert_parquet(
 ) -> None:
     """Streaming MERGE: each micro-batch upserts into a keyed parquet
     dataset via ``foreachBatch`` + :func:`jobx_spark.sources.sinks.
-    upsert_parquet` (union → max_by precedence → atomic-swap rewrite).
+    upsert_parquet` (union → max_by precedence → crash-safe swap rewrite).
 
     Replayed batches are absorbed, not duplicated: re-upserting rows
     already merged picks the same per-key winner, so the sink converges
@@ -796,10 +796,13 @@ def stream_upsert_parquet(
     maintaining a continuously-updated dimension/state table from a
     change stream. Runs to completion (AvailableNow).
     """
-    from jobx_spark.sources.sinks import upsert_parquet
+    from jobx_spark.sources.sinks import finish_swap, upsert_parquet
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        # an interrupted swap must not read as a missing dataset: the
+        # bootstrap would rewrite it from this batch alone
+        finish_swap(path)
         if not os.path.exists(path):
             # bootstrap: the first batch must itself collapse to one
             # winner per key (same precedence the upserts use)

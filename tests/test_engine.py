@@ -746,3 +746,54 @@ def test_submit_frontier_is_a_local_relation(engine, monkeypatch):
     plan = frontiers[0]._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation" in plan
     assert "LogicalRDD" not in plan
+
+
+def test_submit_runs_one_spark_job(engine, spark):
+    """A blocking submit() is one Spark job: a flat root, and a fan-out
+    root whose subtree fuses in-task once a warm request has measured
+    the wave cost. Phase 1 of the root is one task over the driver's
+    rows, and that one action also returns the result rows."""
+    _, flat_jobs = _jobs_of(
+        spark, "submit-flat", lambda: engine.submit("wf", "job5", {"arg1": 144})
+    )
+    assert len(flat_jobs) == 1
+
+    engine.submit("wf", "job4", {"arg1": 10})  # measures the wave cost
+    req, fan_jobs = _jobs_of(
+        spark, "submit-fanout", lambda: engine.submit("wf", "job4", {"arg1": 144})
+    )
+    assert [f.decision for f in req.trace.fusion] == ["fused"]
+    assert req.trace.sessions  # session capture ran no job either
+    assert len(fan_jobs) == 1
+
+
+def mapper_total(scope, arguments):
+    yield MrConfigureToReturn()
+    for _k, v in arguments:
+        yield ("total", v)
+
+
+def test_root_is_one_invocation_whatever_the_arrow_batch_size(spark):
+    """More arguments than Arrow batch rows and than default partitions
+    still reach the root's mapper as ONE invocation: one forensic
+    record holding every argument, and one total (each extra
+    invocation would add a 'total' pair)."""
+    e = Engine(spark)
+    e.create_workflow("wfb")
+    e.register_handler("wfb", "total", fn=mapper_total, handler_type="mapper")
+    e.register_handler("wfb", "sum", fn=reducer_sum, handler_type="reducer")
+    e.create_step("wfb", "sb", "total", "sum")
+    e.create_job("wfb", "jb", "sb")
+    args = {f"a{i:02d}": i for i in range(64)}
+    assert len(args) > spark.sparkContext.defaultParallelism
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try:
+        req = e.submit("wfb", "jb", args)
+    finally:
+        spark.conf.set(key, old)
+    assert req.result["pairs"] == [["total", sum(args.values())]]
+    roots = [r for r in req.trace.invocations if r.parent_inv is None]
+    assert len(roots) == 1 and roots[0].n_args == 64

@@ -48,6 +48,38 @@ def test_upsert_parquet_merges_by_key(spark, sf_dir, tmp_path):
     assert got[10_000_000] == "brand-new"
 
 
+def test_upsert_parquet_survives_a_crash_mid_swap(spark, tmp_path, monkeypatch):
+    """A crash between the swap's two filesystem steps loses no key: the
+    next upsert completes the swap first, so every earlier key and both
+    batches' updates survive."""
+    import shutil
+
+    path = str(tmp_path / "kv")
+    schema = "key long, ver long"
+    spark.createDataFrame([(i, 0) for i in range(20)], schema).write.parquet(path)
+    move = shutil.move
+
+    def crash_moving_into_path(src, dst):
+        if dst == path:
+            raise OSError("crash between the swap's steps")
+        return move(src, dst)
+
+    monkeypatch.setattr(shutil, "move", crash_moving_into_path)
+    with pytest.raises(OSError):
+        upsert_parquet(
+            spark, path, spark.createDataFrame([(3, 1), (20, 1)], schema),
+            key_cols=["key"], version_col="ver",
+        )
+    monkeypatch.setattr(shutil, "move", move)
+    upsert_parquet(
+        spark, path, spark.createDataFrame([(4, 2), (21, 2)], schema),
+        key_cols=["key"], version_col="ver",
+    )
+    got = {r["key"]: r["ver"] for r in spark.read.parquet(path).collect()}
+    want = {i: 0 for i in range(20)} | {3: 1, 20: 1, 4: 2, 21: 2}
+    assert got == want
+
+
 def test_csv_round_trip(spark, sf_dir, tmp_path):
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 100)
     path = str(tmp_path / "orders_csv")
