@@ -386,10 +386,7 @@ def test_index_serve_equals_inline_trained_topk(spark, sf_dir):
     """The persisted serving path and the inline train-in-plan path use
     the same quantizer constants, so their results must be IDENTICAL
     row sets — the certificate that persisting the index changed the
-    execution shape, not the answer. The serve path's zero-norm masks
-    are no-ops here (the fixtures hold no zero-norm vector), so the
-    identity also certifies that those masks changed edge-case
-    semantics only."""
+    execution shape, not the answer."""
     from jobx_spark.queries.similarity import QUERIES
 
     served = {

@@ -311,3 +311,21 @@ def test_serve_family_masks_zero_norm_probe(spark, tmp_path, qname):
     res = compare(qname, queries[qname](spark, sf), duck_connect(sf),
                   oracles[qname])
     assert res.ok, res
+
+
+def test_serve_masks_do_not_change_clean_fixture_results(spark, sf_dir):
+    """The zero-norm masks are no-ops on the committed fixtures (no
+    zero-norm vectors exist), so serve==inline identity still holds —
+    the certificate that the ADVICE fix changed edge-case semantics
+    only."""
+    from jobx_spark.queries.similarity import QUERIES
+
+    served = {
+        (r["query_id"], r["vec_id"], r["rank"], r["cosine"])
+        for r in QUERIES["ann_index_serve"](spark, sf_dir).collect()
+    }
+    inline = {
+        (r["query_id"], r["vec_id"], r["rank"], r["cosine"])
+        for r in QUERIES["ann_ivf_trained_topk"](spark, sf_dir).collect()
+    }
+    assert served == inline
