@@ -777,7 +777,7 @@ class Engine:
                 self.wave_cost_s = cost_s
 
     def _fuse_plans(
-        self, workflow_name: str, n_invocations: int | None,
+        self, workflow_name: str, n_invocations: int,
     ) -> tuple[dict | None, float | None]:
         """(step-plan table, in-task budget seconds) for one frontier:
         the table is None when subtree fusion is off; a None budget
@@ -792,8 +792,6 @@ class Engine:
         recursion (ski rental: a heavy subtree costs at most about 2×
         the distributed path). A pinned ``fuse_min_invocations`` keeps
         the plain width rule."""
-        if n_invocations is None:
-            return None, None
         threshold = self.fuse_min_invocations
         speculate = threshold is None and self.wave_cost_s is not None
         if threshold is None:
@@ -812,8 +810,8 @@ class Engine:
 
     def _run_step(
         self, workflow_name: str, step_name: str, frontier: DataFrame,
-        trace: RequestTrace, persisted: list, depth: int = 0,
-        n_invocations: int | None = None, driver_built: bool = False,
+        trace: RequestTrace, persisted: list, depth: int = 0, *,
+        n_invocations: int, driver_built: bool = False,
     ) -> DataFrame:
         """Run one step over a frontier of invocations; returns reduced
         rows (inv, parent_inv, seq, k, v) for those invocations.
@@ -852,8 +850,6 @@ class Engine:
         wider than FUSE_MAX_CHILDREN, or an overrun deadline)."""
         if depth > _MAX_DEPTH:
             raise RuntimeError(f"fan-out depth exceeded {_MAX_DEPTH}")
-        if driver_built:
-            n_invocations = 1
         step = self.catalog.get_step(workflow_name, step_name)
         plan = self._step_plan(step)
         trace.record(depth, step_name, "map")
@@ -1027,7 +1023,7 @@ class Engine:
                 # ONE root invocation: phase 1 is one action, and its
                 # subtree fuses only speculatively, under a measured
                 # deadline
-                driver_built=True,
+                n_invocations=1, driver_built=True,
             )
             pairs = [
                 (_decode(r["k"]), _decode(r["v"]))

@@ -87,7 +87,14 @@ def cut_lineage(df: DataFrame, tag: str = "step") -> DataFrame:
     whole accumulated lineage."""
     path = os.path.join(checkpoint_root(), f"{tag}-{uuid.uuid4().hex[:12]}")
     df.write.mode("error").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return _read_back(df, path)
+
+
+def _read_back(df: DataFrame, path: str) -> DataFrame:
+    """The parquet files just written from ``df`` at ``path``, read with
+    the schema they were written with: naming it skips the footer
+    inference, a Spark job per read."""
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def cut_lineage_observed(
@@ -111,4 +118,4 @@ def cut_lineage_observed(
         observed = observed.select(*keep)
     path = os.path.join(checkpoint_root(), f"{tag}-{uuid.uuid4().hex[:12]}")
     observed.write.mode("error").parquet(path)
-    return df.sparkSession.read.parquet(path), obs.get
+    return _read_back(observed, path), obs.get

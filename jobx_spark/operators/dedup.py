@@ -852,6 +852,30 @@ def kcore(
 
 
 # ------------------------------------------------------------- n-gram jaccard
+def _gram_table(
+    df: DataFrame, id_col: str, text_col: str, block_col: str | None,
+    n: int,
+) -> DataFrame:
+    """The token table (id, blk, h) every n-gram pair join starts from,
+    persisted because each caller reads it more than once (otherwise
+    the input is re-tokenized per consumer). Arrow gram producer
+    (operators.text.gram_rows): per-doc-distinct rows with no distinct
+    shuffle (per-doc dedup happens inside the batch) and no
+    interpreted shingle lambda. Token-less docs emit nothing — they
+    never join, so the old explode_outer NULL row changes no output."""
+    return gram_rows(
+        df.select(
+            F.col(id_col).alias("id"),
+            F.col(block_col).alias("blk") if block_col else F.lit(1).alias("blk"),
+            F.col(text_col).alias("text"),
+        ),
+        ["id", "blk"],
+        "text",
+        ns=(n,),
+        distinct=True,
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -865,25 +889,8 @@ def ngram_jaccard_pairs(
     shuffle is keyed by shingle, so cost tracks shared-shingle volume,
     not the pair cross product.
     """
-    # Arrow gram producer (operators.text.gram_rows): per-doc-distinct
-    # (id, blk, h) rows with no distinct shuffle (per-doc dedup happens
-    # inside the batch) and no interpreted shingle lambda. Token-less
-    # docs emit nothing — they never join, so the old explode_outer
-    # NULL row changes no output.
-    sh = gram_rows(
-        df.select(
-            F.col(id_col).alias("id"),
-            *( [F.col(block_col).alias("blk")] if block_col else [F.lit(1).alias("blk")] ),
-            F.col(text_col).alias("text"),
-        ),
-        ["id", "blk"],
-        "text",
-        ns=(n,),
-        distinct=True,
-    )
-    # sizes + both self-join sides reuse the token table; persist it or
-    # the input is tokenized four times.
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    # sizes + both self-join sides reuse the token table
+    sh = _gram_table(df, id_col, text_col, block_col, n)
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -924,20 +931,7 @@ def containment_pairs(
     :func:`ngram_jaccard_pairs`, so the shuffle is keyed by shingle and
     scales with shared-shingle volume, not |docs|².
     """
-    # same Arrow gram-producer shape as ngram_jaccard_pairs (per-doc
-    # distinct inside the batch, no distinct shuffle, no interpreted
-    # shingle lambda)
-    sh = gram_rows(
-        df.select(
-            F.col(id_col).alias("id"),
-            *([F.col(block_col).alias("blk")] if block_col else [F.lit(1).alias("blk")]),
-            F.col(text_col).alias("text"),
-        ),
-        ["id", "blk"],
-        "text",
-        ns=(n,),
-        distinct=True,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = _gram_table(df, id_col, text_col, block_col, n)
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -988,20 +982,9 @@ def ngram_jaccard_prefix_pairs(
     per-doc-distinct from array_distinct BEFORE the explode, so the old
     (id, blk, h) distinct was a full shuffle that removed nothing.)
     """
-    sh = gram_rows(
-        df.select(
-            F.col(id_col).alias("id"),
-            *( [F.col(block_col).alias("blk")] if block_col else [F.lit(1).alias("blk")] ),
-            F.col(text_col).alias("text"),
-        ),
-        ["id", "blk"],
-        "text",
-        ns=(n,),
-        distinct=True,
-    )
     # two downstream branches (the df census and the ranked join) read
-    # the token table; persist so the second doesn't re-tokenize.
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    # the token table
+    sh = _gram_table(df, id_col, text_col, block_col, n)
     dfreq = sh.groupBy("blk", "h").agg(F.count("*").alias("dfreq"))
     # sz rides the SAME id-window exchange as the prefix rank (a count
     # over the whole partition), replacing the separate groupBy(id)

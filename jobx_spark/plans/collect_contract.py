@@ -99,29 +99,25 @@ COLLECT_BOUNDS: dict[tuple[str, str, str], tuple[int, str]] = {
         "canonicalization as compare, on gate-sized results (never in "
         "a registered query's plan)",
     ),
-    ("jobx_spark/queries/pipeline.py", "_bpe_learned_words", "collect"): (
+    ("jobx_spark/queries/pipeline.py", "_bpe_learn", "collect"): (
         1,
         "per-round best-pair argmax through limit(1): ≤1 row × "
-        "BPE_MERGES rounds — shared learn chain of pipe_bpe_encode / "
-        "pipe_bpe_decode, same contract as the r5-audited learner",
+        "BPE_MERGES rounds — the one learn chain of every pipe_bpe_* "
+        "query and the persisted vocabulary",
     ),
-    ("jobx_spark/queries/pipeline.py", "_bpe_symbol_idmap", "collect"): (
+    ("jobx_spark/queries/pipeline.py", "_bpe_symbols", "collect"): (
         1,
         "symbol vocabulary: ≤ |chars| + BPE_MERGES rows — collected "
         "into the literal id / inverse maps that keep encode and "
-        "decode join-free per symbol",
+        "decode join-free per symbol, and persisted as the "
+        "vocabulary's symbol table",
     ),
     ("jobx_spark/queries/pipeline.py", "pipe_encode_serve", "collect"): (
         1,
         "the persisted symbol table: ≤ |chars| + BPE_MERGES rows by "
         "construction — loaded into the literal id map that keeps the "
         "serve-path encode join-free per symbol (same bound as "
-        "_bpe_symbol_idmap)",
-    ),
-    ("jobx_spark/queries/pipeline.py", "pipe_bpe_learn", "collect"): (
-        1,
-        "per-round best-pair argmax through limit(1): ≤1 row per merge "
-        "round, BPE_MERGES rounds",
+        "_bpe_symbols)",
     ),
     ("jobx_spark/queries/similarity.py", "_pq_adc_lut", "collect"): (
         2,

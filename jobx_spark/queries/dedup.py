@@ -1510,10 +1510,12 @@ ORDER BY new_id, old_id
 SPAN_N = 8
 
 
-def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _span_census(docs: DataFrame, min_docs: int) -> DataFrame:
+    """The one span census: every SPAN_N-token window of ``docs``
+    hashed, counted per hash, and reported when it occurs in more than
+    ``min_docs`` documents."""
     from jobx_spark.operators.text import gram_rows
 
-    docs = load_table(spark, sf_dir, "documents")
     # Arrow gram producer — multiset spans (no per-doc dedup: n_total
     # counts every occurrence), no interpreted shingle lambda
     spans = gram_rows(docs, ["doc_id"], "text", ns=(SPAN_N,), distinct=False)
@@ -1525,9 +1527,13 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("first_doc"),
             F.max("doc_id").alias("last_doc"),
         )
-        .filter(F.col("n_docs") > 1)
+        .filter(F.col("n_docs") > min_docs)
         .orderBy("h")
     )
+
+
+def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _span_census(load_table(spark, sf_dir, "documents"), 1)
 
 
 # --------------------------------------------------------------------------
@@ -1546,23 +1552,9 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # probe.
 # --------------------------------------------------------------------------
 def dedup_substring_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jobx_spark.operators.text import gram_rows
-
-    scaled = _docs_scaled(spark, sf_dir)
-    # Arrow gram producer over the REPLICATED corpus — the 8× span
-    # stream is still genuinely produced and aggregated
-    spans = gram_rows(scaled, ["doc_id"], "text", ns=(SPAN_N,), distinct=False)
-    return (
-        spans.groupBy("h")
-        .agg(
-            F.count("*").alias("n_total"),
-            F.count_distinct("doc_id").alias("n_docs"),
-            F.min("doc_id").alias("first_doc"),
-            F.max("doc_id").alias("last_doc"),
-        )
-        .filter(F.col("n_docs") > REPLICAS)
-        .orderBy("h")
-    )
+    # the 8× span stream over the REPLICATED corpus is genuinely
+    # produced and aggregated
+    return _span_census(_docs_scaled(spark, sf_dir), REPLICAS)
 
 
 # --------------------------------------------------------------------------

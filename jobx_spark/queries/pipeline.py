@@ -1380,7 +1380,14 @@ BPE_MERGES = 3
 _BPE_SEP = "\x1f"
 
 
-def pipe_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _bpe_learn(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, list[tuple[int, str, str, int]]]:
+    """The one BPE learner: the distinct-word table (w, sym, n) after
+    BPE_MERGES rounds and the merge list [(rank, lhs, rhs, pair_n)] —
+    shared by every pipe_bpe_* query and the persisted vocabulary. The
+    per-round best-pair argmax is a 1-row limit(1) collect (bounded;
+    declared in collect_contract)."""
     from jobx_spark.lineage import cut_lineage
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1389,16 +1396,19 @@ def pipe_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count("*").alias("n"))
     )
-    words = wf.select(
-        # NB Spark's two-arg rtrim is (trimStr, str) — reversed from
-        # DuckDB's (str, chars); TRIM(TRAILING...) is unambiguous.
-        F.expr(
-            f"trim(TRAILING '{_BPE_SEP}' FROM"
-            f" regexp_replace(w, '(.)', '$1{_BPE_SEP}'))"
-        ).alias("sym"),
-        "n",
+    words = cut_lineage(
+        wf.select(
+            "w",
+            # NB Spark's two-arg rtrim is (trimStr, str) — reversed from
+            # DuckDB's (str, chars); TRIM(TRAILING...) is unambiguous.
+            F.expr(
+                f"trim(TRAILING '{_BPE_SEP}' FROM"
+                f" regexp_replace(w, '(.)', '$1{_BPE_SEP}'))"
+            ).alias("sym"),
+            "n",
+        ),
+        "bpee-w",
     )
-    words = cut_lineage(words, "bpe-w")
     merges = []
     for t in range(1, BPE_MERGES + 1):
         pairs = (
@@ -1416,17 +1426,20 @@ def pipe_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("p.x").alias("x"), F.col("p.y").alias("y"))
             .agg(F.sum("n").alias("cnt"))
         )
-        rows = pairs.orderBy(F.desc("cnt"), F.asc("x"), F.asc("y")).limit(1).collect()
+        rows = pairs.orderBy(
+            F.desc("cnt"), F.asc("x"), F.asc("y")
+        ).limit(1).collect()
         if not rows:
             # fully-merged degenerate corpus: no multi-symbol word
-            # remains, so no pair exists — stop learning (ADVICE r8;
-            # the oracle's LEFT JOIN fallback yields the same truncated
-            # merge list)
+            # remains, so no pair exists — stop learning with the words
+            # unchanged (ADVICE r8; the oracle's LEFT JOIN fallback
+            # yields the same truncated merge list)
             break
         best = rows[0]
         merges.append((t, best.x, best.y, int(best.cnt)))
         words = cut_lineage(
             words.select(
+                "w",
                 F.replace(
                     F.col("sym"),
                     F.lit(best.x + _BPE_SEP + best.y),
@@ -1434,8 +1447,13 @@ def pipe_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("sym"),
                 "n",
             ),
-            "bpe-w",
+            "bpee-w",
         )
+    return words, merges
+
+
+def pipe_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    words, merges = _bpe_learn(spark, sf_dir)
     final_syms = words.agg(
         F.sum(F.col("n") * F.size(F.split("sym", _BPE_SEP))).alias("final_symbols")
     )
@@ -1509,93 +1527,26 @@ ORDER BY rank
 # small); the offset prefix runs per document (window partition =
 # one doc's tokens, bounded by document length — declared).
 # --------------------------------------------------------------------------
-def _bpe_learned_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The learn-chain distinct-word table (w, sym, n) after BPE_MERGES
-    rounds — shared by pipe_bpe_encode and pipe_bpe_decode. The
-    per-round best-pair argmax is a 1-row limit(1) collect (bounded,
-    same contract as pipe_bpe_learn; declared in collect_contract)."""
-    from jobx_spark.lineage import cut_lineage
-
-    docs = load_table(spark, sf_dir, "documents")
-    wf = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("n"))
-    )
-    words = cut_lineage(
-        wf.select(
-            "w",
-            F.expr(
-                f"trim(TRAILING '{_BPE_SEP}' FROM"
-                f" regexp_replace(w, '(.)', '$1{_BPE_SEP}'))"
-            ).alias("sym"),
-            "n",
-        ),
-        "bpee-w",
-    )
-    for _t in range(1, BPE_MERGES + 1):
-        pairs = (
-            words.select("n", F.split("sym", _BPE_SEP).alias("a"))
-            .filter(F.size("a") >= 2)
-            .select(
-                "n",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(0, size(a)-2),"
-                        " i -> struct(a[i] AS x, a[i+1] AS y))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy(F.col("p.x").alias("x"), F.col("p.y").alias("y"))
-            .agg(F.sum("n").alias("cnt"))
-        )
-        rows = pairs.orderBy(
-            F.desc("cnt"), F.asc("x"), F.asc("y")
-        ).limit(1).collect()
-        if not rows:
-            # fully-merged degenerate corpus: keep words unchanged and
-            # stop — mirrors the learner and the oracle's LEFT JOIN
-            # fallback (ADVICE r8)
-            break
-        best = rows[0]
-        words = cut_lineage(
-            words.select(
-                "w",
-                F.replace(
-                    F.col("sym"),
-                    F.lit(best.x + _BPE_SEP + best.y),
-                    F.lit(best.x + best.y),
-                ).alias("sym"),
-                "n",
-            ),
-            "bpee-w",
-        )
-    return words
-
-
-def _bpe_symbol_idmap(words: DataFrame) -> dict[str, int]:
-    """Symbol vocabulary: weighted frequency desc, symbol asc → id
-    (1-based). |chars| + BPE_MERGES rows at most — collect + literal
-    map keeps encode/decode join-free per symbol (declared in
-    collect_contract)."""
+def _bpe_symbols(words: DataFrame) -> list[tuple[str, int, int]]:
+    """Symbol vocabulary rows (s, cnt, id): weighted frequency desc,
+    symbol asc → id (1-based). |chars| + BPE_MERGES rows at most —
+    collected for the literal maps that keep encode/decode join-free
+    per symbol, and persisted as is by the vocabulary build (declared
+    in collect_contract)."""
     sym_rows = (
         words.select(F.explode(F.split("sym", _BPE_SEP)).alias("s"), "n")
         .groupBy("s")
         .agg(F.sum("n").alias("cnt"))
         .collect()
     )
-    return {
-        r["s"]: i + 1
-        for i, r in enumerate(
-            sorted(sym_rows, key=lambda r: (-r["cnt"], r["s"]))
-        )
-    }
+    ranked = sorted(sym_rows, key=lambda r: (-r["cnt"], r["s"]))
+    return [(r["s"], int(r["cnt"]), i + 1) for i, r in enumerate(ranked)]
 
 
 def pipe_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    words = _bpe_learned_words(spark, sf_dir)
-    sym_id = _bpe_symbol_idmap(words)
+    words, _ = _bpe_learn(spark, sf_dir)
+    sym_id = {s: i for s, _, i in _bpe_symbols(words)}
     return _bpe_encode_body(docs, words, sym_id)
 
 
@@ -1758,8 +1709,8 @@ ORDER BY doc_id
 # --------------------------------------------------------------------------
 def pipe_bpe_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    words = _bpe_learned_words(spark, sf_dir)
-    sym_id = _bpe_symbol_idmap(words)
+    words, _ = _bpe_learn(spark, sf_dir)
+    sym_id = {s: i for s, _, i in _bpe_symbols(words)}
     id_entries = [x for s, i in sorted(sym_id.items()) for x in (F.lit(s), F.lit(i))]
     idmap = F.create_map(*id_entries)
     inv_entries = [x for s, i in sorted(sym_id.items()) for x in (F.lit(i), F.lit(s))]
@@ -4161,25 +4112,11 @@ ORDER BY stage
 def _bpe_vocab_write(
     spark: SparkSession, sf_dir: str, wpath: str, spath: str
 ) -> None:
-    from pyspark.sql import Window as W
-
-    _bpe_learned_words(spark, sf_dir).write.mode("overwrite").parquet(wpath)
-    stored = spark.read.parquet(wpath)
-    symv = (
-        stored.select(
-            F.explode(F.split("sym", _BPE_SEP)).alias("s"), "n"
-        )
-        .groupBy("s")
-        .agg(F.sum("n").alias("cnt"))
-    )
-    # global rank over the aggregated symbol table: ≤ |chars| +
-    # BPE_MERGES rows by construction (declared in window_contract)
-    wrank = W.partitionBy().orderBy(F.desc("cnt"), F.asc("s"))
-    (
-        symv.withColumn("id", F.row_number().over(wrank).cast("long"))
-        .write.mode("overwrite")
-        .parquet(spath)
-    )
+    words, _ = _bpe_learn(spark, sf_dir)
+    words.write.mode("overwrite").parquet(wpath)
+    local_frame(
+        spark, _bpe_symbols(words), "s string, cnt bigint, id bigint"
+    ).write.mode("overwrite").parquet(spath)
 
 
 BPE_VOCAB = index.Versioned(

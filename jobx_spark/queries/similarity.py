@@ -2674,13 +2674,32 @@ def _pq_codes_long(
     )
 
 
-def ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jobx_spark.operators.similarity import (
-        _sdot,
-        cosine_from_scaled,
-        ivf_assign,
-        kmeans_train,
+def _adc_topk(
+    codes: DataFrame, lut: DataFrame, keys: list[str], k: int = K,
+    rank: str = "rank",
+) -> DataFrame:
+    """The one ADC score-and-rank kernel of every PQ ranker, inline or
+    served: codes ⋈ broadcast(LUT) on ``keys`` → Σ part per (query_id,
+    vec_id) as ``adc_s`` (exact int64) → the top ``k`` per query by
+    adc_s desc, vec_id asc, numbered in the int column ``rank``."""
+    from pyspark.sql import Window as W
+
+    scored = (
+        codes.join(F.broadcast(lut), keys)
+        .groupBy("query_id", "vec_id")
+        .agg(F.sum("part").alias("adc_s"))
     )
+    rk = F.row_number().over(
+        W.partitionBy("query_id").orderBy(F.desc("adc_s"), F.asc("vec_id"))
+    )
+    return scored.withColumn(rank, rk.cast("int")).filter(F.col(rank) <= k)
+
+
+_ADC_OUT = ("query_id", "vec_id", "rank", "adc_s")
+
+
+def ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from jobx_spark.operators.similarity import kmeans_train
 
     emb = load_table(spark, sf_dir, "embeddings")
     subs, _, mat = _pq_subspaces(emb)
@@ -2741,11 +2760,7 @@ ORDER BY vec_id
 # assignment tables, composed into the same LUT-sum ranking.
 # --------------------------------------------------------------------------
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jobx_spark.operators.similarity import (
-        _sdot,
-        ivf_assign,
-        kmeans_train,
-    )
+    from jobx_spark.operators.similarity import kmeans_train
 
     emb = load_table(spark, sf_dir, "embeddings")
     subs, _, mat = _pq_subspaces(emb)
@@ -2761,20 +2776,9 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialization); codes out of ONE fused scan
     lut = _pq_adc_lut(spark, mat, cents, cell_name="cell")
     code = _pq_codes_long(mat, cents, cell_name="cell")
-    scored = (
-        code.join(F.broadcast(lut), ["s", "cell"])
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("part").alias("adc_s"))
-    )
-    from pyspark.sql import Window as W
-
-    rk = F.row_number().over(
-        W.partitionBy("query_id").orderBy(F.desc("adc_s"), F.asc("vec_id"))
-    )
     return (
-        scored.withColumn("rank", rk.cast("int"))
-        .filter(F.col("rank") <= K)
-        .select("query_id", "vec_id", "rank", "adc_s")
+        _adc_topk(code, lut, ["s", "cell"])
+        .select(*_ADC_OUT)
         .orderBy("query_id", "rank")
     )
 
@@ -2838,7 +2842,6 @@ def ann_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jobx_spark.operators.similarity import (
         _sdot,
         cosine_from_scaled,
-        ivf_assign,
         kmeans_train,
     )
 
@@ -2854,23 +2857,9 @@ def ann_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE fused scan (guide §2.4)
     lut = _pq_adc_lut(spark, mat, cents, cell_name="cell")
     code = _pq_codes_long(mat, cents, cell_name="cell")
-    scored = (
-        code.join(F.broadcast(lut), ["s", "cell"])
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("part").alias("adc_s"))
-    )
-    short = (
-        scored.withColumn(
-            "adc_rank",
-            F.row_number().over(
-                W.partitionBy("query_id").orderBy(
-                    F.desc("adc_s"), F.asc("vec_id")
-                )
-            ).cast("int"),
-        )
-        .filter(F.col("adc_rank") <= RERANK_N)
-        .select("query_id", "vec_id", "adc_rank")
-    )
+    short = _adc_topk(
+        code, lut, ["s", "cell"], k=RERANK_N, rank="adc_rank"
+    ).select("query_id", "vec_id", "adc_rank")
     ev = full.select(
         "vec_id", F.col("embedding").alias("v")
     ).withColumn("vnorm_s", _sdot(F.col("v"), F.col("v")))
@@ -2968,8 +2957,6 @@ ORDER BY query_id, rank
 # exact.
 # --------------------------------------------------------------------------
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     from jobx_spark.operators.similarity import kmeans_train
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -3003,19 +2990,11 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE fused scan (guide §2.4)
     lut = _pq_adc_lut(spark, mat, sub_cents, cell_name="pq_cell")
     code = _pq_codes_long(mat, sub_cents, cell_name="pq_cell")
-    scored = (
-        cand.join(code, "vec_id")
-        .join(F.broadcast(lut), ["query_id", "s", "pq_cell"])
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("part").alias("adc_s"))
-    )
-    rk = F.row_number().over(
-        W.partitionBy("query_id").orderBy(F.desc("adc_s"), F.asc("vec_id"))
-    )
     return (
-        scored.withColumn("rank", rk.cast("int"))
-        .filter(F.col("rank") <= K)
-        .select("query_id", "vec_id", "rank", "adc_s")
+        _adc_topk(
+            cand.join(code, "vec_id"), lut, ["query_id", "s", "pq_cell"]
+        )
+        .select(*_ADC_OUT)
         .orderBy("query_id", "rank")
     )
 
@@ -3115,8 +3094,6 @@ ORDER BY query_id, rank
 # ≥ the raw-vector ann_ivf_pq_topk at the same code size.
 # --------------------------------------------------------------------------
 def ann_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     from jobx_spark.lineage import cut_lineage
     from jobx_spark.operators.similarity import (
         _centroid_arrays,
@@ -3204,19 +3181,12 @@ def ann_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = cells.join(F.broadcast(probes), "cell").select(
         "query_id", "cell", "vec_id"
     )
-    scored = (
-        cand.join(code, "vec_id")
-        .join(F.broadcast(lut), ["query_id", "cell", "s", "pq_cell"])
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("part").alias("adc_s"))
-    )
-    rk = F.row_number().over(
-        W.partitionBy("query_id").orderBy(F.desc("adc_s"), F.asc("vec_id"))
-    )
     return (
-        scored.withColumn("rank", rk.cast("int"))
-        .filter(F.col("rank") <= K)
-        .select("query_id", "vec_id", "rank", "adc_s")
+        _adc_topk(
+            cand.join(code, "vec_id"), lut,
+            ["query_id", "cell", "s", "pq_cell"],
+        )
+        .select(*_ADC_OUT)
         .orderBy("query_id", "rank")
     )
 
@@ -4535,8 +4505,6 @@ ORDER BY s, cell
 
 
 def ann_pq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     from jobx_spark.operators.similarity import _sdot
 
     bpath, cpath = PQ_INDEX.ensure(spark, sf_dir)
@@ -4563,18 +4531,9 @@ def ann_pq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cent_id").alias("cell"),
         _sdot(F.col("qv"), F.col("cv")).alias("part"),
     )
-    scored = (
-        codes.join(F.broadcast(lut), ["s", "cell"])
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("part").alias("adc_s"))
-    )
-    rk = F.row_number().over(
-        W.partitionBy("query_id").orderBy(F.desc("adc_s"), F.asc("vec_id"))
-    )
     return (
-        scored.withColumn("rank", rk.cast("int"))
-        .filter(F.col("rank") <= K)
-        .select("query_id", "vec_id", "rank", "adc_s")
+        _adc_topk(codes, lut, ["s", "cell"])
+        .select(*_ADC_OUT)
         .orderBy("query_id", "rank")
     )
 

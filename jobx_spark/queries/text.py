@@ -913,8 +913,11 @@ ORDER BY lang, pred_lang
 # any shuffle (an isin against a literal list — scan-side), so the
 # only shuffled rows are (doc, query-term) matches; df/N/T are
 # broadcast scalars; the final top-k is a per-query window over the
-# scored docs. Integer headroom: idf_s·S_TF·2.2 must stay < 2^63 —
-# holds to ~10⁹-doc corpora at these scales.
+# scored docs. The matches become postings in the persisted index's
+# layout and are scored by its serving kernel (_bm25_serve_body), so
+# inline and served rankings share one formula. Integer headroom:
+# idf_s·S_TF·2.2 must stay < 2^63 — holds to ~10⁹-doc corpora at
+# these scales.
 # --------------------------------------------------------------------------
 BM25_QUERIES = {
     0: "key agg row",
@@ -943,8 +946,6 @@ def _bm25_query_terms(
 
 
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     from jobx_spark.lineage import cut_lineage
 
     docs = load_table(spark, sf_dir, "documents")
@@ -973,39 +974,10 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("tf")),
         "bm25-tf",
     )
-    df_t = tf.groupBy("term").agg(F.count("*").alias("df"))
-    scored = (
-        tf.join(F.broadcast(df_t), "term")
-        .join(F.broadcast(qterms), "term")
-        .join(doclen, "doc_id")
-        .crossJoin(F.broadcast(scalars))
-        .select(
-            "query_id",
-            "doc_id",
-            F.expr(
-                f"(( (n_docs - df) * {BM25_S_IDF} ) div df)"
-            ).alias("idf_s"),
-            F.expr(
-                f"(22 * t_toks * tf * {BM25_S_TF})"
-                f" div (10 * t_toks * tf + 3 * t_toks + 9 * dl * n_docs)"
-            ).alias("tf_part_s"),
-        )
-        .select(
-            "query_id", "doc_id",
-            F.expr(f"(idf_s * tf_part_s) div {BM25_S_TF}").alias("contrib"),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score_s"))
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("score_s").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= BM25_K)
-        .select("query_id", "rank", "doc_id", "score_s")
-        .orderBy("query_id", "rank")
-    )
+    # the query terms' postings in the persisted index's layout, built
+    # in the plan and ranked by the one serving kernel
+    postings = tf.join(doclen, "doc_id").withColumn("tbkt", _bm25_tbkt())
+    return _bm25_serve_body(postings, scalars, qterms, all_terms)
 
 
 def _bm25_oracle() -> str:
@@ -2003,13 +1975,13 @@ def _bm25_serve_body(
     postings: DataFrame, scalars: DataFrame, qterms: DataFrame,
     terms: list[str],
 ) -> DataFrame:
-    """The one serving kernel, over any _bm25_postings layout (the
-    built index, or the appended segments): bucket-pruned postings
-    scan, df recomputed over exactly the pruned rows (every posting
-    of a query term lies in its bucket), broadcast query terms and
-    1-row scalars, and the scaled-integer BM25 formula (identical
-    constants to text_bm25_topk). Shared by the batch serve, its
-    streaming twin and the append census."""
+    """The one BM25 scoring kernel, over any _bm25_postings layout (the
+    built index, the appended segments, or text_bm25_topk's in-plan
+    postings): bucket-pruned postings scan, df recomputed over exactly
+    the pruned rows (every posting of a query term lies in its
+    bucket), broadcast query terms and 1-row scalars, and the
+    scaled-integer BM25 formula. Shared by the inline ranking, the
+    batch serve, its streaming twin and the append census."""
     from pyspark.sql import Window as W
 
     buckets = sorted({_bm25_bucket_py(t) for t in terms})
@@ -2120,8 +2092,6 @@ def _bm25_postings(docs: DataFrame) -> DataFrame:
     """(term, doc_id, tf, dl, tbkt) postings frame — the one postings
     layout, built and appended (no df: corpus-global, recomputed at
     serve time from the pruned scan)."""
-    from jobx_spark.functions import md5_long
-
     from pyspark.sql import Window as W
 
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
@@ -2136,10 +2106,16 @@ def _bm25_postings(docs: DataFrame) -> DataFrame:
     # counts; a doc with NULL/empty text has no tf rows either way.
     return tf.withColumn(
         "dl", F.sum("tf").over(W.partitionBy("doc_id")).cast("long")
-    ).withColumn(
-        "tbkt",
-        F.pmod(md5_long(F.concat(F.lit("bm25:"), F.col("term"))),
-               F.lit(TBKT)),
+    ).withColumn("tbkt", _bm25_tbkt())
+
+
+def _bm25_tbkt() -> "F.Column":
+    """A posting's term bucket: md5('bm25:'||term) mod TBKT, the
+    Spark twin of :func:`_bm25_bucket_py`."""
+    from jobx_spark.functions import md5_long
+
+    return F.pmod(
+        md5_long(F.concat(F.lit("bm25:"), F.col("term"))), F.lit(TBKT)
     )
 
 

@@ -34,7 +34,8 @@ SQL_CONFS = {
     # Spark still defaults timestamp writes to deprecated INT96, which
     # carries NO min/max footer stats — every timestamp predicate then
     # reads every row group. Micros is the modern encoding and makes
-    # sort-on-write layouts (sinks.write_sorted) actually prune.
+    # sort-on-write layouts (range-partitioned, sorted within each file)
+    # actually prune.
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
 }
 

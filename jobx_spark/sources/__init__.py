@@ -1,11 +1,11 @@
-"""Table loaders and format scans.
+"""Table loaders, the replication policy of the scale rows, and
+driver-built frames.
 
 The reference engine's only data source is the HTTP ``arguments`` dict
 (reference: mr/views/job.py:18-31); file formats appear only as output
-sinks. Our engine fronts Spark's native readers instead, so every
-format Spark reads is a first-class source, with explicit schemas for
-the driver-generated testdata tables so scans prune columns and push
-predicates into the parquet footers.
+sinks. Our queries read the testdata tables as parquet scans, so scans
+prune columns and push predicates into the parquet footers; any other
+format is one ``spark.read`` call away and needs no wrapper here.
 
 Driver-built rows (request arguments, collected centroids, probe and
 lookup tables, empty results) enter Spark only through
@@ -117,59 +117,3 @@ def local_frame(
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, struct)
-
-
-def read_csv(spark: SparkSession, path: str, schema=None, header: bool = True) -> DataFrame:
-    """CSV scan. Schema should be supplied at scale (inference reads the
-    data twice)."""
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
-
-
-def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — same columnar pushdown/pruning contract as parquet
-    (Spark's native vectorized ORC reader)."""
-    return spark.read.orc(path)
-
-
-def read_text(spark: SparkSession, path: str, wholetext: bool = False) -> DataFrame:
-    """Line-oriented (or whole-file) text scan → one ``value`` string
-    column; the raw-corpus entry point before tokenization. Each file
-    splits by line across tasks unless ``wholetext`` forces
-    file-per-row (then parallelism = file count — only for small-doc
-    layouts). NB: must be the ``text()`` kwarg — a ``.option()`` string
-    is silently ignored by Spark 4's reader."""
-    return spark.read.text(path, wholetext=wholetext)
-
-
-def read_binary_files(
-    spark: SparkSession, path: str, glob: str | None = None
-) -> DataFrame:
-    """Binary-file scan (images/audio/model shards): one row per file
-    with (path, modificationTime, length, content BINARY) via Spark's
-    built-in ``binaryFile`` source — the real-ingest entry point for
-    the multimodal asset pipeline (operators/multimodal.py normalizes
-    into the asset convention from here).
-
-    Scale notes: each file is one row read whole into ``content``, so
-    parallelism = file count and executor memory bounds file size —
-    right for the many-small-assets layout (images, audio clips);
-    for giant files use a format-aware splitter instead. Pushdown: a
-    ``length < N`` filter prunes at the listing level; pair with
-    ``pathGlobFilter`` to skip non-asset files without opening them.
-    """
-    reader = spark.read.format("binaryFile")
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)

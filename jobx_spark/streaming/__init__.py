@@ -136,10 +136,11 @@ def stream_replay(
         shutil.move(os.path.join(pdir, parts[0]), dest)
         os.utime(dest, (base_mtime + i, base_mtime + i))
     shutil.rmtree(tmp)
-    # schema from a footer-only batch read of the replay files
+    # the replay files hold df's columns: name the schema rather than
+    # infer it from their footers (a Spark job)
     spark = df.sparkSession
     return (
-        spark.readStream.schema(spark.read.parquet(out).schema)
+        spark.readStream.schema(df.schema)
         .option("pathGlobFilter", "*.parquet")
         .option("maxFilesPerTrigger", "1")
         .parquet(out)

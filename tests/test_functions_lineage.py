@@ -93,6 +93,28 @@ def test_cut_lineage_preserves_rows_and_truncates_plan(spark):
     assert cut.schema == df.schema
 
 
+def test_cut_lineage_runs_no_job_beyond_its_write(spark):
+    """The cut reads its files back with the schema it just wrote, so it
+    runs the jobs of its write and no footer-inference job."""
+    import uuid
+
+    df = spark.range(100).select("id", (F.col("id") * 2).alias("v"))
+    sc = spark.sparkContext
+
+    def n_jobs(fn) -> int:
+        group = f"cut-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    write_jobs = n_jobs(lambda: df.write.parquet(scratch_dir("write") + "/t"))
+    assert write_jobs >= 1
+    assert n_jobs(lambda: cut_lineage(df, "jobs")) == write_jobs
+
+
 def test_checkpoint_root_is_stable_and_scratch_dirs_are_fresh(spark):
     root = checkpoint_root()
     assert root == checkpoint_root()

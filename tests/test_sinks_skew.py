@@ -1,21 +1,16 @@
-"""Write-path and skew-handling coverage: CSV/JSON round trips,
-hive-partitioned parquet with partition pruning, bucketed co-located
-joins (zero exchanges), and salted aggregation/join equivalence."""
+"""Write-path and skew-handling coverage: the crash-safe parquet
+upsert, format round trips and layouts through the package session's
+own readers and writers (partition pruning, sort-on-write row-group
+skipping under the session's timestamp encoding), and salted
+aggregation/join equivalence."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from jobx_spark import plans as P
 from jobx_spark.operators.skew import salted_aggregate, salted_join
-from jobx_spark.sources import load_table, read_csv, read_json
-from jobx_spark.sources.sinks import (
-    drop_table,
-    upsert_parquet,
-    write_bucketed,
-    write_csv,
-    write_json,
-    write_parquet,
-)
+from jobx_spark.sources import load_table
+from jobx_spark.sources.sinks import upsert_parquet
 
 
 def test_upsert_parquet_merges_by_key(spark, sf_dir, tmp_path):
@@ -83,8 +78,8 @@ def test_upsert_parquet_survives_a_crash_mid_swap(spark, tmp_path, monkeypatch):
 def test_csv_round_trip(spark, sf_dir, tmp_path):
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 100)
     path = str(tmp_path / "orders_csv")
-    write_csv(orders, path)
-    back = read_csv(spark, path, schema=orders.schema)
+    orders.write.option("header", "true").csv(path)
+    back = spark.read.option("header", "true").schema(orders.schema).csv(path)
     assert back.count() == orders.count()
     assert sorted(back.columns) == sorted(orders.columns)
     a = {tuple(r) for r in orders.select("o_orderkey", "o_totalprice").collect()}
@@ -95,19 +90,16 @@ def test_csv_round_trip(spark, sf_dir, tmp_path):
 def test_json_round_trip(spark, sf_dir, tmp_path):
     cust = load_table(spark, sf_dir, "customer").limit(50)
     path = str(tmp_path / "cust_json")
-    write_json(cust, path)
-    back = read_json(spark, path, schema=cust.schema)
+    cust.write.json(path)
+    back = spark.read.schema(cust.schema).json(path)
     assert back.count() == cust.count()
 
 
 def test_orc_round_trip_with_pushdown(spark, sf_dir, tmp_path):
-    from jobx_spark.sources import read_orc
-    from jobx_spark.sources.sinks import write_orc
-
     part = load_table(spark, sf_dir, "part")
     path = str(tmp_path / "part_orc")
-    write_orc(part, path)
-    back = read_orc(spark, path).filter(F.col("p_size") <= 10).select(
+    part.write.orc(path)
+    back = spark.read.orc(path).filter(F.col("p_size") <= 10).select(
         "p_partkey", "p_size"
     )
     plan = P.plan_str(back)
@@ -145,58 +137,31 @@ def test_parquet_schema_evolution_merge(spark, sf_dir, tmp_path):
 
 
 def test_text_source_reads_lines(spark, tmp_path):
-    from jobx_spark.sources import read_text
-
     p = tmp_path / "corpus"
     p.mkdir()
     (p / "a.txt").write_text("alpha beta\ngamma\n")
     (p / "b.txt").write_text("delta\n")
-    df = read_text(spark, str(p))
+    df = spark.read.text(str(p))
     assert df.columns == ["value"]
     assert sorted(r.value for r in df.collect()) == [
         "alpha beta", "delta", "gamma",
     ]
-    whole = read_text(spark, str(p), wholetext=True)
+    # must be the text() kwarg: an .option() string is ignored by the
+    # reader
+    whole = spark.read.text(str(p), wholetext=True)
     assert whole.count() == 2  # one row per file
 
 
 def test_partitioned_parquet_prunes_partitions(spark, sf_dir, tmp_path):
     ev = load_table(spark, sf_dir, "events")
     path = str(tmp_path / "events_part")
-    write_parquet(ev, path, partition_by=["event_type"])
+    ev.write.partitionBy("event_type").parquet(path)
     back = spark.read.parquet(path).filter(F.col("event_type") == "click")
     plan = P.plan_str(back)
     # the filter must prune directories, not scan-and-filter
     assert "PartitionFilters" in plan and "event_type" in plan.split("PartitionFilters", 1)[1].split("\n", 1)[0]
     expected = ev.filter(F.col("event_type") == "click").count()
     assert back.count() == expected
-
-
-def test_bucketed_join_is_exchange_free(spark, sf_dir, tmp_path):
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice"
-    )
-    try:
-        write_bucketed(li, "t_li_b", "l_orderkey", 8,
-                       path=str(tmp_path / "li_b"), sort_by="l_orderkey")
-        write_bucketed(orders, "t_ord_b", "o_orderkey", 8,
-                       path=str(tmp_path / "ord_b"), sort_by="o_orderkey")
-        joined = spark.table("t_li_b").join(
-            spark.table("t_ord_b"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        plan = P.plan_str(joined)
-        # co-located buckets: the join needs NO shuffle exchange
-        assert P.count_shuffles(plan) == 0, P.node_names(plan)
-        assert joined.count() == li.join(
-            orders, li.l_orderkey == orders.o_orderkey
-        ).count()
-    finally:
-        drop_table(spark, "t_li_b")
-        drop_table(spark, "t_ord_b")
 
 
 def test_salted_aggregate_matches_direct(spark, sf_dir):
@@ -237,26 +202,24 @@ def test_write_sorted_enables_row_group_skipping(spark, sf_dir, tmp_path):
     """Sort-on-write must produce parquet whose row-group min/max stats
     actually prune: for a narrow shipdate range, the sorted layout
     leaves most row groups skippable while the natural (orderkey) order
-    leaves nearly all of them overlapping the predicate."""
+    leaves nearly all of them overlapping the predicate. The timestamps
+    are written in the session's default encoding (micros: INT96
+    carries no footer stats)."""
     import glob
 
     import pyarrow.parquet as pq
-
-    from jobx_spark.sources import load_table
-    from jobx_spark.sources.sinks import write_sorted
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_shipdate", "l_quantity"
     )
     unsorted_path = str(tmp_path / "unsorted")
     sorted_path = str(tmp_path / "sorted")
-    # small row groups so both layouts have enough groups to measure;
-    # micros timestamps (the session default) carry footer stats, INT96
-    # would not
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    # small row groups so both layouts have enough groups to measure
     spark.conf.set("spark.hadoop.parquet.block.size", str(64 * 1024))
     li.repartition(4).write.parquet(unsorted_path)
-    write_sorted(li, sorted_path, ["l_shipdate"], n_files=4)
+    li.repartitionByRange(4, "l_shipdate").sortWithinPartitions(
+        "l_shipdate"
+    ).write.parquet(sorted_path)
     spark.conf.unset("spark.hadoop.parquet.block.size")
 
     lo = li.selectExpr("min(l_shipdate)").first()[0]
@@ -289,57 +252,6 @@ def test_write_sorted_enables_row_group_skipping(spark, sf_dir, tmp_path):
     assert frac_s > frac_u
 
 
-def test_zorder_layout_prunes_on_both_columns(spark, sf_dir, tmp_path):
-    """Z-order clustering must make range predicates on EITHER column
-    skip row groups, where a single-column sort only serves its own
-    column: partkey predicates prune ~nothing under an orderkey sort
-    but substantially under the interleaved layout."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from jobx_spark.sources import load_table
-    from jobx_spark.sources.sinks import write_sorted, write_zordered
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_quantity"
-    )
-    # tiny test data fits one row group per file, so granularity comes
-    # from file count: 16 files ~= 16 row groups
-    by_order = str(tmp_path / "by_order")
-    zordered = str(tmp_path / "zorder")
-    write_sorted(li, by_order, ["l_orderkey"], n_files=16)
-    write_zordered(li, zordered, ["l_orderkey", "l_partkey"], n_files=16)
-
-    stats = li.selectExpr(
-        "min(l_partkey)", "max(l_partkey)", "min(l_orderkey)", "max(l_orderkey)"
-    ).first()
-    pk_lo, pk_hi = stats[0], stats[0] + (stats[1] - stats[0]) // 8
-    ok_lo, ok_hi = stats[2], stats[2] + (stats[3] - stats[2]) // 8
-
-    def prunable(path: str, col: str, lo, hi) -> float:
-        total = kept = 0
-        for f in glob.glob(f"{path}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx[col]).statistics
-                total += 1
-                if st.min <= hi and st.max >= lo:
-                    kept += 1
-        assert total >= 12, f"need row groups to measure, got {total}"
-        return 1 - kept / total
-
-    # single-column sort: own column prunes hard, the other ~not at all
-    assert prunable(by_order, "l_orderkey", ok_lo, ok_hi) >= 0.5
-    assert prunable(by_order, "l_partkey", pk_lo, pk_hi) <= 0.2
-    # z-order: BOTH columns prune meaningfully
-    z_ok = prunable(zordered, "l_orderkey", ok_lo, ok_hi)
-    z_pk = prunable(zordered, "l_partkey", pk_lo, pk_hi)
-    assert z_ok >= 0.3, f"zorder orderkey pruning too weak: {z_ok:.2f}"
-    assert z_pk >= 0.3, f"zorder partkey pruning too weak: {z_pk:.2f}"
-
-
 def test_binary_file_source_feeds_asset_pipeline(spark, tmp_path):
     """binaryFile scan → asset convention → metadata pass: real bytes
     round-trip (content intact, digest over the actual file payload),
@@ -349,14 +261,17 @@ def test_binary_file_source_feeds_asset_pipeline(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from jobx_spark.operators.multimodal import payload_metadata
-    from jobx_spark.sources import read_binary_files
 
     payloads = {f"a{i}.png": bytes([i, 255 - i]) * 40 for i in range(4)}
     for name, data in payloads.items():
         (tmp_path / name).write_bytes(data)
     (tmp_path / "notes.txt").write_bytes(b"not an asset")
 
-    raw = read_binary_files(spark, str(tmp_path), glob="*.png")
+    raw = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.png")
+        .load(str(tmp_path))
+    )
     assert raw.count() == 4  # the .txt file never listed
 
     assets = raw.select(
